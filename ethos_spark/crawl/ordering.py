@@ -11,7 +11,7 @@ rows (only the tiny per-partition count vector), so it survives 10^10 rows.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -25,26 +25,25 @@ def assign_sequential_order(
     offset: int = 0,
     col_name: str = "processed_order",
     n_parts: int | None = None,
-    cleanup: list | None = None,
-    total_out: list | None = None,
-) -> DataFrame:
+    persist: Callable[[DataFrame], DataFrame] = DataFrame.cache,
+) -> tuple[DataFrame, int]:
     """Add ``col_name`` = offset + rank (1-based) in the total order given
     by ``order_cols``. Two jobs: one to count rows per range-partition, one
     to stamp local indices shifted by the cumulative offsets.
 
-    ``total_out``: if given, the exact input row count is appended to it —
-    free for the caller (the per-partition count vector is collected here
-    anyway), used by the crawl loop to detect fetch misses without an
-    extra count job."""
+    Returns the stamped DataFrame and the exact input row count — free
+    (the per-partition count vector is collected anyway); the crawl loop
+    uses it to detect fetch misses without an extra count job.
+    ``persist`` caches the range-partitioned rows between the two passes;
+    pass the cache of the relation's owner (the crawl round's
+    ``RoundScope.cache``) so it is released with that owner."""
     spark = df.sparkSession
     n = n_parts or spark.sparkContext.defaultParallelism
-    parted = (
+    # pin the range boundaries between the two passes
+    parted = persist(
         df.repartitionByRange(n, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
-        .cache()  # pin the range boundaries between the two passes
     )
-    if cleanup is not None:
-        cleanup.append(parted)
     counts = (
         parted.withColumn("_pid", F.spark_partition_id())
         .groupBy("_pid")
@@ -56,8 +55,6 @@ def assign_sequential_order(
     for row in sorted(counts, key=lambda r: r["_pid"]):
         offsets[row["_pid"]] = acc
         acc += row["count"]
-    if total_out is not None:
-        total_out.append(acc - offset)
     offs_b = spark.sparkContext.broadcast(offsets)
 
     out_schema = StructType(df.schema.fields + [StructField(col_name, LongType())])
@@ -74,4 +71,4 @@ def assign_sequential_order(
             emitted += len(pdf)
             yield pdf
 
-    return parted.mapInPandas(stamp, out_schema)
+    return parted.mapInPandas(stamp, out_schema), acc - offset

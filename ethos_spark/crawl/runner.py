@@ -20,13 +20,14 @@ the reference enum (MetadataTracker.ts:32-37) evaluated per host.
 from __future__ import annotations
 
 import json
-import os
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from typing import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from ethos_spark import schemas
 from ethos_spark.catalog import Warehouse
@@ -35,6 +36,7 @@ from ethos_spark.crawl.ordering import assign_sequential_order
 from ethos_spark.crawl.politeness import politeness_topk, robots_gate, salt_hot_hosts
 from ethos_spark.extraction.content import extract_content_stage
 from ethos_spark.extraction.listing import extract_listing_stage
+from ethos_spark.ops.graph import pagerank_fixed
 from ethos_spark.sources.config import SourceConfig
 
 # cap per error-message category per session: the lists live in the session
@@ -44,6 +46,16 @@ MAX_ERROR_MESSAGES = 100
 # (driver map, zero Spark jobs per round); above it, the parquet replace
 # tier (fully distributed) — see seed() for the rationale
 OFFSETS_ROW_TIER_MAX_CHAINS = 10_000
+# safety backstop on rounds per session
+MAX_ROUNDS = 10_000
+# synthetic keys per host when a host-partitioned fetch is salted
+SALT_FACTOR = 8
+# persistent-dedup bloom prefilter: false-positive rate, and the seen-set
+# cardinality below which the anti-join stays exact-only
+BLOOM_FPP = 0.01
+USE_BLOOM_OVER = 100_000
+# per-host stop reasons of the reference enum (MetadataTracker.ts:32-37)
+STOP_REASONS = ("all_duplicates", "max_pages", "no_next_button")
 
 
 @dataclass
@@ -52,12 +64,6 @@ class CrawlOptions:
     stop_on_all_duplicates: bool = True  # types.ts:114-120 default true
     skip_existing_urls: bool = True  # --recrawl ⇒ False (index.ts:39)
     per_host_budget: int = 10_000  # content fetches per host per round (T4)
-    salt_factor: int = 8
-    hot_host_threshold: int = 2_000  # salt when a host exceeds this per round
-    bloom_fpp: float = 0.01
-    use_bloom_over: int = 100_000  # exact-only below this seen cardinality
-    round_delay_sec: float = 0.0  # politeness delay analogue (delaySec)
-    max_rounds: int = 10_000  # safety backstop
     # broadcast the round's LIGHT candidate/order rows into the fetch and
     # order joins only below this row count (~150 MB at 1M rows); above it
     # (multi-million-URL rounds — a forced broadcast of every scheduled
@@ -68,10 +74,9 @@ class CrawlOptions:
     # MAX_ATTEMPTS=3, RETRY_DELAY_SEC=15 + reload). Retrying WITHIN the
     # round — like the reference's inline retry — keeps processed_order
     # parity: a URL that succeeds on attempt 2 keeps the order assigned
-    # pre-fetch. Backoff defaults to 0 (the reference's 15 s is a
+    # pre-fetch. Retries run back to back (the reference's 15 s delay is a
     # politeness choice for live sites, pointless against a corpus).
     max_fetch_attempts: int = 3
-    retry_backoff_sec: float = 0.0
     # frontier prioritization (north_rule: a 10^10-URL frontier is a
     # PRIORITIZED crawl, not FIFO): when True, integer PageRank over the
     # session's discovered host link graph (link_edges state table,
@@ -152,6 +157,111 @@ def _parse_date_udf(raw):  # pd.Series -> pd.Series
     return parse_published_dates_series(raw)
 
 
+class RoundScope:
+    """The owner of one crawl round's cached DataFrames and of its one
+    thread pool. Phases cache through ``cache()`` and run overlapped jobs
+    through ``submit()``. On exit, normal or exceptional, the pool is
+    joined (tasks not yet started are cancelled when the round failed)
+    and every cached relation is unpersisted, so a round that raises
+    leaves nothing pinned in a long-lived session."""
+
+    THREAD_PREFIX = "crawl-round"
+
+    def __init__(self) -> None:
+        self._cached: list[DataFrame] = []
+        self._futures: list[Future] = []
+        # the overlapped listing-message collect plus the independent
+        # lineage writes; threads start lazily, on the first submit
+        self._pool = ThreadPoolExecutor(8, thread_name_prefix=self.THREAD_PREFIX)
+
+    def __enter__(self) -> RoundScope:
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        # running jobs finish before the relations they read are released
+        self._pool.shutdown(wait=True, cancel_futures=exc_type is not None)
+        for df in self._cached:
+            df.unpersist()
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        self._cached.append(df.cache())
+        return df
+
+    def submit(self, fn: Callable, *args) -> Future:
+        fut = self._pool.submit(fn, *args)
+        self._futures.append(fut)
+        return fut
+
+    def wait(self) -> None:
+        """Block until every submitted task is done; re-raise the first
+        failure in submission order."""
+        for fut in self._futures:
+            fut.result()
+
+
+@dataclass
+class _Listing:
+    """Listing phase output: this round's listing pages."""
+
+    lkeys: DataFrame  # scheduled pages: url, host, depth
+    lres: DataFrame  # fetched + extracted pages (cached, retries unioned)
+    overflow: DataFrame  # listing rows beyond one page per host
+    rank_dim: DataFrame | None  # host → _rank_pri (rank priority option)
+    n_failed: int = 0  # pages that failed every fetch attempt
+
+    def misses(self) -> DataFrame:
+        return self.lkeys.join(self.lres.select("url"), "url", "left_anti")
+
+
+@dataclass
+class _Stats:
+    """Dedup/stats phase output: the round's new items, its per-host state
+    and the counters of its one stats collect."""
+
+    valid_items: DataFrame  # items that passed the date quarantine
+    session_new: DataFrame  # new to this session (seen_session rows)
+    to_process: DataFrame  # also new to stored pages (cached)
+    host_round: DataFrame  # per-host counters + stop_reason (cached)
+    sess_seen_count: int
+    seen_count: int
+    n_items: int
+    n_new: int
+    n_date_err: int
+    n_excluded: int
+    n_filtered: int
+    n_hosts_active: int
+    n_hosts_continuing: int
+    listing_messages: Callable[[], list[str]]  # joins the overlapped collect
+
+    @property
+    def n_duplicates(self) -> int:
+        return self.n_items - self.n_new - self.n_date_err
+
+
+@dataclass
+class _Schedule:
+    """Schedule phase output: this round's ordered content fetches."""
+
+    allowed: DataFrame  # robots-allowed content candidates
+    blocked: DataFrame
+    robots_dim: DataFrame | None
+    content_overflow: DataFrame  # carried to the next round's frontier
+    sitemap_inject: DataFrame | None  # next round's sitemap candidates
+    order_map: DataFrame  # url_hash → processed_order (broadcast when small)
+    offset: int  # processed_order of the previous round's last page
+    n_allowed: int
+    content_hint: int | None  # upper bound on the candidate count
+
+
+@dataclass
+class _Content:
+    """Content phase output: the pages this round wrote."""
+
+    stored: DataFrame  # this round's pages rows, read back from their dirs
+    n_stored: int
+    n_blocked: int
+
+
 class CrawlRunner:
     def __init__(
         self,
@@ -174,6 +284,14 @@ class CrawlRunner:
         self.session_id = f"crawl-session-{int(self.start_time.timestamp())}"
         self.summary = CrawlSummary(self.session_id, config.id)
         self._interrupted = False
+        # in-round fetch retries only make sense against transient failure
+        # (real HTTP); a deterministic fetcher's miss is permanent and each
+        # wasted wave re-scans the corpus
+        self._retryable = not getattr(fetcher, "deterministic", False)
+        # content fields a page fetch can fill (mergeContentData overrides)
+        self._content_fields = [
+            n for n in ("title", "author", "content") if n in config.content.fields
+        ]
 
     # -- graceful interruption (InterruptionHandler.ts:17-41) ---------------
 
@@ -251,21 +369,7 @@ class CrawlRunner:
     def seed(self, urls: list[str]) -> None:
         """Install the seed list as round-0 frontier + empty state tables."""
         df = self.spark.createDataFrame([(u,) for u in urls], "url string")
-        seeded = (
-            self._with_url_cols(df)
-            .withColumn("depth", F.lit(1))
-            .withColumn("priority", F.lit(0.0))
-            .withColumn("discovered_ts", F.lit(self.start_time))
-            .withColumn("state", F.lit("pending"))
-            .withColumn("attempts", F.lit(0))
-            .withColumn("source_id", F.lit(self.config.id))
-            .withColumn("kind", F.lit("listing"))
-            .withColumn("listing_order", F.lit(0).cast("long"))
-            .withColumn("title", F.lit(None).cast("string"))
-            .withColumn("author", F.lit(None).cast("string"))
-            .withColumn("published_date", F.lit(None).cast("string"))
-        )
-        self.wh.replace("frontier_pending", seeded.select(*schemas.FRONTIER.names))
+        self.wh.replace("frontier_pending", self._frontier_rows(df, "listing"))
         for t, s in [
             ("seen_session", schemas.SEEN),
             ("host_state", "host string, pages_processed long, stopped_reason string"),
@@ -328,7 +432,7 @@ class CrawlRunner:
 
     # -- per-host robots.txt stage (option) ---------------------------------
 
-    def _refresh_robots(self, hosts_df: DataFrame) -> list[str]:
+    def _refresh_robots(self, scope: RoundScope, hosts_df: DataFrame) -> list[str]:
         """Fetch + parse robots.txt for hosts seen for the FIRST time this
         session (anti-join against the robots_rules state table), append
         their Disallow prefixes to the table (a fetch miss caches an empty
@@ -336,127 +440,98 @@ class CrawlRunner:
         ``Sitemap:`` lines found — each new host's lines surface exactly
         once per session. The fetch runs through the session Fetcher at
         content stage: pooled, no politeness delay (robots documents must
-        be readable before any page of the host is fetched)."""
+        be readable before any page of the host is fetched). Its caches
+        belong to the round's ``scope``."""
         known = self.wh.read("robots_rules", schemas.ROBOTS).select("host")
         # derive the request scheme from the host's own frontier URLs (an
         # http-only host would otherwise always miss on https and have the
         # miss cached as an empty rule set for the whole session);
         # deterministic pick: min() over the observed schemes
-        if "url" in hosts_df.columns:
-            hosts = hosts_df.groupBy("host").agg(
-                F.min(
-                    F.regexp_extract(
-                        F.col("url"), r"^([a-zA-Z][a-zA-Z0-9+.-]*)://", 1
-                    )
-                ).alias("_scheme")
-            )
-        else:
-            hosts = hosts_df.select("host").distinct().withColumn(
-                "_scheme", F.lit("https")
-            )
-        new_hosts = hosts.join(known, "host", "left_anti").cache()
-        try:
-            if not new_hosts.take(1):
-                return []
-            reqs = new_hosts.select(
-                F.concat(
-                    F.when(F.col("_scheme") == "", "https").otherwise(
-                        F.col("_scheme")
-                    ),
-                    F.lit("://"),
-                    F.col("host"),
-                    F.lit("/robots.txt"),
-                ).alias("url"),
-                "host",
-            )
-            fetched = self.fetcher.fetch(reqs, stage="content").where(
-                F.col("html").isNotNull()
+        hosts = hosts_df.groupBy("host").agg(
+            F.min(
+                F.regexp_extract(F.col("url"), r"^([a-zA-Z][a-zA-Z0-9+.-]*)://", 1)
+            ).alias("_scheme")
+        )
+        new_hosts = scope.cache(hosts.join(known, "host", "left_anti"))
+        if not new_hosts.take(1):
+            return []
+        reqs = new_hosts.select(
+            F.concat(
+                F.when(F.col("_scheme") == "", "https").otherwise(F.col("_scheme")),
+                F.lit("://"),
+                F.col("host"),
+                F.lit("/robots.txt"),
+            ).alias("url"),
+            "host",
+        )
+        fetched = self.fetcher.fetch(reqs, stage="content").where(
+            F.col("html").isNotNull()
+        )
+
+        def parse(batches):
+            import pandas as pd
+
+            from ethos_spark.crawl.robots import (
+                extract_sitemap_lines,
+                parse_robots_txt,
             )
 
-            def parse(batches):
-                import pandas as pd
+            for pdf in batches:
+                hs, dis, sms = [], [], []
+                for host, body in zip(pdf["host"], pdf["html"]):
+                    if body is None:
+                        continue
+                    txt = (
+                        bytes(body) if not isinstance(body, str) else body.encode()
+                    ).decode("utf-8", "replace")
+                    hs.append(host)
+                    dis.append(parse_robots_txt(txt))
+                    sms.append(extract_sitemap_lines(txt))
+                yield pd.DataFrame({"host": hs, "disallow": dis, "sitemaps": sms})
 
-                from ethos_spark.crawl.robots import (
-                    extract_sitemap_lines,
-                    parse_robots_txt,
-                )
-
-                for pdf in batches:
-                    hs, dis, sms = [], [], []
-                    for host, body in zip(pdf["host"], pdf["html"]):
-                        if body is None:
-                            continue
-                        txt = (
-                            bytes(body) if not isinstance(body, str) else body.encode()
-                        ).decode("utf-8", "replace")
-                        hs.append(host)
-                        dis.append(parse_robots_txt(txt))
-                        sms.append(extract_sitemap_lines(txt))
-                    yield pd.DataFrame(
-                        {"host": hs, "disallow": dis, "sitemaps": sms}
-                    )
-
-            parsed = fetched.select("host", "html").mapInPandas(
+        parsed = scope.cache(
+            fetched.select("host", "html").mapInPandas(
                 parse,
                 "host string, disallow array<string>, sitemaps array<string>",
-            ).cache()
-            try:
-                # every ATTEMPTED host gets a row (miss → empty disallow):
-                # the cache key is "host was fetched", not "host had rules"
-                rules = new_hosts.join(
-                    parsed.select("host", "disallow"), "host", "left"
-                ).select(
-                    "host",
-                    F.coalesce(
-                        "disallow", F.array().cast("array<string>")
-                    ).alias("disallow"),
-                )
-                self.wh.append("robots_rules", rules)
-                return [
-                    r.u
-                    for r in parsed.select(F.explode("sitemaps").alias("u"))
-                    .distinct()
-                    .collect()
-                ]
-            finally:
-                parsed.unpersist()
-        finally:
-            new_hosts.unpersist()
+            )
+        )
+        # every ATTEMPTED host gets a row (miss → empty disallow): the
+        # cache key is "host was fetched", not "host had rules"
+        rules = new_hosts.join(
+            parsed.select("host", "disallow"), "host", "left"
+        ).select(
+            "host",
+            F.coalesce("disallow", F.array().cast("array<string>")).alias("disallow"),
+        )
+        self.wh.append("robots_rules", rules)
+        return [
+            r.u
+            for r in parsed.select(F.explode("sitemaps").alias("u")).distinct().collect()
+        ]
 
     # -- the round ----------------------------------------------------------
 
     def run(self) -> CrawlSummary:
         t0 = time.monotonic()
         r = int(self.wh.props.get("round", "0"))
-        while r < self.opt.max_rounds:
+        while r < MAX_ROUNDS:
             # interruption check at the loop top, like the reference's
             # listing loop (ArticleListingCrawler.ts:334): the round in
             # flight always completes and commits before we stop
             if self._interrupted:
                 break
             r += 1
-            advanced = self.run_round(r)
-            if not advanced:
+            if not self.run_round(r):
                 break
-            if self.opt.round_delay_sec:
-                time.sleep(self.opt.round_delay_sec)
         self.summary.wall_sec = time.monotonic() - t0
         self._finalize()
         return self.summary
 
     def run_round(self, r: int) -> bool:
-        spark, opt = self.spark, self.opt
-        _trace = os.environ.get("ETHOS_CRAWL_TIMING") == "1"
-        _t = [time.monotonic()]
-
-        def tick(label: str) -> None:
-            if _trace:
-                now = time.monotonic()
-                print(f"[round {r}] {label}: {now - _t[0]:.2f}s", flush=True)
-                _t[0] = now
+        """Run round ``r`` as explicit phases under one RoundScope (the
+        owner of the round's caches and thread pool); return whether the
+        round did any work — False ends the crawl."""
         pending = self.wh.read("frontier_pending", schemas.FRONTIER)
-        listing_batch = pending.where(F.col("kind") == "listing")
-        content_carry = pending.where(F.col("kind") == "content")
         props = self.wh.props
         listing_hint = int(props["hint_listing"]) if "hint_listing" in props else None
         carry_hint = int(props["hint_content"]) if "hint_content" in props else None
@@ -465,111 +540,114 @@ class CrawlRunner:
         # of a full no-op round (~5 s of fixed stage latency saved)
         if listing_hint == 0 and carry_hint == 0:
             return False
+        with RoundScope() as scope:
+            lst = self._listing_phase(scope, pending, listing_hint)
+            st = self._dedup_stats_phase(scope, lst)
+            sch = self._schedule_phase(scope, pending, lst, st, carry_hint)
+            # the listing-side writes run on the pool, overlapped with the
+            # content pass on the driver thread
+            obs, prev_offsets = self._lineage_phase(scope, r, lst, st, sch)
+            con = self._content_phase(scope, sch)
+            worked = st.n_hosts_active > 0 or con.n_stored > 0 or con.n_blocked > 0
+            if worked:
+                self.summary.rounds = r  # terminating no-op round not counted
+            self._commit_phase(scope, r, st, sch, con, obs, prev_offsets)
+        return worked
 
-        # ---- PageRank frontier priority (option) ---------------------------
-        # ranks over the accumulated host link graph, refreshed per round;
-        # host-level → the dim is tiny and broadcast into one left join.
-        # Round 1 has no edges yet → empty ranks → every priority 0.0.
-        round_caches: list = []
-        rank_dim = None
-        if opt.prioritize_by_rank:
-            from ethos_spark.ops.graph import pagerank_fixed
+    # -- phase: listing -------------------------------------------------------
 
-            edges = self.wh.read("link_edges", schemas.LINK_EDGES)
-            ranks = pagerank_fixed(
-                edges,
-                iters=opt.rank_iters,
-                src_col="src_host",
-                dst_col="dst_host",
-                caches=round_caches,
-            )
-            # priority = -rank: int64 micro-unit ranks are < 2^53, so the
-            # double is EXACT and the schedule stays deterministic.
-            # CACHED: the iterative pagerank DAG would otherwise re-run
-            # under every one of the round's ~8 downstream actions
-            rank_dim = ranks.select(
-                F.col("node").alias("host"),
-                (-F.col("rank")).cast("double").alias("_rank_pri"),
-            ).cache()
-            round_caches.append(rank_dim)
-
-        def _rank_priority(df: DataFrame) -> DataFrame:
-            """Override the stored priority column with the current ranks
-            (unranked hosts keep 0.0 — they sort after ranked ones)."""
-            if rank_dim is None:
-                return df
-            cols = df.columns
-            return (
-                df.drop("priority")
-                .join(F.broadcast(rank_dim), "host", "left")
-                .withColumn(
-                    "priority", F.coalesce(F.col("_rank_pri"), F.lit(0.0))
-                )
-                .select(*cols)
-            )
-
-        listing_batch = _rank_priority(listing_batch)
-
-        # ---- listing pass --------------------------------------------------
-        # one page per host per round (the reference's sequential chain)
-        listing_batch, listing_overflow = politeness_topk(
-            listing_batch, 1, ["depth", "priority", "url_hash"]
+    def _listing_phase(
+        self, scope: RoundScope, pending: DataFrame, listing_hint: int | None
+    ) -> _Listing:
+        """Fetch and extract one listing page per active host (rank-ordered
+        when the PageRank option is on), retrying misses in-round."""
+        rank_dim = self._rank_dim(scope)
+        batch = self._with_rank_priority(
+            pending.where(F.col("kind") == "listing"), rank_dim
         )
-        n_parts = spark.sparkContext.defaultParallelism * 2
+        # one page per host per round (the reference's sequential chain)
+        batch, overflow = politeness_topk(batch, 1, ["depth", "priority", "url_hash"])
         # extract parallelism rides the fetch output partitioning: for the
         # corpus fetcher that is the parquet scan (split size tuned down in
         # session.py — shuffling the html column would cost more than it
         # buys); a host-partitioned HttpFetcher brings its own partitioning
-        lkeys = listing_batch.select("url", "host", "depth")
-        # both fetcher contracts express failure as ABSENCE from here on: a
-        # returns_misses fetcher marks failures html=NULL — drop those rows
-        # so the retry/miss machinery below sees them as misses too
-        fetched = self.fetcher.fetch(
-            lkeys, size_hint=listing_hint, stage="listing"
-        ).where(F.col("html").isNotNull())
-        lres = extract_listing_stage(fetched, self.config.listing).join(
-            lkeys, "url"
-        ).cache()
-        round_caches.append(lres)
-
+        lkeys = batch.select("url", "host", "depth")
+        lst = _Listing(
+            lkeys, scope.cache(self._extract_listings(lkeys, listing_hint)), overflow, rank_dim
+        )
         # in-round listing retry (PaginationHandler.ts:11-12,84-107: 3
-        # attempts with backoff, then the page is a listing error and the
-        # host's chain ends). Misses are detected by anti-joining the
-        # scheduled batch against the fetched pages — ground truth, no
-        # expected-count bookkeeping. The happy-path count() here just
-        # MOVES the listing materialization up from the stats collect below
-        # (lres is cached); extra jobs only run when misses exist.
-        def _listing_misses(cur: DataFrame) -> DataFrame:
-            return lkeys.join(cur.select("url"), "url", "left_anti")
-
-        n_lmiss = _listing_misses(lres).count()
-        tick("listing fetch+extract materialize")
-        # retries only make sense against transient failure (real HTTP); a
-        # deterministic fetcher's miss is permanent and each wasted wave
-        # re-scans the corpus
-        _retryable = not getattr(self.fetcher, "deterministic", False)
+        # attempts, then the page is a listing error and the host's chain
+        # ends). Misses are detected by anti-joining the scheduled batch
+        # against the fetched pages — ground truth, no expected-count
+        # bookkeeping. The happy-path count() here just MOVES the listing
+        # materialization up from the stats collect (lres is cached); extra
+        # jobs only run when misses exist.
+        n_miss = lst.misses().count()
         attempt = 1
-        while _retryable and n_lmiss > 0 and attempt < opt.max_fetch_attempts:
+        while self._retryable and n_miss > 0 and attempt < self.opt.max_fetch_attempts:
             attempt += 1
             self.summary.fetch_retries += 1
-            if opt.retry_backoff_sec:
-                time.sleep(opt.retry_backoff_sec)
-            missed_l = _listing_misses(lres)
-            retry_res = (
-                extract_listing_stage(
-                    self.fetcher.fetch(
-                        missed_l, size_hint=n_lmiss, stage="listing"
-                    ).where(F.col("html").isNotNull()),
-                    self.config.listing,
-                )
-                .join(missed_l.select("url", "host", "depth"), "url")
-                .cache()
-            )
-            round_caches.append(retry_res)
-            lres = lres.unionByName(retry_res)
-            n_lmiss = _listing_misses(lres).count()
-        n_failed_pages = n_lmiss
+            retry = scope.cache(self._extract_listings(lst.misses(), n_miss))
+            lst.lres = lst.lres.unionByName(retry)
+            n_miss = lst.misses().count()
+        lst.n_failed = n_miss
+        return lst
 
+    def _rank_dim(self, scope: RoundScope) -> DataFrame | None:
+        """PageRank frontier priority (option): ranks over the accumulated
+        host link graph, refreshed per round; host-level → the dim is tiny
+        and broadcast into one left join. Round 1 has no edges yet → empty
+        ranks → every priority 0.0."""
+        if not self.opt.prioritize_by_rank:
+            return None
+        ranks = pagerank_fixed(
+            self.wh.read("link_edges", schemas.LINK_EDGES),
+            iters=self.opt.rank_iters,
+            src_col="src_host",
+            dst_col="dst_host",
+            persist=scope.cache,
+        )
+        # priority = -rank: int64 micro-unit ranks are < 2^53, so the
+        # double is EXACT and the schedule stays deterministic.
+        # CACHED: the iterative pagerank DAG would otherwise re-run
+        # under every one of the round's ~8 downstream actions
+        return scope.cache(
+            ranks.select(
+                F.col("node").alias("host"),
+                (-F.col("rank")).cast("double").alias("_rank_pri"),
+            )
+        )
+
+    @staticmethod
+    def _with_rank_priority(df: DataFrame, rank_dim: DataFrame | None) -> DataFrame:
+        """Override the stored priority column with the current ranks
+        (unranked hosts keep 0.0 — they sort after ranked ones)."""
+        if rank_dim is None:
+            return df
+        return (
+            df.drop("priority")
+            .join(F.broadcast(rank_dim), "host", "left")
+            .withColumn("priority", F.coalesce(F.col("_rank_pri"), F.lit(0.0)))
+            .select(*df.columns)
+        )
+
+    def _extract_listings(self, keys: DataFrame, hint: int | None) -> DataFrame:
+        """fetch → listing extract, joined back onto the (url, host, depth)
+        keys. Both fetcher contracts express failure as ABSENCE from here
+        on: a returns_misses fetcher marks failures html=NULL — those rows
+        are dropped so the retry/miss machinery sees them as misses too."""
+        fetched = self.fetcher.fetch(keys, size_hint=hint, stage="listing").where(
+            F.col("html").isNotNull()
+        )
+        return extract_listing_stage(fetched, self.config.listing).join(keys, "url")
+
+    # -- phase: dedup / stats -----------------------------------------------
+
+    def _dedup_stats_phase(self, scope: RoundScope, lst: _Listing) -> _Stats:
+        """Explode the listing pages into items, dedup them against this
+        session and the stored pages, and fold per-host state into ONE
+        stats collect that drives every counter and stop decision."""
+        opt, lres = self.opt, lst.lres
         items = (
             lres.select(
                 F.col("host").alias("listing_host"),
@@ -624,7 +702,7 @@ class CrawlRunner:
 
         # J2 persistent dedup against stored pages (bloom + exact)
         seen_count = int(self.wh.props.get("seen_count", "0"))
-        bloom = None
+        to_process = session_new
         if opt.skip_existing_urls and seen_count > 0:
             # seen set = key projection of pages (column-pruned scan). When
             # the warehouse buckets pages by url, key the join on url too:
@@ -635,16 +713,15 @@ class CrawlRunner:
                 "url" if self.wh.bucket_cols("pages") == ["url"] else "url_hash"
             )
             seen = self.wh.read("pages", schemas.PAGES_OUT).select(seen_key)
-            if seen_count >= opt.use_bloom_over:
-                bloom = BloomFilter.build(
-                    seen, seen_key, seen_count, opt.bloom_fpp
-                )
+            bloom = (
+                BloomFilter.build(seen, seen_key, seen_count, BLOOM_FPP)
+                if seen_count >= USE_BLOOM_OVER
+                else None
+            )
             to_process, _ = anti_join_seen(
                 session_new, seen, key=seen_key, bloom=bloom
             )
-        else:
-            to_process = session_new
-        to_process = to_process.cache()
+        to_process = scope.cache(to_process)
 
         # ---- per-host stats: ONE collect drives counters + stop logic ------
         page_stats = (
@@ -663,10 +740,10 @@ class CrawlRunner:
                 F.sum("n_items").alias("n_items"),
                 F.sum("n_excluded").alias("n_excluded"),
                 F.sum("n_filtered").alias("n_filtered"),
-                # message ASSEMBLY is deferred to the error-only branch
-                # below (r6): the lean pass carries only the count that
-                # gates it, so an error-free round (the common case) never
-                # pays the collect_list/flatten/array_sort message trees
+                # message ASSEMBLY is deferred to the error-only branch of
+                # _listing_messages (r6): the lean pass carries only the
+                # count that gates it, so an error-free round (the common
+                # case) never pays the collect_list/flatten/array_sort trees
                 F.sum(F.size("filtered_reasons")).alias("n_reason_msgs"),
                 F.max("next_url").alias("next_url"),
             )
@@ -679,15 +756,130 @@ class CrawlRunner:
             .groupBy(F.col("listing_host").alias("host"))
             .agg(F.count("*").alias("n_date_err"))
         )
+        # per-host round state stays DISTRIBUTED (at 10^10 scale millions of
+        # hosts are active per round — never collected); the driver sees one
+        # aggregate row. Stop decisions are columns (reference stop enum,
+        # MetadataTracker.ts:32-37; all_duplicates precedence per
+        # ArticleListingCrawler.ts:260-286, evaluated BEFORE the
+        # pagesProcessed increment).
+        host_round = (
+            page_stats.join(new_per_host, "host", "left")
+            .join(date_err_per_host, "host", "left")
+            .fillna(0, ["n_new", "n_date_err"])
+        )
+        stop_col = F.when(
+            (F.col("n_items") > 0)
+            & (F.col("n_new") == 0)
+            & F.lit(opt.stop_on_all_duplicates),
+            F.lit("all_duplicates"),
+        )
+        if opt.max_pages:
+            stop_col = stop_col.when(
+                F.col("depth") >= opt.max_pages, F.lit("max_pages")
+            )
+        stop_col = stop_col.when(F.col("next_url").isNull(), F.lit("no_next_button"))
+        host_round = scope.cache(host_round.withColumn("stop_reason", stop_col))
 
-        def _date_err_msgs_per_host() -> DataFrame:
-            """Per-host date-quarantine messages (error-only branch).
-            Mirrors the reference throw text (ListingPageExtractor.ts:
-            313-323 + utils/date.ts:44-47); ordered by the item's position
-            on its page (the reference's insertion order), made
-            deterministic by sorting (item_index, msg) structs — NOT
-            alphabetically."""
-            return (
+        g = host_round.agg(
+            F.count("*").alias("n_hosts"),
+            F.sum(
+                (~F.col("stop_reason").eqNullSafe("all_duplicates")).cast("long")
+            ).alias("pages_inc"),
+            F.sum("n_excluded").alias("n_excluded"),
+            F.sum(F.col("n_filtered") + F.col("n_excluded")).alias("n_filtered"),
+            F.sum("n_date_err").alias("n_date_err"),
+            F.sum("n_items").alias("n_items"),
+            F.sum("n_new").alias("n_new"),
+            *[
+                F.sum(F.col("stop_reason").eqNullSafe(s).cast("long")).alias(s)
+                for s in STOP_REASONS
+            ],
+            F.sum("n_reason_msgs").alias("n_reason_msgs"),
+        ).collect()[0]
+        c = {k: int(v or 0) for k, v in g.asDict().items()}
+
+        # processPageItems updates ALL counters before the caller's
+        # all-duplicates break (ArticleListingCrawler.ts:58-96, 260-286), so
+        # excluded/filtered/dup stats count for every page, stopped or not.
+        # totalFilteredItems counts excluded containers too (filteredItems
+        # includes isExcluded, ListingPageExtractor.ts:230-235).
+        self.summary.pages_processed += c["pages_inc"]
+        self.summary.urls_excluded += c["n_excluded"]
+        self.summary.total_filtered += c["n_filtered"]
+        # retry-exhausted listing pages are listing errors (reference
+        # CrawlErrorManager.addListingErrors) alongside date quarantines
+        self.summary.listing_errors += c["n_date_err"] + lst.n_failed
+        messages = self._listing_messages(
+            scope, lst, items, c["n_reason_msgs"], c["n_date_err"]
+        )
+        # chains still alive after this round — gates dead-state writes
+        # (host_offsets is session-scoped: once every chain stopped, the
+        # offsets can never be read again). n_hosts is computed from lres,
+        # which already excludes hosts whose listing fetch failed all
+        # attempts (html-NULL rows are dropped before host_round is built) —
+        # so fetch-failed hosts must NOT be subtracted again here, or a
+        # mixed round (some hosts failing, some continuing) clamps to 0 and
+        # skips the offsets roll, corrupting later rounds' field_stats
+        # item indices.
+        stops = {s: c[s] for s in STOP_REASONS}
+        st = _Stats(
+            valid_items=valid_items,
+            session_new=session_new,
+            to_process=to_process,
+            host_round=host_round,
+            sess_seen_count=sess_seen_count,
+            seen_count=seen_count,
+            n_items=c["n_items"],
+            n_new=c["n_new"],
+            n_date_err=c["n_date_err"],
+            n_excluded=c["n_excluded"],
+            n_filtered=c["n_filtered"],
+            n_hosts_active=c["n_hosts"],
+            n_hosts_continuing=max(0, c["n_hosts"] - sum(stops.values())),
+            listing_messages=messages,
+        )
+        # date-quarantined items are listing errors, NOT duplicates — they
+        # never reach the dedup joins, so n_duplicates excludes them
+        self.summary.duplicates_skipped += st.n_duplicates
+        # engine extension to the reference enum: a host whose listing
+        # page failed all fetch attempts ends with 'fetch_error' in the
+        # host-level lineage (session-level reason stays the reference
+        # enum — _session_stop_reason ignores this value)
+        for reason, n in {**stops, "fetch_error": lst.n_failed}.items():
+            if n:
+                self.summary.host_stops[reason] = (
+                    self.summary.host_stops.get(reason, 0) + n
+                )
+        return st
+
+    def _listing_messages(
+        self,
+        scope: RoundScope,
+        lst: _Listing,
+        items: DataFrame,
+        n_reason_msgs: int,
+        n_date_err: int,
+    ) -> Callable[[], list[str]]:
+        """Start assembling the round's bounded listing-error messages
+        (filtered reasons + date quarantines + exhausted listing fetches,
+        first-N per session) and return a callable that yields them.
+
+        The reason/date part is an error-only branch with the exact
+        expressions the lean stats pass skipped, collected on the round's
+        pool: the list is only read when the round's summary is persisted,
+        so the job back-fills executors while the driver plans the content
+        pass (guide §2.6)."""
+        room = MAX_ERROR_MESSAGES - len(self.summary.listing_error_messages)
+        if room <= 0:
+            return lambda: []
+        future = None
+        if n_reason_msgs > 0 or n_date_err > 0:
+            # per-host date-quarantine messages mirror the reference throw
+            # text (ListingPageExtractor.ts:313-323 + utils/date.ts:44-47);
+            # ordered by the item's position on its page (the reference's
+            # insertion order), made deterministic by sorting (item_index,
+            # msg) structs — NOT alphabetically
+            date_msgs_per_host = (
                 items.where(F.col("date_error"))
                 .groupBy(F.col("listing_host").alias("host"))
                 .agg(
@@ -719,241 +911,99 @@ class CrawlRunner:
                     ).alias("date_err_msgs"),
                 )
             )
-        # per-host round state stays DISTRIBUTED (at 10^10 scale millions of
-        # hosts are active per round — never collected); the driver sees one
-        # aggregate row. Stop decisions are columns (reference stop enum,
-        # MetadataTracker.ts:32-37; all_duplicates precedence per
-        # ArticleListingCrawler.ts:260-286, evaluated BEFORE the
-        # pagesProcessed increment).
-        host_round = (
-            page_stats.join(new_per_host, "host", "left")
-            .join(date_err_per_host, "host", "left")
-            .fillna(0, ["n_new", "n_date_err"])
-        )
-        stop_col = F.when(
-            (F.col("n_items") > 0)
-            & (F.col("n_new") == 0)
-            & F.lit(opt.stop_on_all_duplicates),
-            F.lit("all_duplicates"),
-        )
-        if opt.max_pages:
-            stop_col = stop_col.when(
-                F.col("depth") >= opt.max_pages, F.lit("max_pages")
+            reasons_per_host = (
+                lst.lres.select("host", "filtered_reasons")
+                .groupBy("host")
+                .agg(
+                    F.slice(
+                        F.flatten(F.collect_list("filtered_reasons")),
+                        1,
+                        MAX_ERROR_MESSAGES,
+                    ).alias("reasons")
+                )
             )
-        stop_col = stop_col.when(F.col("next_url").isNull(), F.lit("no_next_button"))
-        host_round = host_round.withColumn("stop_reason", stop_col).cache()
-
-        g = host_round.agg(
-            F.count("*").alias("n_hosts"),
-            F.sum(
-                (~F.col("stop_reason").eqNullSafe("all_duplicates")).cast("long")
-            ).alias("pages_inc"),
-            F.sum("n_excluded").alias("n_excluded"),
-            F.sum(F.col("n_filtered") + F.col("n_excluded")).alias("n_filtered"),
-            F.sum("n_date_err").alias("n_date_err"),
-            F.sum("n_items").alias("n_items"),
-            F.sum("n_new").alias("n_new"),
-            F.sum(
-                F.col("stop_reason").eqNullSafe("all_duplicates").cast("long")
-            ).alias("stop_all_dup"),
-            F.sum(
-                F.col("stop_reason").eqNullSafe("max_pages").cast("long")
-            ).alias("stop_max_pages"),
-            F.sum(
-                F.col("stop_reason").eqNullSafe("no_next_button").cast("long")
-            ).alias("stop_no_next"),
-            F.sum("n_reason_msgs").alias("n_reason_msgs"),
-        ).collect()[0]
-        tick("listing+dedup stats collect")
-
-        # processPageItems updates ALL counters before the caller's
-        # all-duplicates break (ArticleListingCrawler.ts:58-96, 260-286), so
-        # excluded/filtered/dup stats count for every page, stopped or not.
-        # totalFilteredItems counts excluded containers too (filteredItems
-        # includes isExcluded, ListingPageExtractor.ts:230-235).
-        self.summary.pages_processed += int(g["pages_inc"] or 0)
-        self.summary.urls_excluded += int(g["n_excluded"] or 0)
-        self.summary.total_filtered += int(g["n_filtered"] or 0)
-        n_date_err = int(g["n_date_err"] or 0)
-        # retry-exhausted listing pages are listing errors (reference
-        # CrawlErrorManager.addListingErrors) alongside date quarantines
-        self.summary.listing_errors += n_date_err + n_failed_pages
-        # bounded listing error MESSAGE list (filtered reasons + date
-        # quarantines + exhausted listing fetches), first-N per session
-        room = MAX_ERROR_MESSAGES - len(self.summary.listing_error_messages)
-        _msg_future = None
-        _msg_pool = None
-        _failed_msgs: list[str] = []
-        if room > 0:
-            if int(g["n_reason_msgs"] or 0) > 0 or n_date_err > 0:
-                # error-only branch: assemble the bounded message lists
-                # with the exact expressions the lean pass skipped.
-                # Cross-host assembly keeps each host's in-page message
-                # order intact (the reference's single-source session IS
-                # one host, so this reproduces its insertion order
-                # exactly) and orders hosts deterministically — sort on
-                # (host, msgs) structs, never on the flattened messages
-                # (alphabetical would break parity)
-                reasons_per_host = (
-                    lres.select("host", "filtered_reasons")
-                    .groupBy("host")
-                    .agg(
-                        F.slice(
-                            F.flatten(F.collect_list("filtered_reasons")),
-                            1,
-                            MAX_ERROR_MESSAGES,
-                        ).alias("reasons")
-                    )
+            # Cross-host assembly keeps each host's in-page message order
+            # intact (the reference's single-source session IS one host, so
+            # this reproduces its insertion order exactly) and orders hosts
+            # deterministically — sort on (host, msgs) structs, never on
+            # the flattened messages (alphabetical would break parity)
+            def host_ordered(host_msgs: Column) -> Column:
+                return F.slice(
+                    F.flatten(
+                        F.transform(
+                            F.array_sort(F.collect_list(host_msgs)),
+                            lambda s: s["ms"],
+                        )
+                    ),
+                    1,
+                    MAX_ERROR_MESSAGES,
                 )
-                mg_df = (
-                    reasons_per_host.join(
-                        _date_err_msgs_per_host(), "host", "left"
-                    )
-                    .agg(
-                        F.slice(
-                            F.flatten(
-                                F.transform(
-                                    F.array_sort(
-                                        F.collect_list(
-                                            F.struct(
-                                                F.col("host").alias("h"),
-                                                F.col("reasons").alias("ms"),
-                                            )
-                                        )
-                                    ),
-                                    lambda s: s["ms"],
-                                )
-                            ),
-                            1,
-                            MAX_ERROR_MESSAGES,
-                        ).alias("listing_msgs"),
-                        F.slice(
-                            F.flatten(
-                                F.transform(
-                                    F.array_sort(
-                                        # null for most hosts (left join) —
-                                        # a null STRUCT is skipped by
-                                        # collect_list, while a null array
-                                        # inside flatten() nulls the result
-                                        F.collect_list(
-                                            F.when(
-                                                F.col(
-                                                    "date_err_msgs"
-                                                ).isNotNull(),
-                                                F.struct(
-                                                    F.col("host").alias("h"),
-                                                    F.col(
-                                                        "date_err_msgs"
-                                                    ).alias("ms"),
-                                                ),
-                                            )
-                                        )
-                                    ),
-                                    lambda s: s["ms"],
-                                )
-                            ),
-                            1,
-                            MAX_ERROR_MESSAGES,
-                        ).alias("date_msgs"),
-                    )
-                )
-                # overlap the message collect with the rest of the round
-                # (guide §2.6): the list is only read when the round's
-                # summary is persisted, so the job back-fills executors
-                # while the driver plans the content pass
-                from concurrent.futures import ThreadPoolExecutor
 
-                _msg_pool = ThreadPoolExecutor(max_workers=1)
-                _msg_future = _msg_pool.submit(
-                    lambda: mg_df.collect()[0]
-                )
-            if n_failed_pages:
-                _failed_msgs = [
-                    f"Failed to load listing page after "
-                    f"{opt.max_fetch_attempts} attempts: {row.url}"
-                    for row in _listing_misses(lres).limit(room).collect()
-                ]
+            mg_df = reasons_per_host.join(date_msgs_per_host, "host", "left").agg(
+                host_ordered(
+                    F.struct(F.col("host").alias("h"), F.col("reasons").alias("ms"))
+                ).alias("listing_msgs"),
+                # null for most hosts (left join) — a null STRUCT is skipped
+                # by collect_list, while a null array inside flatten() nulls
+                # the result
+                host_ordered(
+                    F.when(
+                        F.col("date_err_msgs").isNotNull(),
+                        F.struct(
+                            F.col("host").alias("h"),
+                            F.col("date_err_msgs").alias("ms"),
+                        ),
+                    )
+                ).alias("date_msgs"),
+            )
+            future = scope.submit(lambda: mg_df.collect()[0])
+        failed = []
+        if lst.n_failed:
+            failed = [
+                f"Failed to load listing page after "
+                f"{self.opt.max_fetch_attempts} attempts: {row.url}"
+                for row in lst.misses().limit(room).collect()
+            ]
 
-        def _resolve_listing_msgs() -> None:
-            """Join the overlapped message job and fill the session's
-            bounded listing-error list — same contents and order as the
-            old synchronous assembly."""
-            if room <= 0:
-                return
+        def resolve() -> list[str]:
             msgs: list[str] = []
-            if _msg_future is not None:
-                mg = _msg_future.result()
-                _msg_pool.shutdown(wait=False)
-                msgs = list(mg["listing_msgs"] or []) + list(
-                    mg["date_msgs"] or []
-                )
-            msgs += _failed_msgs
-            self.summary.listing_error_messages.extend(msgs[:room])
-        n_page_items = int(g["n_items"] or 0)
-        n_new_total = int(g["n_new"] or 0)
-        # date-quarantined items are listing errors, NOT duplicates — they
-        # never reach the dedup joins, so subtract them from the delta
-        self.summary.duplicates_skipped += n_page_items - n_new_total - n_date_err
-        n_hosts_active = int(g["n_hosts"] or 0)
-        for reason, col in (
-            ("all_duplicates", "stop_all_dup"),
-            ("max_pages", "stop_max_pages"),
-            ("no_next_button", "stop_no_next"),
-        ):
-            c = int(g[col] or 0)
-            if c:
-                self.summary.host_stops[reason] = (
-                    self.summary.host_stops.get(reason, 0) + c
-                )
-        if n_failed_pages:
-            # engine extension to the reference enum: a host whose listing
-            # page failed all fetch attempts ends with 'fetch_error' in the
-            # host-level lineage (session-level reason stays the reference
-            # enum — _session_stop_reason ignores this value)
-            self.summary.host_stops["fetch_error"] = (
-                self.summary.host_stops.get("fetch_error", 0) + n_failed_pages
-            )
-        # chains still alive after this round — gates dead-state writes
-        # (host_offsets is session-scoped: once every chain stopped, the
-        # offsets can never be read again). n_hosts_active is computed from
-        # lres, which already excludes hosts whose listing fetch failed all
-        # attempts (html-NULL rows are dropped before host_round is built) —
-        # so fetch-failed hosts must NOT be subtracted again here, or a
-        # mixed round (some hosts failing, some continuing) clamps to 0 and
-        # skips the offsets roll, corrupting later rounds' field_stats
-        # item indices.
-        n_hosts_continuing = max(
-            0,
-            n_hosts_active
-            - sum(
-                int(g[c] or 0)
-                for c in ("stop_all_dup", "stop_max_pages", "stop_no_next")
-            ),
-        )
+            if future is not None:
+                mg = future.result()
+                msgs = list(mg["listing_msgs"] or []) + list(mg["date_msgs"] or [])
+            return (msgs + failed)[:room]
 
-        # ---- content schedule ----------------------------------------------
-        all_dup_hosts_df = host_round.where(
+        return resolve
+
+    # -- phase: schedule ------------------------------------------------------
+
+    def _schedule_phase(
+        self,
+        scope: RoundScope,
+        pending: DataFrame,
+        lst: _Listing,
+        st: _Stats,
+        carry_hint: int | None,
+    ) -> _Schedule:
+        """Pick this round's content fetches — new items of continuing
+        hosts plus the carried frontier, robots-gated and cut to the
+        per-host and round budgets — queue sitemap-discovered URLs for the
+        next round, and stamp the fetches with their processed_order."""
+        opt = self.opt
+        all_dup_hosts_df = st.host_round.where(
             F.col("stop_reason").eqNullSafe("all_duplicates")
         ).select("host")
-        base = to_process.join(
+        base = st.to_process.join(
             all_dup_hosts_df.withColumnRenamed("host", "listing_host"),
             "listing_host",
             "left_anti",
         )
-        to_fetch_new = base.select(
-            "url", "url_canon", "url_hash", "host", "host_hash",
-            F.col("depth"),
-            F.lit(0.0).alias("priority"),
-            F.lit(self.start_time).alias("discovered_ts"),
-            F.lit("pending").alias("state"),
-            F.lit(0).alias("attempts"),
-            F.lit(self.config.id).alias("source_id"),
-            F.lit("content").alias("kind"),
-            F.col("item_index").cast("long").alias("listing_order"),
-            "title", "author", "published_date",
+        to_fetch_new = self._frontier_rows(
+            base.withColumn("listing_order", F.col("item_index").cast("long")),
+            "content",
         )
-        candidates = _rank_priority(
-            content_carry.unionByName(to_fetch_new)
+        candidates = self._with_rank_priority(
+            pending.where(F.col("kind") == "content").unionByName(to_fetch_new),
+            lst.rank_dim,
         )
 
         # ---- robots acquisition (option) -----------------------------------
@@ -964,7 +1014,7 @@ class CrawlRunner:
         sitemap_lines: list = []
         robots_dim = self.robots
         if opt.fetch_robots:
-            hosts_df = lkeys.select("host", "url").unionByName(
+            hosts_df = lst.lkeys.select("host", "url").unionByName(
                 candidates.select("host", "url")
             )
             if self.robots is not None:
@@ -975,7 +1025,7 @@ class CrawlRunner:
                 hosts_df = hosts_df.join(
                     self.robots.select("host"), "host", "left_anti"
                 )
-            sitemap_lines = self._refresh_robots(hosts_df)
+            sitemap_lines = self._refresh_robots(scope, hosts_df)
             fetched_rules = self.wh.read("robots_rules", schemas.ROBOTS)
             if self.robots is None:
                 robots_dim = fetched_rules
@@ -993,6 +1043,20 @@ class CrawlRunner:
             opt.per_host_budget,
             ["depth", "listing_order", "url_hash"],
         )
+        # both range-partitioned sequencer runs below (budget cut, order
+        # stamp) size to the known upper bound on this round's candidate
+        # count (items found + carried content): each is two jobs over
+        # LIGHT keys, so at small rounds the fixed cost is pure task
+        # overhead (64 tasks for 5k rows); at multi-million-row rounds the
+        # ~20k-rows/partition floor keeps the sort partition-local and the
+        # count vector driver-tiny
+        order_parts = max(
+            1,
+            min(
+                self.spark.sparkContext.defaultParallelism * 2,
+                -(-(st.n_items + (carry_hint or 0)) // 20_000),  # ceil div
+            ),
+        )
         # ---- global round budget (option): top-K across hosts --------------
         # the per-host cap bounds any ONE domain; this bounds the ROUND.
         # Same two-phase range-partition sequencer as processed_order (two
@@ -1000,18 +1064,12 @@ class CrawlRunner:
         # cut is a deterministic function of (priority, depth, host,
         # listing_order, url_hash), so a resumed session makes the same cut.
         if opt.round_content_budget is not None:
-            seqd = assign_sequential_order(
+            seqd, _ = assign_sequential_order(
                 scheduled,
                 ["priority", "depth", "host", "listing_order", "url_hash"],
                 col_name="_gseq",
-                n_parts=max(
-                    1,
-                    min(
-                        spark.sparkContext.defaultParallelism * 2,
-                        -(-(n_page_items + (carry_hint or 0)) // 20_000),
-                    ),
-                ),
-                cleanup=round_caches,
+                n_parts=order_parts,
+                persist=scope.cache,
             )
             deferred = seqd.where(
                 F.col("_gseq") > opt.round_content_budget
@@ -1034,26 +1092,12 @@ class CrawlRunner:
         if sitemap_lines:
             from ethos_spark.sources.sitemap import discover_seed_urls
 
-            discovered = discover_seed_urls(
-                spark, self.fetcher, sitemap_lines
-            )
-            inj = (
-                self._with_url_cols(discovered.select("url"))
-                .withColumn("depth", F.lit(1))
-                .withColumn("priority", F.lit(0.0))
-                .withColumn("discovered_ts", F.lit(self.start_time))
-                .withColumn("state", F.lit("pending"))
-                .withColumn("attempts", F.lit(0))
-                .withColumn("source_id", F.lit(self.config.id))
-                .withColumn("kind", F.lit("content"))
-                .withColumn("listing_order", F.lit(0).cast("long"))
-                .withColumn("title", F.lit(None).cast("string"))
-                .withColumn("author", F.lit(None).cast("string"))
-                .withColumn("published_date", F.lit(None).cast("string"))
-                .dropDuplicates(["url_hash"])
+            discovered = discover_seed_urls(self.spark, self.fetcher, sitemap_lines)
+            inj = self._frontier_rows(discovered.select("url"), "content").dropDuplicates(
+                ["url_hash"]
             )
             inj, _ = robots_gate(inj, robots_dim)
-            if opt.skip_existing_urls and seen_count > 0:
+            if opt.skip_existing_urls and st.seen_count > 0:
                 inj = inj.join(
                     self.wh.read("pages", schemas.PAGES_OUT).select("url_hash"),
                     "url_hash",
@@ -1065,42 +1109,6 @@ class CrawlRunner:
                 content_overflow.select("url_hash"), "url_hash", "left_anti"
             )
             sitemap_inject = inj.select(*schemas.FRONTIER.names)
-        tick("driver stop logic")
-
-        # ---- fetch + extract (the hot path) ---------------------------------
-        # corpus-fetcher output is scan-partitioned (host-agnostic, already
-        # balanced). Salting applies when the fetcher partitions BY host
-        # (politeness-preserving HTTP fetch): there a hot domain serializes
-        # one task, so spread it across salt_factor tasks first.
-        # upper bound on this round's content candidates: carried-over
-        # pending (tracked via frontier-write observation) + newly
-        # discovered (already collected in g) — politeness/robots only
-        # shrink it. Gates broadcast vs shuffle in fetch and order joins.
-        content_hint = (
-            carry_hint + n_new_total if carry_hint is not None else None
-        )
-        small_round = (
-            content_hint is not None and content_hint <= opt.broadcast_max_rows
-        )
-
-        def _maybe_broadcast(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if small_round else df
-
-        # mergeContentData semantics (ContentDataMapper.ts:8-26): content
-        # page fields override listing fields where non-null
-        content_field_names = [
-            n for n in ("title", "author", "content")
-            if n in self.config.content.fields
-        ]
-        failed_fields = F.filter(
-            F.array(
-                *[
-                    F.when(F.col(f"{n}_x").isNull(), F.lit(n))
-                    for n in content_field_names
-                ]
-            ),
-            lambda x: x.isNotNull(),
-        )
 
         # W1: deterministic global order = (round, host, listing position).
         # Assigned on the PRE-FETCH candidate set (order keys are data known
@@ -1109,203 +1117,227 @@ class CrawlRunner:
         # only on a retry attempt keeps this pre-assigned order (reference
         # inline-retry semantics). The per-partition count vector collected
         # here also yields n_allowed for free — the miss-detection baseline.
-        offset = int(self.wh.props.get("order_offset", "0"))
-        cleanup: list = []
-        tick("build content plan")
-        total_out: list = []
-        # size the range-partitioning to the known upper bound on this
-        # round's candidate count (items found + carried content) — the
-        # order stamp is two jobs over LIGHT keys, so at small rounds the
-        # fixed cost is pure task overhead (64 tasks for 5k rows); at
-        # multi-million-row rounds the ~20k-rows/partition floor keeps the
-        # sort partition-local and the count vector driver-tiny
-        n_cand_hint = n_page_items + (carry_hint or 0)
-        order_parts = max(
-            1,
-            min(
-                self.spark.sparkContext.defaultParallelism * 2,
-                -(-n_cand_hint // 20_000),  # ceil div
-            ),
-        )
-        # with rank priority on, high-value hosts lead the total order —
+        # With rank priority on, high-value hosts lead the total order —
         # the observable contract of the prioritized crawl (processed_order
         # IS the schedule); off, the order is byte-identical to prior rounds
+        offset = int(self.wh.props.get("order_offset", "0"))
         if opt.prioritize_by_rank:
             order_sel = ["url_hash", "depth", "host", "listing_order", "priority"]
             order_keys = ["priority", "depth", "host", "listing_order", "url_hash"]
         else:
             order_sel = ["url_hash", "depth", "host", "listing_order"]
             order_keys = ["depth", "host", "listing_order", "url_hash"]
-        ordered_light = assign_sequential_order(
+        ordered_light, n_allowed = assign_sequential_order(
             allowed.select(*order_sel),
             order_keys,
             offset=offset,
             n_parts=order_parts,
-            cleanup=cleanup,
-            total_out=total_out,
+            persist=scope.cache,
         )
-        n_allowed = total_out[0]
         order_map = ordered_light.select("url_hash", "processed_order")
+        # upper bound on this round's content candidates: carried-over
+        # pending (tracked via frontier-write observation) + newly
+        # discovered (already collected in the stats row) —
+        # politeness/robots only shrink it. Gates broadcast vs shuffle in
+        # the fetch and order joins.
+        content_hint = carry_hint + st.n_new if carry_hint is not None else None
+        if content_hint is not None and content_hint <= opt.broadcast_max_rows:
+            order_map = F.broadcast(order_map)
+        return _Schedule(
+            allowed=allowed,
+            blocked=blocked,
+            robots_dim=robots_dim,
+            content_overflow=content_overflow,
+            sitemap_inject=sitemap_inject,
+            order_map=order_map,
+            offset=offset,
+            n_allowed=n_allowed,
+            content_hint=content_hint,
+        )
 
-        def _content_pass(cand: DataFrame, hint: int | None) -> DataFrame:
-            """fetch → extract → merge → order-join → PAGES_OUT rows.
-            Failures are ABSENT rows: html-NULL rows from returns_misses
-            fetchers are dropped here so both fetcher contracts hit the
-            same retry/miss machinery."""
-            fc = self.fetcher.fetch(cand, size_hint=hint, stage="content").where(
-                F.col("html").isNotNull()
-            )
-            if getattr(self.fetcher, "host_partitioned", False):
-                fc = salt_hot_hosts(fc, n_parts, opt.salt_factor)
-            ex = extract_content_stage(fc, self.config.content)
-            m = (
-                ex.withColumn("title_f", F.coalesce("title_x", "title"))
-                .withColumn("author_f", F.coalesce("author_x", "author"))
-                .withColumn("failed_fields", failed_fields)
-                .withColumn("had_err", F.size("extraction_errors") > 0)
-            )
-            return m.join(_maybe_broadcast(order_map), "url_hash").select(
-                F.xxhash64("url_hash").alias("id"),
-                F.sha1(F.col("url")).alias("hash"),  # ContentStore.ts:106
-                F.lit(self.config.id).alias("source"),
-                "url",
-                "url_hash",
-                "host",
-                "host_hash",
-                F.col("title_f").alias("title"),
-                F.col("author_f").alias("author"),
-                "published_date",
-                F.col("content_x").alias("content"),
-                F.lit(self.start_time).alias("crawled_at"),
-                F.lit(self.start_time).alias("created_at"),
-                F.col("had_err").alias("had_extraction_error"),
-                "processed_order",
-                "partition_id",
-                "fetch_ms",
-                "parse_ms",
-                "failed_fields",
-                "extraction_errors",
-            ).select(*schemas.PAGES_OUT.names)
-        tick("assign order (pre-fetch keys)")
+    # -- phase: content -------------------------------------------------------
 
-        # ---- THE single heavy pass: fetch→extract→write pages ---------------
-        # Everything downstream (counters, lineage, seen, metrics, field
-        # stats) derives from column-pruned reads of the files just written —
-        # the write-once-derive-from-storage shape Iceberg pipelines use; no
-        # multi-GB executor cache of article bodies. Row/error counts ride
-        # an Observation on each write (no separate agg job).
-        from pyspark.sql import Observation
-
-        def _append_pages(df: DataFrame) -> tuple[str, int, int]:
-            o = Observation()
-            d = self.wh.append(
-                "pages",
-                df.observe(
-                    o,
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(
-                        F.col("had_extraction_error").cast("long")
-                    ).alias("errs"),
-                ),
-            )
-            vals = o.get
-            return d, int(vals["n"] or 0), int(vals["errs"] or 0)
-
+    def _content_phase(self, scope: RoundScope, sch: _Schedule) -> _Content:
+        """THE single heavy pass: fetch → extract → write pages, with
+        in-round retries. Runs on the driver thread while the listing-side
+        lineage writes proceed on the pool. Everything downstream
+        (counters, lineage, seen, metrics, field stats) derives from
+        column-pruned reads of the files written here — the
+        write-once-derive-from-storage shape Iceberg pipelines use; no
+        multi-GB executor cache of article bodies."""
         # slim the broadcast payload to the columns the pages rows need —
         # the frontier row is 16 columns wide and broadcast-relation build
         # time is serial driver cost proportional to broadcast bytes
-        def _heavy_pass() -> tuple[list, object, int, int]:
-            """fetch+extract+write pages (+ in-round retries, deferred
-            miss rows). Runs in the DRIVER thread while the listing-side
-            lineage writes (phase A) proceed concurrently in the pool —
-            they share no inputs with the content pass."""
-            allowed_slim = allowed.select(
-                "url", "url_hash", "host", "host_hash",
-                "title", "author", "published_date",
-            )
-            pages_dir, n_written, n_errors = _append_pages(
-                _content_pass(allowed_slim, content_hint)
-            )
-            written_dirs = [pages_dir]
-            tick("fetch+extract+write pages")
+        allowed = sch.allowed.select(
+            "url", "url_hash", "host", "host_hash",
+            "title", "author", "published_date",
+        )
+        pages_dir, n_stored, n_errors = self._append_pages(
+            self._fetch_content(allowed, sch.content_hint, sch.order_map)
+        )
+        written_dirs = [pages_dir]
 
-            # in-round content retry: misses (n_allowed known from the ordering
-            # counts, n_written from the write observation — zero extra jobs in
-            # the no-failure case) are refetched up to max_fetch_attempts
-            attempt = 1
-            while _retryable and n_written < n_allowed and attempt < opt.max_fetch_attempts:
-                attempt += 1
-                self.summary.fetch_retries += 1
-                if opt.retry_backoff_sec:
-                    time.sleep(opt.retry_backoff_sec)
-                done_hashes = spark.read.parquet(*written_dirs).select("url_hash")
-                miss_cand = allowed_slim.join(done_hashes, "url_hash", "left_anti")
-                d, n_got, n_err_got = _append_pages(
-                    _content_pass(miss_cand, n_allowed - n_written)
+        def not_yet_written() -> DataFrame:
+            done = self.spark.read.parquet(*written_dirs).select("url_hash")
+            return allowed.join(done, "url_hash", "left_anti")
+
+        # in-round content retry: misses (n_allowed known from the ordering
+        # counts, n_stored from the write observation — zero extra jobs in
+        # the no-failure case) are refetched up to max_fetch_attempts
+        attempt = 1
+        while (
+            self._retryable
+            and n_stored < sch.n_allowed
+            and attempt < self.opt.max_fetch_attempts
+        ):
+            attempt += 1
+            self.summary.fetch_retries += 1
+            d, n_got, n_err_got = self._append_pages(
+                self._fetch_content(
+                    not_yet_written(), sch.n_allowed - n_stored, sch.order_map
                 )
-                written_dirs.append(d)
-                n_written += n_got
-                n_errors += n_err_got
+            )
+            written_dirs.append(d)
+            n_stored += n_got
+            n_errors += n_err_got
 
-            # retry-exhausted misses: stored with an extraction-error flag,
-            # exactly like the reference's failed content loads
-            # (ContentPageExtractor failure → updateItemMetadata → stored with
-            # hadContentExtractionError). The write itself is DEFERRED into the
-            # parallel write pool below — it only has to finish before the
-            # stored-derived lineage reads start (two-phase pool).
-            missed_out = None
-            if n_written < n_allowed:
-                done_hashes = spark.read.parquet(*written_dirs).select("url_hash")
-                missed = (
-                    allowed_slim.join(done_hashes, "url_hash", "left_anti")
-                    .join(_maybe_broadcast(order_map), "url_hash")
-                    .select(
-                        F.xxhash64("url_hash").alias("id"),
-                        F.sha1(F.col("url")).alias("hash"),
-                        F.lit(self.config.id).alias("source"),
-                        "url",
-                        "url_hash",
-                        "host",
-                        "host_hash",
-                        F.col("title"),
-                        F.col("author"),
-                        "published_date",
-                        F.lit(None).cast("string").alias("content"),
-                        F.lit(self.start_time).alias("crawled_at"),
-                        F.lit(self.start_time).alias("created_at"),
-                        F.lit(True).alias("had_extraction_error"),
-                        "processed_order",
-                        F.lit(-1).alias("partition_id"),
-                        F.lit(0.0).alias("fetch_ms"),
-                        F.lit(0.0).alias("parse_ms"),
-                        (
-                            F.array([F.lit(n) for n in content_field_names])
-                            if content_field_names
-                            else F.lit(None).cast("array<string>")
-                        ).alias("failed_fields"),
-                        # reference catch-path message shape,
-                        # ContentPageExtractor.ts:180-186
-                        F.array(
-                            F.concat(
-                                F.lit("Failed to extract content data for "),
-                                F.col("url"),
-                                F.lit(
-                                    f" : fetch failed after "
-                                    f"{opt.max_fetch_attempts} attempts"
-                                ),
-                            )
-                        ).alias("extraction_errors"),
+        # retry-exhausted misses: stored with an extraction-error flag,
+        # exactly like the reference's failed content loads
+        # (ContentPageExtractor failure → updateItemMetadata → stored with
+        # hadContentExtractionError). Written last, on the pool, once the
+        # blocked count is in.
+        missed_out = None
+        if n_stored < sch.n_allowed:
+            missed_out = self._pages_rows(
+                not_yet_written().join(sch.order_map, "url_hash"),
+                title=F.col("title"),
+                author=F.col("author"),
+                content=F.lit(None).cast("string"),
+                had_extraction_error=F.lit(True),
+                partition_id=F.lit(-1),
+                fetch_ms=F.lit(0.0),
+                parse_ms=F.lit(0.0),
+                failed_fields=(
+                    F.array([F.lit(n) for n in self._content_fields])
+                    if self._content_fields
+                    else F.lit(None).cast("array<string>")
+                ),
+                # reference catch-path message shape,
+                # ContentPageExtractor.ts:180-186
+                extraction_errors=F.array(
+                    F.concat(
+                        F.lit("Failed to extract content data for "),
+                        F.col("url"),
+                        F.lit(
+                            f" : fetch failed after "
+                            f"{self.opt.max_fetch_attempts} attempts"
+                        ),
                     )
-                )
-                missed_out = missed.select(*schemas.PAGES_OUT.names)
-                n_errors += n_allowed - n_written
-                n_written = n_allowed
-            return written_dirs, missed_out, n_written, n_errors
+                ),
+            )
+            n_errors += sch.n_allowed - n_stored
+            n_stored = sch.n_allowed
+        n_blocked = sch.blocked.count() if sch.robots_dim is not None else 0
 
-        # ---- lineage writes (pruned scans of the round's files) -------------
-        # the stored-derived jobs are built by a closure so they can be
-        # constructed INSIDE the write pool, as soon as the deferred miss
-        # write (if any) lands its data dir
+        self.summary.contents_crawled += n_stored
+        self.summary.items_processed += n_stored
+        self.summary.items_with_errors += n_errors
+        self.summary.robots_blocked += n_blocked
+        if missed_out is not None:
+            written_dirs.append(
+                scope.submit(self.wh.append, "pages", missed_out).result()
+            )
+        return _Content(self.spark.read.parquet(*written_dirs), n_stored, n_blocked)
+
+    def _fetch_content(
+        self, cand: DataFrame, hint: int | None, order_map: DataFrame
+    ) -> DataFrame:
+        """fetch → extract → merge → order-join → PAGES_OUT rows.
+        Failures are ABSENT rows: html-NULL rows from returns_misses
+        fetchers are dropped here so both fetcher contracts hit the same
+        retry/miss machinery."""
+        fc = self.fetcher.fetch(cand, size_hint=hint, stage="content").where(
+            F.col("html").isNotNull()
+        )
+        # corpus-fetcher output is scan-partitioned (host-agnostic, already
+        # balanced). Salting applies when the fetcher partitions BY host
+        # (politeness-preserving HTTP fetch): there a hot domain serializes
+        # one task, so spread it across SALT_FACTOR tasks first.
+        if getattr(self.fetcher, "host_partitioned", False):
+            fc = salt_hot_hosts(
+                fc, self.spark.sparkContext.defaultParallelism * 2, SALT_FACTOR
+            )
+        ex = extract_content_stage(fc, self.config.content)
+        failed_fields = F.filter(
+            F.array(
+                *[
+                    F.when(F.col(f"{n}_x").isNull(), F.lit(n))
+                    for n in self._content_fields
+                ]
+            ),
+            lambda x: x.isNotNull(),
+        )
+        # mergeContentData semantics (ContentDataMapper.ts:8-26): content
+        # page fields override listing fields where non-null
+        return self._pages_rows(
+            ex.join(order_map, "url_hash"),
+            title=F.coalesce("title_x", "title"),
+            author=F.coalesce("author_x", "author"),
+            content=F.col("content_x"),
+            had_extraction_error=F.size("extraction_errors") > 0,
+            partition_id=F.col("partition_id"),
+            fetch_ms=F.col("fetch_ms"),
+            parse_ms=F.col("parse_ms"),
+            failed_fields=failed_fields,
+            extraction_errors=F.col("extraction_errors"),
+        )
+
+    def _pages_rows(self, df: DataFrame, **cols: Column) -> DataFrame:
+        """Project ordered candidate rows onto PAGES_OUT. ``cols`` supplies
+        the columns that differ between fetched rows and retry-exhausted
+        misses; the rest derive from the url and the session."""
+        exprs = {
+            "id": F.xxhash64("url_hash"),
+            "hash": F.sha1(F.col("url")),  # ContentStore.ts:106
+            "source": F.lit(self.config.id),
+            "crawled_at": F.lit(self.start_time),
+            "created_at": F.lit(self.start_time),
+            **cols,
+        }
+        return df.select(
+            *[
+                exprs[n].alias(n) if n in exprs else F.col(n)
+                for n in schemas.PAGES_OUT.names
+            ]
+        )
+
+    def _append_pages(self, df: DataFrame) -> tuple[str, int, int]:
+        """Append pages rows; the row and error counts ride an Observation
+        on the write (no separate agg job)."""
+        o = Observation()
+        d = self.wh.append(
+            "pages",
+            df.observe(
+                o,
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("had_extraction_error").cast("long")).alias("errs"),
+            ),
+        )
+        vals = o.get
+        return d, int(vals["n"] or 0), int(vals["errs"] or 0)
+
+    # -- phase: lineage / commit ----------------------------------------------
+
+    def _lineage_phase(
+        self, scope: RoundScope, r: int, lst: _Listing, st: _Stats, sch: _Schedule
+    ) -> tuple[Observation, DataFrame]:
+        """Start the listing-side writes on the round's pool: seen_session,
+        host_state, listing field_stats, link_edges (option) and the next
+        frontier. They share no inputs with the content pass, so at bench
+        scale ~2 s of light-job latency hides behind it. Returns the
+        frontier write's per-kind Observation and the host offsets as of
+        round start."""
+        opt = self.opt
         # NOTE: the persistent URL-seen set IS pages.url_hash (every stored
         # row appends exactly one seen entry) — reading it as a
         # column-pruned projection of pages costs the same scan as a
@@ -1313,13 +1345,13 @@ class CrawlRunner:
         # session_new is already distinct on url_hash (dedup_within_batch
         # window + anti-join against prior rounds) — append as-is, no
         # distinct shuffle.
-        seen_sess_df = session_new.select("url_hash")
-        if sitemap_inject is not None:
+        seen_sess_df = st.session_new.select("url_hash")
+        if sch.sitemap_inject is not None:
             # sitemap-injected candidates are queued work: a later LISTING
             # discovery of the same url must dedup against them (they are
             # not in stored pages until their fetch round commits)
             seen_sess_df = seen_sess_df.unionByName(
-                sitemap_inject.select("url_hash")
+                sch.sitemap_inject.select("url_hash")
             )
 
         # A5 listing side: per-field extraction stats aggregated from the
@@ -1341,10 +1373,10 @@ class CrawlRunner:
             ]
         )
         # snapshot of per-host offsets BEFORE this round's counts land
-        # (read resolved now; the replace below writes a fresh dir)
+        # (read resolved now; the commit phase's replace writes a fresh dir)
         prev_offsets = self.wh.read("host_offsets", schemas.HOST_OFFSETS)
         lfs_df = (
-            lres.select("host", F.explode("field_stats").alias("s"))
+            lst.lres.select("host", F.explode("field_stats").alias("s"))
             .join(prev_offsets, "host", "left")
             .withColumn("_off", F.coalesce("items_cum", F.lit(0)))
             .select(
@@ -1381,117 +1413,25 @@ class CrawlRunner:
             .select(*schemas.FIELD_STATS.names)
         )
 
-        def _stored_jobs(stored: DataFrame) -> list[tuple[str, DataFrame]]:
-            sc_df = stored.select(
-                F.lit(self.session_id).alias("session_id"),
-                F.col("id").alias("content_id"),
-                "processed_order",
-                F.col("had_extraction_error").alias(
-                    "had_content_extraction_error"
-                ),
-            )
-            # per-partition lineage metrics (north_rule)
-            part_metrics = (
-                stored.groupBy("partition_id")
-                .agg(
-                    F.count("*").alias("contents_crawled"),
-                    F.sum("fetch_ms").alias("fetch_ms"),
-                    F.sum("parse_ms").alias("parse_ms"),
-                )
-                .select(
-                    F.lit(self.session_id).alias("session_id"),
-                    F.lit(r).alias("round"),
-                    "partition_id",
-                    F.lit(n_page_items).alias("items_found"),
-                    F.lit(n_stored).alias("items_processed"),
-                    F.lit(n_page_items - n_new_total - n_date_err).alias(
-                        "duplicates_skipped"
-                    ),
-                    F.lit(int(g["n_excluded"] or 0)).alias("urls_excluded"),
-                    F.lit(int(g["n_filtered"] or 0)).alias("total_filtered"),
-                    "contents_crawled",
-                    "fetch_ms",
-                    "parse_ms",
-                )
-            )
-            out = [
-                ("session_content", sc_df),
-                ("metrics", part_metrics.select(*schemas.METRICS.names)),
-            ]
-            # A5/W2: per-field content extraction stats with 1-based
-            # missing-item indices (ContentDataMapper.ts:31-55; offset
-            # semantics of ListingPageExtractor.ts:307). Index =
-            # processed_order (the reference's global item counter). ONE
-            # aggregation pass over stored, exploded into FIELD_STATS rows.
-            if content_field_names:
-                agg_cols = [F.count("*").alias("_ta")]
-                for fname in content_field_names:
-                    failed = F.array_contains(F.col("failed_fields"), fname)
-                    agg_cols.append(
-                        F.sum((~failed).cast("long")).alias(f"_sc_{fname}")
-                    )
-                    agg_cols.append(
-                        F.slice(
-                            F.sort_array(
-                                F.collect_list(
-                                    F.when(failed, F.col("processed_order"))
-                                )
-                            ),
-                            1,
-                            10_000,  # bound per-round list growth
-                        ).alias(f"_mi_{fname}")
-                    )
-                fs = stored.agg(*agg_cols).select(
-                    "_ta",
-                    F.explode(
-                        F.array(
-                            *[
-                                F.struct(
-                                    F.lit(fname).alias("field_name"),
-                                    F.col(f"_sc_{fname}").alias("success_count"),
-                                    F.lit(
-                                        self.config.content.fields[fname].optional
-                                    ).alias("is_optional"),
-                                    F.col(f"_mi_{fname}").alias("missing_items"),
-                                )
-                                for fname in content_field_names
-                            ]
-                        )
-                    ).alias("f"),
-                ).select(
-                    F.lit(self.session_id).alias("session_id"),
-                    F.lit(r).alias("round"),
-                    F.lit("content").alias("stage"),
-                    F.col("f.field_name").alias("field_name"),
-                    F.col("f.success_count").alias("success_count"),
-                    F.col("_ta").alias("total_attempts"),
-                    F.col("f.is_optional").alias("is_optional"),
-                    F.col("f.missing_items").alias("missing_items"),
-                )
-                out.append(("field_stats", fs.select(*schemas.FIELD_STATS.names)))
-            return out
-
-        tick("build lineage plans")
         # frontier: remaining listing overflow + next pages + content
         # overflow — next listing pages derived DISTRIBUTED from host_round
         # (never a driver-side url list)
-        next_df = self._frontier_listing_rows(
-            host_round.where(
+        next_df = self._frontier_rows(
+            st.host_round.where(
                 F.col("stop_reason").isNull() & F.col("next_url").isNotNull()
             ).select(
                 F.col("next_url").alias("url"),
                 (F.col("depth") + 1).alias("depth"),
-            )
+            ),
+            "listing",
         )
-        new_pending = listing_overflow.unionByName(next_df).unionByName(
-            content_overflow
+        new_pending = lst.overflow.unionByName(next_df).unionByName(
+            sch.content_overflow
         )
-        if sitemap_inject is not None:
-            new_pending = new_pending.unionByName(sitemap_inject)
+        if sch.sitemap_inject is not None:
+            new_pending = new_pending.unionByName(sch.sitemap_inject)
         # count the pending set BY KIND inside the write action itself
         # (Observation = zero extra jobs) — next round's broadcast gate
-        from pyspark.sql import Observation
-
         obs = Observation()
         observed_pending = new_pending.select(*schemas.FRONTIER.names).observe(
             obs,
@@ -1500,29 +1440,21 @@ class CrawlRunner:
         )
 
         # per-host stop lineage (a table, not driver state)
-        host_stops_df = host_round.where(F.col("stop_reason").isNotNull()).select(
+        host_stops_df = st.host_round.where(F.col("stop_reason").isNotNull()).select(
             "host",
             F.col("depth").cast("long").alias("pages_processed"),
             F.col("stop_reason").alias("stopped_reason"),
         )
-        if n_failed_pages:
-            failed_hosts_df = lkeys.join(
-                lres.select("url"), "url", "left_anti"
-            ).select(
-                "host",
-                (F.col("depth") - 1).cast("long").alias("pages_processed"),
-                F.lit("fetch_error").alias("stopped_reason"),
+        if lst.n_failed:
+            host_stops_df = host_stops_df.unionByName(
+                lst.misses().select(
+                    "host",
+                    (F.col("depth") - 1).cast("long").alias("pages_processed"),
+                    F.lit("fetch_error").alias("stopped_reason"),
+                )
             )
-            host_stops_df = host_stops_df.unionByName(failed_hosts_df)
 
-        # ---- execute the independent writes concurrently --------------------
-        # two-phase pool: phase A starts everything that does not read the
-        # stored pages (frontier, host_state, seen_session) plus the
-        # deferred miss-error write; as soon as the miss write lands, the
-        # stored-derived lineage jobs are built and join the pool.
-        from concurrent.futures import ThreadPoolExecutor
-
-        phase_a = [
+        writes = [
             ("seen_session", seen_sess_df),
             ("host_state", host_stops_df),
             ("field_stats", lfs_df),
@@ -1532,10 +1464,10 @@ class CrawlRunner:
             # per round; host-level, so the append is metadata-sized).
             # Same-host links are dropped — pagerank_fixed discards
             # self-loop edges anyway, so they carry zero signal.
-            phase_a.append(
+            writes.append(
                 (
                     "link_edges",
-                    valid_items.select(
+                    st.valid_items.select(
                         F.col("listing_host").alias("src_host"),
                         F.col("host").alias("dst_host"),
                     )
@@ -1543,144 +1475,204 @@ class CrawlRunner:
                     .distinct(),
                 )
             )
-        with ThreadPoolExecutor(max_workers=8) as ex:
-            futs = [ex.submit(self.wh.append, t, df) for t, df in phase_a]
-            fut_frontier = ex.submit(
-                self.wh.replace, "frontier_pending", observed_pending
-            )
-            # heavy pass runs on the driver thread, overlapped with the
-            # phase-A writes above (they derive purely from the listing
-            # side) — at bench scale this hides ~2 s of light-job latency
-            # behind the content fetch/extract/write
-            written_dirs, missed_out, n_stored, n_errors = _heavy_pass()
-            n_blocked = blocked.count() if robots_dim is not None else 0
-            tick("fetch+extract+write pages (listing writes overlapped)")
+        for t, df in writes:
+            scope.submit(self.wh.append, t, df)
+        scope.submit(self.wh.replace, "frontier_pending", observed_pending)
+        return obs, prev_offsets
 
-            self.summary.contents_crawled += n_stored
-            self.summary.items_processed += n_stored
-            self.summary.items_with_errors += n_errors
-            self.summary.robots_blocked += n_blocked
-            if n_hosts_active or n_stored or n_blocked:
-                self.summary.rounds = r  # terminating no-op round not counted
-            fut_miss = (
-                ex.submit(self.wh.append, "pages", missed_out)
-                if missed_out is not None
-                else None
-            )
-            if fut_miss is not None:
-                written_dirs.append(fut_miss.result())
-            stored = spark.read.parquet(*written_dirs)
-            futs += [
-                ex.submit(self.wh.append, t, df) for t, df in _stored_jobs(stored)
-            ]
-            # roll the per-chain itemsProcessed counters forward (the
-            # listing-offset table read above this round's writes) — but
-            # only while some chain continues: a session whose every host
-            # stopped this round can never read the offsets again, so the
-            # write is skipped (one fewer job in single-round sessions;
-            # interrupted sessions still write because their hosts count
-            # as continuing)
-            if n_hosts_continuing > 0:
-                if self.wh.is_row_table("host_offsets"):
-                    # row tier: one tiny collect of per-host counts off the
-                    # just-written (column-pruned) pages slice, folded into
-                    # the manifest map — no parquet write, no read job next
-                    # round (VERDICT r3 item 2)
-                    def _roll_offsets_rows() -> None:
-                        cur = {
-                            r["host"]: int(r["items_cum"] or 0)
-                            for r in self.wh.read_rows("host_offsets")
-                        }
-                        for row in (
-                            stored.groupBy("host")
-                            .agg(F.count("*").alias("c"))
-                            .collect()
-                        ):
-                            cur[row["host"]] = cur.get(row["host"], 0) + int(
-                                row["c"]
-                            )
-                        self.wh.replace_rows(
-                            "host_offsets",
-                            [
-                                {"host": h, "items_cum": c}
-                                for h, c in cur.items()
-                            ],
-                        )
+    def _commit_phase(
+        self,
+        scope: RoundScope,
+        r: int,
+        st: _Stats,
+        sch: _Schedule,
+        con: _Content,
+        obs: Observation,
+        prev_offsets: DataFrame,
+    ) -> None:
+        """Write the stored-derived lineage, roll the per-chain offsets,
+        wait for every write of the round, then publish props, the session
+        row and the round commit."""
+        stored = con.stored
+        for t, df in self._stored_lineage(stored, r, st, con.n_stored):
+            scope.submit(self.wh.append, t, df)
+        # roll the per-chain itemsProcessed counters forward — but only
+        # while some chain continues: a session whose every host stopped
+        # this round can never read the offsets again, so the write is
+        # skipped (one fewer job in single-round sessions; interrupted
+        # sessions still write because their hosts count as continuing)
+        if st.n_hosts_continuing > 0:
+            scope.submit(self._roll_offsets, stored, prev_offsets)
+        scope.wait()
 
-                    futs.append(ex.submit(_roll_offsets_rows))
-                else:
-                    new_offsets = (
-                        prev_offsets.unionByName(
-                            stored.groupBy("host").agg(
-                                F.count("*").alias("items_cum")
-                            )
-                        )
-                        .groupBy("host")
-                        .agg(F.sum("items_cum").alias("items_cum"))
-                    )
-                    futs.append(
-                        ex.submit(
-                            self.wh.replace,
-                            "host_offsets",
-                            new_offsets,
-                            None,
-                            True,  # force_parquet: stay in the big tier
-                        )
-                    )
-            fut_frontier.result()
-            for f in futs:
-                f.result()
         pending_counts = obs.get
-        tick("lineage writes + frontier replace (parallel)")
-        self.wh.set_prop(
-            "hint_listing", str(int(pending_counts["n_listing"] or 0))
-        )
-        self.wh.set_prop(
-            "hint_content", str(int(pending_counts["n_content"] or 0))
-        )
+        self.wh.set_prop("hint_listing", str(int(pending_counts["n_listing"] or 0)))
+        self.wh.set_prop("hint_content", str(int(pending_counts["n_content"] or 0)))
         self.wh.set_prop("round", str(r))
-        self.wh.set_prop("order_offset", str(offset + n_stored))
-        self.wh.set_prop(
-            "seen_count", str(int(self.wh.props.get("seen_count", "0")) + n_stored)
-        )
+        self.wh.set_prop("order_offset", str(sch.offset + con.n_stored))
+        self.wh.set_prop("seen_count", str(st.seen_count + con.n_stored))
         # upper bound; only its zero/non-zero state gates the anti-join skip
         # (the +1 marks sitemap-injected rows in seen_session even on a
         # round with zero listing items)
         self.wh.set_prop(
             "session_seen_count",
             str(
-                sess_seen_count
-                + n_page_items
-                + (1 if sitemap_inject is not None else 0)
+                st.sess_seen_count
+                + st.n_items
+                + (1 if sch.sitemap_inject is not None else 0)
             ),
         )
-        _resolve_listing_msgs()
+        self.summary.listing_error_messages.extend(st.listing_messages())
         self.wh.set_prop("summary", self.summary.to_json())
         self._write_session_row(ended=False)
         self.wh.commit(f"round-{r}")
 
-        tick("session row + commit")
-        for c in (*round_caches, to_process, host_round, *cleanup):
-            c.unpersist()
+    def _roll_offsets(self, stored: DataFrame, prev_offsets: DataFrame) -> None:
+        """Add the round's stored rows per host to the per-chain
+        itemsProcessed offsets, in whichever tier the table lives."""
+        per_host = stored.groupBy("host").agg(F.count("*").alias("items_cum"))
+        if not self.wh.is_row_table("host_offsets"):
+            new_offsets = (
+                prev_offsets.unionByName(per_host)
+                .groupBy("host")
+                .agg(F.sum("items_cum").alias("items_cum"))
+            )
+            # force_parquet: stay in the big tier
+            self.wh.replace("host_offsets", new_offsets, None, True)
+            return
+        # row tier: one tiny collect of per-host counts off the just-written
+        # (column-pruned) pages slice, folded into the manifest map — no
+        # parquet write, no read job next round (VERDICT r3 item 2)
+        cur = {
+            row["host"]: int(row["items_cum"] or 0)
+            for row in self.wh.read_rows("host_offsets")
+        }
+        for row in per_host.collect():
+            cur[row["host"]] = cur.get(row["host"], 0) + int(row["items_cum"])
+        self.wh.replace_rows(
+            "host_offsets", [{"host": h, "items_cum": c} for h, c in cur.items()]
+        )
 
-        # was there any work this round?
-        return n_hosts_active > 0 or n_stored > 0 or n_blocked > 0
+    def _stored_lineage(
+        self, stored: DataFrame, r: int, st: _Stats, n_stored: int
+    ) -> list[tuple[str, DataFrame]]:
+        """Lineage appends derived from the round's stored pages rows:
+        session_content, per-partition metrics and content field_stats."""
+        sc_df = stored.select(
+            F.lit(self.session_id).alias("session_id"),
+            F.col("id").alias("content_id"),
+            "processed_order",
+            F.col("had_extraction_error").alias("had_content_extraction_error"),
+        )
+        # per-partition lineage metrics (north_rule)
+        part_metrics = (
+            stored.groupBy("partition_id")
+            .agg(
+                F.count("*").alias("contents_crawled"),
+                F.sum("fetch_ms").alias("fetch_ms"),
+                F.sum("parse_ms").alias("parse_ms"),
+            )
+            .select(
+                F.lit(self.session_id).alias("session_id"),
+                F.lit(r).alias("round"),
+                "partition_id",
+                F.lit(st.n_items).alias("items_found"),
+                F.lit(n_stored).alias("items_processed"),
+                F.lit(st.n_duplicates).alias("duplicates_skipped"),
+                F.lit(st.n_excluded).alias("urls_excluded"),
+                F.lit(st.n_filtered).alias("total_filtered"),
+                "contents_crawled",
+                "fetch_ms",
+                "parse_ms",
+            )
+        )
+        out = [
+            ("session_content", sc_df),
+            ("metrics", part_metrics.select(*schemas.METRICS.names)),
+        ]
+        # A5/W2: per-field content extraction stats with 1-based
+        # missing-item indices (ContentDataMapper.ts:31-55; offset
+        # semantics of ListingPageExtractor.ts:307). Index =
+        # processed_order (the reference's global item counter). ONE
+        # aggregation pass over stored, exploded into FIELD_STATS rows.
+        names = self._content_fields
+        if names:
+            agg_cols = [F.count("*").alias("_ta")]
+            for fname in names:
+                failed = F.array_contains(F.col("failed_fields"), fname)
+                agg_cols.append(
+                    F.sum((~failed).cast("long")).alias(f"_sc_{fname}")
+                )
+                agg_cols.append(
+                    F.slice(
+                        F.sort_array(
+                            F.collect_list(F.when(failed, F.col("processed_order")))
+                        ),
+                        1,
+                        10_000,  # bound per-round list growth
+                    ).alias(f"_mi_{fname}")
+                )
+            fs = stored.agg(*agg_cols).select(
+                "_ta",
+                F.explode(
+                    F.array(
+                        *[
+                            F.struct(
+                                F.lit(fname).alias("field_name"),
+                                F.col(f"_sc_{fname}").alias("success_count"),
+                                F.lit(
+                                    self.config.content.fields[fname].optional
+                                ).alias("is_optional"),
+                                F.col(f"_mi_{fname}").alias("missing_items"),
+                            )
+                            for fname in names
+                        ]
+                    )
+                ).alias("f"),
+            ).select(
+                F.lit(self.session_id).alias("session_id"),
+                F.lit(r).alias("round"),
+                F.lit("content").alias("stage"),
+                F.col("f.field_name").alias("field_name"),
+                F.col("f.success_count").alias("success_count"),
+                F.col("_ta").alias("total_attempts"),
+                F.col("f.is_optional").alias("is_optional"),
+                F.col("f.missing_items").alias("missing_items"),
+            )
+            out.append(("field_stats", fs.select(*schemas.FIELD_STATS.names)))
+        return out
 
-    def _frontier_listing_rows(self, df: DataFrame) -> DataFrame:
-        """(url, depth) DataFrame → full FRONTIER-schema listing rows."""
-        return (
-            self._with_url_cols(df)
-            .withColumn("priority", F.lit(0.0))
-            .withColumn("discovered_ts", F.lit(self.start_time))
-            .withColumn("state", F.lit("pending"))
-            .withColumn("attempts", F.lit(0))
-            .withColumn("source_id", F.lit(self.config.id))
-            .withColumn("kind", F.lit("listing"))
-            .withColumn("listing_order", F.lit(0).cast("long"))
-            .withColumn("title", F.lit(None).cast("string"))
-            .withColumn("author", F.lit(None).cast("string"))
-            .withColumn("published_date", F.lit(None).cast("string"))
-            .select(*schemas.FRONTIER.names)
+    # -- frontier rows --------------------------------------------------------
+
+    def _frontier_rows(self, df: DataFrame, kind: str) -> DataFrame:
+        """Complete ``df`` (at least a ``url`` column) into FRONTIER rows of
+        ``kind``. The url-derived columns are added when missing; depth,
+        listing_order, title, author and published_date are kept when
+        ``df`` carries them, else default to a depth-1, first-position
+        row with no listing fields."""
+        if "url_hash" not in df.columns:
+            df = self._with_url_cols(df)
+        defaults = {
+            "depth": F.lit(1),
+            "priority": F.lit(0.0),
+            "discovered_ts": F.lit(self.start_time),
+            "state": F.lit("pending"),
+            "attempts": F.lit(0),
+            "source_id": F.lit(self.config.id),
+            "kind": F.lit(kind),
+            "listing_order": F.lit(0).cast("long"),
+            "title": F.lit(None).cast("string"),
+            "author": F.lit(None).cast("string"),
+            "published_date": F.lit(None).cast("string"),
+        }
+        for n in ("depth", "listing_order", "title", "author", "published_date"):
+            if n in df.columns:
+                del defaults[n]
+        return df.select(
+            *[
+                defaults[n].alias(n) if n in defaults else F.col(n)
+                for n in schemas.FRONTIER.names
+            ]
         )
 
     def _session_stop_reason(self) -> str:

@@ -19,6 +19,8 @@ ordering stabilizes long before values converge).
 
 from __future__ import annotations
 
+from typing import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -31,7 +33,7 @@ def pagerank_fixed(
     scale: int = 1_000_000_000_000,
     src_col: str = "src",
     dst_col: str = "dst",
-    caches: list | None = None,
+    persist: Callable[[DataFrame], DataFrame] = DataFrame.cache,
 ) -> DataFrame:
     """PageRank over (src, dst) edges, ``iters`` exact integer rounds.
 
@@ -42,21 +44,17 @@ def pagerank_fixed(
     Returns (node, rank) — int64 micro-units, deterministic and
     engine-independent.
 
-    ``caches``: optional cleanup list — the internal ``nodes`` cache is
-    appended so the CALLER can unpersist it once the returned ranks are
-    materialized (a per-round crawl caller would otherwise accumulate one
-    orphaned cached DataFrame per round)."""
+    ``persist`` caches the node set; a caller that owns the lifetime of
+    its cached relations (the crawl round's ``RoundScope.cache``) passes
+    its own, so the cache is released with it."""
     e = edges.select(src_col, dst_col).where(
         F.col(src_col) != F.col(dst_col)
     ).distinct()
-    nodes = (
+    nodes = persist(
         e.select(F.col(src_col).alias("node"))
         .unionByName(e.select(F.col(dst_col).alias("node")))
         .distinct()
-        .cache()
     )
-    if caches is not None:
-        caches.append(nodes)
     n_nodes = nodes.count()
     if n_nodes == 0:
         # empty edge set (or all self-loops): no graph → no ranks (keeps
