@@ -79,10 +79,13 @@ if bucketed:
     # ETHOS_SCALING_BUCKETED: the 100 TB layout — corpus laid out once as a
     # bucketed table (untimed: ingest-time layout, not per-crawl work) and
     # the fetch join runs the zero-exchange bucketed tier instead of the
-    # broadcast tier (broadcast_candidates=False forces past the gate).
+    # broadcast tier (fetcher.BROADCAST_MAX_ROWS = 0 forces every round past
+    # the gate, the round's order-map join included).
     # ETHOS_SCALING_BUCKETED_CORPUS points at a PRE-BUILT bucketed dir
     # (written once at full parallelism by the parent) so each pinned
     # child only registers it instead of rewriting 3.6 GB on 2 cores.
+    import ethos_spark.crawl.fetcher as fetcher_mod
+    fetcher_mod.BROADCAST_MAX_ROWS = 0
     pre = os.environ.get("ETHOS_SCALING_BUCKETED_CORPUS")
     if pre and os.path.exists(pre):
         spark.sql(
@@ -92,13 +95,12 @@ if bucketed:
         from ethos_spark.crawl.fetcher import CorpusFetcher as _CF
         fetcher = _CF(spark.table("scal_corpus_b"),
                       bucketed_table="scal_corpus_b", bucket_count=32,
-                      stage_dir=tempfile.mkdtemp(prefix=f"scalst{cores}-"),
-                      broadcast_candidates=False)
+                      stage_dir=tempfile.mkdtemp(prefix=f"scalst{cores}-"))
     else:
         fetcher = CorpusFetcher.register_bucketed_corpus(
             corpus, "scal_corpus_b",
             tempfile.mkdtemp(prefix=f"scalb{cores}-") + "/corpus_b",
-            n_buckets=32, broadcast_candidates=False)
+            n_buckets=32)
 else:
     fetcher = CorpusFetcher(corpus)
 runner = CrawlRunner(spark, wh, fetcher, SYNTH_SOURCE,

@@ -361,10 +361,10 @@ def _sig_store(spark, sf):
     import os
     import tempfile
 
-    # v2: digest-bucketed store layout (ops/dedup.SignatureStore r6) — a
-    # fresh key so legacy non-bucketed /tmp dirs are never read as bucketed
+    # v3: the store records its bucket layout in a sidecar and refuses
+    # to open without one — a fresh key so older /tmp dirs are never opened
     key = hashlib.md5(
-        f"{sf}:{_tbl_fp(sf, 'documents')}:mh-sigstore-v2".encode()
+        f"{sf}:{_tbl_fp(sf, 'documents')}:mh-sigstore-v3".encode()
     ).hexdigest()[:12]
     return dd.SignatureStore(
         spark, os.path.join(tempfile.gettempdir(), f"ethos-sig-store-{key}")

@@ -148,279 +148,3 @@ def anti_join_seen(
     new = candidates.join(seen_keys, key, "left_anti")
     dupes = candidates.join(seen_keys, key, "left_semi")
     return new, dupes
-
-
-class CuckooFilter:
-    """Sharded cuckoo filter over url_hash strings (Fan et al. 2014,
-    "Cuckoo Filter: Practically Better Than Bloom" — public paper): the
-    DELETABLE member of north_rule's "bloom/cuckoo URL-seen set" pair.
-    Where the Bloom prefilter is insert-only (a recrawl after `clean`
-    works because the seen set derives from the pages table), the cuckoo
-    variant supports exact deletion of inserted keys in place — the
-    standing-filter shape a long-lived crawl service keeps resident
-    instead of rebuilding per session.
-
-    Layout: ``n_shards`` independent tables (shard = key-hash prefix), each
-    ``n_buckets``(power of 2) × 4 slots of 16-bit fingerprints + a small
-    stash for eviction overflow. Build is DISTRIBUTED: keys repartition by
-    shard and each task builds its own shard table sequentially (cuckoo
-    insertion is inherently ordered; sharding is what parallelizes it at
-    10^10 keys — the same hash-prefix sharding the bloom docstring
-    describes). Probes go through an Arrow-batched pandas UDF against the
-    broadcast shard dict. Deletion mutates the driver-held tables; take a
-    fresh ``might_contain_udf`` after deleting (it re-broadcasts).
-
-    No false negatives for inserted-and-not-deleted keys — including
-    when two distinct keys collide on (shard, fingerprint, bucket pair):
-    both copies are stored (Fan et al. semantics; insert-time dedup
-    would turn a later delete of one into a false negative for the
-    other). delete() removes one copy per call; a key whose fingerprint
-    is shared may still report present until every sharer is deleted —
-    the documented over-approximation, same direction as a false
-    positive."""
-
-    SLOTS = 4
-    MAX_KICKS = 500
-
-    def __init__(
-        self,
-        tables: dict[int, "np.ndarray"],
-        stashes: dict[int, list[int]],
-        n_buckets: int,
-        n_shards: int,
-    ):
-        self.tables = tables
-        self.stashes = stashes
-        self.n_buckets = n_buckets
-        self.n_shards = n_shards
-
-    # -- hashing (python-side, so delete() needs no JVM) --------------------
-
-    @staticmethod
-    def _key_hash(value: str) -> int:
-        import hashlib
-
-        return int.from_bytes(
-            hashlib.md5(value.encode("utf-8")).digest()[:8], "big"
-        )
-
-    @staticmethod
-    def _fingerprint(h: int) -> int:
-        return (h & 0xFFFF) or 0x1 if (h & 0xFFFF) != 0xFFFF else 0xFFFF
-
-    @staticmethod
-    def _fp_hash(f: int) -> int:
-        # splitmix-style remix so i2 = i1 ^ fp_hash(f) spreads
-        z = (f * 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
-        z ^= z >> 29
-        return z
-
-    def _slots(self, shard: int, h: int):
-        f = self._fingerprint(h >> 16)
-        i1 = (h >> 32) & (self.n_buckets - 1)
-        i2 = (i1 ^ self._fp_hash(f)) & (self.n_buckets - 1)
-        return f, i1, i2
-
-    def _shard_of(self, h: int) -> int:
-        return h % self.n_shards
-
-    @classmethod
-    def sizing(cls, expected_per_shard: int) -> int:
-        """Buckets per shard: power of 2 holding `expected` at ≤ ~84% load
-        (the paper's practical ceiling for 4-slot tables)."""
-        need = max(64, int(expected_per_shard / (0.84 * cls.SLOTS)))
-        n = 1
-        while n < need:
-            n <<= 1
-        return n
-
-    @classmethod
-    def build(
-        cls, df: DataFrame, col: str, expected: int, n_shards: int = 8
-    ) -> "CuckooFilter":
-        n_buckets = cls.sizing(max(1, expected // n_shards))
-        slots, max_kicks = cls.SLOTS, cls.MAX_KICKS
-        key_hash, fingerprint, fp_hash = (
-            cls._key_hash, cls._fingerprint, cls._fp_hash,
-        )
-
-        def build_shard(it):
-            tables: dict[int, np.ndarray] = {}
-            stashes: dict[int, list[int]] = {}
-            for pdf in it:
-                for v in pdf["_v"]:
-                    h = key_hash(v)
-                    shard = h % n_shards
-                    t = tables.get(shard)
-                    if t is None:
-                        t = tables[shard] = np.zeros(
-                            (n_buckets, slots), dtype=np.uint16
-                        )
-                        stashes[shard] = []
-                    f = fingerprint(h >> 16)
-                    i1 = (h >> 32) & (n_buckets - 1)
-                    i2 = (i1 ^ fp_hash(f)) & (n_buckets - 1)
-                    # NO fingerprint-level dedup here: two DISTINCT keys
-                    # sharing (shard, fp, bucket pair) must occupy two
-                    # slots, or deleting one would false-negative the
-                    # other — the Fan et al. semantics. Duplicate INPUT
-                    # values are dropped by the distinct() below instead.
-                    placed = False
-                    for b in (i1, i2):
-                        empty = np.flatnonzero(t[b] == 0)
-                        if len(empty):
-                            t[b][empty[0]] = f
-                            placed = True
-                            break
-                    if placed:
-                        continue
-                    # deterministic eviction walk (kick-counter slot pick)
-                    cur_f, cur_b = f, i2
-                    for kick in range(max_kicks):
-                        s = kick % slots
-                        cur_f, t[cur_b][s] = int(t[cur_b][s]), cur_f
-                        cur_b = (cur_b ^ fp_hash(cur_f)) & (n_buckets - 1)
-                        empty = np.flatnonzero(t[cur_b] == 0)
-                        if len(empty):
-                            t[cur_b][empty[0]] = cur_f
-                            cur_f = 0
-                            break
-                    if cur_f:
-                        stashes[shard].append(cur_f)  # overflow stash
-            for shard, t in tables.items():
-                yield pd.DataFrame(
-                    {
-                        "shard": [shard],
-                        "table": [t.tobytes()],
-                        "stash": [
-                            np.asarray(
-                                stashes[shard], dtype=np.uint16
-                            ).tobytes()
-                        ],
-                    }
-                )
-
-        hashed = df.select(F.col(col).cast("string").alias("_v")).distinct()
-        # shard affinity: the SQL shard key recomputes _key_hash exactly
-        # (first 8 md5 bytes big-endian) so every key of a shard lands in
-        # ONE task and shard tables never need the merge fallback below
-        sql_shard = F.pmod(
-            F.conv(F.substring(F.md5("_v"), 1, 16), 16, 10).cast(
-                "decimal(38,0)"
-            ),
-            F.lit(n_shards),
-        )
-        sharded = hashed.repartition(n_shards, sql_shard)
-        rows = sharded.mapInPandas(
-            build_shard, "shard int, table binary, stash binary"
-        ).collect()
-        tables: dict[int, np.ndarray] = {}
-        stashes: dict[int, list[int]] = {}
-        for r in rows:
-            t = np.frombuffer(r.table, dtype=np.uint16).reshape(
-                n_buckets, slots
-            ).copy()
-            if r.shard in tables:  # same shard split across tasks: merge
-                prev = tables[r.shard]
-                for b in range(n_buckets):
-                    for s in range(slots):
-                        # merge EVERY occupied slot of t, regardless of
-                        # prev's occupancy at the same slot index — the
-                        # target is any free slot of prev's bucket b
-                        if t[b][s]:
-                            empty = np.flatnonzero(prev[b] == 0)
-                            if len(empty):
-                                prev[b][empty[0]] = t[b][s]
-                            else:
-                                stashes[r.shard].append(int(t[b][s]))
-                stashes[r.shard].extend(
-                    np.frombuffer(r.stash, dtype=np.uint16).tolist()
-                )
-            else:
-                tables[r.shard] = t
-                stashes[r.shard] = np.frombuffer(
-                    r.stash, dtype=np.uint16
-                ).tolist()
-        return cls(tables, stashes, n_buckets, n_shards)
-
-    # -- membership ---------------------------------------------------------
-
-    def contains(self, value: str) -> bool:
-        h = self._key_hash(value)
-        shard = self._shard_of(h)
-        t = self.tables.get(shard)
-        if t is None:
-            return False
-        f, i1, i2 = self._slots(shard, h)
-        return (
-            f in t[i1] or f in t[i2] or f in self.stashes.get(shard, ())
-        )
-
-    def might_contain_udf(self, spark):
-        """Probe UDF over the VALUE column (string). Re-call after
-        delete(): the broadcast snapshots the tables."""
-        state = spark.sparkContext.broadcast(
-            (
-                {s: t.copy() for s, t in self.tables.items()},
-                {s: set(v) for s, v in self.stashes.items()},
-                self.n_buckets,
-                self.n_shards,
-            )
-        )
-        key_hash, fingerprint, fp_hash = (
-            self._key_hash, self._fingerprint, self._fp_hash,
-        )
-
-        @F.pandas_udf(BooleanType())
-        def might_contain(vals: pd.Series) -> pd.Series:
-            tables, stashes, n_buckets, n_shards = state.value
-            out = np.zeros(len(vals), dtype=bool)
-            for j, v in enumerate(vals):
-                h = key_hash(v)
-                t = tables.get(h % n_shards)
-                if t is None:
-                    continue
-                f = fingerprint(h >> 16)
-                i1 = (h >> 32) & (n_buckets - 1)
-                i2 = (i1 ^ fp_hash(f)) & (n_buckets - 1)
-                out[j] = (
-                    f in t[i1]
-                    or f in t[i2]
-                    or f in stashes.get(h % n_shards, ())
-                )
-            return pd.Series(out)
-
-        return might_contain
-
-    def prefilter(self, df: DataFrame, col: str) -> DataFrame:
-        """Keep rows that MIGHT be members (bloom-prefilter analogue);
-        compose with the exact anti-join for exactness."""
-        probe = self.might_contain_udf(df.sparkSession)
-        return df.where(probe(F.col(col).cast("string")))
-
-    # -- deletion (the cuckoo differentiator) -------------------------------
-
-    def delete(self, values: list[str]) -> int:
-        """Exact in-place deletion of inserted keys (driver-held tables;
-        the `clean` command's hash lists are metadata-sized). Returns the
-        number of fingerprints removed."""
-        removed = 0
-        for v in values:
-            h = self._key_hash(v)
-            shard = self._shard_of(h)
-            t = self.tables.get(shard)
-            if t is None:
-                continue
-            f, i1, i2 = self._slots(shard, h)
-            done = False
-            for b in (i1, i2):
-                hit = np.flatnonzero(t[b] == f)
-                if len(hit):
-                    t[b][hit[0]] = 0
-                    removed += 1
-                    done = True
-                    break
-            if not done and f in self.stashes.get(shard, []):
-                self.stashes[shard].remove(f)
-                removed += 1
-        return removed

@@ -17,6 +17,16 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+# Row-count gate shared by the fetch join and the crawl round's order-map
+# join: a round whose caller-known candidate bound is at most this many
+# rows broadcasts its LIGHT candidate/order rows (url + a few key columns,
+# ~150 MB at 1M rows); above it (multi-million-URL rounds, where a forced
+# broadcast of every scheduled URL is a driver/executor OOM at the design
+# point) the fetch takes the bucketed or bloom-prefiltered tier and the
+# order map a shuffle join. Read at call time, so setting it to 0 forces
+# every round past the gate.
+BROADCAST_MAX_ROWS = 1_000_000
+
 
 class Fetcher(Protocol):
     def fetch(
@@ -48,10 +58,9 @@ class CorpusFetcher:
 
     Join strategy is SIZE-GATED on the caller's ``size_hint``:
 
-    - hint ≤ ``broadcast_max_rows`` (candidate rows are LIGHT — url + a
-      few key columns, so ~150 MB at the 1M default): broadcast the
-      candidate side; the corpus scan stays partition-local and the html
-      column never shuffles.
+    - hint ≤ ``BROADCAST_MAX_ROWS``: broadcast the candidate side; the
+      corpus scan stays partition-local and the html column never
+      shuffles.
     - hint above the gate (multi-million-URL rounds — a forced broadcast
       of every scheduled URL is a driver/executor OOM at the design
       point): build a BLOOM filter over the candidate urls (~1.2 MB per
@@ -93,16 +102,12 @@ class CorpusFetcher:
     def __init__(
         self,
         corpus: DataFrame,
-        broadcast_candidates: bool = True,
-        broadcast_max_rows: int = 1_000_000,
         bucketed_table: str | None = None,
         bucket_count: int = 64,
         stage_dir: str | None = None,
         owns_stage_dir: bool = False,
     ):
         self._corpus = corpus.select("url", "html")
-        self._broadcast = broadcast_candidates
-        self._broadcast_max = broadcast_max_rows
         self._bucketed_table = bucketed_table
         self._bucket_count = bucket_count
         self._stage_dir = stage_dir
@@ -121,7 +126,6 @@ class CorpusFetcher:
         name: str,
         path: str,
         n_buckets: int = 64,
-        **kwargs,
     ) -> "CorpusFetcher":
         """One-time corpus layout: write (url, html) bucketed+sorted by url
         as an external catalog table and return a fetcher wired to it. At
@@ -150,7 +154,6 @@ class CorpusFetcher:
             bucket_count=n_buckets,
             stage_dir=tempfile.mkdtemp(prefix="ethos-fetch-stage-"),
             owns_stage_dir=True,
-            **kwargs,
         )
 
     def _fetch_bucketed(self, cand: DataFrame) -> DataFrame:
@@ -206,11 +209,7 @@ class CorpusFetcher:
         stage: str = "content",
     ) -> DataFrame:
         cand = candidates
-        if (
-            self._broadcast
-            and size_hint is not None
-            and size_hint <= self._broadcast_max
-        ):
+        if size_hint is not None and size_hint <= BROADCAST_MAX_ROWS:
             # corpus ⋈ broadcast(candidates) in ONE hash join: the html
             # column never shuffles and the output keeps the corpus scan's
             # partitioning. (An earlier two-step — broadcast url-set

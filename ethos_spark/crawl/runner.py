@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from ethos_spark import schemas
 from ethos_spark.catalog import Warehouse
+from ethos_spark.crawl import fetcher as fetcher_mod
 from ethos_spark.crawl.dedup import BloomFilter, anti_join_seen, dedup_within_batch
 from ethos_spark.crawl.ordering import assign_sequential_order
 from ethos_spark.crawl.politeness import politeness_topk, robots_gate, salt_hot_hosts
@@ -64,12 +65,6 @@ class CrawlOptions:
     stop_on_all_duplicates: bool = True  # types.ts:114-120 default true
     skip_existing_urls: bool = True  # --recrawl ⇒ False (index.ts:39)
     per_host_budget: int = 10_000  # content fetches per host per round (T4)
-    # broadcast the round's LIGHT candidate/order rows into the fetch and
-    # order joins only below this row count (~150 MB at 1M rows); above it
-    # (multi-million-URL rounds — a forced broadcast of every scheduled
-    # URL is a driver/executor OOM at the design point) the fetch uses a
-    # bloom-prefiltered join and the order map a shuffle join
-    broadcast_max_rows: int = 1_000_000
     # in-round fetch retry (reference PaginationHandler.ts:11-12,84-107:
     # MAX_ATTEMPTS=3, RETRY_DELAY_SEC=15 + reload). Retrying WITHIN the
     # round — like the reference's inline retry — keeps processed_order
@@ -1139,9 +1134,12 @@ class CrawlRunner:
         # pending (tracked via frontier-write observation) + newly
         # discovered (already collected in the stats row) —
         # politeness/robots only shrink it. Gates broadcast vs shuffle in
-        # the fetch and order joins.
+        # the fetch and order joins (one gate: fetcher.BROADCAST_MAX_ROWS).
         content_hint = carry_hint + st.n_new if carry_hint is not None else None
-        if content_hint is not None and content_hint <= opt.broadcast_max_rows:
+        if (
+            content_hint is not None
+            and content_hint <= fetcher_mod.BROADCAST_MAX_ROWS
+        ):
             order_map = F.broadcast(order_map)
         return _Schedule(
             allowed=allowed,

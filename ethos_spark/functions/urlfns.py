@@ -80,9 +80,3 @@ def canonicalize_url(url: str) -> str:
     query = "&".join(sorted(p for p in parts.query.split("&") if p))
     return urlunsplit((scheme, netloc, path, query, ""))
 
-
-def url_host(url: str) -> str:
-    try:
-        return (urlsplit(url).hostname or "").lower()
-    except Exception:
-        return ""

@@ -132,27 +132,6 @@ def learn_bpe(
     return out
 
 
-def bpe_merge_table(df: DataFrame, text_col: str, n_merges: int) -> DataFrame:
-    """The learned merges as a DataFrame (step, left_sym, right_sym,
-    merged, pair_count) — deterministic, engine-independent (oracle
-    row; *_sym avoids the LEFT/RIGHT SQL keywords)."""
-    spark = df.sparkSession
-    rows = learn_bpe(df, text_col, n_merges)
-    schema = (
-        "step int, left_sym string, right_sym string, "
-        "merged string, pair_count long"
-    )
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(
-        [
-            (r["step"], r["left"], r["right"], r["merged"], r["pair_count"])
-            for r in rows
-        ],
-        schema,
-    )
-
-
 def bpe_encode_udf(merges: list[dict]):
     """Tokenizer from a learned merge table: the standard rank-greedy BPE
     apply (repeatedly merge the lowest-rank adjacent pair) as an

@@ -22,6 +22,10 @@ like production near-dup pipelines drop stop-shingles.
 
 from __future__ import annotations
 
+import hashlib
+import json
+import os
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -31,6 +35,10 @@ P61 = (1 << 61) - 1  # Mersenne prime for affine rehash
 # banding sized for recall ≈ 1 down to J=0.6: miss prob (1-J²)^32 ≈ 7e-7
 N_HASHES = 64
 N_BANDS = 32  # × 2 rows
+# SignatureStore layout: bucket count of the digest-bucketed table, fixed
+# at store creation and recorded in the store's layout sidecar (buckets ≈
+# store size / target file size on a real cluster)
+SIG_BUCKETS = 16
 
 
 def h56(c: Column) -> Column:
@@ -230,50 +238,81 @@ class SignatureStore:
     collapse duplicate digests (two racing sessions may both append the
     same digest; payloads are content-determined hence identical, so
     keeping either row is correct — without this the serving join would
-    fan out duplicated signature rows)."""
+    fan out duplicated signature rows). The bucket count (``SIG_BUCKETS``)
+    and schema are written to a ``_ethos_layout.json`` sidecar before the
+    first data file and checked on every read: a store without one, or
+    bucketed differently, raises instead of serving wrong joins."""
 
     SCHEMA = "digest string, n_sh int, shs array<bigint>, mh array<bigint>"
+    # layout sidecar; the leading "_" keeps Spark's file listing off it
+    LAYOUT_FILE = "_ethos_layout.json"
 
-    def __init__(self, spark, path: str, n_buckets: int | None = None):
-        import os
-
+    def __init__(self, spark, path: str):
         self.spark = spark
         self.path = path
-        # layout property, fixed at store creation; scale via env/param on
-        # a real cluster (buckets ≈ store size / target file size)
-        self.n_buckets = n_buckets or int(
-            os.environ.get("ETHOS_SIG_BUCKETS", "16")
-        )
 
     def _table(self) -> str:
-        import hashlib
-        import os
-
         h = hashlib.md5(os.path.abspath(self.path).encode()).hexdigest()[:12]
         return f"ethos_sigstore_{h}"
 
-    def _read(self) -> DataFrame:
-        import os
+    def _layout(self) -> dict:
+        return {"buckets": SIG_BUCKETS, "schema": self.SCHEMA}
 
-        if not os.path.isdir(self.path):
-            return self.spark.createDataFrame([], self.SCHEMA)
+    def _write_layout(self) -> None:
+        """Publish the layout sidecar atomically (tmp + os.replace)."""
+        os.makedirs(self.path, exist_ok=True)
+        sidecar = os.path.join(self.path, self.LAYOUT_FILE)
+        tmp = f"{sidecar}.{os.getpid()}.tmp"
+        with open(tmp, "w") as f:
+            json.dump(self._layout(), f)
+        os.replace(tmp, sidecar)
+
+    def _open(self) -> str:
+        """Check the layout sidecar, then register the bucketed table over
+        the store dir (once per session); → the table name. A declaration
+        that mismatches the files on disk would make the exchange-free
+        join and dropDuplicates hash rows into the wrong buckets and
+        silently miss matches, so any doubt raises instead."""
+        sidecar = os.path.join(self.path, self.LAYOUT_FILE)
+        try:
+            with open(sidecar) as f:
+                layout = json.load(f)
+        except FileNotFoundError:
+            raise ValueError(
+                f"signature store {self.path} has no {self.LAYOUT_FILE}: "
+                f"stored bucket count unknown, this build expects "
+                f"{SIG_BUCKETS} buckets"
+            ) from None
+        if layout != self._layout():
+            raise ValueError(
+                f"signature store {self.path} has layout {layout}; this "
+                f"build expects {self._layout()}"
+            )
         name = self._table()
         if not self.spark.catalog.tableExists(name):
             self.spark.sql(
-                f"CREATE TABLE {name} (digest string, n_sh int, "
-                "shs array<bigint>, mh array<bigint>) USING PARQUET "
+                f"CREATE TABLE {name} ({self.SCHEMA}) USING PARQUET "
                 "CLUSTERED BY (digest) SORTED BY (digest) "
-                f"INTO {self.n_buckets} BUCKETS LOCATION '{self.path}'"
+                f"INTO {SIG_BUCKETS} BUCKETS LOCATION '{self.path}'"
             )
-        return self.spark.table(name)
+        return name
+
+    def _read(self) -> DataFrame:
+        if not os.path.isdir(self.path):
+            return self.spark.createDataFrame([], self.SCHEMA)
+        return self.spark.table(self._open())
 
     def _append(self, sigs: DataFrame) -> None:
+        if not os.path.isdir(self.path):  # store creation: layout first
+            self._write_layout()
+        # append into the registered table: an append that has to create
+        # the table overwrites the dir, sidecar included
         (
             sigs.write.mode("append")
-            .bucketBy(self.n_buckets, "digest")
+            .bucketBy(SIG_BUCKETS, "digest")
             .sortBy("digest")
             .option("path", self.path)
-            .saveAsTable(self._table())
+            .saveAsTable(self._open())
         )
 
     def signatures_for(
@@ -316,17 +355,6 @@ class SignatureStore:
                 self._read().dropDuplicates(["digest"]), "digest"
             ).select("doc_id", "n_sh", "shs", "mh")
         return served.select("doc_id", "n_sh", "shs", "mh")
-
-
-def minhash_signatures(shingles: DataFrame) -> DataFrame:
-    """k fully-mixed splitmix64 rehashes min-aggregated per doc — one
-    shuffle, then the Arrow-batched numpy kernel over each doc's shingle
-    set (see ``_sig_udf``)."""
-    return (
-        shingles.groupBy("doc_id")
-        .agg(F.collect_list("sh").alias("shs"))
-        .select("doc_id", _sig_udf()(F.col("shs")).alias("mh"))
-    )
 
 
 _MAX_SALTS = 64  # cap the per-doc replication factor in pathological buckets
@@ -683,16 +711,6 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         )
     return labels.select("doc_id", F.col("label").alias("cluster_id")).orderBy(
         "doc_id"
-    )
-
-
-def cluster_summary(clusters: DataFrame) -> DataFrame:
-    """(cluster_id, keep_id, n_docs): canonical doc = min id per cluster."""
-    return (
-        clusters.groupBy("cluster_id")
-        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_docs"))
-        .select("cluster_id", "keep_id", "n_docs")
-        .orderBy("cluster_id")
     )
 
 

@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride through the engine as ``binary`` columns with a
-struct of typed metadata; decode / feature-extract / resize / frame-sample
-run as Arrow-batched pandas UDFs over ``mapInPandas``.
+struct of typed metadata; the decode stage runs as an Arrow-batched pandas
+UDF over ``mapInPandas``.
 
 The decode kernel parses REAL image headers with stdlib ``struct`` — no
 codec library needed for container metadata:
@@ -14,9 +14,8 @@ codec library needed for container metadata:
 
 Unknown payloads fall back to a clearly-labelled deterministic ``raw``
 record (dims derived from byte length) so text-bytes stand-ins keep an
-exact SQL oracle. Full pixel decode / resample (PIL/ffmpeg) is NOT in this
-container; ``resize_stub`` keeps the production batch shape with a
-byte-truncation kernel and raises nothing — swap the kernel in production.
+exact SQL oracle. Pixel codecs for GIF (LZW) and baseline JPEG (huffman +
+IDCT) are below, pure stdlib+numpy; no image library is required.
 """
 
 from __future__ import annotations
@@ -132,150 +131,8 @@ def synth_png(width: int, height: int) -> bytes:
     )
 
 
-def encode_png(
-    rgb: "np.ndarray", filter_type: int = 0  # noqa: F821
-) -> bytes:
-    """Minimal REAL PNG encoder (stdlib zlib): 8-bit RGB, non-interlaced,
-    one filter type for every scanline (0=None, 1=Sub, 2=Up, 3=Average,
-    4=Paeth). Exists so the decoder below can be pixel-round-trip tested
-    against every filter type without a codec library."""
-    import numpy as np
-
-    h, w, _ = rgb.shape
-    img = rgb.astype(np.int32)
-    prev = np.zeros((w, 3), dtype=np.int32)
-    raw = bytearray()
-    for y in range(h):
-        row = img[y]
-        left = np.zeros((w, 3), dtype=np.int32)
-        left[1:] = row[:-1]
-        ul = np.zeros((w, 3), dtype=np.int32)
-        ul[1:] = prev[:-1]
-        if filter_type == 0:
-            out = row
-        elif filter_type == 1:
-            out = row - left
-        elif filter_type == 2:
-            out = row - prev
-        elif filter_type == 3:
-            out = row - (left + prev) // 2
-        else:  # Paeth
-            p = left + prev - ul
-            pa, pb, pc = abs(p - left), abs(p - prev), abs(p - ul)
-            pred = np.where(
-                (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, ul)
-            )
-            out = row - pred
-        raw.append(filter_type)
-        raw.extend((out % 256).astype(np.uint8).tobytes())
-        prev = row
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # 8-bit RGB
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def decode_png(payload: bytes) -> "np.ndarray":  # noqa: F821
-    """REAL stdlib PNG pixel decode (round-3 VERDICT item 6): walk chunks,
-    zlib-inflate the concatenated IDAT stream, unfilter every scanline
-    (all five filter types per the PNG spec §9), return an (h, w, 3)
-    uint8 RGB array. Supports the overwhelmingly common web shapes:
-    8-bit depth, color types 0/2/4/6 (gray, RGB, gray+alpha, RGBA),
-    non-interlaced. Grayscale replicates to RGB; alpha is dropped.
-    Raises ValueError on anything else (palette, 16-bit, Adam7) — the
-    caller surfaces it in the explicit ``error`` column."""
-    import numpy as np
-
-    if len(payload) < 8 or payload[:8] != _PNG_SIG:
-        raise ValueError("not a png")
-    i, n = 8, len(payload)
-    w = h = None
-    depth = ctype = interlace = None
-    idat = bytearray()
-    while i + 8 <= n:
-        clen = struct.unpack(">I", payload[i : i + 4])[0]
-        tag = payload[i + 4 : i + 8]
-        body = payload[i + 8 : i + 8 + clen]
-        if tag == b"IHDR":
-            w, h, depth, ctype, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", body
-            )
-        elif tag == b"IDAT":
-            idat.extend(body)
-        elif tag == b"IEND":
-            break
-        i += 12 + clen
-    if w is None or not idat:
-        raise ValueError("missing IHDR/IDAT")
-    if depth != 8:
-        raise ValueError(f"unsupported bit depth {depth}")
-    if interlace != 0:
-        raise ValueError("Adam7 interlacing unsupported")
-    channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(ctype)
-    if channels is None:
-        raise ValueError(f"unsupported color type {ctype}")
-    raw = zlib.decompress(bytes(idat))
-    stride = w * channels
-    if len(raw) != h * (stride + 1):
-        raise ValueError("pixel data length mismatch")
-    arr = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride + 1)
-    filters = arr[:, 0]
-    data = arr[:, 1:].astype(np.int32)
-    bpp = channels  # bytes per pixel at depth 8
-    prev = np.zeros(stride, dtype=np.int32)
-    out = np.empty((h, stride), dtype=np.uint8)
-    for y in range(h):
-        row = data[y]
-        f = filters[y]
-        if f == 0:
-            rec = row
-        elif f == 2:  # Up — vectorizable (depends only on prior row)
-            rec = (row + prev) % 256
-        elif f in (1, 3, 4):
-            rec = np.empty(stride, dtype=np.int32)
-            for x in range(stride):
-                a = rec[x - bpp] if x >= bpp else 0  # left
-                b = prev[x]  # up
-                if f == 1:
-                    pred = a
-                elif f == 3:
-                    pred = (a + b) // 2
-                else:  # Paeth
-                    c = prev[x - bpp] if x >= bpp else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                rec[x] = (row[x] + pred) % 256
-        else:
-            raise ValueError(f"bad filter type {f}")
-        out[y] = rec
-        prev = rec.astype(np.int32)
-    px = out.reshape(h, w, channels)
-    if ctype == 2:
-        return px
-    if ctype == 6:
-        return px[:, :, :3].copy()
-    if ctype == 0:
-        return np.repeat(px, 3, axis=2)
-    return np.repeat(px[:, :, :1], 3, axis=2)  # gray+alpha
-
-
 # ---------------------------------------------------------------------------
-# GIF89a — real LZW codec, pure stdlib+numpy (VERDICT r4 item 6). The
-# entropy-coded error fence now covers JPEG only: PNG (zlib) and GIF (LZW
-# below) both pixel-decode for real.
+# GIF89a — real LZW codec, pure stdlib+numpy (VERDICT r4 item 6).
 # ---------------------------------------------------------------------------
 
 _GIF_MAX_CODE = 4096  # 12-bit ceiling (GIF spec); table freezes there
@@ -381,7 +238,7 @@ def encode_gif(frames, delay_cs: int = 4) -> bytes:
     """Minimal REAL GIF89a encoder: one global palette built from the
     unique colors across all frames (≤256 required — raises otherwise),
     real variable-width LZW image data, one Graphic Control Extension per
-    frame for animations. Exists (like ``encode_png``) so the decoder can
+    frame for animations. Exists so the decoder can
     be pixel-round-trip tested without a codec library; also a handy
     deterministic fixture generator."""
     import numpy as np
@@ -536,58 +393,6 @@ def decode_gif(payload: bytes) -> "np.ndarray":  # noqa: F821
     return decode_gif_frames(payload)[0]
 
 
-def gif_frames(
-    df: DataFrame, every_k: int = 1, id_col: str = "doc_id", media_col: str = "media"
-) -> DataFrame:
-    """Animated-GIF frame sampling: one GIF payload row in → every k-th
-    decoded frame out as raw interleaved RGB (id, frame_idx, width,
-    height, media) — the same UDTF shape as ``sample_frames``, feeding
-    the raw-RGB resize kernel directly."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("media", T.BinaryType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, ws, hs, frames = [], [], [], [], []
-            for doc_id, p in zip(pdf[id_col], pdf[media_col]):
-                if p is None:
-                    continue
-                try:
-                    fs = decode_gif_frames(bytes(p))
-                except ValueError:
-                    continue  # quarantine: malformed gif emits no frames
-                for j in range(0, len(fs), every_k):
-                    ids.append(doc_id)
-                    idxs.append(j)
-                    hs.append(fs[j].shape[0])
-                    ws.append(fs[j].shape[1])
-                    frames.append(fs[j].tobytes())
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "frame_idx": idxs,
-                    "width": ws,
-                    "height": hs,
-                    "media": frames,
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(run, out_schema)
-
-
-def attach_fake_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Test harness: UTF-8 bytes of the text stand in for an opaque payload
-    (decodes as codec='raw' with length-derived dims)."""
-    return df.withColumn("media", F.encode(F.col(text_col), "UTF-8"))
-
-
 def attach_png_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Test harness: a real PNG header whose dimensions are a deterministic
     function of the text's UTF-8 byte length (w = n%640+1, h = n*7%480+1),
@@ -630,228 +435,12 @@ def decode_media(
     return df.select(id_col, media_col).mapInPandas(run, out_schema)
 
 
-def resize_raw_rgb(
-    df: DataFrame,
-    src_w: int,
-    src_h: int,
-    target_w: int,
-    target_h: int,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-) -> DataFrame:
-    """REAL nearest-neighbor resample over raw interleaved RGB bitmaps
-    (``src_w*src_h*3`` bytes/row) — pure numpy fancy-indexing inside the
-    Arrow batch, no codec library. Compressed payloads (png/jpeg) need a
-    decoder this container doesn't ship; ``resize_stub`` marks that
-    boundary. Undersized payloads → NULL output row (kept, flagged by the
-    NULL, mirroring the engine's quarantine style)."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("media", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]
-    )
-    need = src_w * src_h * 3
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        ys = np.arange(target_h) * src_h // target_h
-        xs = np.arange(target_w) * src_w // target_w
-        for pdf in batches:
-            media = []
-            for p in pdf[media_col]:
-                if p is None or len(p) < need:
-                    media.append(None)
-                    continue
-                img = np.frombuffer(bytes(p)[:need], dtype=np.uint8).reshape(
-                    src_h, src_w, 3
-                )
-                media.append(img[ys][:, xs].tobytes())
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "media": media,
-                    "width": target_w,
-                    "height": target_h,
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(run, out_schema)
-
-
-def sample_frames(
-    df: DataFrame,
-    frame_w: int,
-    frame_h: int,
-    every_k: int,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-) -> DataFrame:
-    """Frame sampling over raw concatenated-RGB-frame 'video' payloads:
-    emit every k-th frame as its own row (id, frame_idx, media) — the
-    UDTF-style one-row-in/many-out shape a video pipeline needs, real
-    kernel (numpy slicing), mapInPandas."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("media", T.BinaryType()),
-        ]
-    )
-    fsize = frame_w * frame_h * 3
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for doc_id, p in zip(pdf[id_col], pdf[media_col]):
-                if p is None:
-                    continue
-                b = bytes(p)
-                n_frames = len(b) // fsize
-                for j in range(0, n_frames, every_k):
-                    ids.append(doc_id)
-                    idxs.append(j)
-                    frames.append(b[j * fsize : (j + 1) * fsize])
-            yield pd.DataFrame(
-                {id_col: ids, "frame_idx": idxs, "media": frames}
-            )
-
-    return df.select(id_col, media_col).mapInPandas(run, out_schema)
-
-
-def resize_media(
-    df: DataFrame,
-    src_w: int,
-    src_h: int,
-    target_w: int,
-    target_h: int,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-) -> DataFrame:
-    """Codec-dispatching resize: raw interleaved-RGB payloads go through
-    the REAL nearest-neighbor kernel (see ``resize_raw_rgb``); PNG
-    payloads are pixel-decoded with the stdlib kernel (``decode_png``:
-    zlib inflate + scanline unfilter, VERDICT r3 item 6) and resized from
-    their OWN header dimensions; GIF payloads pixel-decode through the
-    real stdlib LZW kernel (``decode_gif``, first frame); baseline JPEG
-    payloads through the real huffman+IDCT kernel (``decode_jpeg``). The
-    error fence is now down to formats with no decoder at all (bmp/wav
-    through this IMAGE path) and non-baseline jpeg variants
-    (progressive/exotic sampling — decode_jpeg raises, surfaced in the
-    explicit ``error`` column; silence would read as success).
-    Undersized raw payloads error too ('raw payload too short')."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("media", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("error", T.StringType()),
-        ]
-    )
-    need = src_w * src_h * 3
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        ys = np.arange(target_h) * src_h // target_h
-        xs = np.arange(target_w) * src_w // target_w
-        for pdf in batches:
-            media, errors = [], []
-            for p in pdf[media_col]:
-                b = bytes(p) if p is not None else b""
-                codec = parse_image_meta(b)["codec"]
-                if codec in ("png", "gif", "jpeg"):
-                    try:
-                        img = {
-                            "png": decode_png,
-                            "gif": decode_gif,
-                            "jpeg": decode_jpeg,
-                        }[codec](b)
-                        sh, sw = img.shape[:2]
-                        pys = np.arange(target_h) * sh // target_h
-                        pxs = np.arange(target_w) * sw // target_w
-                        media.append(img[pys][:, pxs].tobytes())
-                        errors.append(None)
-                    except Exception as exc:  # truncated/esoteric files
-                        media.append(None)
-                        errors.append(f"{codec} decode failed: {exc}")
-                elif codec != "raw":
-                    media.append(None)
-                    errors.append(
-                        f"unsupported codec '{codec}': no pixel decoder in "
-                        "this build"
-                    )
-                elif len(b) < need:
-                    media.append(None)
-                    errors.append(
-                        f"raw payload too short: {len(b)} < {need} bytes"
-                    )
-                else:
-                    img = np.frombuffer(b[:need], dtype=np.uint8).reshape(
-                        src_h, src_w, 3
-                    )
-                    media.append(img[ys][:, xs].tobytes())
-                    errors.append(None)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "media": media,
-                    "width": target_w,
-                    "height": target_h,
-                    "error": errors,
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(run, out_schema)
-
-
-def resize_stub(
-    df: DataFrame,
-    target_w: int,
-    target_h: int,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-) -> DataFrame:
-    """Resize stage shape: binary in → binary out + new dims. STUB kernel —
-    keeps a deterministic prefix of the payload (real impl: actual
-    resample via an image library not present in this container)."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("media", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]
-    )
-    keep = max(1, (target_w * target_h) // 64)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            media = [
-                (bytes(p)[:keep] if p is not None else None) for p in pdf[media_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "media": media,
-                    "width": target_w,
-                    "height": target_h,
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(run, out_schema)
-
-
 # ---------------------------------------------------------------------------
 # Baseline JPEG (ITU-T T.81 / ISO 10918-1, public spec) — the LAST codec
 # fence. Pure stdlib+numpy: huffman entropy decode, dequant, 2D IDCT,
 # YCbCr→RGB. Supported: baseline sequential (SOF0), 8-bit, grayscale,
-# 4:4:4 or 4:2:0 color, restart markers. Progressive files still raise
-# (→ the explicit error column). The encoder exists so the decoder can be
+# 4:4:4 or 4:2:0 color, restart markers. Progressive files raise
+# ValueError. The encoder exists so the decoder can be
 # round-trip and hand-computed-DCT tested without any codec library.
 # Huffman table constants below are the spec's own Annex K example tables
 # (public standard data, not copied code).

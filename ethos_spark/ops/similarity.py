@@ -723,85 +723,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def write_ivf_store(
-    emb: DataFrame,
-    path: str,
-    centroids: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Physical IVF layout: the corpus written PARTITIONED BY coarse list
-    id. At 10^9 vectors the inverted lists stop being a row-level concept
-    and become the storage layout itself — probing ``nprobe`` lists then
-    prunes *files/directories*, not rows (the claim ivf_ann_topk's
-    docstring makes; this materializes it). One shuffle at ingest
-    (repartition by list) buys one directory per list."""
-    spark = emb.sparkSession
-    assign = _assign_udf(spark, centroids)
-    (
-        emb.withColumn("_list", assign(F.col(vec_col)))
-        .repartition("_list")
-        .write.mode("overwrite")
-        .partitionBy("_list")
-        .parquet(path)
-    )
-
-
-def ivf_store_topk(
-    spark,
-    path: str,
-    centroids: np.ndarray,
-    queries: list[tuple[int, list[float]]],
-    k: int = 5,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k served FROM the partitioned store: probe lists are picked
-    driver-side (queries are request-sized vectors, centroids are
-    metadata), and the scan filter ``_list IN (needed)`` becomes a
-    PARTITION filter — Spark lists only the probed directories; the other
-    K - |needed| lists are never opened (plan-asserted in
-    tests/test_similarity_store.py). Scoring matches ivf_ann_topk
-    row-for-row on the same centroids."""
-    cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
-    probe_rows = []
-    needed: set[int] = set()
-    for q_id, vec in queries:
-        v = np.asarray(vec, dtype=np.float64)
-        v = v / max(np.linalg.norm(v), 1e-12)
-        sims = cn @ v
-        order = np.lexsort((np.arange(len(sims)), -sims))[:nprobe]
-        for li in order:
-            probe_rows.append((int(q_id), [float(x) for x in vec], int(li)))
-            needed.add(int(li))
-    probes = spark.createDataFrame(
-        probe_rows, f"q_id long, q_vec array<double>, _list int"
-    )
-    scan = spark.read.parquet(path).where(
-        F.col("_list").isin(sorted(needed))
-    )
-    pairs = scan.join(F.broadcast(probes), "_list").where(
-        F.col(id_col) != F.col("q_id")
-    )
-    # one list per stored vector + distinct probe lists → pairs unique
-    scored = pairs.select(
-        "q_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(
-            cosine_pairs_udf()(F.col("q_vec"), F.col(vec_col)), 6
-        ).alias("score"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("q_id", "rank")
-    )
-
-
 def _sq8_code(vec_col: str):
     """Column expr: v → round(127 · v/||v||) ∈ [-127, 127] (symmetric
     int8 codes of the unit vector — one global scale, no per-dim affine
@@ -821,98 +742,6 @@ def _sq8_code(vec_col: str):
     )
 
 
-def sq8_quantize(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Symmetric int8 quantization of UNIT-NORMALIZED vectors: each
-    component of v/||v|| maps to round(u * 127) ∈ [-127, 127]. One fixed
-    global scale (no stats pass, no per-dim affine terms), so the integer
-    dot product of two code arrays is ≈ 127² · cosine — rank-preserving
-    up to quantization noise. 4× (float32) / 8× (float64) storage
-    reduction; at 10^9+ vectors the codes ARE the serving store and the
-    full-precision vectors stay cold."""
-    return emb.select(F.col(id_col), _sq8_code(vec_col).alias("code"))
-
-
-def sq8_topk(
-    codes: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    refine_with: DataFrame | None = None,
-    candidates_per_query: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Quantized ANN top-k, two stages (the production SQ serving shape):
-
-    1. **coarse**: integer dot product of the int8 codes (exact integer
-       arithmetic, no float divergence) ranks ``candidates_per_query``
-       (default 5k) candidates per query — this is the stage that only
-       ever touches the 4-8× smaller code store;
-    2. **refine** (when ``refine_with`` is given): the shortlist joins
-       back to the full-precision vectors for exact cosine and the final
-       top-k. On tightly clustered corpora the ±1/127 quantization noise
-       is the same magnitude as neighbor score gaps, so the coarse stage
-       alone under-ranks — the refine stage restores exact-cosine
-       ordering while still scanning only |shortlist| cold rows.
-    """
-    n_cand = candidates_per_query or 5 * k
-    q = codes.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"), F.col("code").alias("q_code")
-    )
-    pairs = codes.crossJoin(F.broadcast(q)).where(
-        F.col(id_col) != F.col("q_id")
-    )
-    dot = F.aggregate(
-        F.zip_with("code", "q_code", lambda a, b: (a * b).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    coarse = pairs.select(
-        "q_id", F.col(id_col).alias("neighbor_id"), dot.alias("score")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    if refine_with is None:
-        return (
-            coarse.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .orderBy("q_id", "rank")
-        )
-    shortlist = (
-        coarse.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= n_cand)
-        .select("q_id", "neighbor_id")
-    )
-    vecs = refine_with.select(id_col, vec_col)
-    qv = vecs.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    )
-    nv = vecs.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("n_vec")
-    )
-    refined = (
-        shortlist.join(F.broadcast(qv), "q_id")
-        .join(nv, "neighbor_id")
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(
-                cosine_pairs_udf()(F.col("q_vec"), F.col("n_vec")), 6
-            ).alias("score"),
-        )
-    )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .orderBy("q_id", "rank")
-    )
-
-
 def write_sq8_ivf_store(
     emb: DataFrame,
     path: str,
@@ -926,8 +755,7 @@ def write_sq8_ivf_store(
     this is the serving store: a probe reads nprobe/K of the directories,
     each holding only codes; full-precision vectors stay in the cold
     float store and are touched only by the shortlist refine. One shuffle
-    at ingest (repartition by list) buys one directory per list, same as
-    write_ivf_store."""
+    at ingest (repartition by list) buys one directory per list."""
     spark = emb.sparkSession
     assign = _assign_udf(spark, centroids)
     (
@@ -957,7 +785,7 @@ def sq8_ivf_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k served from the partitioned int8 code store (VERDICT r4
-    item 3 — the composition that removes sq8_topk's flat-scan weakness):
+    item 3 — the composition that removes a flat code scan's weakness):
 
     1. probe lists are picked driver-side from the centroids, and the
        ``_list IN (...)`` filter is a PARTITION filter — only the probed

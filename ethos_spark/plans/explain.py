@@ -49,7 +49,3 @@ def count_exchanges(df: DataFrame) -> int:
         if "Exchange" in l and "Broadcast" not in l and "Reused" not in l
     )
 
-
-def codegen_span_count(df: DataFrame) -> int:
-    plan = formatted_plan(df)
-    return sum(1 for l in plan.splitlines() if "WholeStageCodegen" in l)

@@ -140,22 +140,3 @@ def sessions_page(
     }
     return rows, meta
 
-
-def viewer_sort(pages: DataFrame) -> DataFrame:
-    """O5: published date desc, nulls last as epoch 0
-    (published-date-sorting.test.ts:34-41)."""
-    return pages.orderBy(
-        F.desc(F.coalesce(F.col("published_date"), F.lit("1970-01-01"))),
-        F.desc("id"),
-    )
-
-
-def field_success_rates(field_stats: DataFrame) -> DataFrame:
-    """A6: (successCount/totalAttempts*100) rounded to 2dp per field."""
-    return field_stats.groupBy("field_name").agg(
-        F.sum("success_count").alias("success_count"),
-        F.sum("total_attempts").alias("total_attempts"),
-        F.round(
-            100.0 * F.sum("success_count") / F.sum("total_attempts"), 2
-        ).alias("success_rate"),
-    )

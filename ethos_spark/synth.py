@@ -275,12 +275,6 @@ def lang_of(h: int, i: int) -> str:
 # ---------------------------------------------------------------------------
 
 
-def corpus_spec(n_hosts: int, total_articles: int) -> list[tuple[int, int]]:
-    """[(host, article_count)] — tiny driver-side spec; pages are generated
-    distributed from it."""
-    return list(enumerate(zipf_article_counts(n_hosts, total_articles)))
-
-
 def build_pages_df(
     spark,
     n_hosts: int,

@@ -7,7 +7,6 @@ import pyspark.sql.functions as F
 
 from ethos_spark.ops.bpe import (
     bpe_encode_udf,
-    bpe_merge_table,
     learn_bpe,
     word_histogram,
 )
@@ -48,14 +47,6 @@ def test_hand_computed_merges_and_run_semantics(spark):
     }
     assert toks[3][:3] == ["aa", "aa", "a"]
     assert toks[1][:2] == ["low", "low"]  # 'low' then 'lower'→low+er...
-
-    # merge table DataFrame form matches the list
-    tbl = bpe_merge_table(docs, "text", 6).collect()
-    assert [(r.step, r.left_sym, r.right_sym, r.merged, r.pair_count)
-            for r in tbl] == [
-        (m["step"], m["left"], m["right"], m["merged"], m["pair_count"])
-        for m in merges
-    ]
 
 
 def test_histogram_is_the_only_corpus_pass(spark):

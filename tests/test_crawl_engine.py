@@ -8,6 +8,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from ethos_spark.catalog import Warehouse
+from ethos_spark.crawl import fetcher as fetcher_mod
 from ethos_spark.crawl.fetcher import CorpusFetcher
 from ethos_spark.crawl.reference_sim import build_corpus, simulate_crawl
 from ethos_spark.crawl.runner import CrawlOptions, CrawlRunner
@@ -225,20 +226,17 @@ def test_resume_from_checkpoint(spark, tmp_path, corpus_df):
     assert a == b
 
 
-def test_shuffle_join_path_identical(spark, tmp_path, corpus_df):
-    """broadcast_max_rows=0 forces the big-round fallbacks — the
+def test_shuffle_join_path_identical(spark, tmp_path, corpus_df, monkeypatch):
+    """BROADCAST_MAX_ROWS=0 forces the big-round fallbacks — the
     bloom-prefiltered fetch join AND the shuffle order joins (the
     multi-million-URL-round path); output must be identical to the
     broadcast path."""
     wh_bc = Warehouse(spark, str(tmp_path / "wh_bc"))
     _run_crawl(spark, wh_bc, corpus_df, [listing_url(h, 1) for h in range(2)])
     wh_sh = Warehouse(spark, str(tmp_path / "wh_sh"))
+    monkeypatch.setattr(fetcher_mod, "BROADCAST_MAX_ROWS", 0)
     runner_sh = CrawlRunner(
-        spark,
-        wh_sh,
-        CorpusFetcher(corpus_df, broadcast_max_rows=0),
-        SYNTH_SOURCE,
-        CrawlOptions(broadcast_max_rows=0),
+        spark, wh_sh, CorpusFetcher(corpus_df), SYNTH_SOURCE, CrawlOptions()
     )
     runner_sh.seed([listing_url(h, 1) for h in range(2)])
     runner_sh.run()

@@ -1,44 +1,12 @@
-"""Property tests for the stdlib binary kernels: PNG encode/decode
-round-trips on arbitrary images + filters, decode totality on garbage
-(raises ValueError, never crashes differently or hangs), and WARC record
-framing round-trips on arbitrary payloads."""
-
-import struct
+"""Property tests for the stdlib binary kernels: GIF and JPEG encode/decode
+round-trips on arbitrary images, decode totality on garbage (raises
+ValueError, never crashes differently or hangs), and WARC record framing
+round-trips on arbitrary payloads."""
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from ethos_spark.ops.multimodal import decode_png, encode_png
 from ethos_spark.sources.warc import _encode_record, _parse_members
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    w=st.integers(1, 24),
-    h=st.integers(1, 24),
-    ft=st.integers(0, 4),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_png_roundtrip_any_image_any_filter(w, h, ft, seed):
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    assert np.array_equal(decode_png(encode_png(img, filter_type=ft)), img)
-
-
-@settings(max_examples=120, deadline=None)
-@given(blob=st.binary(max_size=512))
-def test_png_decode_total_on_garbage(blob):
-    """Arbitrary bytes either decode (only if a valid PNG — vanishingly
-    unlikely) or raise ValueError/zlib-error wrapped as ValueError; no
-    other exception type escapes."""
-    try:
-        decode_png(blob)
-    except ValueError:
-        pass
-    except Exception as exc:  # zlib.error from corrupt IDAT is acceptable
-        import zlib
-
-        assert isinstance(exc, zlib.error), type(exc)
 
 
 @settings(max_examples=60, deadline=None)

@@ -4,6 +4,8 @@ headers for PNG/GIF/BMP/JPEG built with struct, plus fallback behavior."""
 import struct
 import zlib
 
+import pytest
+
 from ethos_spark.ops.multimodal import parse_image_meta, synth_png
 
 
@@ -90,150 +92,6 @@ def test_wav_header():
     assert (m["sample_rate"], m["n_channels"], m["n_frames"]) == (44100, 2, 2)
     # images report NULL audio fields
     assert parse_image_meta(synth_png(4, 4))["sample_rate"] is None
-
-
-def test_resize_and_frame_sampling_spark():
-    import numpy as np
-
-    from ethos_spark.ops.multimodal import resize_raw_rgb, sample_frames
-    from ethos_spark.session import get_spark
-
-    spark = get_spark("test-mm", master="local[2]", shuffle_partitions=2)
-    # 4x4 RGB gradient: pixel (y,x) = (y*4+x, 0, 255-(y*4+x))
-    img = np.zeros((4, 4, 3), dtype=np.uint8)
-    for y in range(4):
-        for x in range(4):
-            img[y, x] = (y * 4 + x, 0, 255 - (y * 4 + x))
-    df = spark.createDataFrame(
-        [(1, bytearray(img.tobytes()))], "doc_id long, media binary"
-    )
-    out = resize_raw_rgb(df, 4, 4, 2, 2).collect()[0]
-    got = np.frombuffer(bytes(out.media), dtype=np.uint8).reshape(2, 2, 3)
-    # nearest-neighbor picks source pixels (0,0),(0,2),(2,0),(2,2)
-    assert [tuple(got[y, x]) for y in range(2) for x in range(2)] == [
-        (0, 0, 255), (2, 0, 253), (8, 0, 247), (10, 0, 245)
-    ]
-    # undersized payload -> NULL media row kept
-    short = spark.createDataFrame([(2, bytearray(b"xx"))], "doc_id long, media binary")
-    assert resize_raw_rgb(short, 4, 4, 2, 2).collect()[0].media is None
-
-    # 'video' = 5 concatenated 2x2 frames, sample every 2nd
-    frame = lambda v: bytes([v] * 12)
-    vid = b"".join(frame(i) for i in range(5))
-    vdf = spark.createDataFrame([(7, bytearray(vid))], "doc_id long, media binary")
-    rows = sorted(
-        (r.frame_idx, bytes(r.media)[0]) for r in sample_frames(vdf, 2, 2, 2).collect()
-    )
-    assert rows == [(0, 0), (2, 2), (4, 4)]
-
-
-def test_resize_media_codec_error_routing():
-    """Compressed payloads through the resize path produce an explicit
-    error row, never a silent stub passthrough (VERDICT r2 item 8)."""
-    import numpy as np
-
-    from ethos_spark.ops.multimodal import resize_media
-    from ethos_spark.session import get_spark
-
-    spark = get_spark("test-mm", master="local[2]", shuffle_partitions=2)
-    img = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
-    # a JPEG-compressed payload (SOI + SOF), a PNG, a valid raw, a short raw
-    sof0 = (
-        b"\xff\xc0" + struct.pack(">H", 17) + b"\x08"
-        + struct.pack(">HH", 4, 4) + b"\x03" + b"\x00" * 9
-    )
-    jpeg = b"\xff\xd8" + sof0 + b"\x00" * 64
-    rows = spark.createDataFrame(
-        [
-            (1, bytearray(jpeg)),
-            (2, bytearray(synth_png(4, 4) + b"\x00" * 64)),
-            (3, bytearray(img.tobytes())),
-            (4, bytearray(b"xy")),
-        ],
-        "doc_id long, media binary",
-    )
-    out = {r.doc_id: r for r in resize_media(rows, 4, 4, 2, 2).collect()}
-    assert out[1].media is None and "jpeg" in out[1].error
-    assert out[2].media is None and "png" in out[2].error
-    assert out[3].error is None and len(bytes(out[3].media)) == 2 * 2 * 3
-    assert out[4].media is None and "too short" in out[4].error
-
-
-def test_png_pixel_decode_roundtrip_all_filters():
-    """Stdlib PNG decoder (VERDICT r3 item 6): zlib inflate + scanline
-    unfilter, pixel-exact against the encoder for every filter type, plus
-    grayscale/alpha channel normalization and error cases."""
-    import numpy as np
-
-    from ethos_spark.ops.multimodal import decode_png, encode_png
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, (13, 9, 3), dtype=np.uint8)
-    for ft in range(5):
-        png = encode_png(img, filter_type=ft)
-        out = decode_png(png)
-        assert out.shape == (13, 9, 3)
-        assert np.array_equal(out, img), f"filter {ft}"
-
-    # multiple IDAT chunks: split the stream and re-chunk
-    png = encode_png(img, filter_type=4)
-    # find the single IDAT chunk and split its body in two
-    i = 8
-    parts = []
-    while i < len(png):
-        clen = struct.unpack(">I", png[i : i + 4])[0]
-        tag = png[i + 4 : i + 8]
-        body = png[i + 8 : i + 8 + clen]
-        parts.append((tag, body))
-        i += 12 + clen
-
-    def chunk(tag, body):
-        import zlib as z
-
-        return (
-            struct.pack(">I", len(body)) + tag + body
-            + struct.pack(">I", z.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    rebuilt = b"\x89PNG\r\n\x1a\n"
-    for tag, body in parts:
-        if tag == b"IDAT":
-            rebuilt += chunk(b"IDAT", body[: len(body) // 2])
-            rebuilt += chunk(b"IDAT", body[len(body) // 2:])
-        else:
-            rebuilt += chunk(tag, body)
-    assert np.array_equal(decode_png(rebuilt), img)
-
-    # unsupported shapes raise (palette type 3)
-    import pytest as _pytest
-    bad_ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 3, 0, 0, 0)
-    bad = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", bad_ihdr) + chunk(
-        b"IDAT", b"\x00"
-    ) + chunk(b"IEND", b"")
-    with _pytest.raises(ValueError, match="color type"):
-        decode_png(bad)
-
-
-def test_resize_media_decodes_real_png():
-    """A real compressed PNG now flows through resize_media with NO error:
-    decoded with the stdlib kernel, resized from its own dimensions."""
-    import numpy as np
-
-    from ethos_spark.ops.multimodal import encode_png, resize_media
-    from ethos_spark.session import get_spark
-
-    spark = get_spark("test-mm2", master="local[2]", shuffle_partitions=2)
-    img = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
-    rows = spark.createDataFrame(
-        [(1, bytearray(encode_png(img, filter_type=4)))],
-        "doc_id long, media binary",
-    )
-    out = resize_media(rows, 8, 8, 2, 2).collect()[0]  # src dims ignored for png
-    assert out.error is None
-    got = np.frombuffer(bytes(out.media), dtype=np.uint8).reshape(2, 2, 3)
-    ys = np.arange(2) * 4 // 2
-    xs = np.arange(2) * 4 // 2
-    assert np.array_equal(got, img[ys][:, xs])
 
 
 def test_gif_lzw_roundtrip_and_width_growth():
@@ -335,64 +193,12 @@ def test_gif_interlace_transparency_and_offset_frames():
     assert np.array_equal(fs[1], expect)
 
 
-def test_resize_media_decodes_real_gif_and_frame_sampling():
-    """The Spark pipeline path: GIF payloads resize from real decoded
-    pixels (exact vs the numpy oracle), animated GIFs explode into
-    sampled raw-RGB frame rows that feed resize_raw_rgb."""
-    import numpy as np
-
-    from ethos_spark.ops.multimodal import (
-        decode_media,
-        encode_gif,
-        gif_frames,
-        resize_media,
-        resize_raw_rgb,
-    )
-    from ethos_spark.session import get_spark
-
-    spark = get_spark("test-mm", master="local[2]", shuffle_partitions=2)
-    img = np.zeros((8, 6, 3), dtype=np.uint8)
-    for y in range(8):
-        for x in range(6):
-            img[y, x] = ((y * 6 + x) % 11 * 20, y * 30, x * 40)
-    payload = encode_gif(img)
-    df = spark.createDataFrame(
-        [(1, bytearray(payload))], "doc_id long, media binary"
-    )
-    meta = decode_media(df).collect()[0]
-    assert (meta.codec, meta.width, meta.height) == ("gif", 6, 8)
-
-    out = resize_media(df, 8, 6, 3, 3).collect()[0]
-    assert out.error is None
-    got = np.frombuffer(bytes(out.media), dtype=np.uint8).reshape(3, 3, 3)
-    ys = np.arange(3) * 8 // 3
-    xs = np.arange(3) * 6 // 3
-    assert np.array_equal(got, img[ys][:, xs])  # pixel-exact oracle
-
-    # animated: 5 frames, sample every 2nd, then resize the raw frames
-    frames = [
-        np.full((4, 4, 3), (v, 0, 255 - v), dtype=np.uint8)
-        for v in (0, 50, 100, 150, 200)
-    ]
-    adf = spark.createDataFrame(
-        [(9, bytearray(encode_gif(frames)))], "doc_id long, media binary"
-    )
-    rows = sorted(
-        (r.frame_idx, bytes(r.media)[0])
-        for r in gif_frames(adf, every_k=2).collect()
-    )
-    assert rows == [(0, 0), (2, 100), (4, 200)]
-    small = resize_raw_rgb(
-        gif_frames(adf, every_k=2), 4, 4, 2, 2
-    ).collect()
-    assert all(len(bytes(r.media)) == 12 for r in small)
-
-
 def test_jpeg_roundtrip_and_independent_idct():
     """Baseline JPEG codec: constant blocks decode EXACTLY, smooth
     content at q=1 is within rounding, the decoder's matrix IDCT matches
     a textbook double-loop IDCT written independently here, and restart
-    markers + grayscale both round-trip."""
+    markers + grayscale both round-trip, and a progressive (SOF2) file
+    raises ValueError."""
     import numpy as np
 
     from ethos_spark.ops.multimodal import (
@@ -431,6 +237,12 @@ def test_jpeg_roundtrip_and_independent_idct():
     b = decode_jpeg(encode_jpeg(rgb, quality_q=4, restart_interval=2))
     assert np.array_equal(a, b)
 
+    # progressive: same container, SOF2 marker instead of SOF0 → rejected
+    prog = bytearray(encode_jpeg(rgb, quality_q=4))
+    prog[prog.find(b"\xff\xc0") + 1] = 0xC2
+    with pytest.raises(ValueError):
+        decode_jpeg(bytes(prog))
+
     # the decoder's M.T @ F @ M IDCT == the textbook loop formula
     # (independent implementation: different structure, same spec math)
     M = _dct_matrix()
@@ -459,42 +271,6 @@ def test_jpeg_roundtrip_and_independent_idct():
     # header meta agrees with the decoder
     meta = parse_image_meta(encode_jpeg(rgb))
     assert (meta["codec"], meta["width"], meta["height"]) == ("jpeg", w, h)
-
-
-def test_resize_media_decodes_real_jpeg_and_fences_nonbaseline():
-    """The pipeline path: baseline JPEG resizes from real decoded pixels
-    (nearest-neighbor oracle, tolerance = codec loss); a progressive
-    (SOF2) file still routes to the explicit error column."""
-    import struct as st
-
-    import numpy as np
-
-    from ethos_spark.ops.multimodal import decode_jpeg, encode_jpeg, resize_media
-    from ethos_spark.session import get_spark
-
-    spark = get_spark("test-mm", master="local[2]", shuffle_partitions=2)
-    h, w = 16, 16
-    rgb = np.zeros((h, w, 3), dtype=np.uint8)
-    for y in range(h):
-        for x in range(w):
-            rgb[y, x] = (y * 12, x * 12, (x + y) * 6)
-    payload = encode_jpeg(rgb, quality_q=2)
-    # progressive: same container, SOF2 marker instead of SOF0
-    prog = bytearray(payload)
-    i = prog.find(b"\xff\xc0")
-    prog[i + 1] = 0xC2
-    df = spark.createDataFrame(
-        [(1, bytearray(payload)), (2, bytearray(bytes(prog)))],
-        "doc_id long, media binary",
-    )
-    out = {r.doc_id: r for r in resize_media(df, h, w, 4, 4).collect()}
-    assert out[1].error is None
-    got = np.frombuffer(bytes(out[1].media), dtype=np.uint8).reshape(4, 4, 3)
-    ys = np.arange(4) * h // 4
-    xs = np.arange(4) * w // 4
-    expect = decode_jpeg(payload)[ys][:, xs]
-    assert np.array_equal(got, expect)  # exact vs the decode+NN oracle
-    assert out[2].media is None and "jpeg" in out[2].error
 
 
 def test_jpeg_420_subsampling():

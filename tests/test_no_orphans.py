@@ -1,0 +1,78 @@
+"""Orphan guard: every top-level function or class in ``ethos_spark/`` is
+used by some non-test module of the repo, or is listed in ``KEEP`` with
+the reason it stays without such a caller.
+
+"Used" is syntactic: a ``Name``, an ``Attribute`` or an import alias with
+the def's name anywhere in a non-test ``.py`` file. Docstrings and
+comments do not count; names inside f-string expressions do. A new def
+that only tests call fails here until it gets a production caller, is
+deleted, or earns a ``KEEP`` entry."""
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+
+KEEP = {
+    "Fetcher": "the fetch protocol CorpusFetcher and HttpFetcher implement",
+    "HttpFetcher": "the real-network fetch path (tests/test_http_fetcher_e2e.py)",
+    "classify": "scalar langid oracle the batch classifier is tested against",
+    "assert_filter_pushed": "plan-assertion helper for tests and plan review",
+    "count_exchanges": "plan-assertion helper for tests and plan review",
+    "read_schema_columns": "plan-assertion helper for tests and plan review",
+    "build_corpus": "reference simulator's in-memory corpus for parity tests",
+    "run_to_memory": "drains the crawl metrics stream into a queryable table",
+    "delete_session": "admin mutation of the reference viewer (session delete)",
+    "counts_by_source": "reference serve query (ContentMetadataStore counts)",
+    "count_by_source": "reference serve query (ContentMetadataStore count)",
+    "session_error_counts": "reference analytics query A9 (per-session errors)",
+    "resolve_absolute_url": "strict resolver with parity to the reference url.ts",
+    "read_warc_record": "CDX random access into a WARC segment",
+    "serve_background": "starts the HTTP API on a daemon thread (HTTP serve tests)",
+    "decontaminate": "drop policy applied to a contamination_report",
+    "deterministic_sample": "unstratified form of stratified_sample",
+    "host_link_graph": "host-level PageRank input from the outlinks table",
+    "streaming_exact_dedup_within": "watermark-bounded variant of stream dedup",
+}
+
+
+def _sources():
+    for path in sorted(ROOT.rglob("*.py")):
+        parts = path.relative_to(ROOT).parts
+        if parts[0] == "tests" or any(
+            p.startswith(".") or p == "__pycache__" for p in parts
+        ):
+            continue
+        yield parts, ast.parse(path.read_text(), str(path))
+
+
+def _orphans() -> set[str]:
+    used: set[str] = set()
+    defs: set[str] = set()
+    for parts, tree in _sources():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.add(node.name.rsplit(".", 1)[-1])
+        if parts[0] == "ethos_spark":
+            defs.update(
+                n.name
+                for n in tree.body
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not n.name.startswith("__")
+            )
+    return defs - used
+
+
+def test_unused_defs_are_exactly_the_deliberate_keeps():
+    orphans = _orphans()
+    assert not orphans - KEEP.keys(), (
+        "no non-test caller; delete, wire up, or add to KEEP with a reason: "
+        f"{sorted(orphans - KEEP.keys())}"
+    )
+    assert not KEEP.keys() - orphans, (
+        f"now used outside tests; drop from KEEP: {sorted(KEEP.keys() - orphans)}"
+    )

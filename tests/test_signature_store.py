@@ -84,3 +84,29 @@ def test_store_parity_zero_kernel_second_run_incremental(
         edited, "doc_id", "text", 5, 0.6, signature_store=store2
     ).collect()
     assert spark.read.parquet(path).count() == n_store + 1
+
+
+def test_store_refuses_mismatched_or_unrecorded_bucket_layout(
+    spark, tmp_path, docs, monkeypatch
+):
+    """The bucket count is a layout property of the files on disk: a store
+    written with 16 buckets must not be reopened as an 8-bucket table (the
+    exchange-free join would hash rows into the wrong buckets), and a
+    store dir with no layout sidecar is refused outright."""
+    import os
+
+    path = str(tmp_path / "sigstore_layout")
+    small = docs.where(F.col("doc_id") < 20)
+    dd.SignatureStore(spark, path).signatures_for(
+        small, "doc_id", "text"
+    ).count()
+    assert os.path.isfile(os.path.join(path, dd.SignatureStore.LAYOUT_FILE))
+
+    monkeypatch.setattr(dd, "SIG_BUCKETS", 8)
+    with pytest.raises(ValueError, match=r"'buckets': 16.*'buckets': 8"):
+        dd.SignatureStore(spark, path).signatures_for(small, "doc_id", "text")
+    monkeypatch.undo()
+
+    os.remove(os.path.join(path, dd.SignatureStore.LAYOUT_FILE))
+    with pytest.raises(ValueError, match="sigstore_layout"):
+        dd.SignatureStore(spark, path).signatures_for(small, "doc_id", "text")

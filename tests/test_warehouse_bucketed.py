@@ -17,6 +17,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from ethos_spark.catalog import Warehouse
+from ethos_spark.crawl import fetcher as fetcher_mod
 from ethos_spark.crawl.fetcher import CorpusFetcher
 from ethos_spark.plans.explain import count_exchanges, formatted_plan
 from ethos_spark.session import get_spark
@@ -207,7 +208,7 @@ def test_legacy_plain_dirs_survive_spec_adoption(spark, tmp_path):
     assert wh1.read("pages").count() == 400
 
 
-def test_crawl_on_bucketed_warehouse_identical(spark, tmp_path):
+def test_crawl_on_bucketed_warehouse_identical(spark, tmp_path, monkeypatch):
     """The FULL 100 TB configuration end-to-end: crawl loop writing a
     bucket_spec'd warehouse (pages by url_hash, frontier by url) while
     fetching through the bucketed zero-exchange corpus tier — output
@@ -242,15 +243,9 @@ def test_crawl_on_bucketed_warehouse_identical(spark, tmp_path):
         "crawl_corpus_b",
         str(tmp_path / "crawl_corpus_b"),
         n_buckets=NB,
-        broadcast_candidates=False,
     )
-    r2 = CrawlRunner(
-        spark,
-        wh_b,
-        fetcher,
-        SYNTH_SOURCE,
-        CrawlOptions(broadcast_max_rows=0),
-    )
+    monkeypatch.setattr(fetcher_mod, "BROADCAST_MAX_ROWS", 0)
+    r2 = CrawlRunner(spark, wh_b, fetcher, SYNTH_SOURCE, CrawlOptions())
     r2.seed(seeds)
     r2.run()
 
@@ -267,14 +262,13 @@ def test_crawl_on_bucketed_warehouse_identical(spark, tmp_path):
     assert WH(spark, str(tmp_path / "wh_b")).read("pages").count() == len(a)
 
 
-def test_bucketed_fetch_tier_zero_exchange_and_parity(spark, tmp_path):
+def test_bucketed_fetch_tier_zero_exchange_and_parity(spark, tmp_path, monkeypatch):
     corpus = _corpus(spark, 3000)
     fetcher = CorpusFetcher.register_bucketed_corpus(
         corpus,
         "bfetch_corpus",
         str(tmp_path / "corpus_b"),
         n_buckets=NB,
-        broadcast_candidates=False,  # force past the broadcast gate
     )
     cand = spark.range(0, 3000, 5).select(
         F.concat(F.lit("https://h"), F.col("id") % 7, F.lit("/p/"), F.col("id")).alias(
@@ -282,12 +276,14 @@ def test_bucketed_fetch_tier_zero_exchange_and_parity(spark, tmp_path):
         ),
         F.concat(F.lit("h"), F.col("id") % 7).alias("host"),
     )
+    # the broadcast tier, planned while the gate is at its default
+    bcast = CorpusFetcher(corpus).fetch(cand, size_hint=600)
+    monkeypatch.setattr(fetcher_mod, "BROADCAST_MAX_ROWS", 0)  # force past the gate
     out = fetcher.fetch(cand, size_hint=600)
     # the staged-candidate join moves NOTHING: zero shuffle exchanges
     assert count_exchanges(out) == 0, formatted_plan(out)
 
     # parity with the broadcast tier
-    bcast = CorpusFetcher(corpus).fetch(cand, size_hint=600)
     got = sorted(r.url for r in out.collect())
     want = sorted(r.url for r in bcast.collect())
     assert got == want and len(got) == 600
