@@ -197,8 +197,7 @@ def test_jpeg_roundtrip_and_independent_idct():
     """Baseline JPEG codec: constant blocks decode EXACTLY, smooth
     content at q=1 is within rounding, the decoder's matrix IDCT matches
     a textbook double-loop IDCT written independently here, and restart
-    markers + grayscale both round-trip, and a progressive (SOF2) file
-    raises ValueError."""
+    markers + grayscale both round-trip."""
     import numpy as np
 
     from ethos_spark.ops.multimodal import (
@@ -237,12 +236,6 @@ def test_jpeg_roundtrip_and_independent_idct():
     b = decode_jpeg(encode_jpeg(rgb, quality_q=4, restart_interval=2))
     assert np.array_equal(a, b)
 
-    # progressive: same container, SOF2 marker instead of SOF0 → rejected
-    prog = bytearray(encode_jpeg(rgb, quality_q=4))
-    prog[prog.find(b"\xff\xc0") + 1] = 0xC2
-    with pytest.raises(ValueError):
-        decode_jpeg(bytes(prog))
-
     # the decoder's M.T @ F @ M IDCT == the textbook loop formula
     # (independent implementation: different structure, same spec math)
     M = _dct_matrix()
@@ -271,6 +264,44 @@ def test_jpeg_roundtrip_and_independent_idct():
     # header meta agrees with the decoder
     meta = parse_image_meta(encode_jpeg(rgb))
     assert (meta["codec"], meta["width"], meta["height"]) == ("jpeg", w, h)
+
+
+def test_resize_media_decodes_real_jpeg_and_fences_nonbaseline():
+    """The decode path on real JPEG payloads: the Spark decode stage reads
+    the frame header of a baseline and a progressive (SOF2) file alike,
+    the pixel decoder reconstructs the baseline file within codec loss,
+    and the progressive file raises ValueError instead of decoding."""
+    import numpy as np
+
+    from ethos_spark.ops.multimodal import decode_jpeg, decode_media, encode_jpeg
+    from ethos_spark.session import get_spark
+
+    spark = get_spark("test-mm", master="local[2]", shuffle_partitions=2)
+    h, w = 16, 16
+    rgb = np.zeros((h, w, 3), dtype=np.uint8)
+    for y in range(h):
+        for x in range(w):
+            rgb[y, x] = (y * 12, x * 12, (x + y) * 6)
+    payload = encode_jpeg(rgb, quality_q=2)
+    # progressive: same container, SOF2 marker instead of SOF0
+    prog = bytearray(payload)
+    i = prog.find(b"\xff\xc0")
+    prog[i + 1] = 0xC2
+    df = spark.createDataFrame(
+        [(1, bytearray(payload)), (2, bytearray(bytes(prog)))],
+        "doc_id long, media binary",
+    )
+    meta = {r.doc_id: r for r in decode_media(df).collect()}
+    for doc_id in (1, 2):
+        assert (meta[doc_id].codec, meta[doc_id].width, meta[doc_id].height) == (
+            "jpeg", w, h
+        )
+
+    got = decode_jpeg(payload)
+    assert got.shape == (h, w, 3)
+    assert np.abs(got.astype(int) - rgb.astype(int)).max() <= 4
+    with pytest.raises(ValueError, match="non-baseline"):
+        decode_jpeg(bytes(prog))
 
 
 def test_jpeg_420_subsampling():
