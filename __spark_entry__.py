@@ -19,6 +19,7 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ethos_spark import artifacts
 from ethos_spark.ops import dedup as dd
 from ethos_spark.ops import similarity as sim
 from ethos_spark.ops import textstats as ts
@@ -345,7 +346,8 @@ def dedup_ngram_jaccard(spark, sf):
 def dedup_minhash_lsh(spark, sf):
     """MinHash+LSH near-dup pairs through the incremental SignatureStore
     (VERDICT r4 item 4): the shingle+signature kernel runs once per
-    unique content version into a digest-keyed /tmp store; repeat
+    unique content version into a digest-keyed store, whose path the
+    artifact store keys by the documents' content fingerprint; repeat
     invocations (bench re-runs, the correctness gate) resolve every
     signature from the store with zero kernel tasks. Output byte-
     identical to the storeless path (digest keys content, so stale
@@ -357,18 +359,11 @@ def dedup_minhash_lsh(spark, sf):
 
 
 def _sig_store(spark, sf):
-    import hashlib
-    import os
-    import tempfile
-
-    # v3: the store records its bucket layout in a sidecar and refuses
-    # to open without one — a fresh key so older /tmp dirs are never opened
-    key = hashlib.md5(
-        f"{sf}:{_tbl_fp(sf, 'documents')}:mh-sigstore-v3".encode()
-    ).hexdigest()[:12]
-    return dd.SignatureStore(
-        spark, os.path.join(tempfile.gettempdir(), f"ethos-sig-store-{key}")
+    fp = artifacts.fingerprint(f"{sf}/documents.parquet")
+    path = artifacts.ArtifactStore().path(
+        "signatures", fp, dd.SIG_BUCKETS, dd.SignatureStore.SCHEMA, dd.N_HASHES
     )
+    return dd.SignatureStore(spark, path)
 
 
 def prime_signature_store(spark, sf):
@@ -405,30 +400,30 @@ def similarity_topk(spark, sf):
     return sim.cosine_topk(_t(spark, sf, "embeddings"), [0, 1, 2, 3, 4], k=5)
 
 
-def _tbl_fp(sf, table: str) -> str:
-    """Content fingerprint of an input table for /tmp store keys: file
-    size + mtime (no data read). Regenerating a dataset at the same scale
-    factor then re-keys every derived store instead of silently serving
-    stale artifacts."""
-    import hashlib
-    import os
-
-    st = os.stat(f"{sf}/{table}.parquet")
-    return hashlib.md5(
-        f"{st.st_size}:{st.st_mtime_ns}".encode()
-    ).hexdigest()[:10]
-
-
 def _emb_meta(sf) -> tuple[int, int]:
-    """(rows, dim) of the embeddings table from the parquet footer + first
-    page — driver-side metadata reads, zero Spark jobs (guide §1/§5: don't
-    spend cluster jobs on request-sized sizing info)."""
-    import pyarrow.parquet as pq
+    """(rows, dim) of the embeddings table, a file or a dataset dir, from
+    parquet footers + one row — driver-side reads, zero Spark jobs (guide
+    §1/§5: don't spend cluster jobs on request-sized sizing info)."""
+    import pyarrow.dataset as ds
 
-    f = pq.ParquetFile(f"{sf}/embeddings.parquet")
-    rows = f.metadata.num_rows
-    first = next(f.iter_batches(batch_size=1, columns=["embedding"]))
-    return rows, len(first.column("embedding")[0])
+    d = ds.dataset(f"{sf}/embeddings.parquet", format="parquet")
+    first = d.head(1, columns=["embedding"])
+    return d.count_rows(), len(first.column("embedding")[0])
+
+
+def _centroids(emb, fp: str, variant: str, n_clusters: int = 16, iters: int = 3):
+    """IVF coarse quantizer as a JSON artifact keyed by every input of the
+    fit: the first call per embeddings content trains k-means, later calls
+    (bench re-runs, the correctness gate) load it with zero Spark jobs."""
+    import numpy as np
+
+    return np.asarray(
+        artifacts.ArtifactStore().json(
+            "centroids",
+            (fp, variant, n_clusters, iters),
+            lambda: sim.kmeans_centroids(emb, n_clusters, iters).tolist(),
+        )
+    )
 
 
 def similarity_lsh_recall(spark, sf):
@@ -459,24 +454,14 @@ def similarity_ivf_recall(spark, sf):
     nprobe list probing) recall@10 vs exact top-k on cluster-structured
     vectors, computed in-Spark. Oracle asserts the stable outcome.
 
-    The coarse quantizer goes through CentroidStore (round-3 VERDICT item
-    5): first call per corpus snapshot trains k-means and persists the
-    centroids; every later call — the bench re-run, repeated correctness
-    invocations — loads them with ZERO k-means Spark jobs."""
-    import os
-    import tempfile
-
+    The coarse quantizer is a keyed artifact (``_centroids``, round-3
+    VERDICT item 5): first call per embeddings content trains k-means and
+    publishes the centroids; every later call — the bench re-run, repeated
+    correctness invocations — loads them with ZERO k-means Spark jobs."""
     emb = sim.with_cluster_structure(_t(spark, sf, "embeddings"))
     qids = list(range(20))
-    store = sim.CentroidStore(
-        os.path.join(tempfile.gettempdir(), "ethos-centroid-store")
-    )
-    cents = sim.ivf_centroids(
-        emb,
-        snapshot_key=f"{sf}:{_tbl_fp(sf, 'embeddings')}:cluster-structured-v1",
-        n_clusters=16,
-        store=store,
-    )
+    fp = artifacts.fingerprint(f"{sf}/embeddings.parquet")
+    cents = _centroids(emb, fp, "cluster-structured")
     ann = sim.ivf_ann_topk(
         emb, qids, k=10, n_clusters=16, nprobe=4, centroids=cents
     )
@@ -491,11 +476,10 @@ def similarity_sq_recall(spark, sf):
     scales with probed-list size (no fixed 5k multiplier — the round-4
     recall-cliff weakness), and an exact-cosine refine orders the final
     top-k. Evaluated on a 10x replicated cluster-structured corpus with
-    the bar raised to recall@10 >= 0.9. Centroids persist via
-    CentroidStore; the code store is written once per corpus snapshot."""
+    the bar raised to recall@10 >= 0.9. Centroids are a keyed artifact
+    (``_centroids``); the code store is an artifact dir keyed by, and
+    layout-checked against, the centroids it was assigned with."""
     import hashlib
-    import os
-    import tempfile
 
     base = _t(spark, sf, "embeddings")
     # replication stride sized from the real table (footer metadata): a
@@ -512,17 +496,15 @@ def similarity_sq_recall(spark, sf):
         )
     )
     qids = list(range(20))
-    store = sim.CentroidStore(
-        os.path.join(tempfile.gettempdir(), "ethos-centroid-store")
+    fp = artifacts.fingerprint(f"{sf}/embeddings.parquet")
+    cents = _centroids(big, fp, "sq8-ivf-10x")
+    cents_sha1 = hashlib.sha1(cents.tobytes()).hexdigest()
+    path = artifacts.ArtifactStore().dir(
+        "sq8",
+        (fp, 10, cents_sha1),
+        {"centroids_sha1": cents_sha1, "n_clusters": 16, "schema": sim.SQ8_SCHEMA},
+        lambda tmp: sim.write_sq8_ivf_store(big, tmp, cents),
     )
-    snap = f"{sf}:{_tbl_fp(sf, 'embeddings')}:sq8-ivf-10x-v1"
-    cents = sim.ivf_centroids(
-        big, snapshot_key=snap, n_clusters=16, store=store
-    )
-    key = hashlib.md5(snap.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"ethos-sq8-store-{key}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        sim.write_sq8_ivf_store(big, path, cents)
     queries = [
         (r.vec_id, list(r.embedding))
         for r in big.where(F.col("vec_id").isin(qids)).collect()
@@ -1012,22 +994,18 @@ _BPE_MERGES = 6
 
 
 def _bpe_merges_for(spark, sf):
-    """Learned merges through ops.bpe.MergeStore (persist-once pattern,
-    like CentroidStore/SignatureStore): first invocation trains the 6
-    rounds, every later one — the other BPE query, bench re-runs, the
-    gate — loads the keyed JSON artifact with zero Spark jobs."""
-    import hashlib
-    import os
-    import tempfile
-
+    """Learned merges as a JSON artifact keyed by the documents' content
+    fingerprint, the slice and the merge count: first invocation trains
+    the 6 rounds, every later one — the other BPE query, bench re-runs,
+    the gate — loads the artifact with zero Spark jobs."""
     from ethos_spark.ops import bpe
 
-    store = bpe.MergeStore(
-        os.path.join(tempfile.gettempdir(), "ethos-bpe-store")
-    )
-    key = f"{sf}:{_tbl_fp(sf, 'documents')}:docs200-v1"
     d = _t(spark, sf, "documents").where(F.col("doc_id") < 200).select("text")
-    return store.get_or_learn(key, d, "text", _BPE_MERGES)
+    return artifacts.ArtifactStore().json(
+        "merges",
+        (artifacts.fingerprint(f"{sf}/documents.parquet"), "doc_id<200", _BPE_MERGES),
+        lambda: bpe.learn_bpe(d, "text", _BPE_MERGES),
+    )
 
 
 def bpe_token_counts(spark, sf):
@@ -1310,8 +1288,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # FIRST 50 entries in insertion order, and the registry holds 53 — the
     # three entries that previously rode past the cap (outlink_extract has
     # never had a driver-verified row) now lead, rotating three
-    # long-verified, unchanged queries (bpe_token_counts,
-    # decontaminate_docs, sitemap_extract) past the cap instead.
+    # long-verified queries that changes leave untouched past the cap
+    # (jpeg_roundtrip, decontaminate_docs, sitemap_extract); the
+    # artifact-backed ones stay inside it (tests/test_entry_oracle.py).
     return {
         "outlink_extract": outlink_extract,
         "multimodal_decode": multimodal_decode,
@@ -1361,9 +1340,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_crawl_sessions": streaming_crawl_sessions,
         "warc_roundtrip": warc_roundtrip,
         "gif_roundtrip": gif_roundtrip,
-        "jpeg_roundtrip": jpeg_roundtrip,
-        "bpe_merges": bpe_merges,
         "bpe_token_counts": bpe_token_counts,
+        "bpe_merges": bpe_merges,
+        "jpeg_roundtrip": jpeg_roundtrip,
         "decontaminate_docs": decontaminate_docs,
         "sitemap_extract": sitemap_extract,
     }

@@ -198,43 +198,3 @@ def bpe_encode_udf(merges: list[dict]):
 
     return encode
 
-
-class MergeStore:
-    """Learned-vocabulary persistence — the third instance of the
-    persist-once pattern (similarity.CentroidStore, dedup.SignatureStore):
-    a BPE merge table is a pure function of (corpus snapshot, n_merges),
-    and production tokenizers are trained once and applied forever.
-    ``get_or_learn`` runs the K training rounds only when the keyed JSON
-    artifact is absent; later calls (bench re-runs, the correctness gate,
-    every tokenize job) load it with zero Spark jobs (pytest pins this by
-    poisoning learn_bpe on the second call). Atomic write (tmp+rename) so
-    concurrent learners converge on one artifact."""
-
-    def __init__(self, path: str):
-        self.path = path
-
-    def _file(self, key: str, n_merges: int) -> str:
-        import hashlib
-        import os
-
-        h = hashlib.md5(key.encode()).hexdigest()[:16]
-        return os.path.join(self.path, f"bpe-{h}-{n_merges}.json")
-
-    def get_or_learn(
-        self, key: str, df: DataFrame, text_col: str, n_merges: int
-    ) -> list[dict]:
-        import json
-        import os
-        import uuid
-
-        f = self._file(key, n_merges)
-        if os.path.exists(f):
-            with open(f) as fh:
-                return json.load(fh)
-        merges = learn_bpe(df, text_col, n_merges)
-        os.makedirs(self.path, exist_ok=True)
-        tmp = f + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(merges, fh)
-        os.replace(tmp, f)
-        return merges

@@ -23,7 +23,6 @@ like production near-dup pipelines drop stop-shingles.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 
 import numpy as np
@@ -31,13 +30,16 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ethos_spark import artifacts
+
 P61 = (1 << 61) - 1  # Mersenne prime for affine rehash
 # banding sized for recall ≈ 1 down to J=0.6: miss prob (1-J²)^32 ≈ 7e-7
 N_HASHES = 64
 N_BANDS = 32  # × 2 rows
 # SignatureStore layout: bucket count of the digest-bucketed table, fixed
-# at store creation and recorded in the store's layout sidecar (buckets ≈
-# store size / target file size on a real cluster)
+# at store creation, recorded in its artifacts.LAYOUT_FILE sidecar and part
+# of the store's key (buckets ≈ store size / target file size on a real
+# cluster)
 SIG_BUCKETS = 16
 
 
@@ -212,7 +214,8 @@ def _docsets_sigs(
 class SignatureStore:
     """Incremental MinHash signature store (VERDICT r4 item 4): a parquet
     table keyed by CONTENT digest holding (digest → shingle set +
-    signature), the same persist-once pattern as similarity.CentroidStore.
+    signature). Unlike the immutable artifacts of ``ethos_spark.artifacts``
+    it grows in place, one append per batch of unseen content versions.
 
     At 100 TB the signature pass (normalize → shingle → 64 splitmix64
     mixes over every token) dwarfs the pair join, and content digests
@@ -239,13 +242,11 @@ class SignatureStore:
     same digest; payloads are content-determined hence identical, so
     keeping either row is correct — without this the serving join would
     fan out duplicated signature rows). The bucket count (``SIG_BUCKETS``)
-    and schema are written to a ``_ethos_layout.json`` sidecar before the
-    first data file and checked on every read: a store without one, or
+    and schema are written to the ``artifacts.LAYOUT_FILE`` sidecar before
+    the first data file and checked on every read: a store without one, or
     bucketed differently, raises instead of serving wrong joins."""
 
     SCHEMA = "digest string, n_sh int, shs array<bigint>, mh array<bigint>"
-    # layout sidecar; the leading "_" keeps Spark's file listing off it
-    LAYOUT_FILE = "_ethos_layout.json"
 
     def __init__(self, spark, path: str):
         self.spark = spark
@@ -255,39 +256,16 @@ class SignatureStore:
         h = hashlib.md5(os.path.abspath(self.path).encode()).hexdigest()[:12]
         return f"ethos_sigstore_{h}"
 
-    def _layout(self) -> dict:
-        return {"buckets": SIG_BUCKETS, "schema": self.SCHEMA}
-
-    def _write_layout(self) -> None:
-        """Publish the layout sidecar atomically (tmp + os.replace)."""
-        os.makedirs(self.path, exist_ok=True)
-        sidecar = os.path.join(self.path, self.LAYOUT_FILE)
-        tmp = f"{sidecar}.{os.getpid()}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(self._layout(), f)
-        os.replace(tmp, sidecar)
-
-    def _open(self) -> str:
-        """Check the layout sidecar, then register the bucketed table over
-        the store dir (once per session); → the table name. A declaration
-        that mismatches the files on disk would make the exchange-free
-        join and dropDuplicates hash rows into the wrong buckets and
-        silently miss matches, so any doubt raises instead."""
-        sidecar = os.path.join(self.path, self.LAYOUT_FILE)
-        try:
-            with open(sidecar) as f:
-                layout = json.load(f)
-        except FileNotFoundError:
-            raise ValueError(
-                f"signature store {self.path} has no {self.LAYOUT_FILE}: "
-                f"stored bucket count unknown, this build expects "
-                f"{SIG_BUCKETS} buckets"
-            ) from None
-        if layout != self._layout():
-            raise ValueError(
-                f"signature store {self.path} has layout {layout}; this "
-                f"build expects {self._layout()}"
-            )
+    def _open(self, create: bool = False) -> str:
+        """Check the layout sidecar (written first when ``create``), then
+        register the bucketed table over the store dir (once per session);
+        → the table name. A declaration that mismatches the files on disk
+        would make the exchange-free join and dropDuplicates hash rows into
+        the wrong buckets and silently miss matches, so any doubt raises."""
+        layout = {"buckets": SIG_BUCKETS, "schema": self.SCHEMA}
+        if create:
+            artifacts.write_layout(self.path, layout)
+        artifacts.check_layout(self.path, layout)
         name = self._table()
         if not self.spark.catalog.tableExists(name):
             self.spark.sql(
@@ -303,16 +281,16 @@ class SignatureStore:
         return self.spark.table(self._open())
 
     def _append(self, sigs: DataFrame) -> None:
-        if not os.path.isdir(self.path):  # store creation: layout first
-            self._write_layout()
-        # append into the registered table: an append that has to create
-        # the table overwrites the dir, sidecar included
+        # store creation writes the layout first, then appends into the
+        # registered table: an append that has to create the table
+        # overwrites the dir, sidecar included
+        name = self._open(create=not os.path.isdir(self.path))
         (
             sigs.write.mode("append")
             .bucketBy(SIG_BUCKETS, "digest")
             .sortBy("digest")
             .option("path", self.path)
-            .saveAsTable(self._open())
+            .saveAsTable(name)
         )
 
     def signatures_for(

@@ -19,10 +19,6 @@
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -499,73 +495,6 @@ def kmeans_centroids(
     return cents
 
 
-class CentroidStore:
-    """Persistent IVF centroid cache keyed by (snapshot_key, n_clusters).
-
-    Centroids are metadata-sized (K × dim doubles), so they live as JSON
-    files under a directory — the same manifest-style shape the Warehouse
-    uses for row tables; zero Spark jobs to read or write. ``snapshot_key``
-    should identify the corpus snapshot the quantizer was trained on
-    (e.g. the warehouse snapshot tag or the input path + version): a new
-    snapshot trains fresh, re-queries against the same snapshot reuse."""
-
-    def __init__(self, path: str):
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-
-    def _file(self, snapshot_key: str, n_clusters: int) -> str:
-        digest = hashlib.sha1(
-            f"{snapshot_key}:{n_clusters}".encode()
-        ).hexdigest()[:16]
-        return os.path.join(self.path, f"centroids-{digest}.json")
-
-    def get(self, snapshot_key: str, n_clusters: int) -> np.ndarray | None:
-        f = self._file(snapshot_key, n_clusters)
-        if not os.path.exists(f):
-            return None
-        with open(f) as fh:
-            d = json.load(fh)
-        return np.asarray(d["centroids"], dtype=np.float64)
-
-    def put(
-        self, snapshot_key: str, n_clusters: int, cents: np.ndarray
-    ) -> None:
-        f = self._file(snapshot_key, n_clusters)
-        tmp = f + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "snapshot_key": snapshot_key,
-                    "n_clusters": n_clusters,
-                    "centroids": [[float(x) for x in c] for c in cents],
-                },
-                fh,
-            )
-        os.replace(tmp, f)  # atomic publish, like the warehouse manifest
-
-
-def ivf_centroids(
-    emb: DataFrame,
-    snapshot_key: str,
-    n_clusters: int = 16,
-    iters: int = 3,
-    store: CentroidStore | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Train-or-load the IVF coarse quantizer: a store hit runs ZERO
-    k-means Spark jobs (VERDICT r2 item 9 — k-means used to re-run on
-    every query call); a miss trains and persists atomically."""
-    if store is not None:
-        cached = store.get(snapshot_key, n_clusters)
-        if cached is not None:
-            return cached
-    cents = kmeans_centroids(emb, n_clusters, iters, id_col, vec_col)
-    if store is not None:
-        store.put(snapshot_key, n_clusters, cents)
-    return cents
-
-
 def _assign_udf(spark, cents: np.ndarray):
     """vec → nearest-centroid index by cosine (vectorized batch matmul)."""
     cents_b = spark.sparkContext.broadcast(
@@ -740,6 +669,10 @@ def _sq8_code(vec_col: str):
             "int"
         ),
     )
+
+
+# what write_sq8_ivf_store writes, recorded in the code store's layout
+SQ8_SCHEMA = "vec_id long, code array<int>, _list long"
 
 
 def write_sq8_ivf_store(

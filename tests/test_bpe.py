@@ -80,27 +80,36 @@ def test_encoder_determinism_and_cache(spark):
 
 
 def test_merge_store_persist_once(spark, tmp_path, monkeypatch):
-    """MergeStore (persist-once pattern): second get_or_learn with the
-    same key loads the artifact with ZERO training — learn_bpe is
+    """Merges as a JSON artifact (persist-once pattern): a second lookup
+    with the same key loads the artifact with ZERO training — learn_bpe is
     poisoned and must not be invoked."""
     import ethos_spark.ops.bpe as bpe_mod
+    from ethos_spark.artifacts import ArtifactStore
 
     docs = spark.createDataFrame(
         [(1, "low lower lowest low low")], "doc_id long, text string"
     )
-    store = bpe_mod.MergeStore(str(tmp_path / "bpestore"))
-    m1 = store.get_or_learn("k1", docs, "text", 4)
+
+    def get_or_learn(store, key, n_merges):
+        return store.json(
+            "merges",
+            (key, n_merges),
+            lambda: bpe_mod.learn_bpe(docs, "text", n_merges),
+        )
+
+    store = ArtifactStore(str(tmp_path / "bpestore"))
+    m1 = get_or_learn(store, "k1", 4)
     assert m1 and m1[0]["merged"] == "lo"
 
     def boom(*a, **k):
         raise AssertionError("learn_bpe invoked despite stored artifact")
 
     monkeypatch.setattr(bpe_mod, "learn_bpe", boom)
-    store2 = bpe_mod.MergeStore(str(tmp_path / "bpestore"))
-    assert store2.get_or_learn("k1", docs, "text", 4) == m1
+    store2 = ArtifactStore(str(tmp_path / "bpestore"))
+    assert get_or_learn(store2, "k1", 4) == m1
     # different key or merge count DOES retrain (and the poison fires)
     import pytest as _pytest
     with _pytest.raises(AssertionError):
-        store2.get_or_learn("k2", docs, "text", 4)
+        get_or_learn(store2, "k2", 4)
     with _pytest.raises(AssertionError):
-        store2.get_or_learn("k1", docs, "text", 5)
+        get_or_learn(store2, "k1", 5)

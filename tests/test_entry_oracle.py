@@ -41,6 +41,22 @@ def test_query_matches_oracle(spark, con, name):
     assert ok, f"{name}: {msg}"
 
 
+def test_store_backed_queries_inside_driver_window():
+    """The external oracle gate checks only the first 50 queries() entries;
+    the queries backed by derived artifact stores must stay inside them."""
+    order = list(E.queries())
+    assert len(order) == 53
+    for name in (
+        "dedup_minhash_lsh",
+        "similarity_ivf_recall",
+        "similarity_sq_recall",
+        "bpe_merges",
+        "bpe_token_counts",
+    ):
+        assert order.index(name) < 50, (name, order.index(name))
+    assert order.index("dedup_minhash_lsh") == 22
+
+
 def test_entry_smoke(spark):
     df = E.entry(spark)
     assert df.count() > 0

@@ -76,3 +76,24 @@ def test_unused_defs_are_exactly_the_deliberate_keeps():
     assert not KEEP.keys() - orphans, (
         f"now used outside tests; drop from KEEP: {sorted(KEEP.keys() - orphans)}"
     )
+
+
+def test_store_primitives_only_in_artifacts_and_catalog():
+    """Derived stores key, publish and check through ``ethos_spark.artifacts``
+    (the warehouse manifest in ``catalog.py`` is the other publisher): no
+    other module of the library or the entry calls ``os.replace``,
+    ``os.stat`` or ``tempfile.gettempdir`` to build a store of its own."""
+    primitives = {("os", "replace"), ("os", "stat"), ("tempfile", "gettempdir")}
+    allowed = {("ethos_spark", "artifacts.py"), ("ethos_spark", "catalog.py")}
+    calls = sorted(
+        "/".join(parts) + f": {node.func.value.id}.{node.func.attr}"
+        for parts, tree in _sources()
+        if (parts[0] == "ethos_spark" or parts == ("__spark_entry__.py",))
+        and parts not in allowed
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and isinstance(node.func.value, ast.Name)
+        and (node.func.value.id, node.func.attr) in primitives
+    )
+    assert not calls, f"store primitives outside artifacts.py/catalog.py: {calls}"

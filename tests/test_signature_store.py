@@ -7,6 +7,7 @@ edited document costs exactly one new store row."""
 import pytest
 import pyspark.sql.functions as F
 
+from ethos_spark import artifacts
 from ethos_spark.ops import dedup as dd
 from ethos_spark.session import get_spark
 
@@ -100,13 +101,13 @@ def test_store_refuses_mismatched_or_unrecorded_bucket_layout(
     dd.SignatureStore(spark, path).signatures_for(
         small, "doc_id", "text"
     ).count()
-    assert os.path.isfile(os.path.join(path, dd.SignatureStore.LAYOUT_FILE))
+    assert os.path.isfile(os.path.join(path, artifacts.LAYOUT_FILE))
 
     monkeypatch.setattr(dd, "SIG_BUCKETS", 8)
     with pytest.raises(ValueError, match=r"'buckets': 16.*'buckets': 8"):
         dd.SignatureStore(spark, path).signatures_for(small, "doc_id", "text")
     monkeypatch.undo()
 
-    os.remove(os.path.join(path, dd.SignatureStore.LAYOUT_FILE))
+    os.remove(os.path.join(path, artifacts.LAYOUT_FILE))
     with pytest.raises(ValueError, match="sigstore_layout"):
         dd.SignatureStore(spark, path).signatures_for(small, "doc_id", "text")

@@ -107,34 +107,50 @@ def test_ivf_ann_recall_on_clustered(spark, clustered):
 
 
 def test_ivf_centroid_persistence(spark, tmp_path):
-    """VERDICT r2 item 9: centroids persist keyed by corpus snapshot; the
-    second call loads them with ZERO k-means jobs and yields identical
-    IVF results."""
+    """VERDICT r2 item 9: centroids persist as a JSON artifact keyed by
+    corpus snapshot, n_clusters and iters; the second call loads them with
+    ZERO k-means jobs and yields identical IVF results."""
     import numpy as np
 
     import ethos_spark.ops.similarity as sim
+    from ethos_spark.artifacts import ArtifactStore
 
     emb = sim.with_cluster_structure(
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     ).cache()
-    store = sim.CentroidStore(str(tmp_path / "centroids"))
+    root = str(tmp_path / "artifacts")
     key = "testdata-sf0.001-embeddings@v1"
-    cents = sim.ivf_centroids(emb, key, n_clusters=8, store=store)
-    # persisted: a fresh store instance reloads bit-identical centroids
-    reloaded = sim.CentroidStore(str(tmp_path / "centroids")).get(key, 8)
-    assert reloaded is not None and np.allclose(reloaded, cents)
+
+    def centroids(store, key, iters=3):
+        return np.asarray(
+            store.json(
+                "centroids",
+                (key, 8, iters),
+                lambda: sim.kmeans_centroids(emb, 8, iters).tolist(),
+            )
+        )
+
+    store = ArtifactStore(root)
+    cents = centroids(store, key)
     # second call must NOT train: poison kmeans and expect the cache hit
     orig = sim.kmeans_centroids
     sim.kmeans_centroids = lambda *a, **k: (_ for _ in ()).throw(
         AssertionError("k-means ran on a cache hit")
     )
     try:
-        again = sim.ivf_centroids(emb, key, n_clusters=8, store=store)
+        # persisted: a fresh store instance reloads bit-identical centroids
+        reloaded = centroids(ArtifactStore(root), key)
+        assert reloaded is not None and np.allclose(reloaded, cents)
+        assert np.array_equal(reloaded, cents)
+        again = centroids(store, key)
+        # a different iteration count is a different fit: it retrains
+        with pytest.raises(AssertionError, match="k-means ran"):
+            centroids(store, key, iters=2)
     finally:
         sim.kmeans_centroids = orig
     assert np.allclose(again, cents)
     # a different snapshot key trains fresh (distinct file)
-    cents2 = sim.ivf_centroids(emb, key + "-next", n_clusters=8, store=store)
+    cents2 = centroids(store, key + "-next")
     assert np.allclose(cents2, cents)  # same corpus -> same deterministic fit
     # cached centroids drive ivf_ann_topk to the same results as fresh ones
     a = sim.ivf_ann_topk(emb, list(range(5)), k=5, n_clusters=8, centroids=cents)
