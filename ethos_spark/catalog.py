@@ -18,6 +18,11 @@ Guarantees provided:
 - **Tags**: every commit is tagged (``round-7``); ``restore(tag)`` moves
   HEAD back — the resumable-crawl requirement (north_rule "checkpointed
   frontier snapshots", SURVEY.md §4.2.6).
+
+Every data dir is plain parquet. A manifest written by an older tree may
+carry a ``buckets`` entry (a bucketed-table tier since removed); the loader
+ignores it, because bucketed part files are plain parquet too, and the next
+commit drops it.
 """
 
 from __future__ import annotations
@@ -34,6 +39,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, TimestampType
 
 
+def _iso(row: dict) -> dict:
+    """JSON-ready copy of a row: datetimes stored as ISO strings."""
+    return {
+        k: (v.isoformat() if isinstance(v, datetime) else v) for k, v in row.items()
+    }
+
+
 @dataclass
 class _Manifest:
     version: int = 0
@@ -44,51 +56,41 @@ class _Manifest:
     # same class of data — snapshot summaries — in table metadata): list of
     # JSON rows per table. Zero Spark jobs to maintain; upserted by key.
     rows: dict[str, list[dict]] = field(default_factory=dict)
-    # bucketed-layout metadata per table (Iceberg: partition/sort spec in
-    # table metadata): {"n": buckets, "cols": [...], "ddl": "col type, ..."}
-    # — enough for a FRESH session to re-register every data dir as an
-    # external bucketed table and get exchange-free co-bucketed joins.
-    buckets: dict[str, dict] = field(default_factory=dict)
+
+    @classmethod
+    def load(cls, path: str) -> _Manifest:
+        with open(path) as f:
+            d = json.load(f)
+        return cls(
+            d["version"], d["tag"], d["tables"], d.get("props", {}), d.get("rows", {})
+        )
+
+    def dump(self, path: str) -> None:
+        with open(path, "w") as f:
+            json.dump(vars(self), f)
+
+    def staged(self) -> _Manifest:
+        """Copy to stage writes on: fresh per-table lists, so appends never
+        touch the committed snapshot. Rows themselves are shared — writers
+        replace them, never mutate (``host_offsets`` can hold 10k)."""
+        return _Manifest(
+            self.version,
+            self.tag,
+            {t: list(ds) for t, ds in self.tables.items()},
+            dict(self.props),
+            {t: list(rs) for t, rs in self.rows.items()},
+        )
 
 
 class Warehouse:
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        bucket_spec: dict[str, tuple[int, list[str]]] | None = None,
-        auto_compact_dirs: int | None = 16,
-    ):
-        """``bucket_spec``: table → (num_buckets, cols). Tables named here
-        write hash-bucketed (+ sorted) on the given columns — the 100 TB
-        layout: ``pages``/``frontier`` bucketed by url so the fetch join is
-        exchange-free (Iceberg analogue: a ``bucket(N, url)`` partition
-        transform + sort order). Bucketed writes do NOT shuffle (each task
-        writes per-bucket files), so the layout is free at write time; the
-        spec is persisted in the manifest so later sessions re-register the
-        dirs and keep the join property. Tables not in the spec behave as
-        before (plain parquet dirs)."""
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
         os.makedirs(path, exist_ok=True)
         self._manifest = self._load_head()
-        self._staged: dict[str, list[str]] | None = None
-        self._staged_props: dict[str, str] = {}
-        self._staged_rows: dict[str, list[dict]] = {}
-        self._staged_buckets: dict[str, dict] = {}
-        self._bucket_spec = dict(bucket_spec or {})
-        # auto-compact BUCKETED tables whose data-dir count exceeds this at
-        # commit time (None disables). Multi-dir bucketed reads union
-        # per-dir relations and silently lose the exchange-free join
-        # property until compacted — this keeps long crawls that never run
-        # `maintain --compact` inside the bucketed tier. Plain tables are
-        # never auto-compacted (a union loses nothing there). At real scale
-        # the production analogue is Iceberg's size-tiered
-        # rewrite_data_files on a maintenance schedule; a dir-count
-        # threshold is the right shape for round-grained appends.
-        self._auto_compact_dirs = auto_compact_dirs
-        # guards staging-dict mutations: the crawl loop submits its
-        # independent lineage writes from a thread pool (parquet writes run
+        self._staged: _Manifest | None = None
+        # guards staging mutations: the crawl loop submits its independent
+        # lineage writes from a thread pool (parquet writes run
         # concurrently; only the dir registration needs the lock)
         self._lock = threading.RLock()
 
@@ -97,116 +99,55 @@ class Warehouse:
     def _head_path(self) -> str:
         return os.path.join(self.path, "HEAD")
 
+    def _manifest_path(self, v: int) -> str:
+        return os.path.join(self.path, f"manifest-{v}.json")
+
     def _load_head(self) -> _Manifest:
         try:
             with open(self._head_path()) as f:
                 v = int(f.read().strip())
-            with open(os.path.join(self.path, f"manifest-{v}.json")) as f:
-                d = json.load(f)
-            return _Manifest(
-                d["version"],
-                d["tag"],
-                d["tables"],
-                d.get("props", {}),
-                d.get("rows", {}),
-                d.get("buckets", {}),
-            )
+            return _Manifest.load(self._manifest_path(v))
         except FileNotFoundError:
             return _Manifest()
 
-    def _begin(self) -> None:
-        with self._lock:
-            if self._staged is None:
-                self._staged = {
-                    t: list(ds) for t, ds in self._manifest.tables.items()
-                }
-                self._staged_props = dict(self._manifest.props)
-                self._staged_rows = {
-                    t: list(rs) for t, rs in self._manifest.rows.items()
-                }
-                self._staged_buckets = dict(self._manifest.buckets)
-
-    def commit(self, tag: str, props: dict[str, str] | None = None) -> int:
-        """Atomically publish all staged writes as one snapshot. Bucketed
-        tables that crossed ``auto_compact_dirs`` data dirs are compacted
-        back to one dir first, restoring their zero-exchange join
-        property."""
-        self._begin()
-        if self._auto_compact_dirs is not None:
-            for t in list(self._staged):
-                if self._effective_spec(t) and (
-                    len(
-                        [
-                            d
-                            for d in self._staged.get(t, [])
-                            if os.path.exists(d)
-                        ]
-                    )
-                    > self._auto_compact_dirs
-                ):
-                    self.compact(t)
-        v = self._manifest.version + 1
-        if props:
-            self._staged_props.update(props)
-        m = _Manifest(
-            v,
-            tag,
-            self._staged,
-            self._staged_props,
-            self._staged_rows,
-            self._staged_buckets,
-        )
-        mpath = os.path.join(self.path, f"manifest-{v}.json")
-        with open(mpath, "w") as f:
-            json.dump(
-                {
-                    "version": v,
-                    "tag": tag,
-                    "tables": m.tables,
-                    "props": m.props,
-                    "rows": m.rows,
-                    "buckets": m.buckets,
-                },
-                f,
-            )
+    def _publish_head(self, v: int) -> None:
         tmp = self._head_path() + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(v))
         os.replace(tmp, self._head_path())  # atomic publish
+
+    def _begin(self) -> _Manifest:
+        with self._lock:
+            if self._staged is None:
+                self._staged = self._manifest.staged()
+            return self._staged
+
+    def _cur(self) -> _Manifest:
+        """The staged snapshot while a write is open, else the committed one."""
+        return self._staged if self._staged is not None else self._manifest
+
+    def commit(self, tag: str, props: dict[str, str] | None = None) -> int:
+        """Atomically publish all staged writes as one snapshot."""
+        m = self._begin()
+        if props:
+            m.props.update(props)
+        m.version, m.tag = self._manifest.version + 1, tag
+        m.dump(self._manifest_path(m.version))
+        self._publish_head(m.version)
         self._manifest = m
         self._staged = None
-        return v
-
-    def rollback(self) -> None:
-        self._staged = None
+        return m.version
 
     def restore(self, tag: str) -> None:
         """Point HEAD at the snapshot with the given tag (resume path)."""
-        v = self._manifest.version
-        while v > 0:
-            with open(os.path.join(self.path, f"manifest-{v}.json")) as f:
-                d = json.load(f)
-            if d["tag"] == tag:
-                tmp = self._head_path() + ".tmp"
-                with open(tmp, "w") as f:
-                    f.write(str(v))
-                os.replace(tmp, self._head_path())
-                self._manifest = _Manifest(
-                    d["version"],
-                    d["tag"],
-                    d["tables"],
-                    d.get("props", {}),
-                    d.get("rows", {}),
-                    d.get("buckets", {}),
-                )
+        for v in range(self._manifest.version, 0, -1):
+            m = _Manifest.load(self._manifest_path(v))
+            if m.tag == tag:
+                self._publish_head(v)
+                self._manifest = m
                 self._staged = None
                 return
-            v -= 1
         raise KeyError(f"no snapshot tagged {tag!r}")
-
-    @property
-    def current_tag(self) -> str:
-        return self._manifest.tag
 
     @property
     def props(self) -> dict[str, str]:
@@ -218,11 +159,6 @@ class Warehouse:
     # engine registers "sessions" here (ethos_spark.schemas.SESSIONS)
     ROW_TABLE_SCHEMAS: dict[str, StructType] = {}
 
-    def _rows(self) -> dict[str, list[dict]]:
-        return (
-            self._staged_rows if self._staged is not None else self._manifest.rows
-        )
-
     def upsert_rows(self, table: str, row: dict, key: str) -> None:
         """Insert-or-replace one JSON row by ``row[key]`` — driver-side, no
         Spark job; visible after commit(). datetimes are stored ISO.
@@ -231,46 +167,28 @@ class Warehouse:
         parquet data dirs (a pre-row-table warehouse) folds the parquet
         rows into the manifest row table first, so history isn't shadowed
         — the read() fallthrough only covers tables never row-written."""
-        self._begin()
-        r = {
-            k: (v.isoformat() if isinstance(v, datetime) else v)
-            for k, v in row.items()
-        }
+        m = self._begin()
+        r = _iso(row)
         with self._lock:
-            if table not in self._staged_rows and self._staged.get(table):
-                dirs = [d for d in self._staged[table] if os.path.exists(d)]
+            if table not in m.rows and m.tables.get(table):
+                dirs = [d for d in m.tables[table] if os.path.exists(d)]
                 if dirs:
-                    self._staged_rows[table] = [
-                        {
-                            k: (
-                                v.isoformat()
-                                if isinstance(v, datetime)
-                                else v
-                            )
-                            for k, v in lr.asDict().items()
-                        }
+                    m.rows[table] = [
+                        _iso(lr.asDict())
                         for lr in self.spark.read.parquet(*dirs).collect()
                     ]
-                self._staged[table] = []  # row table owns the data now
-            cur = {x[key]: x for x in self._staged_rows.get(table, [])}
+                m.tables[table] = []  # row table owns the data now
+            cur = {x[key]: x for x in m.rows.get(table, [])}
             cur[r[key]] = r
-            self._staged_rows[table] = list(cur.values())
+            m.rows[table] = list(cur.values())
 
     def read_rows(self, table: str) -> list[dict]:
-        return list(self._rows().get(table, []))
-
-    def bucket_cols(self, table: str) -> list[str] | None:
-        """Columns the table is bucketed on (ctor spec or manifest), or
-        None — callers pick join keys that exploit the layout (e.g. the
-        persistent seen anti-join keys on url when pages is bucketed by
-        url, so the big side plans no exchange)."""
-        spec = self._effective_spec(table)
-        return list(spec[1]) if spec else None
+        return list(self._cur().rows.get(table, []))
 
     def is_row_table(self, table: str) -> bool:
         """True when the table currently lives in the manifest row tier
         (committed or staged) — readers/writers use this to route."""
-        return table in self._rows()
+        return table in self._cur().rows
 
     def replace_rows(self, table: str, rows: list[dict]) -> None:
         """Replace a manifest row table wholesale — driver-side, zero Spark
@@ -278,23 +196,16 @@ class Warehouse:
         tier (any previously-registered data dirs are dropped from the
         snapshot), so a session-scoped reset migrates a legacy parquet
         table to the row tier in one call."""
-        self._begin()
-        conv = [
-            {
-                k: (v.isoformat() if isinstance(v, datetime) else v)
-                for k, v in r.items()
-            }
-            for r in rows
-        ]
+        m = self._begin()
+        conv = [_iso(r) for r in rows]
         with self._lock:
-            self._staged_rows[table] = conv
-            if self._staged.get(table):
-                self._staged[table] = []
+            m.rows[table] = conv
+            if m.tables.get(table):
+                m.tables[table] = []
 
-    def _rows_df(self, table: str, schema: StructType | None) -> DataFrame:
-        schema = schema or self.ROW_TABLE_SCHEMAS[table]
+    def _rows_df(self, rows: list[dict], schema: StructType) -> DataFrame:
         out = []
-        for r in self._rows().get(table, []):
+        for r in rows:
             vals = []
             for f in schema.fields:
                 v = r.get(f.name)
@@ -304,130 +215,25 @@ class Warehouse:
             out.append(tuple(vals))
         return self.spark.createDataFrame(out, schema)
 
-    # -- bucketed layout ------------------------------------------------------
-
-    def _buckets(self) -> dict[str, dict]:
-        return (
-            self._staged_buckets
-            if self._staged is not None
-            else self._manifest.buckets
-        )
-
-    def _effective_spec(self, table: str) -> tuple[int, list[str]] | None:
-        """The table's bucket layout: ctor spec if given, else the spec
-        persisted in the manifest. The layout is a TABLE property — a
-        session that reopens the warehouse without repeating the spec must
-        keep writing the committed layout, or a single plain-parquet append
-        would poison every registered-bucketed read of the table."""
-        if table in self._bucket_spec:
-            return self._bucket_spec[table]
-        meta = self._buckets().get(table)
-        if meta:
-            return int(meta["n"]), list(meta["cols"])
-        return None
-
-    @staticmethod
-    def _ddl_of(schema: StructType) -> str:
-        # nullability-free DDL: CLUSTERED-BY CREATE TABLE rejects NOT NULL
-        # on some file sources, and parquet footers carry it anyway
-        return ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-        )
-
-    def _reg_name(self, data_dir: str) -> str:
-        import hashlib
-
-        h = hashlib.md5(os.path.abspath(data_dir).encode()).hexdigest()[:12]
-        return f"wh_b_{h}"
-
-    def _write_bucketed(
-        self, table: str, df: DataFrame, data_dir: str, spec: tuple[int, list[str]]
-    ) -> None:
-        """Bucketed external write: per-task per-bucket files, NO shuffle —
-        the layout cost is a local hash-route at write time. saveAsTable is
-        required (only catalog tables carry bucket metadata); the name is
-        dir-derived so any session can deterministically re-register."""
-        n, cols = spec
-        (
-            df.write.mode("overwrite")
-            .bucketBy(n, *cols)
-            .sortBy(*cols)
-            .option("path", data_dir)
-            .saveAsTable(self._reg_name(data_dir))
-        )
-        with self._lock:
-            self._staged_buckets[table] = {
-                "n": n,
-                "cols": list(cols),
-                "ddl": self._ddl_of(df.schema),
-            }
-
-    def _bucketed_df(self, data_dir: str, meta: dict) -> DataFrame:
-        """Catalog-registered read of one bucketed data dir (re-creating the
-        external-table registration if this session has never seen it) —
-        returning ``spark.table`` keeps the bucket spec in the plan, so
-        joins on the bucket columns skip the exchange."""
-        name = self._reg_name(data_dir)
-        if not self.spark.catalog.tableExists(name):
-            cols = ", ".join(f"`{c}`" for c in meta["cols"])
-            self.spark.sql(
-                f"CREATE TABLE {name} ({meta['ddl']}) USING PARQUET "
-                f"CLUSTERED BY ({cols}) SORTED BY ({cols}) "
-                f"INTO {meta['n']} BUCKETS LOCATION '{data_dir}'"
-            )
-        return self.spark.table(name)
-
     # -- table ops ----------------------------------------------------------
-
-    def _tables(self) -> dict[str, list[str]]:
-        return self._staged if self._staged is not None else self._manifest.tables
 
     def read(self, table: str, schema=None) -> DataFrame:
         # row tables read from the manifest; a LEGACY warehouse that still
         # has parquet dirs for a registered row table (pre-migration
         # snapshot) falls through to the dirs until its first row write
-        if table in self._rows() or (
-            table in self.ROW_TABLE_SCHEMAS and not self._tables().get(table)
+        cur = self._cur()
+        if table in cur.rows or (
+            table in self.ROW_TABLE_SCHEMAS and not cur.tables.get(table)
         ):
-            return self._rows_df(table, schema)
-        dirs = self._tables().get(table, [])
-        dirs = [d for d in dirs if os.path.exists(d)]
+            return self._rows_df(
+                cur.rows.get(table, []), schema or self.ROW_TABLE_SCHEMAS[table]
+            )
+        dirs = [d for d in cur.tables.get(table, []) if os.path.exists(d)]
         if not dirs:
             if schema is None:
                 raise KeyError(f"table {table!r} empty and no schema given")
             return self.spark.createDataFrame([], schema)
-        meta = self._buckets().get(table)
-        if meta:
-            # single dir (replace tables): the returned plan IS the bucketed
-            # catalog relation → co-bucketed joins run exchange-free. Multi-
-            # dir appends union per-dir relations; each scan stays pruned
-            # and sorted, but Spark does not propagate bucketing through a
-            # union — compact to one dir to restore the join property.
-            # LEGACY dirs written before the spec existed carry no bucket id
-            # in their file names and CANNOT be scanned as bucketed
-            # ("Invalid bucket file") — they plain-read into the union.
-            bdirs = [d for d in dirs if self._dir_is_bucketed(d)]
-            pdirs = [d for d in dirs if d not in bdirs]
-            dfs = [self._bucketed_df(d, meta) for d in bdirs]
-            if pdirs:
-                dfs.append(self.spark.read.parquet(*pdirs))
-            out = dfs[0]
-            for x in dfs[1:]:
-                out = out.unionByName(x)
-            return out
         return self.spark.read.parquet(*dirs)
-
-    @staticmethod
-    def _dir_is_bucketed(data_dir: str) -> bool:
-        """Bucketed writes encode the bucket id in every part file name
-        (``part-00000-<uuid>_00003...``); a dir whose part files lack it
-        was written plain. Empty dirs register either way."""
-        import re
-
-        for f in os.listdir(data_dir):
-            if f.startswith("part-"):
-                return re.search(r"_\d{5}\.", f) is not None
-        return True
 
     def _new_data_dir(self, table: str) -> str:
         return os.path.join(self.path, table, f"data-{uuid.uuid4().hex[:12]}")
@@ -436,24 +242,14 @@ class Warehouse:
         """Stage an append; visible after commit(). Returns the data dir so
         a writer can immediately re-read what it just wrote (column-pruned)
         without waiting for the snapshot to publish."""
-        self._begin()
+        m = self._begin()
         d = self._new_data_dir(table)
-        spec = self._effective_spec(table)
-        if spec:
-            self._write_bucketed(table, df, d, spec)
-        else:
-            df.write.mode("overwrite").parquet(d)  # concurrent-safe (own dir)
+        df.write.mode("overwrite").parquet(d)  # concurrent-safe (own dir)
         with self._lock:
-            self._staged.setdefault(table, []).append(d)
+            m.tables.setdefault(table, []).append(d)
         return d
 
-    def replace(
-        self,
-        table: str,
-        df: DataFrame,
-        partition_by: list[str] | None = None,
-        force_parquet: bool = False,
-    ) -> None:
+    def replace(self, table: str, df: DataFrame, force_parquet: bool = False) -> None:
         """Stage a full replace (copy-on-write); visible after commit().
 
         With Iceberg this would be MERGE / dynamic-partition overwrite; on a
@@ -466,65 +262,63 @@ class Warehouse:
         pins a dual-tier table (host_offsets) to the distributed parquet
         tier, evicting any manifest-row copy of it.
         """
-        self._begin()
+        m = self._begin()
         if force_parquet:
             with self._lock:
-                self._staged_rows.pop(table, None)
-        elif table in self._staged_rows or table in self.ROW_TABLE_SCHEMAS:
-            rows = []
-            for r in df.collect():
-                d = r.asDict()
-                rows.append(
-                    {
-                        k: (v.isoformat() if isinstance(v, datetime) else v)
-                        for k, v in d.items()
-                    }
-                )
+                m.rows.pop(table, None)
+        elif table in m.rows or table in self.ROW_TABLE_SCHEMAS:
+            rows = [_iso(r.asDict()) for r in df.collect()]
             with self._lock:
-                self._staged_rows[table] = rows
+                m.rows[table] = rows
             return
         d = self._new_data_dir(table)
-        spec = self._effective_spec(table)
-        if spec:
-            self._write_bucketed(table, df, d, spec)
-        else:
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(d)
+        df.write.mode("overwrite").parquet(d)
         with self._lock:
-            self._staged[table] = [d]
+            m.tables[table] = [d]
 
     def compact(self, table: str) -> bool:
         """Rewrite a multi-dir append table into ONE data dir (staged;
         visible after commit()). Iceberg analogue: rewrite_data_files.
 
-        For BUCKETED tables this is the maintenance op that restores the
-        exchange-free join property: appends accumulate dirs, read() unions
-        them (bucketing does not propagate through a union), and one
-        compaction folds them back into a single bucketed relation. Run it
-        on the same cadence as vacuum(). Returns False when the table
-        already has ≤1 dir (nothing to do)."""
-        self._begin()
+        Each append adds a dir, so a long crawl's tables read through many
+        small dirs; ``cli maintain --compact`` folds them into one, on the
+        same cadence as vacuum(). Returns False when the table already has
+        ≤1 dir (nothing to do)."""
+        m = self._begin()
         with self._lock:
-            dirs = [d for d in self._staged.get(table, []) if os.path.exists(d)]
+            dirs = [d for d in m.tables.get(table, []) if os.path.exists(d)]
         if len(dirs) <= 1:
             return False
-        df = self.spark.read.parquet(*dirs)
         d = self._new_data_dir(table)
-        spec = self._effective_spec(table)
-        if spec:
-            self._write_bucketed(table, df, d, spec)
-        else:
-            df.write.mode("overwrite").parquet(d)
+        self.spark.read.parquet(*dirs).write.mode("overwrite").parquet(d)
         with self._lock:
-            self._staged[table] = [d]
+            m.tables[table] = [d]
         return True
 
     def set_prop(self, key: str, value: str) -> None:
-        self._begin()
+        m = self._begin()
         with self._lock:
-            self._staged_props[key] = value
+            m.props[key] = value
+
+    def _sweep(self, manifests: list[str]) -> list[str]:
+        """Delete every table data dir that none of the given manifest
+        files references; returns the removed dirs."""
+        live: set[str] = set()
+        for p in manifests:
+            if os.path.exists(p):
+                for ds in _Manifest.load(p).tables.values():
+                    live.update(ds)
+        removed: list[str] = []
+        for table in sorted(os.listdir(self.path)):
+            tdir = os.path.join(self.path, table)
+            if not os.path.isdir(tdir):
+                continue
+            for d in os.listdir(tdir):
+                full = os.path.join(tdir, d)
+                if full not in live:
+                    shutil.rmtree(full, ignore_errors=True)
+                    removed.append(full)
+        return removed
 
     def gc_orphans(self) -> list[str]:
         """Delete data dirs referenced by NO manifest — leftovers of a
@@ -536,50 +330,18 @@ class Warehouse:
         Call when (re)opening a warehouse for writing — never concurrently
         with a live writer (single-writer model; Iceberg's commit lock is
         the production analogue). Returns the removed dirs."""
-        live: set[str] = set()
-        for fn in os.listdir(self.path):
-            if fn.startswith("manifest-") and fn.endswith(".json"):
-                with open(os.path.join(self.path, fn)) as f:
-                    for ds in json.load(f)["tables"].values():
-                        live.update(ds)
-        removed: list[str] = []
-        for table in sorted(os.listdir(self.path)):
-            tdir = os.path.join(self.path, table)
-            if not os.path.isdir(tdir):
-                continue
-            for d in os.listdir(tdir):
-                full = os.path.join(tdir, d)
-                if full not in live:
-                    shutil.rmtree(full, ignore_errors=True)
-                    self._drop_registration(full)
-                    removed.append(full)
-        return removed
-
-    def _drop_registration(self, data_dir: str) -> None:
-        """Drop any session-catalog registration of a removed bucketed dir
-        (harmless if the dir was never bucketed/registered)."""
-        try:
-            self.spark.sql(f"DROP TABLE IF EXISTS {self._reg_name(data_dir)}")
-        except Exception:
-            pass
+        return self._sweep(
+            [
+                os.path.join(self.path, fn)
+                for fn in os.listdir(self.path)
+                if fn.startswith("manifest-") and fn.endswith(".json")
+            ]
+        )
 
     def vacuum(self, keep_last: int = 3) -> None:
         """Delete data dirs unreferenced by the last ``keep_last`` snapshots
         (Iceberg expire_snapshots analogue)."""
-        live: set[str] = set()
         v = self._manifest.version
-        for i in range(max(1, v - keep_last + 1), v + 1):
-            p = os.path.join(self.path, f"manifest-{i}.json")
-            if os.path.exists(p):
-                with open(p) as f:
-                    for ds in json.load(f)["tables"].values():
-                        live.update(ds)
-        for table in os.listdir(self.path):
-            tdir = os.path.join(self.path, table)
-            if not os.path.isdir(tdir):
-                continue
-            for d in os.listdir(tdir):
-                full = os.path.join(tdir, d)
-                if full not in live:
-                    shutil.rmtree(full, ignore_errors=True)
-                    self._drop_registration(full)
+        self._sweep(
+            [self._manifest_path(i) for i in range(max(1, v - keep_last + 1), v + 1)]
+        )

@@ -143,8 +143,6 @@ def main(argv: list[str] | None = None) -> int:
     iw.add_argument("--in", dest="warc_in", required=True,
                     help="dir of .warc.gz segment files")
     iw.add_argument("--out", required=True, help="output parquet dir (url, html)")
-    iw.add_argument("--buckets", type=int, default=None,
-                    help="also register the corpus bucketed by url into N buckets")
 
     args = p.parse_args(argv)
 
@@ -153,29 +151,13 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(f"ethos-{args.cmd}")
     if args.cmd == "import-warc":
-        import pyspark.sql.functions as F
-
         from ethos_spark.sources.warc import read_warc
 
-        df = read_warc(spark, args.warc_in).select("url", "html")
-        if args.buckets:
-            # the fetch-ready layout: one shuffle at ingest buys the
-            # bucketed zero-exchange fetch tier (CorpusFetcher)
-            name = "warc_corpus_b"
-            (
-                df.repartition(args.buckets, F.col("url"))
-                .write.mode("overwrite")
-                .bucketBy(args.buckets, "url")
-                .sortBy("url")
-                .option("path", args.out)
-                .saveAsTable(name)
-            )
-            n = spark.table(name).count()
-        else:
-            df.write.mode("overwrite").parquet(args.out)
-            n = spark.read.parquet(args.out).count()
-        print(json.dumps({"records": n, "out": args.out,
-                          "bucketed": bool(args.buckets)}))
+        read_warc(spark, args.warc_in).select("url", "html").write.mode(
+            "overwrite"
+        ).parquet(args.out)
+        n = spark.read.parquet(args.out).count()
+        print(json.dumps({"records": n, "out": args.out}))
         return 0
     wh = Warehouse(spark, args.warehouse)
 

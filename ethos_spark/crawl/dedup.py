@@ -114,37 +114,27 @@ class BloomFilter:
 
 
 def anti_join_seen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    key: str = "url_hash",
-    bloom: BloomFilter | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """J2: return (new, dupes). Catalyst broadcasts the ``seen`` side when
-    small, sort-merges on the join key otherwise; when ``seen`` is a
-    relation bucketed on ``key`` (pages bucketed by url) ITS side plans no
-    exchange at all — only the candidate slice moves. Bloom prefilter
-    splits candidates so only possible-members pay the join.
+    candidates: DataFrame, seen: DataFrame, bloom: BloomFilter | None = None
+) -> DataFrame:
+    """J2: the candidates whose ``url_hash`` is not in ``seen``. Catalyst
+    broadcasts the ``seen`` side when small and sort-merges on
+    ``url_hash`` otherwise. The Bloom prefilter splits candidates so only
+    possible members pay the join.
 
-    No ``distinct()`` on the seen side: anti/semi joins are insensitive to
+    No ``distinct()`` on the seen side: anti joins are insensitive to
     right-side duplicates, and at 10^10 stored URLs a per-round
-    deduplicating aggregation of the whole seen set is pure waste (it also
-    destroys the bucketed relation's no-exchange property)."""
-    seen_keys = seen.select(key)
-    if bloom is not None:
-        spark = candidates.sparkSession
-        probe = bloom.might_contain_udf(spark)
-        with_flags = candidates.withColumn(
-            "_maybe",
-            probe(
-                F.xxhash64(F.col(key)),
-                F.xxhash64(F.lit("ethos-salt"), F.col(key)),
-            ),
-        )
-        definitely_new = with_flags.where(~F.col("_maybe")).drop("_maybe")
-        maybe = with_flags.where(F.col("_maybe")).drop("_maybe")
-        confirmed_new = maybe.join(seen_keys, key, "left_anti")
-        dupes = maybe.join(seen_keys, key, "left_semi")
-        return definitely_new.unionByName(confirmed_new), dupes
-    new = candidates.join(seen_keys, key, "left_anti")
-    dupes = candidates.join(seen_keys, key, "left_semi")
-    return new, dupes
+    deduplicating aggregation of the whole seen set is pure waste."""
+    seen_keys = seen.select("url_hash")
+    if bloom is None:
+        return candidates.join(seen_keys, "url_hash", "left_anti")
+    probe = bloom.might_contain_udf(candidates.sparkSession)
+    with_flags = candidates.withColumn(
+        "_maybe",
+        probe(
+            F.xxhash64(F.col("url_hash")),
+            F.xxhash64(F.lit("ethos-salt"), F.col("url_hash")),
+        ),
+    )
+    definitely_new = with_flags.where(~F.col("_maybe")).drop("_maybe")
+    maybe = with_flags.where(F.col("_maybe")).drop("_maybe")
+    return definitely_new.unionByName(maybe.join(seen_keys, "url_hash", "left_anti"))

@@ -691,7 +691,7 @@ class CrawlRunner:
         sess_seen_count = int(self.wh.props.get("session_seen_count", "0"))
         if sess_seen_count > 0:
             seen_session = self.wh.read("seen_session", schemas.SEEN)
-            session_new, _ = anti_join_seen(deduped, seen_session)
+            session_new = anti_join_seen(deduped, seen_session)
         else:
             session_new = deduped
 
@@ -699,23 +699,14 @@ class CrawlRunner:
         seen_count = int(self.wh.props.get("seen_count", "0"))
         to_process = session_new
         if opt.skip_existing_urls and seen_count > 0:
-            # seen set = key projection of pages (column-pruned scan). When
-            # the warehouse buckets pages by url, key the join on url too:
-            # the bucketed relation then plans NO exchange — only the
-            # candidate slice shuffles (url_hash is h56(url), so the two
-            # keys are interchangeable for membership)
-            seen_key = (
-                "url" if self.wh.bucket_cols("pages") == ["url"] else "url_hash"
-            )
-            seen = self.wh.read("pages", schemas.PAGES_OUT).select(seen_key)
+            # seen set = url_hash projection of pages (column-pruned scan)
+            seen = self.wh.read("pages", schemas.PAGES_OUT).select("url_hash")
             bloom = (
-                BloomFilter.build(seen, seen_key, seen_count, BLOOM_FPP)
+                BloomFilter.build(seen, "url_hash", seen_count, BLOOM_FPP)
                 if seen_count >= USE_BLOOM_OVER
                 else None
             )
-            to_process, _ = anti_join_seen(
-                session_new, seen, key=seen_key, bloom=bloom
-            )
+            to_process = anti_join_seen(session_new, seen, bloom=bloom)
         to_process = scope.cache(to_process)
 
         # ---- per-host stats: ONE collect drives counters + stop logic ------
@@ -1536,7 +1527,7 @@ class CrawlRunner:
                 .agg(F.sum("items_cum").alias("items_cum"))
             )
             # force_parquet: stay in the big tier
-            self.wh.replace("host_offsets", new_offsets, None, True)
+            self.wh.replace("host_offsets", new_offsets, force_parquet=True)
             return
         # row tier: one tiny collect of per-host counts off the just-written
         # (column-pruned) pages slice, folded into the manifest map — no

@@ -1,6 +1,8 @@
 """Warehouse snapshot-catalog units: crash-orphan GC, manifest row
-tables, restore semantics."""
+tables, restore semantics, compact/vacuum maintenance and reading a
+manifest written by an older tree."""
 
+import json
 import os
 
 import pytest
@@ -128,3 +130,75 @@ def test_legacy_parquet_folds_into_row_table(spark, tmp_path):
     assert set(rows) == {"old1", "new1"}  # history preserved
     assert rows["old1"].stopped_reason == "max_pages"
     assert rows["old1"].start_time is not None
+
+
+def test_compact_then_vacuum(spark, tmp_path):
+    """compact() folds an append table's dirs into one with the same rows;
+    vacuum(keep_last=1) then deletes the replaced dirs from disk."""
+    path = str(tmp_path / "whc")
+    wh = Warehouse(spark, path)
+    for i in range(3):
+        wh.append("t", spark.range(i * 10, i * 10 + 10).selectExpr("id", "id % 3 k"))
+        wh.commit(f"r{i}")
+    old_dirs = list(wh._manifest.tables["t"])
+    assert len(old_dirs) == 3
+    want = sorted(map(tuple, wh.read("t").collect()))
+
+    assert wh.compact("t") is True
+    wh.commit("compact")
+    (only_dir,) = wh._manifest.tables["t"]
+    assert only_dir not in old_dirs
+    assert sorted(map(tuple, wh.read("t").collect())) == want
+    assert wh.compact("t") is False  # one dir: nothing to do
+
+    wh.vacuum(keep_last=1)
+    assert not any(os.path.exists(d) for d in old_dirs)
+    assert os.listdir(os.path.join(path, "t")) == [os.path.basename(only_dir)]
+    assert sorted(map(tuple, Warehouse(spark, path).read("t").collect())) == want
+
+
+def test_reads_manifest_with_buckets_entry(spark, tmp_path):
+    """Older trees wrote some tables with bucketBy(...).saveAsTable and kept
+    the layout in a manifest ``buckets`` entry. Such a warehouse still
+    reads the same rows (bucketed part files are plain parquet), and the
+    next commit's manifest no longer carries the entry."""
+    path = str(tmp_path / "whb")
+    data_dir = os.path.join(path, "pages", "data-0123456789ab")
+    df = spark.range(40).selectExpr("concat('https://h/p/', id) AS url", "id AS n")
+    df.write.bucketBy(4, "url").sortBy("url").option("path", data_dir).saveAsTable(
+        "wh_b_compat"
+    )
+    spark.sql("DROP TABLE wh_b_compat")  # external: the files stay
+    assert any("_0000" in f for f in os.listdir(data_dir) if f.startswith("part-"))
+    with open(os.path.join(path, "manifest-1.json"), "w") as f:
+        json.dump(
+            {
+                "version": 1,
+                "tag": "round-1",
+                "tables": {"pages": [data_dir]},
+                "props": {"round": "1"},
+                "rows": {},
+                "buckets": {
+                    "pages": {
+                        "n": 4, "cols": ["url"], "ddl": "`url` string, `n` bigint"
+                    }
+                },
+            },
+            f,
+        )
+    with open(os.path.join(path, "HEAD"), "w") as f:
+        f.write("1")
+
+    wh = Warehouse(spark, path)
+    assert sorted(map(tuple, wh.read("pages").collect())) == sorted(
+        map(tuple, df.collect())
+    )
+    assert wh.props == {"round": "1"}
+    more = spark.range(40, 45).selectExpr("concat('https://h/p/', id) url", "id n")
+    wh.append("pages", more)
+    v = wh.commit("round-2")
+    with open(os.path.join(path, f"manifest-{v}.json")) as f:
+        m = json.load(f)
+    assert "buckets" not in m
+    assert m["tables"]["pages"][0] == data_dir
+    assert Warehouse(spark, path).read("pages").count() == 45

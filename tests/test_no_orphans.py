@@ -1,6 +1,7 @@
-"""Orphan guard: every top-level function or class in ``ethos_spark/`` is
-used by some non-test module of the repo, or is listed in ``KEEP`` with
-the reason it stays without such a caller.
+"""Orphan guard: every top-level function or class in ``ethos_spark/``,
+and every public method or property of a top-level ``ethos_spark/`` class,
+is used by some non-test module of the repo, or is listed in ``KEEP`` /
+``KEEP_METHODS`` with the reason it stays without such a caller.
 
 "Used" is syntactic: a ``Name``, an ``Attribute`` or an import alias with
 the def's name anywhere in a non-test ``.py`` file. Docstrings and
@@ -35,6 +36,17 @@ KEEP = {
     "streaming_exact_dedup_within": "watermark-bounded variant of stream dedup",
 }
 
+KEEP_METHODS = {
+    "restore": "the only reader of commit tags (resume to a tagged snapshot)",
+    "seen_hashes": "reference-simulator output the parity tests compare",
+    "handle_starttag": "HTMLParser callback",
+    "handle_endtag": "HTMLParser callback",
+    "handle_startendtag": "HTMLParser callback",
+    "handle_data": "HTMLParser callback",
+    "register_bucketed_corpus": "only caller is the child-script string in "
+    "BENCH/bench_scaling.py",
+}
+
 
 def _sources():
     for path in sorted(ROOT.rglob("*.py")):
@@ -46,9 +58,12 @@ def _sources():
         yield parts, ast.parse(path.read_text(), str(path))
 
 
-def _orphans() -> set[str]:
+def _orphans() -> tuple[set[str], set[str]]:
+    """(unused top-level defs, unused public methods) of ``ethos_spark/``."""
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
     used: set[str] = set()
     defs: set[str] = set()
+    methods: set[str] = set()
     for parts, tree in _sources():
         for node in ast.walk(tree):
             if isinstance(node, ast.Name):
@@ -61,21 +76,35 @@ def _orphans() -> set[str]:
             defs.update(
                 n.name
                 for n in tree.body
-                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                if isinstance(n, (*funcs, ast.ClassDef))
                 and not n.name.startswith("__")
             )
-    return defs - used
+            methods.update(
+                m.name
+                for n in tree.body
+                if isinstance(n, ast.ClassDef)
+                for m in n.body
+                if isinstance(m, funcs) and not m.name.startswith("_")
+            )
+    return defs - used, methods - used
+
+
+def _check_keeps(orphans: set[str], keep: dict[str, str], name: str) -> None:
+    assert not orphans - keep.keys(), (
+        f"no non-test caller; delete, wire up, or add to {name} with a reason: "
+        f"{sorted(orphans - keep.keys())}"
+    )
+    assert not keep.keys() - orphans, (
+        f"now used outside tests; drop from {name}: {sorted(keep.keys() - orphans)}"
+    )
 
 
 def test_unused_defs_are_exactly_the_deliberate_keeps():
-    orphans = _orphans()
-    assert not orphans - KEEP.keys(), (
-        "no non-test caller; delete, wire up, or add to KEEP with a reason: "
-        f"{sorted(orphans - KEEP.keys())}"
-    )
-    assert not KEEP.keys() - orphans, (
-        f"now used outside tests; drop from KEEP: {sorted(KEEP.keys() - orphans)}"
-    )
+    _check_keeps(_orphans()[0], KEEP, "KEEP")
+
+
+def test_unused_methods_are_exactly_the_deliberate_keeps():
+    _check_keeps(_orphans()[1], KEEP_METHODS, "KEEP_METHODS")
 
 
 def test_store_primitives_only_in_artifacts_and_catalog():

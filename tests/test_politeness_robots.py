@@ -100,10 +100,9 @@ def test_bloom_exactness(spark):
         "url_hash string",
     )
     bloom = BloomFilter.build(seen, "url_hash", expected=2000, fpp=0.01)
-    new, dupes = anti_join_seen(cand, seen, bloom=bloom)
+    new = anti_join_seen(cand, seen, bloom=bloom)
     # bloom is a prefilter only: results must be EXACT
     assert new.count() == 500
-    assert dupes.count() == 500
     assert {r.url_hash for r in new.collect()} == {f"new{i:04d}" for i in range(500)}
 
 
