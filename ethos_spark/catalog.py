@@ -15,9 +15,12 @@ Guarantees provided:
 - **Append** tables accumulate data dirs (pages, seen, metrics, lineage).
 - **Replace** tables (frontier working set) write a fresh version dir per
   round — copy-on-write like Iceberg's overwrite snapshots.
-- **Tags**: every commit is tagged (``round-7``); ``restore(tag)`` moves
-  HEAD back — the resumable-crawl requirement (north_rule "checkpointed
-  frontier snapshots", SURVEY.md §4.2.6).
+- **Tags**: every commit is tagged (``round-7``); a resumed crawl reopens
+  HEAD, the last committed round (north_rule "checkpointed frontier
+  snapshots", SURVEY.md §4.2.6).
+- **Bounded history**: ``vacuum(keep_last)`` expires older snapshots —
+  their manifest files and every data dir only they referenced — like
+  Iceberg's ``expire_snapshots``.
 
 Every data dir is plain parquet. A manifest written by an older tree may
 carry a ``buckets`` entry (a bucketed-table tier since removed); the loader
@@ -138,17 +141,6 @@ class Warehouse:
         self._staged = None
         return m.version
 
-    def restore(self, tag: str) -> None:
-        """Point HEAD at the snapshot with the given tag (resume path)."""
-        for v in range(self._manifest.version, 0, -1):
-            m = _Manifest.load(self._manifest_path(v))
-            if m.tag == tag:
-                self._publish_head(v)
-                self._manifest = m
-                self._staged = None
-                return
-        raise KeyError(f"no snapshot tagged {tag!r}")
-
     @property
     def props(self) -> dict[str, str]:
         return dict(self._manifest.props)
@@ -218,6 +210,9 @@ class Warehouse:
     # -- table ops ----------------------------------------------------------
 
     def read(self, table: str, schema=None) -> DataFrame:
+        """The table as of the current snapshot. A given ``schema`` is the
+        read schema of parquet dirs too: no inference job, and a column an
+        older dir lacks reads as NULL."""
         # row tables read from the manifest; a LEGACY warehouse that still
         # has parquet dirs for a registered row table (pre-migration
         # snapshot) falls through to the dirs until its first row write
@@ -233,7 +228,8 @@ class Warehouse:
             if schema is None:
                 raise KeyError(f"table {table!r} empty and no schema given")
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(*dirs)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(*dirs)
 
     def _new_data_dir(self, table: str) -> str:
         return os.path.join(self.path, table, f"data-{uuid.uuid4().hex[:12]}")
@@ -320,6 +316,14 @@ class Warehouse:
                     removed.append(full)
         return removed
 
+    def _manifest_versions(self) -> list[int]:
+        """Versions of the manifest files on disk."""
+        return [
+            int(fn[len("manifest-") : -len(".json")])
+            for fn in os.listdir(self.path)
+            if fn.startswith("manifest-") and fn.endswith(".json")
+        ]
+
     def gc_orphans(self) -> list[str]:
         """Delete data dirs referenced by NO manifest — leftovers of a
         writer that crashed between staging an append and committing the
@@ -330,18 +334,17 @@ class Warehouse:
         Call when (re)opening a warehouse for writing — never concurrently
         with a live writer (single-writer model; Iceberg's commit lock is
         the production analogue). Returns the removed dirs."""
-        return self._sweep(
-            [
-                os.path.join(self.path, fn)
-                for fn in os.listdir(self.path)
-                if fn.startswith("manifest-") and fn.endswith(".json")
-            ]
-        )
+        return self._sweep([self._manifest_path(v) for v in self._manifest_versions()])
 
     def vacuum(self, keep_last: int = 3) -> None:
-        """Delete data dirs unreferenced by the last ``keep_last`` snapshots
-        (Iceberg expire_snapshots analogue)."""
+        """Expire every snapshot older than the last ``keep_last`` (at least
+        HEAD is kept): delete their manifest files, then every data dir
+        that no kept snapshot references (Iceberg expire_snapshots
+        analogue). Manifests go first, so no manifest left on disk ever
+        names a deleted dir."""
         v = self._manifest.version
-        self._sweep(
-            [self._manifest_path(i) for i in range(max(1, v - keep_last + 1), v + 1)]
-        )
+        first = max(1, v - max(keep_last, 1) + 1)
+        for ver in self._manifest_versions():
+            if ver < first:
+                os.remove(self._manifest_path(ver))
+        self._sweep([self._manifest_path(i) for i in range(first, v + 1)])

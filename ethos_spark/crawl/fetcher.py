@@ -17,14 +17,13 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-# Row-count gate shared by the fetch join and the crawl round's order-map
-# join: a round whose caller-known candidate bound is at most this many
-# rows broadcasts its LIGHT candidate/order rows (url + a few key columns,
-# ~150 MB at 1M rows); above it (multi-million-URL rounds, where a forced
-# broadcast of every scheduled URL is a driver/executor OOM at the design
-# point) the fetch takes the bucketed or bloom-prefiltered tier and the
-# order map a shuffle join. Read at call time, so setting it to 0 forces
-# every round past the gate.
+# Row-count gate of the fetch join, read only by CorpusFetcher.fetch: a
+# fetch whose caller-known candidate bound is at most this many rows
+# broadcasts its LIGHT candidate rows (url + a few key columns, ~150 MB at
+# 1M rows); above it (multi-million-URL rounds, where a forced broadcast
+# of every scheduled URL is a driver/executor OOM at the design point) the
+# fetch takes the bucketed or bloom-prefiltered tier. Read at call time,
+# so setting it to 0 forces every round past the gate.
 BROADCAST_MAX_ROWS = 1_000_000
 
 
@@ -36,7 +35,8 @@ class Fetcher(Protocol):
         stage: str = "content",
     ) -> DataFrame:
         """candidates (must contain ``url``) → same rows + ``html`` binary
-        (NULL = fetch failure) + ``fetch_ms`` double per-row amortized.
+        (NULL = fetch failure) + ``fetch_ms`` double, the measured per-row
+        fetch time (NULL when the fetcher times no request).
         ``size_hint``: caller-known upper bound on the candidate row count
         (the politeness window size) — lets the fetcher pick broadcast vs
         shuffle join without an extra count job.
@@ -55,8 +55,11 @@ class CorpusFetcher:
 
     ``host_partitioned = False``: output partitioning is the corpus scan
     (host-agnostic, balanced) — no hot-host salting needed downstream.
+    A lookup is not a timed request, so ``fetch_ms`` is NULL.
 
-    Join strategy is SIZE-GATED on the caller's ``size_hint``:
+    Join strategy is SIZE-GATED on the caller's ``size_hint``; this method
+    is the one reader of the ``BROADCAST_MAX_ROWS`` gate (the crawl round
+    feeds it the ordered candidate rows and needs no join of its own):
 
     - hint ≤ ``BROADCAST_MAX_ROWS``: broadcast the candidate side; the
       corpus scan stays partition-local and the html column never
@@ -236,7 +239,7 @@ class CorpusFetcher:
             out = cand.join(reduced, "url")
         else:
             out = cand.join(self._corpus, "url")
-        return out.withColumn("fetch_ms", F.lit(0.0))
+        return out.withColumn("fetch_ms", F.lit(None).cast("double"))
 
 
 class HttpFetcher:

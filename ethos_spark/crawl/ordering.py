@@ -7,16 +7,16 @@ of the DATA, never of task completion (SURVEY.md §7.3): we define the total
 order by explicit sort keys and assign 1..N with a two-phase
 partition-offset scheme — no single-partition window, no driver collect of
 rows (only the tiny per-partition count vector), so it survives 10^10 rows.
+The stamp itself is a JVM column expression over the cached, sorted
+partitions: no Python worker, no broadcast.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.types import LongType, StructField, StructType
 
 
 def assign_sequential_order(
@@ -28,8 +28,16 @@ def assign_sequential_order(
     persist: Callable[[DataFrame], DataFrame] = DataFrame.cache,
 ) -> tuple[DataFrame, int]:
     """Add ``col_name`` = offset + rank (1-based) in the total order given
-    by ``order_cols``. Two jobs: one to count rows per range-partition, one
-    to stamp local indices shifted by the cumulative offsets.
+    by ``order_cols``. Two passes: one job counts rows per range-partition,
+    then a projection stamps each row with its partition's cumulative
+    offset plus its index within the partition.
+
+    The index is ``monotonically_increasing_id() - (partition << 33)``:
+    Spark numbers the rows of each partition 0, 1, … in iterator order,
+    and the cached partitions iterate in their sorted order. Like any
+    partition-offset scheme, this relies on the stamping pass reading the
+    same partitions, with the same indices, that the count pass counted —
+    which the cache pins.
 
     Returns the stamped DataFrame and the exact input row count — free
     (the per-partition count vector is collected anyway); the crawl loop
@@ -44,31 +52,16 @@ def assign_sequential_order(
         df.repartitionByRange(n, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
     )
-    counts = (
-        parted.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .count()
-        .collect()
+    counts = dict(
+        parted.groupBy(F.spark_partition_id().alias("_pid")).count().collect()
     )
-    offsets: dict[int, int] = {}
-    acc = offset
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = acc
-        acc += row["count"]
-    offs_b = spark.sparkContext.broadcast(offsets)
-
-    out_schema = StructType(df.schema.fields + [StructField(col_name, LongType())])
-
-    def stamp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        base = offs_b.value.get(pid, 0)
-        emitted = 0
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[col_name] = range(base + emitted + 1, base + emitted + 1 + len(pdf))
-            emitted += len(pdf)
-            yield pdf
-
-    return parted.mapInPandas(stamp, out_schema), acc - offset
+    # offsets[i] = offset + rows in partitions before i (empty partitions
+    # included, so partition i reads its offset at array index i + 1)
+    offsets, acc = [], offset
+    for i in range(max(counts, default=0) + 1):
+        offsets.append(F.lit(acc).cast("long"))
+        acc += counts.get(i, 0)
+    pid = F.spark_partition_id()
+    base = F.element_at(F.array(*offsets), pid + 1)
+    local = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    return parted.withColumn(col_name, base + local + 1), acc - offset

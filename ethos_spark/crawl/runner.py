@@ -31,7 +31,6 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from ethos_spark import schemas
 from ethos_spark.catalog import Warehouse
-from ethos_spark.crawl import fetcher as fetcher_mod
 from ethos_spark.crawl.dedup import BloomFilter, anti_join_seen, dedup_within_batch
 from ethos_spark.crawl.ordering import assign_sequential_order
 from ethos_spark.crawl.politeness import politeness_topk, robots_gate, salt_hot_hosts
@@ -57,6 +56,10 @@ BLOOM_FPP = 0.01
 USE_BLOOM_OVER = 100_000
 # per-host stop reasons of the reference enum (MetadataTracker.ts:32-37)
 STOP_REASONS = ("all_duplicates", "max_pages", "no_next_button")
+# the frontier columns a content candidate carries into its pages row
+CANDIDATE_COLS = (
+    "url", "url_hash", "host", "host_hash", "title", "author", "published_date"
+)
 
 
 @dataclass
@@ -137,19 +140,6 @@ class CrawlSummary:
         d = {k: v for k, v in self.__dict__.items()}
         d["items_found"] = self.items_found
         return json.dumps(d)
-
-
-# date parsing as an Arrow-batched UDF (strict parse, NULL quarantine);
-# explicit StringType: DDL-string parsing needs an active session at import
-from pyspark.sql.types import StringType as _StringType
-
-
-@F.pandas_udf(_StringType())
-def _parse_date_udf(raw):  # pd.Series -> pd.Series
-    # vectorized ISO fast path, per-row dayjs-parity parser for the tail
-    from ethos_spark.functions.datefns import parse_published_dates_series
-
-    return parse_published_dates_series(raw)
 
 
 class RoundScope:
@@ -237,12 +227,13 @@ class _Stats:
 class _Schedule:
     """Schedule phase output: this round's ordered content fetches."""
 
-    allowed: DataFrame  # robots-allowed content candidates
+    # robots-allowed content candidates stamped with processed_order
+    # (cached): the content pass fetches exactly these rows
+    ordered: DataFrame
     blocked: DataFrame
     robots_dim: DataFrame | None
     content_overflow: DataFrame  # carried to the next round's frontier
     sitemap_inject: DataFrame | None  # next round's sitemap candidates
-    order_map: DataFrame  # url_hash → processed_order (broadcast when small)
     offset: int  # processed_order of the previous round's last page
     n_allowed: int
     content_hint: int | None  # upper bound on the candidate count
@@ -661,16 +652,15 @@ class CrawlRunner:
                 F.col("it.title").alias("title"),
                 F.col("it.author").alias("author"),
                 F.col("it.published_raw").alias("published_raw"),
+                F.col("it.published_date").alias("published_date"),
                 F.col("it.item_index").alias("item_index"),
             )
             .where(F.col("url").isNotNull())
         )
-        items = self._with_url_cols(items).withColumn(
-            "published_date", _parse_date_udf(F.col("published_raw"))
-        )
         # strict-date quarantine (engine mode; the reference throws,
-        # SURVEY.md §7.3): a raw date that fails to parse rejects the item
-        items = items.withColumn(
+        # SURVEY.md §7.3): a raw date that the listing kernel could not
+        # parse rejects the item
+        items = self._with_url_cols(items).withColumn(
             "date_error",
             F.col("published_raw").isNotNull() & F.col("published_date").isNull(),
         )
@@ -1098,50 +1088,42 @@ class CrawlRunner:
 
         # W1: deterministic global order = (round, host, listing position).
         # Assigned on the PRE-FETCH candidate set (order keys are data known
-        # before the fetch), joined onto the extracted output — the heavy
-        # content column is never cached or shuffled. A URL that succeeds
-        # only on a retry attempt keeps this pre-assigned order (reference
-        # inline-retry semantics). The per-partition count vector collected
-        # here also yields n_allowed for free — the miss-detection baseline.
+        # before the fetch). The stamped rows carry the light columns the
+        # pages rows need and ARE the content pass's fetch candidates, so
+        # the heavy content column is never cached or shuffled and needs no
+        # order join. A URL that succeeds only on a retry attempt keeps this
+        # pre-assigned order (reference inline-retry semantics). The
+        # per-partition count vector collected here also yields n_allowed
+        # for free — the miss-detection baseline.
         # With rank priority on, high-value hosts lead the total order —
         # the observable contract of the prioritized crawl (processed_order
         # IS the schedule); off, the order is byte-identical to prior rounds
         offset = int(self.wh.props.get("order_offset", "0"))
+        order_keys = ["depth", "host", "listing_order", "url_hash"]
         if opt.prioritize_by_rank:
-            order_sel = ["url_hash", "depth", "host", "listing_order", "priority"]
-            order_keys = ["priority", "depth", "host", "listing_order", "url_hash"]
-        else:
-            order_sel = ["url_hash", "depth", "host", "listing_order"]
-            order_keys = ["depth", "host", "listing_order", "url_hash"]
-        ordered_light, n_allowed = assign_sequential_order(
-            allowed.select(*order_sel),
+            order_keys = ["priority", *order_keys]
+        ordered, n_allowed = assign_sequential_order(
+            allowed.select(
+                *order_keys, *[c for c in CANDIDATE_COLS if c not in order_keys]
+            ),
             order_keys,
             offset=offset,
             n_parts=order_parts,
             persist=scope.cache,
         )
-        order_map = ordered_light.select("url_hash", "processed_order")
-        # upper bound on this round's content candidates: carried-over
-        # pending (tracked via frontier-write observation) + newly
-        # discovered (already collected in the stats row) —
-        # politeness/robots only shrink it. Gates broadcast vs shuffle in
-        # the fetch and order joins (one gate: fetcher.BROADCAST_MAX_ROWS).
-        content_hint = carry_hint + st.n_new if carry_hint is not None else None
-        if (
-            content_hint is not None
-            and content_hint <= fetcher_mod.BROADCAST_MAX_ROWS
-        ):
-            order_map = F.broadcast(order_map)
         return _Schedule(
-            allowed=allowed,
+            ordered=ordered,
             blocked=blocked,
             robots_dim=robots_dim,
             content_overflow=content_overflow,
             sitemap_inject=sitemap_inject,
-            order_map=order_map,
             offset=offset,
             n_allowed=n_allowed,
-            content_hint=content_hint,
+            # upper bound on this round's content candidates: carried-over
+            # pending (tracked via frontier-write observation) + newly
+            # discovered (already collected in the stats row) —
+            # politeness/robots only shrink it. The fetcher's size gate.
+            content_hint=carry_hint + st.n_new if carry_hint is not None else None,
         )
 
     # -- phase: content -------------------------------------------------------
@@ -1154,21 +1136,18 @@ class CrawlRunner:
         column-pruned reads of the files written here — the
         write-once-derive-from-storage shape Iceberg pipelines use; no
         multi-GB executor cache of article bodies."""
-        # slim the broadcast payload to the columns the pages rows need —
-        # the frontier row is 16 columns wide and broadcast-relation build
-        # time is serial driver cost proportional to broadcast bytes
-        allowed = sch.allowed.select(
-            "url", "url_hash", "host", "host_hash",
-            "title", "author", "published_date",
-        )
         pages_dir, n_stored, n_errors = self._append_pages(
-            self._fetch_content(allowed, sch.content_hint, sch.order_map)
+            self._fetch_content(sch.ordered, sch.content_hint)
         )
         written_dirs = [pages_dir]
 
+        def read_written() -> DataFrame:
+            return self.spark.read.schema(schemas.PAGES_OUT).parquet(*written_dirs)
+
         def not_yet_written() -> DataFrame:
-            done = self.spark.read.parquet(*written_dirs).select("url_hash")
-            return allowed.join(done, "url_hash", "left_anti")
+            # the cached ordered rows, minus what the writes so far stored
+            done = read_written().select("url_hash")
+            return sch.ordered.join(done, "url_hash", "left_anti")
 
         # in-round content retry: misses (n_allowed known from the ordering
         # counts, n_stored from the write observation — zero extra jobs in
@@ -1182,9 +1161,7 @@ class CrawlRunner:
             attempt += 1
             self.summary.fetch_retries += 1
             d, n_got, n_err_got = self._append_pages(
-                self._fetch_content(
-                    not_yet_written(), sch.n_allowed - n_stored, sch.order_map
-                )
+                self._fetch_content(not_yet_written(), sch.n_allowed - n_stored)
             )
             written_dirs.append(d)
             n_stored += n_got
@@ -1198,13 +1175,13 @@ class CrawlRunner:
         missed_out = None
         if n_stored < sch.n_allowed:
             missed_out = self._pages_rows(
-                not_yet_written().join(sch.order_map, "url_hash"),
+                not_yet_written(),
                 title=F.col("title"),
                 author=F.col("author"),
                 content=F.lit(None).cast("string"),
                 had_extraction_error=F.lit(True),
                 partition_id=F.lit(-1),
-                fetch_ms=F.lit(0.0),
+                fetch_ms=F.lit(None).cast("double"),  # never fetched
                 parse_ms=F.lit(0.0),
                 failed_fields=(
                     F.array([F.lit(n) for n in self._content_fields])
@@ -1236,12 +1213,11 @@ class CrawlRunner:
             written_dirs.append(
                 scope.submit(self.wh.append, "pages", missed_out).result()
             )
-        return _Content(self.spark.read.parquet(*written_dirs), n_stored, n_blocked)
+        return _Content(read_written(), n_stored, n_blocked)
 
-    def _fetch_content(
-        self, cand: DataFrame, hint: int | None, order_map: DataFrame
-    ) -> DataFrame:
-        """fetch → extract → merge → order-join → PAGES_OUT rows.
+    def _fetch_content(self, cand: DataFrame, hint: int | None) -> DataFrame:
+        """fetch → extract → merge → PAGES_OUT rows, over ordered candidate
+        rows (they already carry processed_order and the listing fields).
         Failures are ABSENT rows: html-NULL rows from returns_misses
         fetchers are dropped here so both fetcher contracts hit the same
         retry/miss machinery."""
@@ -1256,7 +1232,12 @@ class CrawlRunner:
             fc = salt_hot_hosts(
                 fc, self.spark.sparkContext.defaultParallelism * 2, SALT_FACTOR
             )
-        ex = extract_content_stage(fc, self.config.content)
+        # only the columns the pages rows read go through the extraction
+        # worker; html goes in and does not come back
+        ex = extract_content_stage(
+            fc.select(*CANDIDATE_COLS, "processed_order", "fetch_ms", "html"),
+            self.config.content,
+        )
         failed_fields = F.filter(
             F.array(
                 *[
@@ -1269,7 +1250,7 @@ class CrawlRunner:
         # mergeContentData semantics (ContentDataMapper.ts:8-26): content
         # page fields override listing fields where non-null
         return self._pages_rows(
-            ex.join(order_map, "url_hash"),
+            ex,
             title=F.coalesce("title_x", "title"),
             author=F.coalesce("author_x", "author"),
             content=F.col("content_x"),
@@ -1704,8 +1685,6 @@ class CrawlRunner:
             pages = self.wh.read("pages", schemas.PAGES_OUT)
         except KeyError:
             return
-        if "extraction_errors" not in pages.columns:
-            return  # legacy warehouse written before the column existed
         rows = (
             pages.where(
                 (F.col("crawled_at") == F.lit(self.start_time))

@@ -103,13 +103,16 @@ def _content_html_to_markdown(value: str) -> str:
 def extract_content_stage(df, config: ContentConfig):
     """Vectorized Spark stage: (url, html binary) → extracted fields.
 
-    Input df must have columns ``url`` (string) and ``html`` (binary).
-    Output adds ``title, author, content, extraction_errors``.
-    """
+    Input df must have columns ``url`` (string) and ``html`` (binary); any
+    other column passes through. Output is the input columns minus
+    ``html``, plus ``title_x, author_x, content_x, extraction_errors,
+    parse_ms, partition_id``: the page body crosses into the Python worker
+    once and does not come back. Select only what downstream reads before
+    calling — every input column crosses the boundary twice."""
     import pyspark.sql.types as T
 
     out_schema = T.StructType(
-        df.schema.fields
+        [f for f in df.schema.fields if f.name != "html"]
         + [
             T.StructField("title_x", T.StringType()),
             T.StructField("author_x", T.StringType()),
@@ -144,7 +147,7 @@ def extract_content_stage(df, config: ContentConfig):
                 contents.append(f.get("content"))
                 errs.append(f["_errors"])
             elapsed = (time.monotonic() - t0) * 1000.0
-            pdf = pdf.copy()
+            pdf = pdf.drop(columns="html")
             pdf["title_x"] = titles
             pdf["author_x"] = authors
             pdf["content_x"] = contents

@@ -10,7 +10,9 @@ Parity targets: ListingPageExtractor.ts:50-348 —
 
 The Spark stage plays the UDTF role: one listing page row in → an
 ``array<struct>`` of item rows out, exploded downstream (SURVEY.md §2.10).
-Pure function + vectorized wrapper, same pattern as content.py.
+Pure function + vectorized wrapper, same pattern as content.py. The stage
+also parses each item's raw date (strict parse, NULL = quarantine) in the
+same batch, so a listing page crosses into Python once per round.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ from ethos_spark.extraction.html import (
     extract_text_with_exclusions,
     parse_html,
 )
+from ethos_spark.functions.datefns import parse_published_dates_series
 from ethos_spark.functions.urlfns import resolve_url_lenient
 from ethos_spark.sources.config import ListingConfig
 
@@ -124,7 +127,8 @@ def extract_listing_items(html: str, config: ListingConfig, page_url: str) -> di
 
 LISTING_RESULT_DDL = (
     "url string, listing_url string, items array<struct<url:string,"
-    "title:string,author:string,published_raw:string,item_index:int>>, "
+    "title:string,author:string,published_raw:string,published_date:string,"
+    "item_index:int>>, "
     "excluded_urls array<string>, filtered_count int, "
     "filtered_reasons array<string>, next_url string, "
     "field_stats array<struct<field:string,success:int,attempts:int,"
@@ -133,18 +137,39 @@ LISTING_RESULT_DDL = (
 
 
 def extract_listing_stage(df, config: ListingConfig):
-    """Vectorized stage over listing-page rows (url, html binary)."""
+    """Vectorized stage over listing-page rows (url, html binary). Each
+    item's ``published_date`` is its ``published_raw`` parsed by the
+    batch date kernel (ISO string; NULL when the raw date does not parse)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            pages = [
+                (url, None)
+                if html is None
+                else (
+                    url,
+                    extract_listing_items(
+                        bytes(html).decode("utf-8", "replace"), config, url
+                    ),
+                )
+                for url, html in zip(pdf["url"], pdf["html"])
+            ]
+            # one date-kernel call per batch over every item of its pages
+            raws = pd.Series(
+                [
+                    i["published_raw"]
+                    for _, r in pages
+                    if r is not None
+                    for i in r["items"]
+                ],
+                dtype=object,
+            )
+            dates = iter(parse_published_dates_series(raws) if len(raws) else [])
             out = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                if html is None:
+            for url, r in pages:
+                if r is None:
                     out.append((url, url, [], [], 0, [], None, []))
                     continue
-                r = extract_listing_items(
-                    bytes(html).decode("utf-8", "replace"), config, url
-                )
                 out.append(
                     (
                         url,
@@ -155,6 +180,7 @@ def extract_listing_stage(df, config: ListingConfig):
                                 i["title"],
                                 i["author"],
                                 i["published_raw"],
+                                next(dates),
                                 i["item_index"],
                             )
                             for i in r["items"]

@@ -162,20 +162,6 @@ HOST_OFFSETS = StructType(
 # (the crawl runner pins it with force_parquet=True at seed)
 _Warehouse.ROW_TABLE_SCHEMAS["host_offsets"] = HOST_OFFSETS
 
-# intermediate: one extracted listing item (pre-validation)
-LISTING_ITEM = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("title", StringType()),
-        StructField("author", StringType()),
-        StructField("published_raw", StringType()),
-        StructField("excluded", BooleanType()),
-        StructField("valid", BooleanType()),
-        StructField("reject_reason", StringType()),
-        StructField("item_index", IntegerType()),  # 0-based within page
-    ]
-)
-
 ROBOTS = StructType(
     [
         StructField("host", StringType()),

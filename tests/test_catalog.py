@@ -1,6 +1,6 @@
 """Warehouse snapshot-catalog units: crash-orphan GC, manifest row
-tables, restore semantics, compact/vacuum maintenance and reading a
-manifest written by an older tree."""
+tables, compact/vacuum maintenance, snapshot expiry, schema-given reads
+and reading a manifest written by an older tree."""
 
 import json
 import os
@@ -92,9 +92,6 @@ def test_row_tables_roundtrip(spark, tmp_path):
     wh2.replace("sessions", wh2.read("sessions").where(F.col("id") != "s1"))
     wh2.commit("del")
     assert [r.id for r in wh2.read("sessions").collect()] == ["s2"]
-    # restore rewinds row tables with the rest of the snapshot
-    wh2.restore("two")
-    assert {r.id for r in wh2.read("sessions").collect()} == {"s1", "s2"}
 
 
 def test_legacy_parquet_folds_into_row_table(spark, tmp_path):
@@ -155,6 +152,58 @@ def test_compact_then_vacuum(spark, tmp_path):
     assert not any(os.path.exists(d) for d in old_dirs)
     assert os.listdir(os.path.join(path, "t")) == [os.path.basename(only_dir)]
     assert sorted(map(tuple, Warehouse(spark, path).read("t").collect())) == want
+
+
+def test_vacuum_expires_old_manifests(spark, tmp_path):
+    """vacuum(keep_last) deletes the manifests of expired snapshots, not
+    only their data dirs: 100 commits leave 3 manifests, a reopened
+    warehouse reads the same rows, and gc_orphans then removes no live
+    dir."""
+    path = str(tmp_path / "whm")
+    wh = Warehouse(spark, path)
+    one_row = spark.range(1)
+    for i in range(100):
+        wh.append("t", one_row.selectExpr(f"{i} AS id"))
+        wh.set_prop("round", str(i))
+        wh.commit(f"r{i}")
+
+    def manifests():
+        return sorted(f for f in os.listdir(path) if f.startswith("manifest-"))
+
+    assert len(manifests()) == 100
+    want = sorted(r.id for r in wh.read("t").collect())
+    assert want == list(range(100))
+
+    wh.vacuum(keep_last=3)
+    assert manifests() == ["manifest-100.json", "manifest-98.json", "manifest-99.json"]
+    live = set(wh._manifest.tables["t"])
+    reopened = Warehouse(spark, path)
+    assert sorted(r.id for r in reopened.read("t").collect()) == want
+    assert reopened.props["round"] == "99"
+    assert reopened.gc_orphans() == []
+    assert all(os.path.exists(d) for d in live)
+    assert sorted(r.id for r in Warehouse(spark, path).read("t").collect()) == want
+
+
+def test_read_with_schema_runs_no_job_and_nulls_missing_columns(spark, tmp_path):
+    """A schema-given read of parquet dirs infers nothing (zero Spark
+    jobs), and a dir written before a column existed reads it as NULL."""
+    path = str(tmp_path / "whs")
+    wh = Warehouse(spark, path)
+    wh.append("t", spark.range(3).selectExpr("id", "'a' AS s"))
+    wh.append("t", spark.range(3, 5).selectExpr("id"))  # older layout: no s
+    wh.commit("c")
+    sc = spark.sparkContext
+    sc.setJobGroup("schema-read", "schema-given reads")
+    try:
+        df = wh.read("t", "id long, s string")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("schema-read") == []
+    assert sorted(map(tuple, df.collect())) == [
+        (0, "a"), (1, "a"), (2, "a"), (3, None), (4, None)
+    ]
 
 
 def test_reads_manifest_with_buckets_entry(spark, tmp_path):

@@ -37,7 +37,6 @@ KEEP = {
 }
 
 KEEP_METHODS = {
-    "restore": "the only reader of commit tags (resume to a tagged snapshot)",
     "seen_hashes": "reference-simulator output the parity tests compare",
     "handle_starttag": "HTMLParser callback",
     "handle_endtag": "HTMLParser callback",
