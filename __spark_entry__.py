@@ -339,23 +339,27 @@ def _neardup_docs(spark, sf):
     return dd.with_near_dup_copies(d.repartition(n), "doc_id", "text")
 
 
+def _neardup_sets(spark, sf):
+    """The near-dup relation (doc_id, n_sh, shs, mh) of the dedup corpus
+    slice, served by the incremental SignatureStore (VERDICT r4 item 4):
+    the shingle+signature kernel runs once per unique content version
+    into a digest-keyed store, whose path the artifact store keys by the
+    documents' content fingerprint; repeat invocations (bench re-runs,
+    the correctness gate) and the other near-dup queries resolve every
+    row from the store with zero kernel tasks. Pairs are byte-identical
+    to the computed producer's (digest keys content, so stale entries are
+    unreachable, never wrong)."""
+    return _sig_store(spark, sf).signatures_for(
+        _neardup_docs(spark, sf), "doc_id", "text", 5
+    )
+
+
 def dedup_ngram_jaccard(spark, sf):
-    return dd.ngram_jaccard_pairs(_neardup_docs(spark, sf), "doc_id", "text", 5, 0.6)
+    return dd.ngram_jaccard_pairs(_neardup_sets(spark, sf), 0.6)
 
 
 def dedup_minhash_lsh(spark, sf):
-    """MinHash+LSH near-dup pairs through the incremental SignatureStore
-    (VERDICT r4 item 4): the shingle+signature kernel runs once per
-    unique content version into a digest-keyed store, whose path the
-    artifact store keys by the documents' content fingerprint; repeat
-    invocations (bench re-runs, the correctness gate) resolve every
-    signature from the store with zero kernel tasks. Output byte-
-    identical to the storeless path (digest keys content, so stale
-    entries are unreachable, never wrong)."""
-    return dd.minhash_lsh_pairs(
-        _neardup_docs(spark, sf), "doc_id", "text", 5, 0.6,
-        signature_store=_sig_store(spark, sf),
-    )
+    return dd.minhash_lsh_pairs(_neardup_sets(spark, sf), 0.6)
 
 
 def _sig_store(spark, sf):
@@ -371,17 +375,14 @@ def prime_signature_store(spark, sf):
     digest-keyed signatures for the dedup corpus slice. Computes only
     digests missing from the store — repeat calls launch zero signature-
     kernel tasks (the production steady state the bench measures)."""
-    _sig_store(spark, sf).signatures_for(
-        _neardup_docs(spark, sf), "doc_id", "text", 5
-    ).count()
+    _neardup_sets(spark, sf).count()
 
 
 def dedup_clusters(spark, sf):
     """Connected components over exact near-dup pairs: (doc_id, cluster_id
     = min reachable doc id) — the canonical-doc selection step after pair
     generation. Oracle: DuckDB recursive CTE transitive closure."""
-    pairs = dd.ngram_jaccard_pairs(_neardup_docs(spark, sf), "doc_id", "text", 5, 0.6)
-    return dd.dup_clusters(pairs)
+    return dd.dup_clusters(dd.ngram_jaccard_pairs(_neardup_sets(spark, sf), 0.6))
 
 
 def dedup_simhash(spark, sf):
@@ -1289,8 +1290,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # three entries that previously rode past the cap (outlink_extract has
     # never had a driver-verified row) now lead, rotating three
     # long-verified queries that changes leave untouched past the cap
-    # (jpeg_roundtrip, decontaminate_docs, sitemap_extract); the
-    # artifact-backed ones stay inside it (tests/test_entry_oracle.py).
+    # (jpeg_roundtrip, gif_roundtrip, sitemap_extract); the artifact-backed
+    # ones and the ones a change touches stay inside it
+    # (tests/test_entry_oracle.py).
     return {
         "outlink_extract": outlink_extract,
         "multimodal_decode": multimodal_decode,
@@ -1339,11 +1341,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_dedup_digests": streaming_dedup_digests,
         "streaming_crawl_sessions": streaming_crawl_sessions,
         "warc_roundtrip": warc_roundtrip,
-        "gif_roundtrip": gif_roundtrip,
+        "decontaminate_docs": decontaminate_docs,
         "bpe_token_counts": bpe_token_counts,
         "bpe_merges": bpe_merges,
         "jpeg_roundtrip": jpeg_roundtrip,
-        "decontaminate_docs": decontaminate_docs,
+        "gif_roundtrip": gif_roundtrip,
         "sitemap_extract": sitemap_extract,
     }
 

@@ -21,19 +21,17 @@ import json
 import sys
 
 
-def _crawl_summary_block(wh, runner, config, summary) -> str:
-    """The reference's post-crawl console summary (ui/summary.ts via
-    display.ts displayResults), fed from the session's field_stats rows
-    aggregated per field in config field order."""
+def _session_field_rows(wh, session_id: str) -> list[dict]:
+    """The session's field_stats rows summed per (stage, field) across
+    rounds: one row per field, as the reference's session fieldStats."""
     import pyspark.sql.functions as F
 
     from ethos_spark import schemas
-    from ethos_spark.ui.summary import render_crawl_summary
 
-    rows = [
+    return [
         r.asDict()
         for r in wh.read("field_stats", schemas.FIELD_STATS)
-        .where(F.col("session_id") == runner.session_id)
+        .where(F.col("session_id") == session_id)
         .groupBy("stage", "field_name", "is_optional")
         .agg(
             F.sum("success_count").alias("success_count"),
@@ -42,9 +40,16 @@ def _crawl_summary_block(wh, runner, config, summary) -> str:
         .collect()
     ]
 
+
+def _crawl_summary_block(field_rows, config, summary) -> str:
+    """The reference's post-crawl console summary (ui/summary.ts via
+    display.ts displayResults) over ``_session_field_rows``, in config
+    field order."""
+    from ethos_spark.ui.summary import render_crawl_summary
+
     def ordered(stage: str, field_order: list[str]):
         order = {n: i for i, n in enumerate(field_order)}
-        sel = [r for r in rows if r["stage"] == stage]
+        sel = [r for r in field_rows if r["stage"] == stage]
         return sorted(sel, key=lambda r: order.get(r["field_name"], len(order)))
 
     return render_crawl_summary(
@@ -197,7 +202,11 @@ def main(argv: list[str] | None = None) -> int:
             seeds = [u for u in args.seeds.split(",") if u] or [config.listing.url]
             runner.seed(seeds)
         summary = runner.run()
-        print(_crawl_summary_block(wh, runner, config, summary))
+        print(
+            _crawl_summary_block(
+                _session_field_rows(wh, runner.session_id), config, summary
+            )
+        )
         print(summary.to_json())
     elif args.cmd == "sessions":
         from ethos_spark import schemas
@@ -275,26 +284,17 @@ def main(argv: list[str] | None = None) -> int:
             )
             runner.seed([config.listing.url])
             summary = runner.run()
-            print(_crawl_summary_block(wh, runner, config, summary))
-            # LISTING-stage rows only: the reference's summary.fieldStats is
-            # built from config.listing.fields (MetadataTracker), and the
-            # errors report's required_field_issues filters the same way —
-            # content-stage rows must not inflate the menu's error count
-            fs_rows = [
-                r.asDict()
-                for r in wh.read("field_stats", schemas.FIELD_STATS)
-                .where(
-                    (F.col("session_id") == runner.session_id)
-                    & (F.col("stage") == "listing")
-                )
-                .collect()
-            ]
+            field_rows = _session_field_rows(wh, runner.session_id)
+            print(_crawl_summary_block(field_rows, config, summary))
             action = show_post_crawl_menu(
                 summary.items_found,
+                # LISTING-stage fields only, as the errors report counts
+                # them: the reference's summary.fieldStats is built from
+                # config.listing.fields (MetadataTracker)
                 calculate_total_errors(
                     summary.listing_error_messages,
                     summary.content_error_messages,
-                    fs_rows,
+                    [r for r in field_rows if r["stage"] == "listing"],
                 ),
                 stored_count=summary.contents_crawled,
             )

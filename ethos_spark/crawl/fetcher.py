@@ -89,12 +89,12 @@ class CorpusFetcher:
     """
 
     host_partitioned = False
-    # inner-join contract: fetch-miss candidates are DROPPED from the
-    # output (the caller reconstructs them via a cheap anti-join). The
-    # outer-join alternative forces a sort-merge join that shuffles every
-    # fetched html body onto shuffle.partitions tasks — measured to
-    # serialize the extract stage.
-    returns_misses = False
+    # fetch misses are ABSENT from the output (inner join; the crawl loop
+    # treats an absent row and an html-NULL row alike). The outer-join
+    # alternative forces a sort-merge join that shuffles every fetched
+    # html body onto shuffle.partitions tasks — measured to serialize the
+    # extract stage.
+    #
     # a corpus/WARC lookup cannot transiently fail: a miss is permanent,
     # so the crawl loop skips its retry waves (each wave re-scans the
     # corpus — measured ~14 s/round of pure waste at the scaling workload,
@@ -267,12 +267,12 @@ class HttpFetcher:
     reference's live integration suites,
     src/tests/integration/torrent_freak-integration.test.ts:76-79).
 
-    Non-2xx responses and transport errors both yield html=NULL
-    (returns_misses contract); the crawl loop's in-round retry waves
-    re-fetch NULLs up to max_fetch_attempts (deterministic=False)."""
+    Every candidate row comes back: non-2xx responses and transport
+    errors both yield html=NULL, which the crawl loop treats as a miss;
+    its in-round retry waves re-fetch misses up to max_fetch_attempts
+    (deterministic=False)."""
 
     host_partitioned = True  # batches arrive grouped by host (politeness)
-    returns_misses = True  # every candidate row comes back (html NULL on fail)
     deterministic = False  # network failures are transient → retry
 
     def __init__(

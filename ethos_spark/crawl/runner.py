@@ -619,9 +619,9 @@ class CrawlRunner:
 
     def _extract_listings(self, keys: DataFrame, hint: int | None) -> DataFrame:
         """fetch → listing extract, joined back onto the (url, host, depth)
-        keys. Both fetcher contracts express failure as ABSENCE from here
-        on: a returns_misses fetcher marks failures html=NULL — those rows
-        are dropped so the retry/miss machinery sees them as misses too."""
+        keys. A failed fetch is ABSENT from here on: a fetcher may drop a
+        miss or return it with html=NULL, and html-NULL rows are dropped so
+        the retry/miss machinery sees both the same way."""
         fetched = self.fetcher.fetch(keys, size_hint=hint, stage="listing").where(
             F.col("html").isNotNull()
         )
@@ -1218,9 +1218,9 @@ class CrawlRunner:
     def _fetch_content(self, cand: DataFrame, hint: int | None) -> DataFrame:
         """fetch → extract → merge → PAGES_OUT rows, over ordered candidate
         rows (they already carry processed_order and the listing fields).
-        Failures are ABSENT rows: html-NULL rows from returns_misses
-        fetchers are dropped here so both fetcher contracts hit the same
-        retry/miss machinery."""
+        Failures are ABSENT rows: a fetcher may drop a miss or return it
+        with html=NULL, and html-NULL rows are dropped here so both hit the
+        same retry/miss machinery."""
         fc = self.fetcher.fetch(cand, size_hint=hint, stage="content").where(
             F.col("html").isNotNull()
         )

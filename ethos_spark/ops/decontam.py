@@ -11,7 +11,7 @@ to (doc_id, gram-hash) rows once and a broadcast semi/inner join + agg
 flags documents. No corpus-side self-join, no shuffle of text — the
 same one-pass explode+join shape as the LM-familiarity op.
 
-Gram hashing reuses dedup.word_shingles (h56 over normalized word
+Gram hashing reuses dedup.shingle_sets (h56 over normalized word
 windows) so the DuckDB oracle reproduces the overlap bit-for-bit.
 """
 
@@ -20,7 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ethos_spark.ops.dedup import word_shingles
+from ethos_spark.ops.dedup import shingle_sets
 
 DEFAULT_N = 13  # the GPT-3/C4 decontamination window
 
@@ -35,14 +35,15 @@ def contamination_report(
     """(doc_id, n_contaminated_grams) for every training doc sharing at
     least one word n-gram with the benchmark table — the audit artifact
     a curation run stores alongside the drop decision."""
-    d = word_shingles(docs, id_col, text_col, n)
-    b = (
-        word_shingles(bench, id_col, text_col, n)
-        .select("sh")
-        .distinct()
-    )
+    def grams(df: DataFrame) -> DataFrame:
+        return shingle_sets(df, id_col, text_col, n).select(
+            "doc_id", F.explode("shs").alias("sh")
+        )
+
+    b = grams(bench).select("sh").distinct()
     return (
-        d.join(F.broadcast(b), "sh")
+        grams(docs)
+        .join(F.broadcast(b), "sh")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_contaminated_grams"))
         .orderBy("doc_id")

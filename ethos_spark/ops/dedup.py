@@ -7,17 +7,29 @@ oracles. The cross-engine shared hash is ``H(x) = bigint(md5(x)[0:14])``
 DuckDB (``('0x'||substr(md5(x),1,14))::ubigint``).
 
 - exact dedup: hash-groupBy on a normalized-text digest, keep min id
-- n-gram Jaccard: word-shingle self-join → pair Jaccard ≥ t
-- MinHash + LSH: k=32 signatures, 16 bands × 2 rows → band-bucket join →
-  exact-Jaccard verify (bands sized so recall ≈ 1 at t=0.8: a pair with
-  J=0.8 is missed with prob (1-0.8²)^16 ≈ 8e-8)
 - SimHash: 56-bit sign-aggregated token hash + Hamming-distance pairs
 
-Scale notes: the shingle explode multiplies rows ~50×; partitioning stays
-on doc id until the shingle group-by shuffles on shingle hash. Band join
-keys are (band_idx, band_hash) — hot buckets (boilerplate shingles) are the
-skew risk; the LSH path caps bucket width with a group-size filter exactly
-like production near-dup pipelines drop stop-shingles.
+The near-dup family is ONE relation, two producers and one verify:
+
+- relation: (doc_id, n_sh, shs[, mh]) — each document's set of word
+  n-gram ``h56`` hashes, plus its MinHash signature for the LSH path.
+  ``shingle_sets`` is the only place the n-gram expression is built
+  (decontamination reads it too).
+- producers: computed (``shingle_sets``, ``with_minhash``) or stored
+  (``SignatureStore.signatures_for``, which runs the same two only for
+  content it has never seen).
+- candidates: n-gram Jaccard pairs every two docs sharing a shingle;
+  MinHash + LSH pairs every two docs sharing a band bucket (64 hashes,
+  32 bands × 2 rows: a pair with J=0.6 is missed with prob
+  (1-0.6²)^32 ≈ 7e-7).
+- verify: one exact ``array_intersect`` Jaccard over both sides' sets,
+  so the two operators give identical pairs whenever LSH recall is 1.
+
+Scale notes: the shingle-set relation is per row (no shuffle); the
+n-gram candidate join explodes it ~50× and shuffles on shingle hash.
+Band join keys are (band_idx, band_hash) — hot buckets (boilerplate
+shingles) are the skew risk; the LSH path salts wide buckets
+(``max_bucket``).
 """
 
 from __future__ import annotations
@@ -68,51 +80,46 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame:
-    """(doc_id, shingle_hash) distinct — word n-grams via sequence+slice,
-    all JVM-side (no UDF)."""
+def shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, n: int = 5
+) -> DataFrame:
+    """(id, text) → (doc_id, n_sh, shs): each document's SET of normalized
+    word n-gram hashes (``h56``) — the one relation the near-dup family
+    and decontamination read. Built per row, JVM-side (no UDF, no
+    shuffle); ``id_col`` is a key. A text shorter than ``n`` words is one
+    shingle, so every set is non-empty."""
     words = F.split(normalized(F.col(text_col)), " ")
     k = F.greatest(F.size(words) - (n - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), k),
-        lambda i: F.array_join(F.slice(words, i, n), " "),
+    shs = F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), k),
+            lambda i: h56(F.array_join(F.slice(words, i, n), " ")),
+        )
     )
-    return (
-        df.select(F.col(id_col).alias("doc_id"), F.explode(grams).alias("shingle"))
-        .select("doc_id", h56(F.col("shingle")).alias("sh"))
-        .distinct()
+    return df.select(F.col(id_col).alias("doc_id"), shs.alias("shs")).select(
+        "doc_id", F.size("shs").alias("n_sh"), "shs"
     )
 
 
-def _pair_jaccard(shingles: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard over pairs sharing ≥1 shingle (a < b)."""
-    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = shingles.alias("a")
-    b = shingles.alias("b")
-    common = (
-        a.join(b, F.col("a.sh") == F.col("b.sh"))
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+def _jaccard_verify(
+    candidates: DataFrame, sets: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs (doc_a < doc_b): join each side's
+    shingle set back on and count |A∩B| JVM-side with ``array_intersect``."""
+    def side(s: str) -> DataFrame:
+        return sets.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("shs").alias(f"sh_{s}"),
+            F.col("n_sh").alias(f"n_{s}"),
         )
-        .agg(F.count("*").alias("n_common"))
-    )
+
+    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
     return (
-        common.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .withColumnRenamed("n_sh", "n_a")
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                "n_sh", "n_b"
-            ),
-            "doc_b",
-        )
+        candidates.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
         .withColumn(
             "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                6,
-            ),
+            F.round(n_common / (F.col("n_a") + F.col("n_b") - n_common), 6),
         )
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
@@ -120,18 +127,20 @@ def _pair_jaccard(shingles: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, n: int = 5, threshold: float = 0.8
-) -> DataFrame:
-    """Brute-force near-duplicate pairs (the oracle-exact baseline).
-
-    The shingle set is CACHED: three plan branches consume it (sizes + the
-    a/b sides of the self-join), and without the cache the scan → normalize
-    → shingle → md5 pass ran once per side (measured as the two dominant
-    stages of the query)."""
-    return _pair_jaccard(
-        word_shingles(df, id_col, text_col, n).cache(), threshold
+def ngram_jaccard_pairs(sets: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """Brute-force near-duplicate pairs (the oracle-exact baseline): every
+    pair sharing ≥1 shingle is a candidate, verified exactly."""
+    rows = sets.select("doc_id", F.explode("shs").alias("sh"))
+    a, b = rows.alias("a"), rows.alias("b")
+    candidates = (
+        a.join(b, F.col("a.sh") == F.col("b.sh"))
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .distinct()
     )
+    return _jaccard_verify(candidates, sets, threshold)
 
 
 def _sig_udf():
@@ -167,7 +176,7 @@ def _sig_udf():
             s_all = np.concatenate(
                 [np.asarray(a, dtype=np.uint64) for a in shs]
             )
-            # word_shingles guarantees ≥1 shingle per doc (k ≥ 1), so every
+            # shingle_sets guarantees ≥1 shingle per doc (k ≥ 1), so every
             # reduceat segment is non-empty
             bounds = np.zeros(n_docs, dtype=np.int64)
             np.cumsum(lens[:-1], out=bounds[1:])
@@ -185,49 +194,34 @@ def _sig_udf():
     return sig
 
 
-def _docsets_sigs(
-    df: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
-    """(id, text) → (doc_id, n_sh, shs, mh): normalized word n-gram
-    shingle SET + minhash signature in one groupBy (the signature pass —
-    the dominant cost of the dedup pipeline at corpus scale)."""
-    words = F.split(normalized(F.col(text_col)), " ")
-    k = F.greatest(F.size(words) - (n - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), k),
-        lambda i: F.array_join(F.slice(words, i, n), " "),
-    )
-    shingle_rows = df.select(
-        F.col(id_col).alias("doc_id"), F.explode(grams).alias("shingle")
-    ).select("doc_id", h56(F.col("shingle")).alias("sh"))
-    docsets = shingle_rows.groupBy("doc_id").agg(
-        F.collect_set("sh").alias("shs")
-    )
-    return docsets.select(
-        "doc_id",
-        F.size("shs").alias("n_sh"),
-        "shs",
-        _sig_udf()(F.col("shs")).alias("mh"),
-    )
+def with_minhash(sets: DataFrame) -> DataFrame:
+    """A ``shingle_sets`` relation plus its MinHash signature ``mh`` (the
+    signature pass — the dominant cost of the dedup pipeline at corpus
+    scale)."""
+    return sets.withColumn("mh", _sig_udf()(F.col("shs")))
 
 
 class SignatureStore:
-    """Incremental MinHash signature store (VERDICT r4 item 4): a parquet
-    table keyed by CONTENT digest holding (digest → shingle set +
-    signature). Unlike the immutable artifacts of ``ethos_spark.artifacts``
-    it grows in place, one append per batch of unseen content versions.
+    """The STORED producer of the near-dup relation: a parquet table keyed
+    by CONTENT digest holding (digest → n_sh, shs, mh), i.e. exactly the
+    rows ``with_minhash(shingle_sets(...))`` computes. ``signatures_for``
+    serves the caller's documents as that relation, (doc_id, n_sh, shs,
+    mh), so ``ngram_jaccard_pairs``, ``minhash_lsh_pairs`` and everything
+    downstream read it the same way from either producer. Unlike the
+    immutable artifacts of ``ethos_spark.artifacts`` it grows in place,
+    one append per batch of unseen content versions.
 
     At 100 TB the signature pass (normalize → shingle → 64 splitmix64
     mixes over every token) dwarfs the pair join, and content digests
     change only for new or edited documents — so a standing dedup
     pipeline should pay the kernel once per unique content version, not
-    once per invocation. ``signatures_for`` computes the kernel ONLY for
+    once per invocation. ``signatures_for`` computes the relation ONLY for
     digests absent from the store (appended inside that one write job);
     the per-doc plan it returns always joins the caller's (doc_id,
     digest) keys against the store table, so a run over an unchanged
     corpus launches zero signature-kernel tasks (pytest pins this by
-    poisoning the kernel factory on the second run) and
-    ``minhash_lsh_pairs`` output is byte-identical either way.
+    poisoning the kernel factory on the second run) and the pairs are
+    byte-identical to the computed producer's.
 
     The digest keys (N_HASHES, n, text), so changing shingle width or
     signature length can never serve stale entries.
@@ -324,9 +318,9 @@ class SignatureStore:
         if misses.take(1):
             # kernel runs HERE only — one append job over unseen digests
             self._append(
-                _docsets_sigs(misses, "digest", "_text", n).withColumnRenamed(
-                    "doc_id", "digest"
-                )
+                with_minhash(
+                    shingle_sets(misses, "digest", "_text", n)
+                ).withColumnRenamed("doc_id", "digest")
             )
             served.unpersist()
             return keyed.join(
@@ -408,17 +402,14 @@ def _salted_bucket_pairs(buckets: DataFrame, max_bucket: int) -> DataFrame:
 
 
 def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 5,
-    threshold: float = 0.8,
-    max_bucket: int | None = None,
-    signature_store: "SignatureStore | None" = None,
+    sets: DataFrame, threshold: float = 0.8, max_bucket: int | None = None
 ) -> DataFrame:
-    """MinHash+LSH candidates (banded buckets), exact-Jaccard verified.
-    Output identical to ``ngram_jaccard_pairs`` whenever LSH recall is 1 —
-    which the band sizing guarantees up to ~1e-7 per pair at J ≥ 0.6.
+    """MinHash+LSH candidates (banded buckets over ``mh``), exact-Jaccard
+    verified. ``sets`` is the near-dup relation with signatures, computed
+    (``with_minhash(shingle_sets(...))``) or stored
+    (``SignatureStore.signatures_for``). Output identical to
+    ``ngram_jaccard_pairs`` whenever LSH recall is 1 — which the band
+    sizing guarantees up to ~1e-7 per pair at J ≥ 0.6.
 
     ``max_bucket``: skew guard for web-scale boilerplate clusters — a
     bucket of B docs yields B² candidate pairs, and the plain self-join
@@ -435,22 +426,12 @@ def minhash_lsh_pairs(
     default (None): small corpora don't need the extra width join.
 
     Shuffle-lean shape (the sf0.1 bench was stage-latency-bound at ~13
-    shuffles): ONE groupBy builds each doc's shingle SET + minhash sig
-    together (collect_set ≡ the old distinct + collect_list; splitmix mins
-    are order-independent so the signature values are unchanged), the band
-    self-join runs on light (doc_id, band, sig) rows, and candidate pairs
-    are verified with a JVM-side ``array_intersect`` on the two shingle
-    sets instead of a 6-shuffle re-aggregation — ~6 shuffles total.
-    Carrying a doc's shingle-hash array through the two verify joins costs
-    ~0.5-4 KB/row of shuffle IO, the standard trade in production minhash
-    dedup (candidates are a tiny fraction of the corpus)."""
-    # ``signature_store``: incremental mode — per-doc signatures resolve
-    # through the digest-keyed store; the kernel runs only for content
-    # versions never seen before (zero kernel tasks on unchanged corpora)
-    if signature_store is not None:
-        sigs = signature_store.signatures_for(df, id_col, text_col, n).cache()
-    else:
-        sigs = _docsets_sigs(df, id_col, text_col, n).cache()
+    shuffles): the band self-join runs on light (doc_id, band, sig) rows,
+    and candidate pairs go through the same ``array_intersect`` verify as
+    ``ngram_jaccard_pairs``. Carrying a doc's shingle-hash array through
+    the two verify joins costs ~0.5-4 KB/row of shuffle IO, the standard
+    trade in production minhash dedup (candidates are a tiny fraction of
+    the corpus)."""
     rows_per_band = N_HASHES // N_BANDS
     # ONE compact higher-order expression instead of 32 unrolled struct
     # columns (~200 expression nodes): the unrolled form cost more in
@@ -473,7 +454,7 @@ def minhash_lsh_pairs(
             ).alias("sig"),
         ),
     )
-    buckets = sigs.select(
+    buckets = sets.select(
         "doc_id", F.explode(band_structs).alias("bk")
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.sig").alias("sig"))
     if max_bucket is None:
@@ -493,31 +474,7 @@ def minhash_lsh_pairs(
         )
     else:
         candidates = _salted_bucket_pairs(buckets, max_bucket)
-    # exact verify only the candidates: join each side's shingle set back
-    # on and compute Jaccard JVM-side (|A∩B| via array_intersect) — same
-    # values as the shingle-join formulation, 6 fewer shuffles
-    side_a = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shs").alias("sh_a"),
-        F.col("n_sh").alias("n_a"),
-    )
-    side_b = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shs").alias("sh_b"),
-        F.col("n_sh").alias("n_b"),
-    )
-    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        candidates.join(side_a, "doc_a")
-        .join(side_b, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(n_common / (F.col("n_a") + F.col("n_b") - n_common), 6),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-        .orderBy("doc_a", "doc_b")
-    )
+    return _jaccard_verify(candidates, sets, threshold)
 
 
 SIMHASH_BITS = 56

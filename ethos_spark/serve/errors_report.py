@@ -21,14 +21,15 @@ import json
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ethos_spark.ui.menus import required_field_issues
+
 _RULE = "=" * 63 + "\n"
 
 
-def required_field_issues(
-    field_stats: DataFrame, session_id: str
-) -> list[dict]:
-    """calculateRequiredFieldIssues (ui/utils.ts:107-113) over the
-    session's LISTING-stage stats, aggregated across rounds."""
+def _listing_field_issues(field_stats: DataFrame, session_id: str) -> list[dict]:
+    """``required_field_issues`` over the session's LISTING-stage stats,
+    summed per field across rounds (one row per field, as the
+    reference's session fieldStats)."""
     rows = (
         field_stats.where(
             (F.col("session_id") == session_id) & (F.col("stage") == "listing")
@@ -37,22 +38,18 @@ def required_field_issues(
         .agg(
             F.sum("success_count").alias("success_count"),
             F.sum("total_attempts").alias("total_attempts"),
-            F.max(F.col("is_optional").cast("int")).alias("is_optional"),
-        )
-        .where(
-            (F.col("is_optional") == 0)
-            & (F.col("success_count") < F.col("total_attempts"))
+            F.max("is_optional").alias("is_optional"),
         )
         .orderBy("field_name")
         .collect()
     )
     return [
         {
-            "fieldName": r.field_name,
-            "successCount": int(r.success_count),
-            "totalAttempts": int(r.total_attempts),
+            "fieldName": r["field_name"],
+            "successCount": int(r["success_count"]),
+            "totalAttempts": int(r["total_attempts"]),
         }
-        for r in rows
+        for r in required_field_issues([r.asDict() for r in rows])
     ]
 
 
@@ -64,7 +61,7 @@ def render_errors_report(
     meta = json.loads(session_row.metadata or "{}")
     listing_errors = meta.get("listing_error_messages") or []
     content_errors = meta.get("content_error_messages") or []
-    field_issues = required_field_issues(field_stats, session_row.id)
+    field_issues = _listing_field_issues(field_stats, session_row.id)
 
     if not listing_errors and not content_errors and not field_issues:
         return "No errors found during crawling!"

@@ -20,7 +20,10 @@ from typing import Callable, Mapping, Sequence
 
 def required_field_issues(field_stats: Sequence[Mapping]) -> list[Mapping]:
     """utils.ts:107-113 — rows are dict-likes with is_optional /
-    success_count / total_attempts (the FIELD_STATS table's columns)."""
+    success_count / total_attempts (the FIELD_STATS table's columns), one
+    per field: a session's per-round rows summed first, or a field short
+    in k rounds counts k times. The menu total and the errors report
+    both filter through here."""
     return [
         s
         for s in field_stats

@@ -7,7 +7,7 @@ frontier bucketed by url(_hash), fetch joins co-located."""
 import pytest
 import pyspark.sql.functions as F
 
-from ethos_spark.plans.explain import count_exchanges, formatted_plan
+from tests.plan_explain import count_exchanges, formatted_plan
 from ethos_spark.session import get_spark
 
 

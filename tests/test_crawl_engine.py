@@ -258,7 +258,6 @@ class FlakyFetcher:
     `fail_calls` fetch() invocations — a deterministic transient failure."""
 
     host_partitioned = False
-    returns_misses = False
     deterministic = False  # transient failures → retry ladder active
 
     def __init__(self, corpus, fail_urls, fail_calls):

@@ -6,7 +6,12 @@ single self-join task holds a whole boilerplate cluster."""
 import pytest
 import pyspark.sql.functions as F
 
-from ethos_spark.ops.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
+from ethos_spark.ops.dedup import (
+    minhash_lsh_pairs,
+    ngram_jaccard_pairs,
+    shingle_sets,
+    with_minhash,
+)
 from ethos_spark.session import get_spark
 
 
@@ -36,17 +41,18 @@ def docs(spark):
 
 
 def test_salted_equals_unsalted_pairs(spark, docs):
-    plain = minhash_lsh_pairs(docs, "doc_id", "text", 5, 0.6).collect()
-    salted = minhash_lsh_pairs(
-        docs, "doc_id", "text", 5, 0.6, max_bucket=8
-    ).collect()
+    sets = with_minhash(shingle_sets(docs, "doc_id", "text", 5))
+    plain = minhash_lsh_pairs(sets, 0.6).collect()
+    salted = minhash_lsh_pairs(sets, 0.6, max_bucket=8).collect()
     as_set = lambda rs: {(r.doc_a, r.doc_b, r.jaccard) for r in rs}
     assert as_set(plain) == as_set(salted)
     # the boilerplate cluster's pairs are all present: C(40,2) = 780
     boiler_pairs = {p for p in as_set(salted) if p[0] < 40 and p[1] < 40}
     assert len(boiler_pairs) == 780
     # and they agree with the exact all-pairs oracle
-    exact = ngram_jaccard_pairs(docs, "doc_id", "text", 5, 0.6).collect()
+    exact = ngram_jaccard_pairs(
+        shingle_sets(docs, "doc_id", "text", 5), 0.6
+    ).collect()
     assert as_set(salted) == as_set(exact)
 
 

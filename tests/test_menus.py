@@ -105,3 +105,52 @@ def test_main_menu_crawl_again_loop_then_exit_action():
     show_main_menu({"crawl": crawl, "sessions": sessions}, s.input, s.print)
     assert calls == ["crawl", "crawl", "sessions"]
     assert s.out[-1] == "Goodbye!"
+
+
+def test_menu_error_total_matches_errors_report(tmp_path, monkeypatch, capsys):
+    """A required field short in two rounds is ONE issue, in the
+    post-crawl menu total as in the errors report (menus.ts:11-22 counts
+    the session's fieldStats, one entry per field)."""
+    import io
+    import re
+
+    from ethos_spark import cli, schemas
+    from ethos_spark.catalog import Warehouse
+    from ethos_spark.serve.errors_report import render_errors_report
+    from ethos_spark.session import get_spark
+    from ethos_spark.synth import build_pages_df, listing_items_spec
+
+    # one host, 50 articles: listing pages 4 and 5 (rounds 4 and 5) each
+    # hold an item without a url, a required listing field
+    assert [
+        p for p in range(1, 6)
+        if any(it["omit_url"] for it in listing_items_spec(0, p, 50))
+    ] == [4, 5]
+    spark = get_spark("test-menu-errors", master="local[2]", shuffle_partitions=2)
+    corpus, wh_dir = str(tmp_path / "corpus"), str(tmp_path / "wh")
+    build_pages_df(spark, 1, 50).write.parquet(corpus)
+
+    monkeypatch.setattr("sys.stdin", io.StringIO("crawl\nexit\n"))
+    cli.main(["menu", "--warehouse", wh_dir, "--corpus", corpus])
+    menu_total = int(
+        re.search(r"View crawling errors \((\d+)\)", capsys.readouterr().out)[1]
+    )
+
+    spark = get_spark("test-menu-errors", master="local[2]", shuffle_partitions=2)
+    try:
+        wh = Warehouse(spark, wh_dir)
+        fs = wh.read("field_stats", schemas.FIELD_STATS)
+        url_rounds = {
+            r["round"]
+            for r in fs.where(
+                (fs.stage == "listing") & (fs.field_name == "url")
+                & (fs.success_count < fs.total_attempts)
+            ).collect()
+        }
+        assert len(url_rounds) == 2, url_rounds
+        session = wh.read("sessions", schemas.SESSIONS).collect()[0]
+        report = render_errors_report(session, fs, "now")
+        assert "missing required field: url" in report
+        assert f"Total errors: {menu_total}\n" in report, (menu_total, report)
+    finally:
+        spark.stop()

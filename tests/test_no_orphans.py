@@ -18,9 +18,6 @@ KEEP = {
     "Fetcher": "the fetch protocol CorpusFetcher and HttpFetcher implement",
     "HttpFetcher": "the real-network fetch path (tests/test_http_fetcher_e2e.py)",
     "classify": "scalar langid oracle the batch classifier is tested against",
-    "assert_filter_pushed": "plan-assertion helper for tests and plan review",
-    "count_exchanges": "plan-assertion helper for tests and plan review",
-    "read_schema_columns": "plan-assertion helper for tests and plan review",
     "build_corpus": "reference simulator's in-memory corpus for parity tests",
     "run_to_memory": "drains the crawl metrics stream into a queryable table",
     "delete_session": "admin mutation of the reference viewer (session delete)",

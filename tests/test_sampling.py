@@ -109,7 +109,7 @@ def test_split_disjoint_and_complete(spark, docs):
 
 def test_sample_filter_reaches_scan(spark, tmp_path, docs):
     """The sample is a pure filter: no shuffle exchange in the plan."""
-    from ethos_spark.plans.explain import count_exchanges
+    from tests.plan_explain import count_exchanges
 
     p = str(tmp_path / "docs")
     docs.write.mode("overwrite").parquet(p)

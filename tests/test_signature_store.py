@@ -39,14 +39,18 @@ def test_store_parity_zero_kernel_second_run_incremental(
     spark, tmp_path, docs, monkeypatch
 ):
     path = str(tmp_path / "sigstore")
-    base = _rows(dd.minhash_lsh_pairs(docs, "doc_id", "text", 5, 0.6))
+    base = _rows(
+        dd.minhash_lsh_pairs(
+            dd.with_minhash(dd.shingle_sets(docs, "doc_id", "text", 5)), 0.6
+        )
+    )
     assert base  # non-trivial pair set
 
     # run 1: cold store — kernel runs once, output identical to storeless
     store = dd.SignatureStore(spark, path)
     got1 = _rows(
         dd.minhash_lsh_pairs(
-            docs, "doc_id", "text", 5, 0.6, signature_store=store
+            store.signatures_for(docs, "doc_id", "text", 5), 0.6
         )
     )
     assert got1 == base
@@ -66,7 +70,7 @@ def test_store_parity_zero_kernel_second_run_incremental(
     store2 = dd.SignatureStore(spark, path)
     got2 = _rows(
         dd.minhash_lsh_pairs(
-            docs, "doc_id", "text", 5, 0.6, signature_store=store2
+            store2.signatures_for(docs, "doc_id", "text", 5), 0.6
         )
     )
     assert got2 == base  # byte-identical across sessions
@@ -82,7 +86,7 @@ def test_store_parity_zero_kernel_second_run_incremental(
         ).otherwise(F.col("text")),
     )
     dd.minhash_lsh_pairs(
-        edited, "doc_id", "text", 5, 0.6, signature_store=store2
+        store2.signatures_for(edited, "doc_id", "text", 5), 0.6
     ).collect()
     assert spark.read.parquet(path).count() == n_store + 1
 

@@ -6,7 +6,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from ethos_spark.ops.similarity import kmeans_centroids, with_cluster_structure
-from ethos_spark.plans.explain import formatted_plan
+from tests.plan_explain import formatted_plan
 from ethos_spark.session import get_spark
 
 

@@ -18,7 +18,7 @@ import pyspark.sql.functions as F
 from ethos_spark.catalog import Warehouse
 from ethos_spark.crawl import fetcher as fetcher_mod
 from ethos_spark.crawl.fetcher import CorpusFetcher
-from ethos_spark.plans.explain import count_exchanges, formatted_plan
+from tests.plan_explain import count_exchanges, formatted_plan
 from ethos_spark.session import get_spark
 
 NB = 8
