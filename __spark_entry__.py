@@ -341,17 +341,22 @@ def _neardup_docs(spark, sf):
 
 def _neardup_sets(spark, sf):
     """The near-dup relation (doc_id, n_sh, shs, mh) of the dedup corpus
-    slice, served by the incremental SignatureStore (VERDICT r4 item 4):
-    the shingle+signature kernel runs once per unique content version
-    into a digest-keyed store, whose path the artifact store keys by the
-    documents' content fingerprint; repeat invocations (bench re-runs,
-    the correctness gate) and the other near-dup queries resolve every
-    row from the store with zero kernel tasks. Pairs are byte-identical
-    to the computed producer's (digest keys content, so stale entries are
-    unreachable, never wrong)."""
-    return _sig_store(spark, sf).signatures_for(
-        _neardup_docs(spark, sf), "doc_id", "text", 5
+    slice, stored as one immutable artifact dir keyed by every input: the
+    documents' content fingerprint, the slice, shingle width, signature
+    length and schema. The shingle + signature kernel runs only when the
+    key is new; repeat invocations (bench re-runs, the correctness gate)
+    and the other near-dup queries read the stored rows with zero kernel
+    tasks, so pairs are byte-identical to the computed producer's."""
+    fp = artifacts.fingerprint(f"{sf}/documents.parquet")
+    path = artifacts.ArtifactStore().dir(
+        "neardup-sets",
+        (fp, "doc_id<500+near-dup-copies", 5, dd.N_HASHES, dd.SETS_SCHEMA),
+        {"schema": dd.SETS_SCHEMA},
+        lambda tmp: dd.with_minhash(
+            dd.shingle_sets(_neardup_docs(spark, sf), "doc_id", "text", 5)
+        ).write.parquet(tmp),
     )
+    return spark.read.schema(dd.SETS_SCHEMA).parquet(path)
 
 
 def dedup_ngram_jaccard(spark, sf):
@@ -362,20 +367,10 @@ def dedup_minhash_lsh(spark, sf):
     return dd.minhash_lsh_pairs(_neardup_sets(spark, sf), 0.6)
 
 
-def _sig_store(spark, sf):
-    fp = artifacts.fingerprint(f"{sf}/documents.parquet")
-    path = artifacts.ArtifactStore().path(
-        "signatures", fp, dd.SIG_BUCKETS, dd.SignatureStore.SCHEMA, dd.N_HASHES
-    )
-    return dd.SignatureStore(spark, path)
-
-
 def prime_signature_store(spark, sf):
-    """Ingest-side store build (bench warm layer 3): materialize the
-    digest-keyed signatures for the dedup corpus slice. Computes only
-    digests missing from the store — repeat calls launch zero signature-
-    kernel tasks (the production steady state the bench measures)."""
-    _neardup_sets(spark, sf).count()
+    """Ingest-side build of the near-dup relation artifact (bench warm
+    layer 3); a no-op once the artifact exists."""
+    _neardup_sets(spark, sf)
 
 
 def dedup_clusters(spark, sf):
@@ -441,12 +436,14 @@ def similarity_lsh_recall(spark, sf):
     jobs. Scores are bit-identical (see ops/similarity.py cumsum note)."""
     rows, dim = _emb_meta(sf)
     emb = sim.with_cluster_structure(_t(spark, sf, "embeddings")).cache()
-    return sim.lsh_recall_check(
-        emb, list(range(20)), k=10, min_recall=0.8, dim=dim,
-        corpus_rows=rows,
-        # the mixing pass already spread the cache across the executors —
-        # skip the per-branch re-repartition of the cached table
-        pre_partitioned=True,
+    qids = list(range(20))
+    # the mixing pass already spread the cache across the executors —
+    # skip the per-branch re-repartition of the cached table
+    ann = sim.lsh_ann_topk(
+        emb, qids, k=10, dim=dim, corpus_rows=rows, pre_partitioned=True
+    )
+    return sim.ann_recall_check(
+        emb, qids, ann, k=10, min_recall=0.8, pre_partitioned=True
     )
 
 

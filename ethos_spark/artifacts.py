@@ -1,5 +1,5 @@
 """Derived-artifact store: the one module that keys, publishes and checks
-what ops queries derive from an input table (signature store, IVF
+what ops queries derive from an input table (near-dup sets, IVF
 centroids, BPE merges, sq8 codes). A key is the artifact kind plus every
 input of its computation, with input tables named by ``fingerprint`` (their
 bytes, not their mtime). Publish is a uuid tmp name moved into place with

@@ -151,10 +151,24 @@ def main(argv: list[str] | None = None) -> int:
 
     args = p.parse_args(argv)
 
-    from ethos_spark.catalog import Warehouse
+    from pyspark.sql import SparkSession
+
     from ethos_spark.session import get_spark
 
+    # stop only a session this command started: a caller's (a test, a
+    # notebook) must outlive the command
+    owned = SparkSession.getActiveSession() is None
     spark = get_spark(f"ethos-{args.cmd}")
+    try:
+        return _run(args, spark)
+    finally:
+        if owned:
+            spark.stop()
+
+
+def _run(args, spark) -> int:
+    from ethos_spark.catalog import Warehouse
+
     if args.cmd == "import-warc":
         from ethos_spark.sources.warc import read_warc
 
@@ -177,7 +191,6 @@ def main(argv: list[str] | None = None) -> int:
                 + ", ".join(sorted(SOURCES)),
                 file=sys.stderr,
             )
-            spark.stop()
             return 2
         config = SOURCES[args.source]
         runner = CrawlRunner(
@@ -230,7 +243,6 @@ def main(argv: list[str] | None = None) -> int:
             rows = sessions_list(sessions).limit(1).collect()
         if not rows:
             print("no sessions found", file=sys.stderr)
-            spark.stop()
             return 2
         fs = wh.read("field_stats", schemas.FIELD_STATS)
         print(
@@ -354,7 +366,6 @@ def main(argv: list[str] | None = None) -> int:
             sid_rows = sessions_list(sessions).limit(1).collect()
         if not sid_rows:
             print("No crawl session available for viewing.", file=sys.stderr)
-            spark.stop()
             return 2
         rows = (
             session_contents(
@@ -429,7 +440,6 @@ def main(argv: list[str] | None = None) -> int:
             srv.serve_forever()
         except KeyboardInterrupt:
             pass
-    spark.stop()
     return 0
 
 

@@ -16,8 +16,9 @@ The near-dup family is ONE relation, two producers and one verify:
   ``shingle_sets`` is the only place the n-gram expression is built
   (decontamination reads it too).
 - producers: computed (``shingle_sets``, ``with_minhash``) or stored
-  (``SignatureStore.signatures_for``, which runs the same two only for
-  content it has never seen).
+  (the artifact read: the computed relation written once per input
+  fingerprint as an ``ethos_spark.artifacts`` dir, read back with
+  ``SETS_SCHEMA``).
 - candidates: n-gram Jaccard pairs every two docs sharing a shingle;
   MinHash + LSH pairs every two docs sharing a band bucket (64 hashes,
   32 bands × 2 rows: a pair with J=0.6 is missed with prob
@@ -34,25 +35,17 @@ shingles) are the skew risk; the LSH path salts wide buckets
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from ethos_spark import artifacts
-
 P61 = (1 << 61) - 1  # Mersenne prime for affine rehash
 # banding sized for recall ≈ 1 down to J=0.6: miss prob (1-J²)^32 ≈ 7e-7
 N_HASHES = 64
 N_BANDS = 32  # × 2 rows
-# SignatureStore layout: bucket count of the digest-bucketed table, fixed
-# at store creation, recorded in its artifacts.LAYOUT_FILE sidecar and part
-# of the store's key (buckets ≈ store size / target file size on a real
-# cluster)
-SIG_BUCKETS = 16
+# the near-dup relation as stored: with_minhash(shingle_sets(...)) rows
+SETS_SCHEMA = "doc_id bigint, n_sh int, shs array<bigint>, mh array<bigint>"
 
 
 def h56(c: Column) -> Column:
@@ -201,134 +194,6 @@ def with_minhash(sets: DataFrame) -> DataFrame:
     return sets.withColumn("mh", _sig_udf()(F.col("shs")))
 
 
-class SignatureStore:
-    """The STORED producer of the near-dup relation: a parquet table keyed
-    by CONTENT digest holding (digest → n_sh, shs, mh), i.e. exactly the
-    rows ``with_minhash(shingle_sets(...))`` computes. ``signatures_for``
-    serves the caller's documents as that relation, (doc_id, n_sh, shs,
-    mh), so ``ngram_jaccard_pairs``, ``minhash_lsh_pairs`` and everything
-    downstream read it the same way from either producer. Unlike the
-    immutable artifacts of ``ethos_spark.artifacts`` it grows in place,
-    one append per batch of unseen content versions.
-
-    At 100 TB the signature pass (normalize → shingle → 64 splitmix64
-    mixes over every token) dwarfs the pair join, and content digests
-    change only for new or edited documents — so a standing dedup
-    pipeline should pay the kernel once per unique content version, not
-    once per invocation. ``signatures_for`` computes the relation ONLY for
-    digests absent from the store (appended inside that one write job);
-    the per-doc plan it returns always joins the caller's (doc_id,
-    digest) keys against the store table, so a run over an unchanged
-    corpus launches zero signature-kernel tasks (pytest pins this by
-    poisoning the kernel factory on the second run) and the pairs are
-    byte-identical to the computed producer's.
-
-    The digest keys (N_HASHES, n, text), so changing shingle width or
-    signature length can never serve stale entries.
-
-    Layout (r6): the store is a digest-BUCKETED external table (same
-    saveAsTable machinery as the warehouse's bucketed pages tier), so both
-    the known-digest anti-join and the serving join read the store side
-    with NO exchange — only the request-sized candidate slice shuffles.
-    At 100 TB the store is corpus-sized and this is the difference between
-    re-shuffling the corpus per run and a bucket-local lookup. Reads also
-    collapse duplicate digests (two racing sessions may both append the
-    same digest; payloads are content-determined hence identical, so
-    keeping either row is correct — without this the serving join would
-    fan out duplicated signature rows). The bucket count (``SIG_BUCKETS``)
-    and schema are written to the ``artifacts.LAYOUT_FILE`` sidecar before
-    the first data file and checked on every read: a store without one, or
-    bucketed differently, raises instead of serving wrong joins."""
-
-    SCHEMA = "digest string, n_sh int, shs array<bigint>, mh array<bigint>"
-
-    def __init__(self, spark, path: str):
-        self.spark = spark
-        self.path = path
-
-    def _table(self) -> str:
-        h = hashlib.md5(os.path.abspath(self.path).encode()).hexdigest()[:12]
-        return f"ethos_sigstore_{h}"
-
-    def _open(self, create: bool = False) -> str:
-        """Check the layout sidecar (written first when ``create``), then
-        register the bucketed table over the store dir (once per session);
-        → the table name. A declaration that mismatches the files on disk
-        would make the exchange-free join and dropDuplicates hash rows into
-        the wrong buckets and silently miss matches, so any doubt raises."""
-        layout = {"buckets": SIG_BUCKETS, "schema": self.SCHEMA}
-        if create:
-            artifacts.write_layout(self.path, layout)
-        artifacts.check_layout(self.path, layout)
-        name = self._table()
-        if not self.spark.catalog.tableExists(name):
-            self.spark.sql(
-                f"CREATE TABLE {name} ({self.SCHEMA}) USING PARQUET "
-                "CLUSTERED BY (digest) SORTED BY (digest) "
-                f"INTO {SIG_BUCKETS} BUCKETS LOCATION '{self.path}'"
-            )
-        return name
-
-    def _read(self) -> DataFrame:
-        if not os.path.isdir(self.path):
-            return self.spark.createDataFrame([], self.SCHEMA)
-        return self.spark.table(self._open())
-
-    def _append(self, sigs: DataFrame) -> None:
-        # store creation writes the layout first, then appends into the
-        # registered table: an append that has to create the table
-        # overwrites the dir, sidecar included
-        name = self._open(create=not os.path.isdir(self.path))
-        (
-            sigs.write.mode("append")
-            .bucketBy(SIG_BUCKETS, "digest")
-            .sortBy("digest")
-            .option("path", self.path)
-            .saveAsTable(name)
-        )
-
-    def signatures_for(
-        self, df: DataFrame, id_col: str, text_col: str, n: int = 5
-    ) -> DataFrame:
-        keyed = df.select(
-            F.col(id_col).alias("doc_id"),
-            F.sha1(
-                F.encode(
-                    F.concat(
-                        F.lit(f"mh{N_HASHES}:n{n}:"), F.col(text_col)
-                    ),
-                    "UTF-8",
-                )
-            ).alias("digest"),
-            F.col(text_col).alias("_text"),
-        )
-        # ONE left join serves both the miss check and (on the steady-state
-        # hit path) the result itself — the old shape paid a separate
-        # anti-join pass over keyed+store before re-joining for the result.
-        # dropDuplicates on the bucketed read is exchange-free (bucket
-        # clustering satisfies the aggregation's distribution requirement).
-        served = keyed.join(
-            self._read().dropDuplicates(["digest"]), "digest", "left"
-        ).cache()
-        misses = (
-            served.where(F.col("n_sh").isNull())
-            .select("doc_id", "digest", "_text")
-            .dropDuplicates(["digest"])
-        )
-        if misses.take(1):
-            # kernel runs HERE only — one append job over unseen digests
-            self._append(
-                with_minhash(
-                    shingle_sets(misses, "digest", "_text", n)
-                ).withColumnRenamed("doc_id", "digest")
-            )
-            served.unpersist()
-            return keyed.join(
-                self._read().dropDuplicates(["digest"]), "digest"
-            ).select("doc_id", "n_sh", "shs", "mh")
-        return served.select("doc_id", "n_sh", "shs", "mh")
-
-
 _MAX_SALTS = 64  # cap the per-doc replication factor in pathological buckets
 
 
@@ -406,8 +271,8 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """MinHash+LSH candidates (banded buckets over ``mh``), exact-Jaccard
     verified. ``sets`` is the near-dup relation with signatures, computed
-    (``with_minhash(shingle_sets(...))``) or stored
-    (``SignatureStore.signatures_for``). Output identical to
+    (``with_minhash(shingle_sets(...))``) or stored (the artifact read,
+    ``SETS_SCHEMA``). Output identical to
     ``ngram_jaccard_pairs`` whenever LSH recall is 1 — which the band
     sizing guarantees up to ~1e-7 per pair at J ≥ 0.6.
 

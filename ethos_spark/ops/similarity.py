@@ -387,40 +387,6 @@ def with_cluster_structure(
     return out
 
 
-def lsh_recall_check(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    min_recall: float = 0.8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    corpus_rows: int | None = None,
-    pre_partitioned: bool = False,
-) -> DataFrame:
-    """Correctness signal for the approximate index, computed in-Spark:
-    recall@k of ``lsh_ann_topk`` against the exact ``cosine_topk`` over the
-    same table. → one row (n_queries, recall_ok) — stable columns that an
-    oracle can assert, while tests additionally bound the raw recall.
-
-    ``dim``/``corpus_rows``, when known (e.g. from parquet footer
-    metadata), skip the first()/count() sizing jobs."""
-    approx = lsh_ann_topk(
-        emb,
-        query_ids,
-        k,
-        dim=dim,
-        id_col=id_col,
-        vec_col=vec_col,
-        corpus_rows=corpus_rows,
-        pre_partitioned=pre_partitioned,
-    )
-    return ann_recall_check(
-        emb, query_ids, approx, k, min_recall, id_col, vec_col,
-        pre_partitioned=pre_partitioned,
-    )
-
-
 def kmeans_centroids(
     emb: DataFrame,
     n_clusters: int = 16,

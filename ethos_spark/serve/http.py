@@ -96,6 +96,18 @@ def _int_param(params: dict, key: str) -> int | None:
     return v if v > 0 else None
 
 
+def _pub_query(params: dict) -> PublicationsQuery:
+    # the publications route and the listing view read the same params
+    return PublicationsQuery(
+        source=(params.get("source") or [None])[0],
+        start_published=(params.get("startPublishedDate") or [None])[0],
+        end_published=(params.get("endPublishedDate") or [None])[0],
+        order_by="published_date",
+        page=_int_param(params, "page") or 1,
+        limit=_int_param(params, "limit") or 10,  # publications.ts:31
+    )
+
+
 class ApiApp:
     """Transport-free request handling (unit-testable without sockets)."""
 
@@ -158,36 +170,33 @@ class ApiApp:
         if path == "/api/publications":
             return self._publications(params)
         if path.startswith("/api/publications/"):
-            return self._publication_by_hash(path.split("/", 3)[3])
+            return self._by_hash(
+                path.split("/", 3)[3], lambda r: (200, _pub_json(r))
+            )
         # HTML web views, wired AFTER the api routes like the reference
         # (index.ts:38-39): "/" = listing, any other single segment is
         # treated as "/:hash" (so even /api alone hits the hash validator)
         if path == "/":
             return self._listing_view(params)
         if re.fullmatch(r"/[^/]+", path):
-            return self._detail_view(path[1:], params)
+            return self._by_hash(path[1:], lambda r: self._detail_view(r, params))
         return 404, _err("NOT_FOUND", f"Route {path} not found")
 
     def _publications(self, params: dict) -> tuple[int, object]:
-        q = PublicationsQuery(
-            source=(params.get("source") or [None])[0],
-            start_published=(params.get("startPublishedDate") or [None])[0],
-            end_published=(params.get("endPublishedDate") or [None])[0],
-            order_by="published_date",
-            page=_int_param(params, "page") or 1,
-            limit=_int_param(params, "limit") or 10,  # publications.ts:31
-        )
-        rows, meta = publications(self.pages, q)
+        rows, meta = publications(self.pages, _pub_query(params))
         return 200, {"results": [_pub_json(r) for r in rows.collect()], "meta": meta}
 
-    def _publication_by_hash(self, h: str) -> tuple[int, object | None]:
+    def _by_hash(self, h: str, respond) -> tuple[int, object | None]:
+        """``respond(row)`` for the page with hash ``h``. An invalid hash is
+        an empty 404 (publications.ts:122-126, detail-handler.ts:23-26); a
+        missing row is ApiError(NOT_FOUND), which the errorHandler serves
+        as 400 (error.ts:27-31)."""
         if not is_hash_valid(h):
-            return 404, None  # empty body, publications.ts:122-126
+            return 404, None
         rows = self.pages.where(F.col("hash") == h).limit(1).collect()
         if not rows:
-            # ApiError(NOT_FOUND) → errorHandler serves 400, error.ts:27-31
             return 400, _err("NOT_FOUND", "Metadata not found")
-        return 200, _pub_json(rows[0])
+        return respond(rows[0])
 
     # -- HTML web views (listing-handler.ts / detail-handler.ts) ------------
 
@@ -196,14 +205,7 @@ class ApiApp:
 
     def _listing_view(self, params: dict) -> tuple[int, object]:
         try:
-            q = PublicationsQuery(
-                source=(params.get("source") or [None])[0],
-                start_published=(params.get("startPublishedDate") or [None])[0],
-                end_published=(params.get("endPublishedDate") or [None])[0],
-                order_by="published_date",
-                page=_int_param(params, "page") or 1,
-                limit=_int_param(params, "limit") or 10,
-            )
+            q = _pub_query(params)
             rows, meta = publications(self.pages, q)
             names = self._source_names()
             pubs = [
@@ -228,13 +230,7 @@ class ApiApp:
             # which the errorHandler serves as 400 (quirk mirrored)
             return 400, _err("INTERNAL_ERROR", str(e))
 
-    def _detail_view(self, h: str, params: dict) -> tuple[int, object | None]:
-        if not is_hash_valid(h):
-            return 404, None  # detail-handler.ts:23-26, empty body
-        rows = self.pages.where(F.col("hash") == h).limit(1).collect()
-        if not rows:
-            return 400, _err("NOT_FOUND", "Metadata not found")
-        r = rows[0]
+    def _detail_view(self, r, params: dict) -> tuple[int, object]:
         content = markdown_to_html(r["content"]) if r["content"] else ""
         if not content:
             # detail-handler.ts:33-36

@@ -52,6 +52,7 @@ def test_store_backed_queries_inside_driver_window():
         "dedup_minhash_lsh",
         "dedup_clusters",
         "decontaminate_docs",
+        "similarity_lsh_recall",
         "similarity_ivf_recall",
         "similarity_sq_recall",
         "bpe_merges",

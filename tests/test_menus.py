@@ -136,7 +136,6 @@ def test_menu_error_total_matches_errors_report(tmp_path, monkeypatch, capsys):
         re.search(r"View crawling errors \((\d+)\)", capsys.readouterr().out)[1]
     )
 
-    spark = get_spark("test-menu-errors", master="local[2]", shuffle_partitions=2)
     try:
         wh = Warehouse(spark, wh_dir)
         fs = wh.read("field_stats", schemas.FIELD_STATS)
@@ -152,5 +151,22 @@ def test_menu_error_total_matches_errors_report(tmp_path, monkeypatch, capsys):
         report = render_errors_report(session, fs, "now")
         assert "missing required field: url" in report
         assert f"Total errors: {menu_total}\n" in report, (menu_total, report)
+    finally:
+        spark.stop()
+
+
+def test_cli_leaves_a_callers_session_running(tmp_path):
+    """A command run inside a caller's session (a test, a notebook) must
+    not stop it: the CLI stops only a session it started."""
+    from pyspark.sql import SparkSession
+
+    from ethos_spark import cli
+    from ethos_spark.session import get_spark
+
+    spark = get_spark("test-cli-session", master="local[2]", shuffle_partitions=2)
+    try:
+        assert cli.main(["sessions", "--warehouse", str(tmp_path / "wh")]) == 0
+        assert SparkSession.getActiveSession() is spark
+        assert spark.range(3).count() == 3
     finally:
         spark.stop()

@@ -79,7 +79,9 @@ def test_embedding_near_dup_pairs(spark, clustered):
 
 
 def test_lsh_recall_check_row(spark, clustered):
-    row = sim.lsh_recall_check(clustered, [0, 40, 80], k=5).collect()[0]
+    qids = [0, 40, 80]
+    ann = sim.lsh_ann_topk(clustered, qids, k=5)
+    row = sim.ann_recall_check(clustered, qids, ann, k=5).collect()[0]
     assert row.n_queries == 3 and bool(row.recall_ok)
 
 
@@ -93,7 +95,9 @@ def test_with_cluster_structure_raises_similarity(spark, clustered):
         "vec_id long, embedding array<float>",
     )
     shaped = sim.with_cluster_structure(iso, n_clusters=6, alpha=0.15)
-    row = sim.lsh_recall_check(shaped, list(range(10)), k=5).collect()[0]
+    qids = list(range(10))
+    ann = sim.lsh_ann_topk(shaped, qids, k=5)
+    row = sim.ann_recall_check(shaped, qids, ann, k=5).collect()[0]
     assert bool(row.recall_ok)
 
 
