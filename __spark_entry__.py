@@ -393,18 +393,17 @@ def simhash_pairs(spark, sf):
 
 
 def similarity_topk(spark, sf):
-    return sim.cosine_topk(_t(spark, sf, "embeddings"), [0, 1, 2, 3, 4], k=5)
+    emb = _t(spark, sf, "embeddings")
+    return sim.cosine_topk(emb, sim.collect_query_vecs(emb, [0, 1, 2, 3, 4]), k=5)
 
 
-def _emb_meta(sf) -> tuple[int, int]:
-    """(rows, dim) of the embeddings table, a file or a dataset dir, from
-    parquet footers + one row — driver-side reads, zero Spark jobs (guide
-    §1/§5: don't spend cluster jobs on request-sized sizing info)."""
+def _emb_meta(sf) -> int:
+    """Row count of the embeddings table, a file or a dataset dir, from
+    parquet footers — a driver-side read, zero Spark jobs (guide §1/§5:
+    don't spend cluster jobs on request-sized sizing info)."""
     import pyarrow.dataset as ds
 
-    d = ds.dataset(f"{sf}/embeddings.parquet", format="parquet")
-    first = d.head(1, columns=["embedding"])
-    return d.count_rows(), len(first.column("embedding")[0])
+    return ds.dataset(f"{sf}/embeddings.parquet", format="parquet").count_rows()
 
 
 def _centroids(emb, fp: str, variant: str, n_clusters: int = 16, iters: int = 3):
@@ -422,28 +421,52 @@ def _centroids(emb, fp: str, variant: str, n_clusters: int = 16, iters: int = 3)
     )
 
 
+def _recall_row(spark, emb, ann, min_recall: float):
+    """recall@10 of an ANN index vs exact cosine top-k over the first 20
+    vectors of the evaluation table ``emb``, as a one-row
+    (n_queries, recall_ok) DataFrame. ``ann(emb, queries)`` builds the
+    index's top-k. The query owns its cache, the way ``RoundScope`` owns a
+    round's: ``emb`` is cached for the query collect, the ANN and the exact
+    branch, and unpersisted before the row is returned."""
+    import pandas as pd
+
+    emb = emb.cache()
+    try:
+        queries = sim.collect_query_vecs(emb, list(range(20)))
+        # with_cluster_structure already spread the table across the
+        # executors: the exact branch skips its re-repartition
+        row = sim.ann_recall_check(
+            emb,
+            queries,
+            ann(emb, queries),
+            k=10,
+            min_recall=min_recall,
+            pre_partitioned=True,
+        ).collect()
+    finally:
+        emb.unpersist()
+    # from pandas: Arrow ships the row to the JVM, no Python-worker job
+    return spark.createDataFrame(
+        pd.DataFrame(row, columns=["n_queries", "recall_ok"]),
+        "n_queries long, recall_ok boolean",
+    )
+
+
 def similarity_lsh_recall(spark, sf):
     """Correctness row for the approximate index: recall@10 of LSH-ANN vs
     exact cosine top-k, computed in-Spark over cluster-structured vectors
     (hyperplane LSH is provably blind on the driver's isotropic synthetic
     embeddings — see ops/similarity.py module docstring). The oracle
-    asserts the stable outcome (20 queries, recall >= 0.8).
-
-    Optimized shape (r6): the cluster-structured table is computed ONCE
-    and cached (both the ANN branch and the exact-recall branch consume
-    it; the old plan re-ran the mixing join per branch), and table
-    rows/dim come from the parquet footer instead of count()/first()
-    jobs. Scores are bit-identical (see ops/similarity.py cumsum note)."""
-    rows, dim = _emb_meta(sf)
-    emb = sim.with_cluster_structure(_t(spark, sf, "embeddings")).cache()
-    qids = list(range(20))
-    # the mixing pass already spread the cache across the executors —
-    # skip the per-branch re-repartition of the cached table
-    ann = sim.lsh_ann_topk(
-        emb, qids, k=10, dim=dim, corpus_rows=rows, pre_partitioned=True
-    )
-    return sim.ann_recall_check(
-        emb, qids, ann, k=10, min_recall=0.8, pre_partitioned=True
+    asserts the stable outcome (20 queries, recall >= 0.8). Table rows
+    come from the parquet footer instead of a count() job."""
+    rows = _emb_meta(sf)
+    return _recall_row(
+        spark,
+        sim.with_cluster_structure(_t(spark, sf, "embeddings")),
+        lambda emb, queries: sim.lsh_ann_topk(
+            emb, queries, k=10, corpus_rows=rows, pre_partitioned=True
+        ),
+        0.8,
     )
 
 
@@ -456,14 +479,20 @@ def similarity_ivf_recall(spark, sf):
     VERDICT item 5): first call per embeddings content trains k-means and
     publishes the centroids; every later call — the bench re-run, repeated
     correctness invocations — loads them with ZERO k-means Spark jobs."""
-    emb = sim.with_cluster_structure(_t(spark, sf, "embeddings"))
-    qids = list(range(20))
     fp = artifacts.fingerprint(f"{sf}/embeddings.parquet")
-    cents = _centroids(emb, fp, "cluster-structured")
-    ann = sim.ivf_ann_topk(
-        emb, qids, k=10, n_clusters=16, nprobe=4, centroids=cents
+    return _recall_row(
+        spark,
+        sim.with_cluster_structure(_t(spark, sf, "embeddings")),
+        lambda emb, queries: sim.ivf_ann_topk(
+            emb,
+            queries,
+            k=10,
+            n_clusters=16,
+            nprobe=4,
+            centroids=_centroids(emb, fp, "cluster-structured"),
+        ),
+        0.8,
     )
-    return sim.ann_recall_check(emb, qids, ann, k=10, min_recall=0.8)
 
 
 def similarity_sq_recall(spark, sf):
@@ -483,7 +512,7 @@ def similarity_sq_recall(spark, sf):
     # replication stride sized from the real table (footer metadata): a
     # base table over 100k rows would make the old fixed stride collide
     # replica vec_ids and silently corrupt the recall measurement
-    n_base, _dim = _emb_meta(sf)
+    n_base = _emb_meta(sf)
     stride = max(100_000, n_base)
     big = sim.with_cluster_structure(
         spark.range(10)
@@ -493,24 +522,22 @@ def similarity_sq_recall(spark, sf):
             "embedding",
         )
     )
-    qids = list(range(20))
     fp = artifacts.fingerprint(f"{sf}/embeddings.parquet")
-    cents = _centroids(big, fp, "sq8-ivf-10x")
-    cents_sha1 = hashlib.sha1(cents.tobytes()).hexdigest()
-    path = artifacts.ArtifactStore().dir(
-        "sq8",
-        (fp, 10, cents_sha1),
-        {"centroids_sha1": cents_sha1, "n_clusters": 16, "schema": sim.SQ8_SCHEMA},
-        lambda tmp: sim.write_sq8_ivf_store(big, tmp, cents),
-    )
-    queries = [
-        (r.vec_id, list(r.embedding))
-        for r in big.where(F.col("vec_id").isin(qids)).collect()
-    ]
-    ann = sim.sq8_ivf_topk(
-        spark, path, cents, queries, k=10, nprobe=4, refine_with=big
-    )
-    return sim.ann_recall_check(big, qids, ann, k=10, min_recall=0.9)
+
+    def ann(big, queries):
+        cents = _centroids(big, fp, "sq8-ivf-10x")
+        cents_sha1 = hashlib.sha1(cents.tobytes()).hexdigest()
+        path = artifacts.ArtifactStore().dir(
+            "sq8",
+            (fp, 10, cents_sha1),
+            {"centroids_sha1": cents_sha1, "n_clusters": 16, "schema": sim.SQ8_SCHEMA},
+            lambda tmp: sim.write_sq8_ivf_store(big, tmp, cents),
+        )
+        return sim.sq8_ivf_topk(
+            spark, path, cents, queries, k=10, nprobe=4, refine_with=big
+        )
+
+    return _recall_row(spark, big, ann, 0.9)
 
 
 def embedding_near_dup(spark, sf):
@@ -523,7 +550,7 @@ def embedding_near_dup(spark, sf):
         (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
     )
     aug = emb.select("vec_id", "embedding").unionByName(dups)
-    rows, _dim = _emb_meta(sf)
+    rows = _emb_meta(sf)
     return sim.embedding_near_dup_pairs(
         aug, threshold=0.999, corpus_rows=rows + 10
     )

@@ -155,14 +155,15 @@ def main(argv: list[str] | None = None) -> int:
 
     from ethos_spark.session import get_spark
 
-    # stop only a session this command started: a caller's (a test, a
-    # notebook) must outlive the command
-    owned = SparkSession.getActiveSession() is None
-    spark = get_spark(f"ethos-{args.cmd}")
+    # a caller's session (a test, a notebook) is used as it is — its conf
+    # untouched — and outlives the command; stop only a session this
+    # command started
+    active = SparkSession.getActiveSession()
+    spark = active or get_spark(f"ethos-{args.cmd}")
     try:
         return _run(args, spark)
     finally:
-        if owned:
+        if active is None:
             spark.stop()
 
 

@@ -638,8 +638,6 @@ class CrawlRunner:
             lres.select(
                 F.col("host").alias("listing_host"),
                 "depth",
-                F.col("url").alias("page_url"),
-                "listing_url",
                 F.explode_outer("items").alias("it"),
                 F.size("excluded_urls").alias("n_excluded"),
                 "filtered_count",
@@ -647,7 +645,6 @@ class CrawlRunner:
             .select(
                 "listing_host",
                 "depth",
-                "page_url",
                 F.col("it.url").alias("url"),
                 F.col("it.title").alias("title"),
                 F.col("it.author").alias("author"),
@@ -1068,7 +1065,9 @@ class CrawlRunner:
         if sitemap_lines:
             from ethos_spark.sources.sitemap import discover_seed_urls
 
-            discovered = discover_seed_urls(self.spark, self.fetcher, sitemap_lines)
+            discovered = discover_seed_urls(
+                self.spark, self.fetcher, sitemap_lines, persist=scope.cache
+            )
             inj = self._frontier_rows(discovered.select("url"), "content").dropDuplicates(
                 ["url_hash"]
             )

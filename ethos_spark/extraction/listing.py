@@ -126,7 +126,7 @@ def extract_listing_items(html: str, config: ListingConfig, page_url: str) -> di
 
 
 LISTING_RESULT_DDL = (
-    "url string, listing_url string, items array<struct<url:string,"
+    "url string, items array<struct<url:string,"
     "title:string,author:string,published_raw:string,published_date:string,"
     "item_index:int>>, "
     "excluded_urls array<string>, filtered_count int, "
@@ -168,11 +168,10 @@ def extract_listing_stage(df, config: ListingConfig):
             out = []
             for url, r in pages:
                 if r is None:
-                    out.append((url, url, [], [], 0, [], None, []))
+                    out.append((url, [], [], 0, [], None, []))
                     continue
                 out.append(
                     (
-                        url,
                         url,
                         [
                             (
@@ -199,7 +198,6 @@ def extract_listing_stage(df, config: ListingConfig):
                 out,
                 columns=[
                     "url",
-                    "listing_url",
                     "items",
                     "excluded_urls",
                     "filtered_count",

@@ -1,12 +1,18 @@
 """Similarity search over embedding columns (array<float>).
 
-- brute-force cosine top-k: exact baseline, pure ``zip_with``/``aggregate``
-  Column expressions (JVM-side, no UDF), oracle-checked against DuckDB's
-  ``list_cosine_similarity``.
-- LSH-bucketed ANN: random-hyperplane signatures via a vectorized numpy
-  pandas UDF → candidates bucket-join → exact re-rank. The scale path: at
-  10^9 vectors only bucket-mates pay the dot product. (No SQL oracle —
-  approximate; the driver records a rows-only check.)
+Every top-k takes ``queries``, a list of ``(id, float64 vector)`` pairs the
+caller collects once (``collect_query_vecs``). Probes are built on the
+driver from those vectors, the corpus is read once, and one ``_ranked``
+window picks each query's top-k (score desc, neighbor id asc).
+
+- brute-force cosine top-k: exact baseline, one vectorized ``mapInPandas``
+  pass that scores each corpus vector against every query,
+  oracle-checked against DuckDB's ``list_cosine_similarity``.
+- LSH-bucketed ANN: random-hyperplane buckets (one numpy kernel, run in a
+  pandas UDF over the corpus and on the driver for the query probes plus
+  every one-bit flip) → broadcast bucket join → exact re-rank. The scale
+  path: at 10^9 vectors only bucket-mates pay the dot product. (No SQL
+  oracle — approximate; the driver records a self-check recall row.)
 
   LSH caveat, measured: on ISOTROPIC random vectors (the driver's synthetic
   embeddings table: max pairwise cosine ≈ 0.37) hyperplane collisions are
@@ -14,6 +20,9 @@
   embedding corpora are strongly clustered, where recall is high
   (demonstrated on clustered vectors in tests/test_similarity.py). For
   sparse-similarity corpora use the brute-force operator or raise probes.
+- IVF ANN: a deterministic k-means coarse quantizer; each query scores
+  only its ``nprobe`` nearest lists (picked on the driver). sq8 composes
+  it with an int8 code store partitioned by list.
 - embedding near-duplicate pairs: cosine ≥ t over bucket-mates.
 """
 
@@ -22,43 +31,19 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import LongType
 
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-# --- bit-exact numpy replicas of the Column-expression cosine -------------
+# --- exact cosine kernels ---------------------------------------------------
 #
-# Spark evaluates _dot/_norm as an interpreted sequential left fold over the
-# array (HigherOrderFunction lambdas are NOT codegen'd — ~100ns/element).
-# np.cumsum along the last axis performs the IDENTICAL sequence of IEEE-754
+# Every exact score is a sequential left fold over the array in float64:
+# np.cumsum along the last axis performs exactly that sequence of IEEE-754
 # double additions (a prefix sum is by definition the sequential fold), and
-# elementwise float32→float64 casts/multiplies are exact in both engines, so
-# the kernels below produce bit-identical doubles to the JVM expressions
-# while running vectorized across whole Arrow batches (guide §4.2). The
-# trailing `+ 0.0` canonicalizes an all-(-0.0) fold to +0.0 exactly like the
-# JVM's 0.0-seeded fold does.
+# elementwise float32→float64 casts/multiplies are exact, so the batch
+# kernel (cosine_topk) and the pair UDF (the ANN re-rank) give a pair the
+# same double whichever path scored it, vectorized across whole Arrow
+# batches (guide §4.2). The trailing `+ 0.0` canonicalizes an all-(-0.0)
+# fold to +0.0 exactly like a 0.0-seeded fold does.
 
 
 def _np_fold_rows(prod64: "np.ndarray") -> "np.ndarray":
@@ -102,8 +87,8 @@ def _exact_candidate_rows(
     against all Q queries and emits only rows that can still reach the
     global top-k (kth-best-per-batch minus _ROUND_BAND), so the downstream
     window sees ~Q·k rows per partition instead of the full n×Q pair
-    blow-up. Scores are bit-identical to the Column-expression cosine (see
-    the cumsum note above); the caller applies the same F.round + window."""
+    blow-up. Scores are bit-identical to the pair UDF's (see the cumsum
+    note above); the caller applies F.round + ``_ranked``."""
     q_ids = [int(q) for q, _ in queries]
     q_mat = np.stack([v for _, v in queries])  # (Q, dim) float64
     q_norms = _np_norms(q_mat)
@@ -168,41 +153,41 @@ def collect_query_vecs(
     )
 
 
-def cosine_topk(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vecs: list[tuple[int, "np.ndarray"]] | None = None,
-    pre_partitioned: bool = False,
-) -> DataFrame:
-    """Exact top-k neighbors for each query id (excluding itself).
-
-    One vectorized corpus pass: each partition emits only its local
-    top-k(+rounding band) candidates per query (bit-identical scores to the
-    old per-pair Column expression — see the cumsum fold note), then the
-    original F.round + row_number window picks the global top-k. Replaces a
-    broadcast-nested-loop pair blow-up (n×Q rows, 3 interpreted array folds
-    per pair, single-task on a one-row-group scan) with one repartitioned
-    scan and ~Q·k rows per partition."""
-    if query_vecs is None:
-        query_vecs = collect_query_vecs(emb, query_ids, id_col, vec_col)
-    scored = _exact_candidate_rows(
-        emb, query_vecs, k, id_col, vec_col, pre_partitioned
-    ).select(
-        "q_id",
-        "neighbor_id",
-        F.round(F.col("_score_raw"), 6).alias("score"),
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
+def _ranked(scored: DataFrame, k: int) -> DataFrame:
+    """The top-``k`` rows of each ``q_id`` by ``score`` desc, ties to the
+    lower ``neighbor_id``, with their 1-based ``rank``, ordered by
+    (q_id, rank). A caller that joins the result drops the sort
+    (Catalyst's EliminateSorts), so a shortlist pays only the window."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .orderBy("q_id", "rank")
     )
+
+
+def cosine_topk(
+    emb: DataFrame,
+    queries: list[tuple[int, "np.ndarray"]],
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    pre_partitioned: bool = False,
+) -> DataFrame:
+    """Exact top-k neighbors for each query (excluding itself).
+
+    One vectorized corpus pass: each partition emits only its local
+    top-k(+rounding band) candidates per query, then ``_ranked`` picks
+    the global top-k over the rounded scores — ~Q·k rows per partition
+    instead of an n×Q pair blow-up."""
+    scored = _exact_candidate_rows(
+        emb, queries, k, id_col, vec_col, pre_partitioned
+    ).select(
+        "q_id",
+        "neighbor_id",
+        F.round(F.col("_score_raw"), 6).alias("score"),
+    )
+    return _ranked(scored, k)
 
 
 # target mean bucket population: bucket count tracks corpus size so the
@@ -226,26 +211,27 @@ def _hyperplanes(dim: int, n_planes: int) -> np.ndarray:
     return rng.standard_normal((n_planes, dim)).astype(np.float64)
 
 
-def lsh_bucket_udf(dim: int, n_planes: int):
-    planes = _hyperplanes(dim, n_planes)
+def _lsh_buckets(m64: np.ndarray, n_planes: int) -> np.ndarray:
+    """Bucket of each row of an (n, dim) float64 matrix: bit j is the sign
+    of its dot with hyperplane j. The one bucket kernel — the corpus UDF and
+    the driver-side query probes both call it."""
+    signs = (m64 @ _hyperplanes(m64.shape[1], n_planes).T) > 0
+    return (signs.astype(np.int64) << np.arange(n_planes, dtype=np.int64)).sum(
+        axis=1
+    )
 
+
+def lsh_bucket_udf(n_planes: int):
     @F.pandas_udf(LongType())
     def bucket(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())  # (n, dim)
-        signs = (m.astype(np.float64) @ planes.T) > 0  # (n, planes)
-        out = np.zeros(len(m), dtype=np.int64)
-        for j in range(n_planes):
-            out |= signs[:, j].astype(np.int64) << j
-        return pd.Series(out)
+        return pd.Series(_lsh_buckets(_stack64(vecs), n_planes))
 
     return bucket
 
 
 def cosine_pairs_udf():
-    """Vectorized exact pair cosine: bit-identical doubles to the Column
-    expression ``cosine(a, b)`` (same sequential fold — see the cumsum
-    note), one Arrow batch at a time instead of three interpreted array
-    folds per row."""
+    """Vectorized exact pair cosine (the sequential fold of the cumsum
+    note), one Arrow batch at a time."""
 
     @F.pandas_udf("double")
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -258,73 +244,77 @@ def cosine_pairs_udf():
     return cos
 
 
+def _probes(
+    spark, queries: list[tuple[int, "np.ndarray"]], keys: list[list[int]], key: str
+) -> DataFrame:
+    """Request-sized probe rows (q_id, q_vec, ``key``): each query once per
+    bucket or list it probes. Built from pandas, so Arrow ships them to the
+    JVM (a Python list would start Python workers for its RDD)."""
+    rows = [
+        (int(q_id), np.asarray(v, dtype=np.float64), int(b))
+        for (q_id, v), ks in zip(queries, keys)
+        for b in ks
+    ]
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["q_id", "q_vec", key]),
+        f"q_id long, q_vec array<double>, {key} long",
+    )
+
+
+def _probe_topk(listed: DataFrame, probes: DataFrame, key: str, k: int) -> DataFrame:
+    """Top-k of each query over the corpus rows of its probed buckets or
+    lists. ``listed`` is (neighbor_id, _vec, ``key``), read once. Each
+    vector has ONE key and a query's probe keys are distinct, so every
+    (q_id, neighbor_id) pair is scored once — no dropDuplicates shuffle."""
+    scored = (
+        listed.join(F.broadcast(probes), key)
+        .where(F.col("neighbor_id") != F.col("q_id"))
+        .select(
+            "q_id",
+            "neighbor_id",
+            F.round(cosine_pairs_udf()(F.col("q_vec"), F.col("_vec")), 6).alias(
+                "score"
+            ),
+        )
+    )
+    return _ranked(scored, k)
+
+
 def lsh_ann_topk(
     emb: DataFrame,
-    query_ids: list[int],
+    queries: list[tuple[int, "np.ndarray"]],
     k: int = 5,
-    dim: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_planes: int | None = None,
     corpus_rows: int | None = None,
     pre_partitioned: bool = False,
 ) -> DataFrame:
     """Approximate top-k: only vectors in the query's hyperplane bucket are
     scored (multi-probe: exact bucket ∪ distance-1 buckets).
 
-    ``n_planes`` defaults to ``planes_for(corpus size)`` so buckets keep a
+    The plane count is ``planes_for(corpus size)`` so buckets keep a
     roughly constant population as the corpus grows; pass ``corpus_rows``
     if known to avoid the count job."""
-    if dim is None:
-        dim = len(emb.select(vec_col).first()[0])
-    if n_planes is None:
-        n_planes = planes_for(
-            corpus_rows if corpus_rows is not None else emb.count()
-        )
-    bucket = lsh_bucket_udf(dim, n_planes)
+    n_planes = planes_for(
+        corpus_rows if corpus_rows is not None else emb.count()
+    )
+    keys = []
+    for _, v in queries:
+        b = int(_lsh_buckets(np.asarray(v, dtype=np.float64)[None, :], n_planes)[0])
+        # multi-probe: the bucket and every one-bit flip of it
+        keys.append([b] + [b ^ (1 << j) for j in range(n_planes)])
     src = emb
     if not pre_partitioned:
         src = src.repartition(
             emb.sparkSession.sparkContext.defaultParallelism
         )
-    with_b = src.withColumn("bucket", bucket(F.col(vec_col))).cache()
-    q = with_b.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    # multi-probe: flip each bit once → N_PLANES+1 probe buckets per query
-    probes = q.select(
-        "q_id",
-        "q_vec",
-        F.explode(
-            F.array(
-                F.col("q_bucket"),
-                *[
-                    F.col("q_bucket").bitwiseXOR(F.lit(1 << j))
-                    for j in range(n_planes)
-                ],
-            )
-        ).alias("bucket"),
-    )
-    pairs = with_b.join(F.broadcast(probes), "bucket").where(
-        F.col(id_col) != F.col("q_id")
-    )
-    # each corpus vector lives in exactly ONE bucket and a query's probe
-    # buckets are pairwise distinct, so (q_id, neighbor_id) is already
-    # unique — no dropDuplicates shuffle needed
-    scored = pairs.select(
-        "q_id",
+    listed = src.select(
         F.col(id_col).alias("neighbor_id"),
-        F.round(
-            cosine_pairs_udf()(F.col("q_vec"), F.col(vec_col)), 6
-        ).alias("score"),
+        F.col(vec_col).alias("_vec"),
+        lsh_bucket_udf(n_planes)(F.col(vec_col)).alias("bucket"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("q_id", "rank")
+    return _probe_topk(
+        listed, _probes(emb.sparkSession, queries, keys, "bucket"), "bucket", k
     )
 
 
@@ -461,25 +451,40 @@ def kmeans_centroids(
     return cents
 
 
-def _assign_udf(spark, cents: np.ndarray):
-    """vec → nearest-centroid index by cosine (vectorized batch matmul)."""
-    cents_b = spark.sparkContext.broadcast(
-        cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-    )
+def _assign_udf(cents: np.ndarray):
+    """vec → nearest-centroid index by cosine (vectorized batch matmul);
+    the (K, dim) centroids ride in the closure."""
+    cn = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
 
     @F.pandas_udf(LongType())
     def assign(vecs: pd.Series) -> pd.Series:
-        c = cents_b.value  # (K, dim), L2-normalized
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
+        m = _stack64(vecs)
         m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(m @ c.T, axis=1).astype(np.int64))
+        return pd.Series(np.argmax(m @ cn.T, axis=1).astype(np.int64))
 
     return assign
 
 
+def _nearest_lists(
+    centroids: np.ndarray, queries: list[tuple[int, "np.ndarray"]], nprobe: int
+) -> list[list[int]]:
+    """The ``nprobe`` lists nearest each query by cosine, ties to the lower
+    list id — driver-side, one (K,) dot per query."""
+    cn = centroids / np.maximum(
+        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
+    )
+    out = []
+    for _, vec in queries:
+        v = np.asarray(vec, dtype=np.float64)
+        sims = cn @ (v / max(np.linalg.norm(v), 1e-12))
+        order = np.lexsort((np.arange(len(sims)), -sims))[:nprobe]
+        out.append([int(li) for li in order])
+    return out
+
+
 def ivf_ann_topk(
     emb: DataFrame,
-    query_ids: list[int],
+    queries: list[tuple[int, "np.ndarray"]],
     k: int = 5,
     n_clusters: int = 16,
     nprobe: int = 4,
@@ -499,57 +504,20 @@ def ivf_ann_topk(
     if centroids is None:
         centroids = kmeans_centroids(emb, n_clusters, 3, id_col, vec_col)
     spark = emb.sparkSession
-    assign = _assign_udf(spark, centroids)
-    n_parts = spark.sparkContext.defaultParallelism
-    listed = (
-        emb.repartition(n_parts)
-        .withColumn("_list", assign(F.col(vec_col)))
-        .cache()
-    )
-    q = listed.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    )
-    # nprobe nearest lists per query, computed driver-free: cross the tiny
-    # query side with a literal centroid table and window-top-nprobe
-    cent_rows = [
-        (int(i), [float(x) for x in c]) for i, c in enumerate(centroids)
-    ]
-    cents_df = spark.createDataFrame(cent_rows, "_list long, _cvec array<double>")
-    probes = (
-        q.crossJoin(F.broadcast(cents_df))
-        .withColumn("_sim", cosine(F.col("q_vec"), F.col("_cvec")))
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(F.desc("_sim"), F.asc("_list"))
-            ),
-        )
-        .where(F.col("_rk") <= nprobe)
-        .select("q_id", "q_vec", "_list")
-    )
-    pairs = listed.join(F.broadcast(probes), "_list").where(
-        F.col(id_col) != F.col("q_id")
-    )
-    # each corpus vector has exactly ONE list and a query's probe lists are
-    # distinct (row_number over the centroid table) → pairs already unique
-    scored = pairs.select(
-        "q_id",
+    listed = emb.repartition(spark.sparkContext.defaultParallelism).select(
         F.col(id_col).alias("neighbor_id"),
-        F.round(
-            cosine_pairs_udf()(F.col("q_vec"), F.col(vec_col)), 6
-        ).alias("score"),
+        F.col(vec_col).alias("_vec"),
+        _assign_udf(centroids)(F.col(vec_col)).alias("_list"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("q_id", "rank")
+    probes = _probes(
+        spark, queries, _nearest_lists(centroids, queries, nprobe), "_list"
     )
+    return _probe_topk(listed, probes, "_list", k)
 
 
 def ann_recall_check(
     emb: DataFrame,
-    query_ids: list[int],
+    queries: list[tuple[int, "np.ndarray"]],
     ann_topk: DataFrame,
     k: int = 10,
     min_recall: float = 0.8,
@@ -560,7 +528,7 @@ def ann_recall_check(
     """Recall@k of any ANN result against the exact ``cosine_topk`` —
     one row (n_queries, recall_ok)."""
     exact = cosine_topk(
-        emb, query_ids, k, id_col, vec_col, pre_partitioned=pre_partitioned
+        emb, queries, k, id_col, vec_col, pre_partitioned=pre_partitioned
     )
     hits = (
         exact.join(ann_topk, ["q_id", "neighbor_id"], "left_semi")
@@ -584,17 +552,13 @@ def embedding_near_dup_pairs(
     threshold: float = 0.99,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_planes: int | None = None,
     corpus_rows: int | None = None,
 ) -> DataFrame:
     """Near-duplicate vectors by cosine ≥ t, bucket-blocked via LSH so the
     pair join is bucket-local instead of a cross join."""
-    dim = len(emb.select(vec_col).first()[0])
-    if n_planes is None:
-        n_planes = planes_for(
-            corpus_rows if corpus_rows is not None else emb.count()
-        )
-    bucket = lsh_bucket_udf(dim, n_planes)
+    bucket = lsh_bucket_udf(
+        planes_for(corpus_rows if corpus_rows is not None else emb.count())
+    )
     n_parts = emb.sparkSession.sparkContext.defaultParallelism
     with_b = emb.repartition(n_parts).withColumn(
         "bucket", bucket(F.col(vec_col))
@@ -655,13 +619,11 @@ def write_sq8_ivf_store(
     each holding only codes; full-precision vectors stay in the cold
     float store and are touched only by the shortlist refine. One shuffle
     at ingest (repartition by list) buys one directory per list."""
-    spark = emb.sparkSession
-    assign = _assign_udf(spark, centroids)
     (
         emb.select(
             F.col(id_col),
             _sq8_code(vec_col).alias("code"),
-            assign(F.col(vec_col)).alias("_list"),
+            _assign_udf(centroids)(F.col(vec_col)).alias("_list"),
         )
         .repartition("_list")
         .write.mode("overwrite")
@@ -674,7 +636,7 @@ def sq8_ivf_topk(
     spark,
     path: str,
     centroids: np.ndarray,
-    queries: list[tuple[int, list[float]]],
+    queries: list[tuple[int, "np.ndarray"]],
     k: int = 10,
     nprobe: int = 4,
     refine_with: DataFrame | None = None,
@@ -703,13 +665,12 @@ def sq8_ivf_topk(
        for exact-cosine final ordering (queries carry their own
        full-precision vectors).
     """
-    cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
     probe_rows = []
     q_vec_rows = []
     needed: set[int] = set()
-    for q_id, vec in queries:
+    for (q_id, vec), lists in zip(
+        queries, _nearest_lists(centroids, queries, nprobe)
+    ):
         v = np.asarray(vec, dtype=np.float64)
         u = v / max(np.linalg.norm(v), 1e-12)
         # HALF_UP (round half away from zero) to match _sq8_code's
@@ -720,13 +681,13 @@ def sq8_ivf_topk(
             int(x) for x in np.sign(scaled) * np.floor(np.abs(scaled) + 0.5)
         ]
         q_vec_rows.append((int(q_id), [float(x) for x in vec]))
-        sims = cn @ u
-        order = np.lexsort((np.arange(len(sims)), -sims))[:nprobe]
-        for li in order:
-            probe_rows.append((int(q_id), q_code, int(li)))
-            needed.add(int(li))
+        for li in lists:
+            probe_rows.append((int(q_id), q_code, li))
+            needed.add(li)
+    # pandas-built, like _probes: Arrow ships the rows, no Python workers
     probes = spark.createDataFrame(
-        probe_rows, "q_id long, q_code array<int>, _list int"
+        pd.DataFrame(probe_rows, columns=["q_id", "q_code", "_list"]),
+        "q_id long, q_code array<int>, _list int",
     )
     scan = spark.read.parquet(path).where(F.col("_list").isin(sorted(needed)))
     n_probed = scan.count()  # metadata-only over the pruned partitions
@@ -745,19 +706,13 @@ def sq8_ivf_topk(
     coarse = pairs.select(
         "q_id", F.col(id_col).alias("neighbor_id"), dot.alias("score")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     if refine_with is None:
-        return (
-            coarse.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .orderBy("q_id", "rank")
-        )
-    shortlist = (
-        coarse.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= n_cand)
-        .select("q_id", "neighbor_id")
+        return _ranked(coarse, k)
+    shortlist = _ranked(coarse, n_cand).select("q_id", "neighbor_id")
+    qv = spark.createDataFrame(
+        pd.DataFrame(q_vec_rows, columns=["q_id", "q_vec"]),
+        "q_id long, q_vec array<double>",
     )
-    qv = spark.createDataFrame(q_vec_rows, "q_id long, q_vec array<double>")
     nv = refine_with.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("n_vec")
     )
@@ -772,11 +727,4 @@ def sq8_ivf_topk(
             ).alias("score"),
         )
     )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .orderBy("q_id", "rank")
-    )
+    return _ranked(refined, k)

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import io
 import re
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 import pyspark.sql.types as T
@@ -124,11 +124,17 @@ def discover_seed_urls(
     fetcher,
     sitemap_urls: list[str],
     max_depth: int = 3,
+    persist: Callable[[DataFrame], DataFrame] = DataFrame.cache,
 ) -> DataFrame:
     """Iteratively resolve sitemap indexes down to page URLs through any
     Fetcher (corpus, HTTP, WARC gateway): fetch the current sitemap set,
     parse, recurse into 'sitemap' children up to ``max_depth``; returns
-    the distinct page-URL frontier (url, lastmod)."""
+    the distinct page-URL frontier (url, lastmod).
+
+    ``persist`` caches each depth's parsed rows (read by both the page
+    and the child-sitemap branch); a caller that owns the lifetime of its
+    cached relations (the crawl round's ``RoundScope.cache``) passes its
+    own, so the caches are released with it."""
     import pyspark.sql.functions as F
 
     pending = spark.createDataFrame(
@@ -141,7 +147,7 @@ def discover_seed_urls(
         fetched = fetcher.fetch(pending, stage="listing").where(
             F.col("html").isNotNull()
         )
-        parsed = extract_sitemap_urls(fetched).cache()
+        parsed = persist(extract_sitemap_urls(fetched))
         got_pages = parsed.where(F.col("kind") == "page").select(
             "url", "lastmod"
         )

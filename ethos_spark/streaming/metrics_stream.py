@@ -47,19 +47,3 @@ def rolling_crawl_counters(metrics: DataFrame) -> DataFrame:
         )
     )
 
-
-def run_to_memory(
-    spark: SparkSession, warehouse_path: str, table_name: str = "crawl_counters"
-):
-    """Drain all currently-available metric files into an in-memory sink
-    (deterministic: availableNow trigger). Returns the finished query."""
-    agg = rolling_crawl_counters(read_metrics_stream(spark, warehouse_path))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

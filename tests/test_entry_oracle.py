@@ -43,11 +43,14 @@ def test_query_matches_oracle(spark, con, name):
 
 def test_store_backed_queries_inside_driver_window():
     """The external oracle gate checks only the first 50 queries() entries;
-    the queries backed by derived artifact stores, and the near-dup family
-    that reads the shingle-set relation, must stay inside them."""
+    the queries backed by derived artifact stores, the near-dup family
+    that reads the shingle-set relation and the similarity family must
+    stay inside them."""
     order = list(E.queries())
     assert len(order) == 53
     for name in (
+        "similarity_topk",
+        "embedding_near_dup",
         "dedup_ngram_jaccard",
         "dedup_minhash_lsh",
         "dedup_clusters",
@@ -60,6 +63,27 @@ def test_store_backed_queries_inside_driver_window():
     ):
         assert order.index(name) < 50, (name, order.index(name))
     assert order.index("dedup_minhash_lsh") == 22
+
+
+def test_ann_queries_leave_no_cache(spark):
+    """The ANN top-ks cache nothing, and each recall entry owns the cache
+    of its evaluation table: after them the session pins no more RDDs
+    than before."""
+    from ethos_spark.ops import similarity as sim
+
+    jsc = spark.sparkContext._jsc
+    cached_before = jsc.getPersistentRDDs().size()
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    queries = sim.collect_query_vecs(emb, [0, 1, 2])
+    assert sim.lsh_ann_topk(emb, queries, k=3).count() == 9
+    assert sim.ivf_ann_topk(emb, queries, k=3, n_clusters=8, nprobe=2).count() == 9
+    for name in (
+        "similarity_lsh_recall",
+        "similarity_ivf_recall",
+        "similarity_sq_recall",
+    ):
+        assert E.queries()[name](spark, SF).count() == 1
+    assert jsc.getPersistentRDDs().size() == cached_before
 
 
 def test_entry_smoke(spark):

@@ -157,7 +157,8 @@ def test_menu_error_total_matches_errors_report(tmp_path, monkeypatch, capsys):
 
 def test_cli_leaves_a_callers_session_running(tmp_path):
     """A command run inside a caller's session (a test, a notebook) must
-    not stop it: the CLI stops only a session it started."""
+    not stop it, nor rewrite its runtime conf: the CLI uses an active
+    session as it is and stops only a session it started."""
     from pyspark.sql import SparkSession
 
     from ethos_spark import cli
@@ -167,6 +168,7 @@ def test_cli_leaves_a_callers_session_running(tmp_path):
     try:
         assert cli.main(["sessions", "--warehouse", str(tmp_path / "wh")]) == 0
         assert SparkSession.getActiveSession() is spark
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
         assert spark.range(3).count() == 3
     finally:
         spark.stop()

@@ -19,7 +19,8 @@ KEEP = {
     "HttpFetcher": "the real-network fetch path (tests/test_http_fetcher_e2e.py)",
     "classify": "scalar langid oracle the batch classifier is tested against",
     "build_corpus": "reference simulator's in-memory corpus for parity tests",
-    "run_to_memory": "drains the crawl metrics stream into a queryable table",
+    "read_metrics_stream": "file-source stream over the metrics table",
+    "rolling_crawl_counters": "the A4 counters as a streaming aggregation",
     "delete_session": "admin mutation of the reference viewer (session delete)",
     "counts_by_source": "reference serve query (ContentMetadataStore counts)",
     "count_by_source": "reference serve query (ContentMetadataStore count)",

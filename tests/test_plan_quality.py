@@ -128,6 +128,7 @@ def test_ivf_probe_is_broadcast(spark):
     from ethos_spark.ops import similarity as sim
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    ann = sim.ivf_ann_topk(emb, [0, 1, 2], k=3, n_clusters=8, nprobe=2)
+    queries = sim.collect_query_vecs(emb, [0, 1, 2])
+    ann = sim.ivf_ann_topk(emb, queries, k=3, n_clusters=8, nprobe=2)
     plan = formatted_plan(ann)
     assert "BroadcastHashJoin" in plan

@@ -97,6 +97,8 @@ def spark():
 
 
 def test_loopback_robots_disallow_and_sitemap_honored(spark, tmp_path):
+    jsc = spark.sparkContext._jsc
+    cached_before = jsc.getPersistentRDDs().size()
     srv = CorpusHTTPServer(_url_map()).start()
     try:
         wh = Warehouse(spark, str(tmp_path / "wh"))
@@ -111,6 +113,9 @@ def test_loopback_robots_disallow_and_sitemap_honored(spark, tmp_path):
         summary = runner.run()
     finally:
         srv.stop()
+    # the sitemap bootstrap caches through the round's scope: nothing of
+    # the rounds stays pinned after the run
+    assert jsc.getPersistentRDDs().size() == cached_before
 
     urls = {
         r.url: r.processed_order

@@ -35,7 +35,8 @@ def clustered(spark):
 
 
 def test_brute_force_topk_exact(spark, clustered):
-    out = sim.cosine_topk(clustered, [0, 40, 80], k=5)
+    queries = sim.collect_query_vecs(clustered, [0, 40, 80])
+    out = sim.cosine_topk(clustered, queries, k=5)
     rows = out.collect()
     assert len(rows) == 15
     # exact top-k on clustered data returns same-cluster neighbors
@@ -51,14 +52,14 @@ def test_brute_force_topk_exact(spark, clustered):
 
 
 def test_lsh_ann_recall_on_clustered(spark, clustered):
-    qids = [0, 40, 80, 120, 160]
+    queries = sim.collect_query_vecs(clustered, [0, 40, 80, 120, 160])
     exact = {
         (r.q_id, r.neighbor_id)
-        for r in sim.cosine_topk(clustered, qids, k=5).collect()
+        for r in sim.cosine_topk(clustered, queries, k=5).collect()
     }
     ann = {
         (r.q_id, r.neighbor_id)
-        for r in sim.lsh_ann_topk(clustered, qids, k=5, dim=DIM).collect()
+        for r in sim.lsh_ann_topk(clustered, queries, k=5).collect()
     }
     recall = len(exact & ann) / len(exact)
     assert recall >= 0.8, f"ANN recall {recall} below 0.8 on clustered data"
@@ -79,9 +80,9 @@ def test_embedding_near_dup_pairs(spark, clustered):
 
 
 def test_lsh_recall_check_row(spark, clustered):
-    qids = [0, 40, 80]
-    ann = sim.lsh_ann_topk(clustered, qids, k=5)
-    row = sim.ann_recall_check(clustered, qids, ann, k=5).collect()[0]
+    queries = sim.collect_query_vecs(clustered, [0, 40, 80])
+    ann = sim.lsh_ann_topk(clustered, queries, k=5)
+    row = sim.ann_recall_check(clustered, queries, ann, k=5).collect()[0]
     assert row.n_queries == 3 and bool(row.recall_ok)
 
 
@@ -95,18 +96,18 @@ def test_with_cluster_structure_raises_similarity(spark, clustered):
         "vec_id long, embedding array<float>",
     )
     shaped = sim.with_cluster_structure(iso, n_clusters=6, alpha=0.15)
-    qids = list(range(10))
-    ann = sim.lsh_ann_topk(shaped, qids, k=5)
-    row = sim.ann_recall_check(shaped, qids, ann, k=5).collect()[0]
+    queries = sim.collect_query_vecs(shaped, list(range(10)))
+    ann = sim.lsh_ann_topk(shaped, queries, k=5)
+    row = sim.ann_recall_check(shaped, queries, ann, k=5).collect()[0]
     assert bool(row.recall_ok)
 
 
 def test_ivf_ann_recall_on_clustered(spark, clustered):
     """IVF (deterministic k-means quantizer + nprobe probing) reaches
     recall >= 0.8 on clustered vectors, verified via ann_recall_check."""
-    qids = [0, 40, 80, 120, 160]
-    ann = sim.ivf_ann_topk(clustered, qids, k=5, n_clusters=16, nprobe=4)
-    row = sim.ann_recall_check(clustered, qids, ann, k=5).collect()[0]
+    queries = sim.collect_query_vecs(clustered, [0, 40, 80, 120, 160])
+    ann = sim.ivf_ann_topk(clustered, queries, k=5, n_clusters=16, nprobe=4)
+    row = sim.ann_recall_check(clustered, queries, ann, k=5).collect()[0]
     assert row.n_queries == 5 and bool(row.recall_ok)
 
 
@@ -157,6 +158,7 @@ def test_ivf_centroid_persistence(spark, tmp_path):
     cents2 = centroids(store, key + "-next")
     assert np.allclose(cents2, cents)  # same corpus -> same deterministic fit
     # cached centroids drive ivf_ann_topk to the same results as fresh ones
-    a = sim.ivf_ann_topk(emb, list(range(5)), k=5, n_clusters=8, centroids=cents)
-    b = sim.ivf_ann_topk(emb, list(range(5)), k=5, n_clusters=8, centroids=again)
+    queries = sim.collect_query_vecs(emb, list(range(5)))
+    a = sim.ivf_ann_topk(emb, queries, k=5, n_clusters=8, centroids=cents)
+    b = sim.ivf_ann_topk(emb, queries, k=5, n_clusters=8, centroids=again)
     assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]

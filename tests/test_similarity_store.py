@@ -24,6 +24,7 @@ def test_sq8_ivf_composition_pruned_scan_scaled_shortlist(spark, tmp_path):
     corpus (where a fixed 5k shortlist multiplier was the flagged cliff)."""
     from ethos_spark.ops.similarity import (
         ann_recall_check,
+        collect_query_vecs,
         sq8_ivf_topk,
         write_sq8_ivf_store,
     )
@@ -46,11 +47,7 @@ def test_sq8_ivf_composition_pruned_scan_scaled_shortlist(spark, tmp_path):
     path = str(tmp_path / "sq8_ivf_store")
     write_sq8_ivf_store(big, path, cents)
 
-    qids = list(range(10))
-    queries = [
-        (r.vec_id, list(r.embedding))
-        for r in big.where(F.col("vec_id").isin(qids)).collect()
-    ]
+    queries = collect_query_vecs(big, list(range(10)))
     got = sq8_ivf_topk(
         spark, path, cents, queries, k=10, nprobe=3, refine_with=big
     )
@@ -70,7 +67,7 @@ def test_sq8_ivf_composition_pruned_scan_scaled_shortlist(spark, tmp_path):
         .count()
     )
     assert n_pruned < n_all and n_pruned <= 3 * (n_all // 8 + 1)
-    out = ann_recall_check(big, qids, got, k=10, min_recall=0.9).collect()
+    out = ann_recall_check(big, queries, got, k=10, min_recall=0.9).collect()
     assert out[0].recall_ok, out
     # the store really holds int8-range codes, not floats
     r0 = spark.read.parquet(path).first()

@@ -22,7 +22,11 @@ def spark():
 def test_metrics_stream_drains_rounds(spark, tmp_path):
     """File-source stream over the metrics table: two round commits → one
     availableNow drain sees both, aggregated per round with the A4 shape."""
-    from ethos_spark.streaming.metrics_stream import run_to_memory
+    from ethos_spark.streaming.events_stream import drain_to_memory
+    from ethos_spark.streaming.metrics_stream import (
+        read_metrics_stream,
+        rolling_crawl_counters,
+    )
 
     wh = tmp_path / "wh"
     rows_r1 = [("s1", 1, 0, 10, 8, 2, 1, 3, 8, 12.5, 30.0)]
@@ -34,10 +38,11 @@ def test_metrics_stream_drains_rounds(spark, tmp_path):
         spark.createDataFrame(rows, schemas.METRICS).write.parquet(
             str(wh / "metrics" / f"data-{i}")
         )
-    run_to_memory(spark, str(wh), table_name="t_counters")
+    counters = drain_to_memory(
+        rolling_crawl_counters(read_metrics_stream(spark, str(wh)))
+    )
     out = {
-        (r.session_id, r["round"]): r.asDict()
-        for r in spark.sql("select * from t_counters").collect()
+        (r.session_id, r["round"]): r.asDict() for r in counters.collect()
     }
     assert out[("s1", 1)]["items_processed"] == 8
     assert out[("s1", 2)]["items_processed"] == 9
