@@ -376,8 +376,15 @@ def prime_signature_store(spark, sf):
 def dedup_clusters(spark, sf):
     """Connected components over exact near-dup pairs: (doc_id, cluster_id
     = min reachable doc id) — the canonical-doc selection step after pair
-    generation. Oracle: DuckDB recursive CTE transitive closure."""
-    return dd.dup_clusters(dd.ngram_jaccard_pairs(_neardup_sets(spark, sf), 0.6))
+    generation. Oracle: DuckDB recursive CTE transitive closure. The query
+    owns the label checkpoint the clusters read: it computes the rows,
+    releases the checkpoint and returns the rows."""
+    clusters = dd.dup_clusters(dd.ngram_jaccard_pairs(_neardup_sets(spark, sf), 0.6))
+    try:
+        rows = clusters.toPandas()
+    finally:
+        dd.release_checkpoints(clusters)
+    return spark.createDataFrame(rows, clusters.schema)
 
 
 def dedup_simhash(spark, sf):
@@ -561,12 +568,27 @@ def pagerank_hosts(spark, sf):
     integer-arithmetic PageRank rounds (ops/graph.py) over a host graph
     derived deterministically from the events table. Fixed-point int64
     micro-units make the iterative result bit-identical cross-engine —
-    float PageRank can never hash-match a second engine."""
+    float PageRank can never hash-match a second engine. The query owns
+    the node-set cache of ``pagerank_fixed``, the way ``_recall_row`` owns
+    its evaluation table: it computes the ≤ 50 rank rows, unpersists the
+    cache and returns the rows."""
     e = _t(spark, sf, "events").select(
         (F.col("user_id") % 50).alias("src"),
         (F.col("event_id") % 50).alias("dst"),
     )
-    return gr.pagerank_fixed(e, iters=5)
+    cached: list[DataFrame] = []
+
+    def persist(df: DataFrame) -> DataFrame:
+        cached.append(df.cache())
+        return df
+
+    try:
+        ranks = gr.pagerank_fixed(e, iters=5, persist=persist)
+        rows = ranks.toPandas()
+    finally:
+        for df in cached:
+            df.unpersist()
+    return spark.createDataFrame(rows, ranks.schema)
 
 
 def robots_gate_docs(spark, sf):

@@ -23,6 +23,7 @@ and the cap below guards memory.
 from __future__ import annotations
 
 import math
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -33,15 +34,18 @@ from pyspark.sql.types import BooleanType
 MAX_BLOOM_BYTES = 256 * 1024 * 1024  # sandbox cap
 
 
-def dedup_within_batch(items: DataFrame, order_cols: list[str]) -> DataFrame:
-    """J1: keep the first occurrence of each url_hash in deterministic
-    listing order. Adds nothing; drops later duplicates."""
+def first_per_url(order_cols: list[str]) -> Callable[[DataFrame], DataFrame]:
+    """J1: build the ``url_hash`` window once and return the dedup that
+    keeps the first occurrence of each url_hash in deterministic listing
+    order. Adds nothing; drops later duplicates."""
     w = Window.partitionBy("url_hash").orderBy(*[F.col(c) for c in order_cols])
-    return (
-        items.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    rn = F.row_number().over(w)
+    first = F.col("_rn") == 1
+
+    def dedup(items: DataFrame) -> DataFrame:
+        return items.withColumn("_rn", rn).where(first).drop("_rn")
+
+    return dedup
 
 
 class BloomFilter:

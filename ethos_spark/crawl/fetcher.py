@@ -111,6 +111,9 @@ class CorpusFetcher:
         owns_stage_dir: bool = False,
     ):
         self._corpus = corpus.select("url", "html")
+        # built once: a crawl round fetches at least twice, and each F.*
+        # call is a round of driver-thread Py4J commands
+        self._no_fetch_ms = F.lit(None).cast("double")
         self._bucketed_table = bucketed_table
         self._bucket_count = bucket_count
         self._stage_dir = stage_dir
@@ -239,7 +242,7 @@ class CorpusFetcher:
             out = cand.join(reduced, "url")
         else:
             out = cand.join(self._corpus, "url")
-        return out.withColumn("fetch_ms", F.lit(None).cast("double"))
+        return out.withColumn("fetch_ms", self._no_fetch_ms)
 
 
 class HttpFetcher:

@@ -47,11 +47,10 @@ def assign_sequential_order(
     ``RoundScope.cache``) so it is released with that owner."""
     spark = df.sparkSession
     n = n_parts or spark.sparkContext.defaultParallelism
-    # pin the range boundaries between the two passes
-    parted = persist(
-        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
-    )
+    # pin the range boundaries between the two passes (one key Column per
+    # order column serves both: each F.col is driver-thread Py4J work)
+    keys = [F.col(c) for c in order_cols]
+    parted = persist(df.repartitionByRange(n, *keys).sortWithinPartitions(*keys))
     counts = dict(
         parted.groupBy(F.spark_partition_id().alias("_pid")).count().collect()
     )

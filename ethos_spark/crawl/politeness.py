@@ -15,22 +15,33 @@ north_rule requirements with reference analogues:
 
 from __future__ import annotations
 
+from typing import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 
-def politeness_topk(
-    pending: DataFrame,
+def host_topk(
     budget_per_host: int,
     order_cols: list[str] = ("priority", "discovered_ts", "url_hash"),
-) -> tuple[DataFrame, DataFrame]:
-    """Return (scheduled, overflow) — at most ``budget_per_host`` rows per
-    host this round, in deterministic priority order."""
+) -> Callable[[DataFrame], tuple[DataFrame, DataFrame]]:
+    """Build the per-host window and its two budget filters once and return
+    the split that applies them: ``split(pending)`` is (scheduled,
+    overflow) — at most ``budget_per_host`` rows per host this round, in
+    deterministic priority order. A caller that splits every round builds
+    the Column expressions once (each ``F.*`` call costs JVM round trips)."""
     w = Window.partitionBy("host").orderBy(*[F.col(c) for c in order_cols])
-    ranked = pending.withColumn("_rank", F.row_number().over(w))
-    scheduled = ranked.where(F.col("_rank") <= budget_per_host).drop("_rank")
-    overflow = ranked.where(F.col("_rank") > budget_per_host).drop("_rank")
-    return scheduled, overflow
+    rank = F.row_number().over(w)
+    in_budget = F.col("_rank") <= budget_per_host
+    over_budget = F.col("_rank") > budget_per_host
+
+    def split(pending: DataFrame) -> tuple[DataFrame, DataFrame]:
+        ranked = pending.withColumn("_rank", rank)
+        scheduled = ranked.where(in_budget).drop("_rank")
+        overflow = ranked.where(over_budget).drop("_rank")
+        return scheduled, overflow
+
+    return split
 
 
 def robots_gate(

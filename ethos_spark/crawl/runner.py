@@ -24,6 +24,7 @@ import time
 from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import cached_property
 from typing import Callable
 
 import pyspark.sql.functions as F
@@ -31,9 +32,9 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from ethos_spark import schemas
 from ethos_spark.catalog import Warehouse
-from ethos_spark.crawl.dedup import BloomFilter, anti_join_seen, dedup_within_batch
+from ethos_spark.crawl.dedup import BloomFilter, anti_join_seen, first_per_url
 from ethos_spark.crawl.ordering import assign_sequential_order
-from ethos_spark.crawl.politeness import politeness_topk, robots_gate, salt_hot_hosts
+from ethos_spark.crawl.politeness import host_topk, robots_gate, salt_hot_hosts
 from ethos_spark.extraction.content import extract_content_stage
 from ethos_spark.extraction.listing import extract_listing_stage
 from ethos_spark.ops.graph import pagerank_fixed
@@ -60,6 +61,54 @@ STOP_REASONS = ("all_duplicates", "max_pages", "no_next_button")
 CANDIDATE_COLS = (
     "url", "url_hash", "host", "host_hash", "title", "author", "published_date"
 )
+# the defaulted frontier columns a frontier row keeps when its source has them
+FRONTIER_KEPT_COLS = {"depth", "listing_order", "title", "author", "published_date"}
+
+
+def url_cols(url_col: str = "url") -> dict[str, Column]:
+    """url_canon / url_hash / host / host_hash as pure Column exprs over
+    ``url_col``, for one ``withColumns``. The canonical form MATCHES
+    functions.urlfns.canonicalize_url exactly (pytest asserts equality on
+    port/query/fragment cases): lowercase scheme+host, strip fragment +
+    userinfo, keep NON-DEFAULT ports (http://h:8080/p must not collide with
+    http://h/p in the seen set), default path '/', query params sorted on
+    raw k=v strings."""
+    u = F.col(url_col)
+    no_frag = F.substring_index(F.trim(u), "#", 1)
+    scheme = F.lower(F.regexp_extract(no_frag, r"^([a-zA-Z][a-zA-Z0-9+.-]*)://", 1))
+    authority = F.regexp_extract(no_frag, r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)", 1)
+    host_port = F.substring_index(authority, "@", -1)  # drop userinfo
+    host = F.lower(F.substring_index(host_port, ":", 1))
+    port = F.when(
+        host_port.contains(":"), F.substring_index(host_port, ":", -1)
+    ).otherwise(F.lit(""))
+    keep_port = (
+        (port != "")
+        & ~((scheme == "http") & (port == "80"))
+        & ~((scheme == "https") & (port == "443"))
+    )
+    netloc = F.when(keep_port, F.concat(host, F.lit(":"), port)).otherwise(host)
+    rest = F.regexp_replace(no_frag, r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*", "")
+    path = F.substring_index(rest, "?", 1)
+    path = F.when(path == "", "/").otherwise(path)
+    raw_query = F.regexp_extract(rest, r"\?(.*)$", 1)
+    sorted_query = F.array_join(
+        F.array_sort(F.filter(F.split(raw_query, "&"), lambda p: p != "")),
+        "&",
+    )
+    canon = F.concat(
+        scheme,
+        F.lit("://"),
+        netloc,
+        path,
+        F.when(sorted_query == "", "").otherwise(F.concat(F.lit("?"), sorted_query)),
+    )
+    return {
+        "url_canon": canon,
+        "url_hash": F.sha1(canon),
+        "host": host,
+        "host_hash": F.xxhash64(host),
+    }
 
 
 @dataclass
@@ -248,6 +297,423 @@ class _Content:
     n_blocked: int
 
 
+class _RoundExprs:
+    """The crawl round's Column expressions that depend on no per-round
+    value, built once per runner (on first use) and applied by every
+    round. A Column is an unresolved JVM expression, so one object serves
+    any number of DataFrames; building one is what costs: each ``F.*``
+    call or Column operator sends ~13 Py4J commands from the driver thread
+    (reflection lookups plus the call-site capture), and a round used to
+    build ~550 of them between its jobs. Per-round values — the round
+    number, counters, order offsets and the session id, which ``resume()``
+    replaces — stay literals built at call time."""
+
+    def __init__(
+        self,
+        config: SourceConfig,
+        opt: CrawlOptions,
+        start_time: datetime,
+        content_fields: list[str],
+    ) -> None:
+        col = F.col
+        self.url_cols = url_cols()
+        self.has_html = col("html").isNotNull()
+        self.is_kind = {k: col("kind") == k for k in ("listing", "content")}
+
+        # -- frontier rows: FRONTIER columns, defaults, the kind literal
+        self.frontier_cols = {n: col(n) for n in schemas.FRONTIER.names}
+        self.frontier_defaults = {
+            n: c.alias(n)
+            for n, c in {
+                "depth": F.lit(1),
+                "priority": F.lit(0.0),
+                "discovered_ts": F.lit(start_time),
+                "state": F.lit("pending"),
+                "attempts": F.lit(0),
+                "source_id": F.lit(config.id),
+                "listing_order": F.lit(0).cast("long"),
+                "title": F.lit(None).cast("string"),
+                "author": F.lit(None).cast("string"),
+                "published_date": F.lit(None).cast("string"),
+            }.items()
+        }
+        self.frontier_kind = {
+            k: F.lit(k).alias("kind") for k in ("listing", "content")
+        }
+
+        # -- listing phase
+        self.listing_topk = host_topk(1, ["depth", "priority", "url_hash"])
+        self.rank_dim_cols = [
+            col("node").alias("host"),
+            (-col("rank")).cast("double").alias("_rank_pri"),
+        ]
+        self.priority_from_rank = F.coalesce(col("_rank_pri"), F.lit(0.0))
+
+        # -- dedup / stats phase
+        self.items_explode = [
+            col("host").alias("listing_host"),
+            col("depth"),
+            F.explode_outer("items").alias("it"),
+        ]
+        self.items_cols = [
+            col("listing_host"),
+            col("depth"),
+            *[
+                col(f"it.{n}").alias(n)
+                for n in (
+                    "url", "title", "author", "published_raw",
+                    "published_date", "item_index",
+                )
+            ],
+        ]
+        self.has_url = col("url").isNotNull()
+        # strict-date quarantine: a raw date the listing kernel could not
+        # parse rejects the item
+        self.date_error = col("published_raw").isNotNull() & col(
+            "published_date"
+        ).isNull()
+        self.date_error_col = col("date_error")
+        self.no_date_error = ~col("date_error")
+        self.first_per_url = first_per_url(["depth", "listing_host", "item_index"])
+        self.page_stats_cols = [
+            col("host"),
+            col("depth"),
+            F.size("items").alias("n_items"),
+            F.size("excluded_urls").alias("n_excluded"),
+            col("filtered_count").alias("n_filtered"),
+            col("filtered_reasons"),
+            col("next_url"),
+        ]
+        self.page_stats_aggs = [
+            F.max("depth").alias("depth"),
+            F.sum("n_items").alias("n_items"),
+            F.sum("n_excluded").alias("n_excluded"),
+            F.sum("n_filtered").alias("n_filtered"),
+            # message ASSEMBLY is deferred to the error-only branch of
+            # _listing_messages (r6): the lean pass carries only the
+            # count that gates it, so an error-free round (the common
+            # case) never pays the collect_list/flatten/array_sort trees
+            F.sum(F.size("filtered_reasons")).alias("n_reason_msgs"),
+            F.max("next_url").alias("next_url"),
+        ]
+        self.listing_host_key = col("listing_host").alias("host")
+        self.n_new = F.count("*").alias("n_new")
+        self.n_date_err = F.count("*").alias("n_date_err")
+        # per-host stop decisions as one column (reference stop enum,
+        # MetadataTracker.ts:32-37; all_duplicates precedence per
+        # ArticleListingCrawler.ts:260-286, evaluated BEFORE the
+        # pagesProcessed increment)
+        stop = F.when(
+            (col("n_items") > 0)
+            & (col("n_new") == 0)
+            & F.lit(opt.stop_on_all_duplicates),
+            F.lit("all_duplicates"),
+        )
+        if opt.max_pages:
+            stop = stop.when(col("depth") >= opt.max_pages, F.lit("max_pages"))
+        self.stop_reason = stop.when(col("next_url").isNull(), F.lit("no_next_button"))
+        self.stats_aggs = [
+            F.count("*").alias("n_hosts"),
+            F.sum(
+                (~col("stop_reason").eqNullSafe("all_duplicates")).cast("long")
+            ).alias("pages_inc"),
+            F.sum("n_excluded").alias("n_excluded"),
+            F.sum(col("n_filtered") + col("n_excluded")).alias("n_filtered"),
+            F.sum("n_date_err").alias("n_date_err"),
+            F.sum("n_items").alias("n_items"),
+            F.sum("n_new").alias("n_new"),
+            *[
+                F.sum(col("stop_reason").eqNullSafe(s).cast("long")).alias(s)
+                for s in STOP_REASONS
+            ],
+            F.sum("n_reason_msgs").alias("n_reason_msgs"),
+        ]
+        self._listing_message_exprs()
+
+        # -- schedule phase
+        self.listing_order = col("item_index").cast("long")
+        self.content_topk = host_topk(
+            opt.per_host_budget, ["depth", "listing_order", "url_hash"]
+        )
+        if opt.round_content_budget is not None:
+            self.in_round_budget = col("_gseq") <= opt.round_content_budget
+            self.over_round_budget = col("_gseq") > opt.round_content_budget
+        self.order_keys = ["depth", "host", "listing_order", "url_hash"]
+        if opt.prioritize_by_rank:
+            self.order_keys = ["priority", *self.order_keys]
+        self.ordered_cols = [
+            col(c)
+            for c in (
+                *self.order_keys,
+                *[c for c in CANDIDATE_COLS if c not in self.order_keys],
+            )
+        ]
+
+        # -- content phase
+        # only the columns the pages rows read go through the extraction
+        # worker; html goes in and does not come back
+        self.extract_in = [
+            col(c) for c in (*CANDIDATE_COLS, "processed_order", "fetch_ms", "html")
+        ]
+        pages_common = {
+            "id": F.xxhash64("url_hash"),
+            "hash": F.sha1(col("url")),  # ContentStore.ts:106
+            "source": F.lit(config.id),
+            "crawled_at": F.lit(start_time),
+            "created_at": F.lit(start_time),
+        }
+        # mergeContentData semantics (ContentDataMapper.ts:8-26): content
+        # page fields override listing fields where non-null
+        self.pages_fetched = self._pages_cols(
+            pages_common,
+            title=F.coalesce("title_x", "title"),
+            author=F.coalesce("author_x", "author"),
+            content=col("content_x"),
+            had_extraction_error=F.size("extraction_errors") > 0,
+            failed_fields=F.filter(
+                F.array(
+                    *[
+                        F.when(col(f"{n}_x").isNull(), F.lit(n))
+                        for n in content_fields
+                    ]
+                ),
+                lambda x: x.isNotNull(),
+            ),
+        )
+        # retry-exhausted misses: stored with an extraction-error flag,
+        # exactly like the reference's failed content loads
+        self.pages_missed = self._pages_cols(
+            pages_common,
+            content=F.lit(None).cast("string"),
+            had_extraction_error=F.lit(True),
+            partition_id=F.lit(-1),
+            fetch_ms=F.lit(None).cast("double"),  # never fetched
+            parse_ms=F.lit(0.0),
+            failed_fields=(
+                F.array([F.lit(n) for n in content_fields])
+                if content_fields
+                else F.lit(None).cast("array<string>")
+            ),
+            # reference catch-path message shape,
+            # ContentPageExtractor.ts:180-186
+            extraction_errors=F.array(
+                F.concat(
+                    F.lit("Failed to extract content data for "),
+                    col("url"),
+                    F.lit(
+                        f" : fetch failed after {opt.max_fetch_attempts} attempts"
+                    ),
+                )
+            ),
+        )
+        self.pages_observed = [
+            F.count(F.lit(1)).alias("n"),
+            F.sum(col("had_extraction_error").cast("long")).alias("errs"),
+        ]
+
+        # -- lineage: listing field stats (see _lineage_phase)
+        opt_map = F.create_map(
+            *[
+                c
+                for name, fc in config.listing.fields.items()
+                for c in (F.lit(name), F.lit(bool(fc.optional)))
+            ]
+        )
+        self.field_stats_explode = [col("host"), F.explode("field_stats").alias("s")]
+        self.item_offset = F.coalesce("items_cum", F.lit(0))
+        self.field_stats_cols = [
+            col("s.field").alias("field_name"),
+            col("s.success").alias("success"),
+            col("s.attempts").alias("attempts"),
+            F.transform(
+                col("s.missing"), lambda x: (x + col("_off")).cast("long")
+            ).alias("missing_g"),
+        ]
+        self.field_stats_aggs = [
+            F.sum("success").alias("success_count"),
+            F.sum("attempts").alias("total_attempts"),
+            F.slice(
+                F.sort_array(F.flatten(F.collect_list("missing_g"))), 1, 10_000
+            ).alias("missing_items"),
+        ]
+        self.listing_field_stats = [
+            F.lit("listing").alias("stage"),
+            col("field_name"),
+            col("success_count"),
+            col("total_attempts"),
+            F.coalesce(opt_map[col("field_name")], F.lit(False)).alias("is_optional"),
+            col("missing_items"),
+        ]
+        # -- lineage: next frontier, host stops, link edges
+        self.continues = col("stop_reason").isNull() & col("next_url").isNotNull()
+        self.next_page_cols = [
+            col("next_url").alias("url"),
+            (col("depth") + 1).alias("depth"),
+        ]
+        self.frontier_names = list(self.frontier_cols.values())
+        self.pending_observed = [
+            F.sum((col("kind") == "listing").cast("long")).alias("n_listing"),
+            F.sum((col("kind") == "content").cast("long")).alias("n_content"),
+        ]
+        self.stopped = col("stop_reason").isNotNull()
+        self.host_stop_cols = [
+            col("host"),
+            col("depth").cast("long").alias("pages_processed"),
+            col("stop_reason").alias("stopped_reason"),
+        ]
+        self.fetch_error_cols = [
+            col("host"),
+            (col("depth") - 1).cast("long").alias("pages_processed"),
+            F.lit("fetch_error").alias("stopped_reason"),
+        ]
+        self.link_edge_cols = [
+            col("listing_host").alias("src_host"),
+            col("host").alias("dst_host"),
+        ]
+        self.cross_host = col("src_host") != col("dst_host")
+
+        # -- stored lineage (see _stored_lineage) and the offsets roll
+        self.session_content_cols = [
+            col("id").alias("content_id"),
+            col("processed_order"),
+            col("had_extraction_error").alias("had_content_extraction_error"),
+        ]
+        self.metrics_aggs = [
+            F.count("*").alias("contents_crawled"),
+            F.sum("fetch_ms").alias("fetch_ms"),
+            F.sum("parse_ms").alias("parse_ms"),
+        ]
+        self.metrics_tail = [col("contents_crawled"), col("fetch_ms"), col("parse_ms")]
+        self.partition_id = col("partition_id")
+        self.items_cum = F.count("*").alias("items_cum")
+        self._content_field_stats_exprs(config, content_fields)
+
+    @staticmethod
+    def _pages_cols(common: dict[str, Column], **cols: Column) -> list[Column]:
+        """A PAGES_OUT projection: ``cols`` are the columns that differ
+        between fetched rows and retry-exhausted misses, ``common`` the
+        url- and session-derived ones, the rest pass through."""
+        exprs = {**common, **cols}
+        return [
+            exprs[n].alias(n) if n in exprs else F.col(n)
+            for n in schemas.PAGES_OUT.names
+        ]
+
+    def _listing_message_exprs(self) -> None:
+        """The error-only aggregates of ``_listing_messages``."""
+        col = F.col
+        # per-host date-quarantine messages mirror the reference throw
+        # text (ListingPageExtractor.ts:313-323 + utils/date.ts:44-47);
+        # ordered by the item's position on its page (the reference's
+        # insertion order), made deterministic by sorting (item_index,
+        # msg) structs — NOT alphabetically
+        self.date_msgs = F.slice(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(
+                        F.struct(
+                            col("item_index").alias("i"),
+                            F.concat(
+                                F.lit('Date parsing failed for item "'),
+                                F.coalesce("title", "url"),
+                                F.lit('": Unable to parse date format: "'),
+                                col("published_raw"),
+                                F.lit(
+                                    '". Source format may have changed'
+                                    " and requires code update."
+                                ),
+                            ).alias("m"),
+                        )
+                    )
+                ),
+                lambda s: s["m"],
+            ),
+            1,
+            MAX_ERROR_MESSAGES,
+        ).alias("date_err_msgs")
+        self.reasons = F.slice(
+            F.flatten(F.collect_list("filtered_reasons")), 1, MAX_ERROR_MESSAGES
+        ).alias("reasons")
+
+        # Cross-host assembly keeps each host's in-page message order
+        # intact (the reference's single-source session IS one host, so
+        # this reproduces its insertion order exactly) and orders hosts
+        # deterministically — sort on (host, msgs) structs, never on the
+        # flattened messages (alphabetical would break parity)
+        def host_ordered(host_msgs: Column) -> Column:
+            return F.slice(
+                F.flatten(
+                    F.transform(
+                        F.array_sort(F.collect_list(host_msgs)), lambda s: s["ms"]
+                    )
+                ),
+                1,
+                MAX_ERROR_MESSAGES,
+            )
+
+        self.message_aggs = [
+            host_ordered(
+                F.struct(col("host").alias("h"), col("reasons").alias("ms"))
+            ).alias("listing_msgs"),
+            # null for most hosts (left join) — a null STRUCT is skipped by
+            # collect_list, while a null array inside flatten() nulls the
+            # result
+            host_ordered(
+                F.when(
+                    col("date_err_msgs").isNotNull(),
+                    F.struct(col("host").alias("h"), col("date_err_msgs").alias("ms")),
+                )
+            ).alias("date_msgs"),
+        ]
+
+    def _content_field_stats_exprs(
+        self, config: SourceConfig, names: list[str]
+    ) -> None:
+        """A5/W2: per-field content extraction stats with 1-based
+        missing-item indices (ContentDataMapper.ts:31-55; offset semantics
+        of ListingPageExtractor.ts:307). Index = processed_order (the
+        reference's global item counter). ONE aggregation pass over the
+        stored rows, exploded into FIELD_STATS rows."""
+        col = F.col
+        self.content_stats_aggs = [F.count("*").alias("_ta")]
+        for fname in names:
+            failed = F.array_contains(col("failed_fields"), fname)
+            self.content_stats_aggs += [
+                F.sum((~failed).cast("long")).alias(f"_sc_{fname}"),
+                F.slice(
+                    F.sort_array(F.collect_list(F.when(failed, col("processed_order")))),
+                    1,
+                    10_000,  # bound per-round list growth
+                ).alias(f"_mi_{fname}"),
+            ]
+        self.content_stats_explode = [
+            col("_ta"),
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(fname).alias("field_name"),
+                            col(f"_sc_{fname}").alias("success_count"),
+                            F.lit(config.content.fields[fname].optional).alias(
+                                "is_optional"
+                            ),
+                            col(f"_mi_{fname}").alias("missing_items"),
+                        )
+                        for fname in names
+                    ]
+                )
+            ).alias("f"),
+        ]
+        self.content_field_stats = [
+            F.lit("content").alias("stage"),
+            col("f.field_name").alias("field_name"),
+            col("f.success_count").alias("success_count"),
+            col("_ta").alias("total_attempts"),
+            col("f.is_optional").alias("is_optional"),
+            col("f.missing_items").alias("missing_items"),
+        ]
+
+
 class CrawlRunner:
     def __init__(
         self,
@@ -279,6 +745,11 @@ class CrawlRunner:
             n for n in ("title", "author", "content") if n in config.content.fields
         ]
 
+    @cached_property
+    def _x(self) -> _RoundExprs:
+        """The round's Column expressions, built on first use."""
+        return _RoundExprs(self.config, self.opt, self.start_time, self._content_fields)
+
     # -- graceful interruption (InterruptionHandler.ts:17-41) ---------------
 
     def interrupt(self) -> None:
@@ -307,50 +778,8 @@ class CrawlRunner:
 
     @staticmethod
     def _with_url_cols(df: DataFrame, url_col: str = "url") -> DataFrame:
-        """host / host_hash / url_hash as pure Column exprs. The canonical
-        form MATCHES functions.urlfns.canonicalize_url exactly (pytest
-        asserts equality on port/query/fragment cases): lowercase
-        scheme+host, strip fragment + userinfo, keep NON-DEFAULT ports
-        (http://h:8080/p must not collide with http://h/p in the seen
-        set), default path '/', query params sorted on raw k=v strings."""
-        u = F.col(url_col)
-        no_frag = F.substring_index(F.trim(u), "#", 1)
-        scheme = F.lower(F.regexp_extract(no_frag, r"^([a-zA-Z][a-zA-Z0-9+.-]*)://", 1))
-        authority = F.regexp_extract(no_frag, r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?]*)", 1)
-        host_port = F.substring_index(authority, "@", -1)  # drop userinfo
-        host = F.lower(F.substring_index(host_port, ":", 1))
-        port = F.when(
-            host_port.contains(":"), F.substring_index(host_port, ":", -1)
-        ).otherwise(F.lit(""))
-        keep_port = (
-            (port != "")
-            & ~((scheme == "http") & (port == "80"))
-            & ~((scheme == "https") & (port == "443"))
-        )
-        netloc = F.when(keep_port, F.concat(host, F.lit(":"), port)).otherwise(host)
-        rest = F.regexp_replace(no_frag, r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*", "")
-        path = F.substring_index(rest, "?", 1)
-        path = F.when(path == "", "/").otherwise(path)
-        raw_query = F.regexp_extract(rest, r"\?(.*)$", 1)
-        sorted_query = F.array_join(
-            F.array_sort(F.filter(F.split(raw_query, "&"), lambda p: p != "")),
-            "&",
-        )
-        canon = F.concat(
-            scheme,
-            F.lit("://"),
-            netloc,
-            path,
-            F.when(sorted_query == "", "").otherwise(
-                F.concat(F.lit("?"), sorted_query)
-            ),
-        )
-        return (
-            df.withColumn("url_canon", canon)
-            .withColumn("url_hash", F.sha1(F.col("url_canon")))
-            .withColumn("host", host)
-            .withColumn("host_hash", F.xxhash64(host))
-        )
+        """``df`` plus the url-derived columns of ``url_cols``."""
+        return df.withColumns(url_cols(url_col))
 
     def seed(self, urls: list[str]) -> None:
         """Install the seed list as round-0 frontier + empty state tables."""
@@ -549,10 +978,10 @@ class CrawlRunner:
         when the PageRank option is on), retrying misses in-round."""
         rank_dim = self._rank_dim(scope)
         batch = self._with_rank_priority(
-            pending.where(F.col("kind") == "listing"), rank_dim
+            pending.where(self._x.is_kind["listing"]), rank_dim
         )
         # one page per host per round (the reference's sequential chain)
-        batch, overflow = politeness_topk(batch, 1, ["depth", "priority", "url_hash"])
+        batch, overflow = self._x.listing_topk(batch)
         # extract parallelism rides the fetch output partitioning: for the
         # corpus fetcher that is the parquet scan (split size tuned down in
         # session.py — shuffling the html column would cost more than it
@@ -597,15 +1026,11 @@ class CrawlRunner:
         # double is EXACT and the schedule stays deterministic.
         # CACHED: the iterative pagerank DAG would otherwise re-run
         # under every one of the round's ~8 downstream actions
-        return scope.cache(
-            ranks.select(
-                F.col("node").alias("host"),
-                (-F.col("rank")).cast("double").alias("_rank_pri"),
-            )
-        )
+        return scope.cache(ranks.select(*self._x.rank_dim_cols))
 
-    @staticmethod
-    def _with_rank_priority(df: DataFrame, rank_dim: DataFrame | None) -> DataFrame:
+    def _with_rank_priority(
+        self, df: DataFrame, rank_dim: DataFrame | None
+    ) -> DataFrame:
         """Override the stored priority column with the current ranks
         (unranked hosts keep 0.0 — they sort after ranked ones)."""
         if rank_dim is None:
@@ -613,7 +1038,7 @@ class CrawlRunner:
         return (
             df.drop("priority")
             .join(F.broadcast(rank_dim), "host", "left")
-            .withColumn("priority", F.coalesce(F.col("_rank_pri"), F.lit(0.0)))
+            .withColumn("priority", self._x.priority_from_rank)
             .select(*df.columns)
         )
 
@@ -623,7 +1048,7 @@ class CrawlRunner:
         miss or return it with html=NULL, and html-NULL rows are dropped so
         the retry/miss machinery sees both the same way."""
         fetched = self.fetcher.fetch(keys, size_hint=hint, stage="listing").where(
-            F.col("html").isNotNull()
+            self._x.has_html
         )
         return extract_listing_stage(fetched, self.config.listing).join(keys, "url")
 
@@ -633,35 +1058,17 @@ class CrawlRunner:
         """Explode the listing pages into items, dedup them against this
         session and the stored pages, and fold per-host state into ONE
         stats collect that drives every counter and stop decision."""
-        opt, lres = self.opt, lst.lres
+        opt, lres, x = self.opt, lst.lres, self._x
         items = (
-            lres.select(
-                F.col("host").alias("listing_host"),
-                "depth",
-                F.explode_outer("items").alias("it"),
-                F.size("excluded_urls").alias("n_excluded"),
-                "filtered_count",
-            )
-            .select(
-                "listing_host",
-                "depth",
-                F.col("it.url").alias("url"),
-                F.col("it.title").alias("title"),
-                F.col("it.author").alias("author"),
-                F.col("it.published_raw").alias("published_raw"),
-                F.col("it.published_date").alias("published_date"),
-                F.col("it.item_index").alias("item_index"),
-            )
-            .where(F.col("url").isNotNull())
+            lres.select(*x.items_explode)
+            .select(*x.items_cols)
+            .where(x.has_url)
+            .withColumns(x.url_cols)
+            # strict-date quarantine (engine mode; the reference throws,
+            # SURVEY.md §7.3)
+            .withColumn("date_error", x.date_error)
         )
-        # strict-date quarantine (engine mode; the reference throws,
-        # SURVEY.md §7.3): a raw date that the listing kernel could not
-        # parse rejects the item
-        items = self._with_url_cols(items).withColumn(
-            "date_error",
-            F.col("published_raw").isNotNull() & F.col("published_date").isNull(),
-        )
-        valid_items = items.where(~F.col("date_error"))
+        valid_items = items.where(x.no_date_error)
 
         # J1 session dedup: within batch, then against prior rounds.
         # NOT cached (r6): both consumers (the to_process chain here and
@@ -670,9 +1077,7 @@ class CrawlRunner:
         # columnar cache build of these wide string rows measured ~1.3 s —
         # 6× the total recompute cost (guide §5: cache only when recompute
         # beats the memory/build pressure).
-        deduped = dedup_within_batch(
-            valid_items, ["depth", "listing_host", "item_index"]
-        )
+        deduped = x.first_per_url(valid_items)
         # skip the anti-join shuffles entirely when the seen tables are
         # provably empty (fresh session round 1) — tracked in snapshot props
         sess_seen_count = int(self.wh.props.get("session_seen_count", "0"))
@@ -698,77 +1103,22 @@ class CrawlRunner:
 
         # ---- per-host stats: ONE collect drives counters + stop logic ------
         page_stats = (
-            lres.select(
-                "host",
-                "depth",
-                F.size("items").alias("n_items"),
-                F.size("excluded_urls").alias("n_excluded"),
-                F.col("filtered_count").alias("n_filtered"),
-                F.col("filtered_reasons"),
-                F.col("next_url"),
-            )
-            .groupBy("host")
-            .agg(
-                F.max("depth").alias("depth"),
-                F.sum("n_items").alias("n_items"),
-                F.sum("n_excluded").alias("n_excluded"),
-                F.sum("n_filtered").alias("n_filtered"),
-                # message ASSEMBLY is deferred to the error-only branch of
-                # _listing_messages (r6): the lean pass carries only the
-                # count that gates it, so an error-free round (the common
-                # case) never pays the collect_list/flatten/array_sort trees
-                F.sum(F.size("filtered_reasons")).alias("n_reason_msgs"),
-                F.max("next_url").alias("next_url"),
-            )
+            lres.select(*x.page_stats_cols).groupBy("host").agg(*x.page_stats_aggs)
         )
-        new_per_host = to_process.groupBy(F.col("listing_host").alias("host")).agg(
-            F.count("*").alias("n_new")
-        )
+        new_per_host = to_process.groupBy(x.listing_host_key).agg(x.n_new)
         date_err_per_host = (
-            items.where(F.col("date_error"))
-            .groupBy(F.col("listing_host").alias("host"))
-            .agg(F.count("*").alias("n_date_err"))
+            items.where(x.date_error_col).groupBy(x.listing_host_key).agg(x.n_date_err)
         )
         # per-host round state stays DISTRIBUTED (at 10^10 scale millions of
         # hosts are active per round — never collected); the driver sees one
-        # aggregate row. Stop decisions are columns (reference stop enum,
-        # MetadataTracker.ts:32-37; all_duplicates precedence per
-        # ArticleListingCrawler.ts:260-286, evaluated BEFORE the
-        # pagesProcessed increment).
-        host_round = (
+        # aggregate row. Stop decisions are the stop_reason column.
+        host_round = scope.cache(
             page_stats.join(new_per_host, "host", "left")
             .join(date_err_per_host, "host", "left")
             .fillna(0, ["n_new", "n_date_err"])
+            .withColumn("stop_reason", x.stop_reason)
         )
-        stop_col = F.when(
-            (F.col("n_items") > 0)
-            & (F.col("n_new") == 0)
-            & F.lit(opt.stop_on_all_duplicates),
-            F.lit("all_duplicates"),
-        )
-        if opt.max_pages:
-            stop_col = stop_col.when(
-                F.col("depth") >= opt.max_pages, F.lit("max_pages")
-            )
-        stop_col = stop_col.when(F.col("next_url").isNull(), F.lit("no_next_button"))
-        host_round = scope.cache(host_round.withColumn("stop_reason", stop_col))
-
-        g = host_round.agg(
-            F.count("*").alias("n_hosts"),
-            F.sum(
-                (~F.col("stop_reason").eqNullSafe("all_duplicates")).cast("long")
-            ).alias("pages_inc"),
-            F.sum("n_excluded").alias("n_excluded"),
-            F.sum(F.col("n_filtered") + F.col("n_excluded")).alias("n_filtered"),
-            F.sum("n_date_err").alias("n_date_err"),
-            F.sum("n_items").alias("n_items"),
-            F.sum("n_new").alias("n_new"),
-            *[
-                F.sum(F.col("stop_reason").eqNullSafe(s).cast("long")).alias(s)
-                for s in STOP_REASONS
-            ],
-            F.sum("n_reason_msgs").alias("n_reason_msgs"),
-        ).collect()[0]
+        g = host_round.agg(*x.stats_aggs).collect()[0]
         c = {k: int(v or 0) for k, v in g.asDict().items()}
 
         # processPageItems updates ALL counters before the caller's
@@ -847,87 +1197,19 @@ class CrawlRunner:
             return lambda: []
         future = None
         if n_reason_msgs > 0 or n_date_err > 0:
-            # per-host date-quarantine messages mirror the reference throw
-            # text (ListingPageExtractor.ts:313-323 + utils/date.ts:44-47);
-            # ordered by the item's position on its page (the reference's
-            # insertion order), made deterministic by sorting (item_index,
-            # msg) structs — NOT alphabetically
+            x = self._x
             date_msgs_per_host = (
-                items.where(F.col("date_error"))
-                .groupBy(F.col("listing_host").alias("host"))
-                .agg(
-                    F.slice(
-                        F.transform(
-                            F.array_sort(
-                                F.collect_list(
-                                    F.struct(
-                                        F.col("item_index").alias("i"),
-                                        F.concat(
-                                            F.lit('Date parsing failed for item "'),
-                                            F.coalesce("title", "url"),
-                                            F.lit(
-                                                '": Unable to parse date format: "'
-                                            ),
-                                            F.col("published_raw"),
-                                            F.lit(
-                                                '". Source format may have changed'
-                                                " and requires code update."
-                                            ),
-                                        ).alias("m"),
-                                    )
-                                )
-                            ),
-                            lambda s: s["m"],
-                        ),
-                        1,
-                        MAX_ERROR_MESSAGES,
-                    ).alias("date_err_msgs"),
-                )
+                items.where(x.date_error_col)
+                .groupBy(x.listing_host_key)
+                .agg(x.date_msgs)
             )
             reasons_per_host = (
                 lst.lres.select("host", "filtered_reasons")
                 .groupBy("host")
-                .agg(
-                    F.slice(
-                        F.flatten(F.collect_list("filtered_reasons")),
-                        1,
-                        MAX_ERROR_MESSAGES,
-                    ).alias("reasons")
-                )
+                .agg(x.reasons)
             )
-            # Cross-host assembly keeps each host's in-page message order
-            # intact (the reference's single-source session IS one host, so
-            # this reproduces its insertion order exactly) and orders hosts
-            # deterministically — sort on (host, msgs) structs, never on
-            # the flattened messages (alphabetical would break parity)
-            def host_ordered(host_msgs: Column) -> Column:
-                return F.slice(
-                    F.flatten(
-                        F.transform(
-                            F.array_sort(F.collect_list(host_msgs)),
-                            lambda s: s["ms"],
-                        )
-                    ),
-                    1,
-                    MAX_ERROR_MESSAGES,
-                )
-
             mg_df = reasons_per_host.join(date_msgs_per_host, "host", "left").agg(
-                host_ordered(
-                    F.struct(F.col("host").alias("h"), F.col("reasons").alias("ms"))
-                ).alias("listing_msgs"),
-                # null for most hosts (left join) — a null STRUCT is skipped
-                # by collect_list, while a null array inside flatten() nulls
-                # the result
-                host_ordered(
-                    F.when(
-                        F.col("date_err_msgs").isNotNull(),
-                        F.struct(
-                            F.col("host").alias("h"),
-                            F.col("date_err_msgs").alias("ms"),
-                        ),
-                    )
-                ).alias("date_msgs"),
+                *x.message_aggs
             )
             future = scope.submit(lambda: mg_df.collect()[0])
         failed = []
@@ -961,21 +1243,14 @@ class CrawlRunner:
         hosts plus the carried frontier, robots-gated and cut to the
         per-host and round budgets — queue sitemap-discovered URLs for the
         next round, and stamp the fetches with their processed_order."""
-        opt = self.opt
-        all_dup_hosts_df = st.host_round.where(
-            F.col("stop_reason").eqNullSafe("all_duplicates")
-        ).select("host")
-        base = st.to_process.join(
-            all_dup_hosts_df.withColumnRenamed("host", "listing_host"),
-            "listing_host",
-            "left_anti",
-        )
+        opt, x = self.opt, self._x
+        # a host stops as all_duplicates only when it has no row in
+        # to_process (n_new == 0), so every new item is a candidate
         to_fetch_new = self._frontier_rows(
-            base.withColumn("listing_order", F.col("item_index").cast("long")),
-            "content",
+            st.to_process.withColumn("listing_order", x.listing_order), "content"
         )
         candidates = self._with_rank_priority(
-            pending.where(F.col("kind") == "content").unionByName(to_fetch_new),
+            pending.where(x.is_kind["content"]).unionByName(to_fetch_new),
             lst.rank_dim,
         )
 
@@ -1011,11 +1286,7 @@ class CrawlRunner:
                     )
                 )
 
-        scheduled, content_overflow = politeness_topk(
-            candidates,
-            opt.per_host_budget,
-            ["depth", "listing_order", "url_hash"],
-        )
+        scheduled, content_overflow = x.content_topk(candidates)
         # both range-partitioned sequencer runs below (budget cut, order
         # stamp) size to the known upper bound on this round's candidate
         # count (items found + carried content): each is two jobs over
@@ -1044,14 +1315,10 @@ class CrawlRunner:
                 n_parts=order_parts,
                 persist=scope.cache,
             )
-            deferred = seqd.where(
-                F.col("_gseq") > opt.round_content_budget
-            ).drop("_gseq")
-            scheduled = seqd.where(
-                F.col("_gseq") <= opt.round_content_budget
-            ).drop("_gseq")
+            deferred = seqd.where(x.over_round_budget).drop("_gseq")
+            scheduled = seqd.where(x.in_round_budget).drop("_gseq")
             content_overflow = content_overflow.unionByName(
-                deferred.select(*schemas.FRONTIER.names)
+                deferred.select(*x.frontier_names)
             )
         allowed, blocked = robots_gate(scheduled, robots_dim)
 
@@ -1083,7 +1350,7 @@ class CrawlRunner:
             ).join(
                 content_overflow.select("url_hash"), "url_hash", "left_anti"
             )
-            sitemap_inject = inj.select(*schemas.FRONTIER.names)
+            sitemap_inject = inj.select(*x.frontier_names)
 
         # W1: deterministic global order = (round, host, listing position).
         # Assigned on the PRE-FETCH candidate set (order keys are data known
@@ -1098,14 +1365,9 @@ class CrawlRunner:
         # the observable contract of the prioritized crawl (processed_order
         # IS the schedule); off, the order is byte-identical to prior rounds
         offset = int(self.wh.props.get("order_offset", "0"))
-        order_keys = ["depth", "host", "listing_order", "url_hash"]
-        if opt.prioritize_by_rank:
-            order_keys = ["priority", *order_keys]
         ordered, n_allowed = assign_sequential_order(
-            allowed.select(
-                *order_keys, *[c for c in CANDIDATE_COLS if c not in order_keys]
-            ),
-            order_keys,
+            allowed.select(*x.ordered_cols),
+            x.order_keys,
             offset=offset,
             n_parts=order_parts,
             persist=scope.cache,
@@ -1173,33 +1435,7 @@ class CrawlRunner:
         # blocked count is in.
         missed_out = None
         if n_stored < sch.n_allowed:
-            missed_out = self._pages_rows(
-                not_yet_written(),
-                title=F.col("title"),
-                author=F.col("author"),
-                content=F.lit(None).cast("string"),
-                had_extraction_error=F.lit(True),
-                partition_id=F.lit(-1),
-                fetch_ms=F.lit(None).cast("double"),  # never fetched
-                parse_ms=F.lit(0.0),
-                failed_fields=(
-                    F.array([F.lit(n) for n in self._content_fields])
-                    if self._content_fields
-                    else F.lit(None).cast("array<string>")
-                ),
-                # reference catch-path message shape,
-                # ContentPageExtractor.ts:180-186
-                extraction_errors=F.array(
-                    F.concat(
-                        F.lit("Failed to extract content data for "),
-                        F.col("url"),
-                        F.lit(
-                            f" : fetch failed after "
-                            f"{self.opt.max_fetch_attempts} attempts"
-                        ),
-                    )
-                ),
-            )
+            missed_out = not_yet_written().select(*self._x.pages_missed)
             n_errors += sch.n_allowed - n_stored
             n_stored = sch.n_allowed
         n_blocked = sch.blocked.count() if sch.robots_dim is not None else 0
@@ -1221,7 +1457,7 @@ class CrawlRunner:
         with html=NULL, and html-NULL rows are dropped here so both hit the
         same retry/miss machinery."""
         fc = self.fetcher.fetch(cand, size_hint=hint, stage="content").where(
-            F.col("html").isNotNull()
+            self._x.has_html
         )
         # corpus-fetcher output is scan-partitioned (host-agnostic, already
         # balanced). Salting applies when the fetcher partitions BY host
@@ -1231,67 +1467,15 @@ class CrawlRunner:
             fc = salt_hot_hosts(
                 fc, self.spark.sparkContext.defaultParallelism * 2, SALT_FACTOR
             )
-        # only the columns the pages rows read go through the extraction
-        # worker; html goes in and does not come back
-        ex = extract_content_stage(
-            fc.select(*CANDIDATE_COLS, "processed_order", "fetch_ms", "html"),
-            self.config.content,
-        )
-        failed_fields = F.filter(
-            F.array(
-                *[
-                    F.when(F.col(f"{n}_x").isNull(), F.lit(n))
-                    for n in self._content_fields
-                ]
-            ),
-            lambda x: x.isNotNull(),
-        )
-        # mergeContentData semantics (ContentDataMapper.ts:8-26): content
-        # page fields override listing fields where non-null
-        return self._pages_rows(
-            ex,
-            title=F.coalesce("title_x", "title"),
-            author=F.coalesce("author_x", "author"),
-            content=F.col("content_x"),
-            had_extraction_error=F.size("extraction_errors") > 0,
-            partition_id=F.col("partition_id"),
-            fetch_ms=F.col("fetch_ms"),
-            parse_ms=F.col("parse_ms"),
-            failed_fields=failed_fields,
-            extraction_errors=F.col("extraction_errors"),
-        )
-
-    def _pages_rows(self, df: DataFrame, **cols: Column) -> DataFrame:
-        """Project ordered candidate rows onto PAGES_OUT. ``cols`` supplies
-        the columns that differ between fetched rows and retry-exhausted
-        misses; the rest derive from the url and the session."""
-        exprs = {
-            "id": F.xxhash64("url_hash"),
-            "hash": F.sha1(F.col("url")),  # ContentStore.ts:106
-            "source": F.lit(self.config.id),
-            "crawled_at": F.lit(self.start_time),
-            "created_at": F.lit(self.start_time),
-            **cols,
-        }
-        return df.select(
-            *[
-                exprs[n].alias(n) if n in exprs else F.col(n)
-                for n in schemas.PAGES_OUT.names
-            ]
-        )
+        return extract_content_stage(
+            fc.select(*self._x.extract_in), self.config.content
+        ).select(*self._x.pages_fetched)
 
     def _append_pages(self, df: DataFrame) -> tuple[str, int, int]:
         """Append pages rows; the row and error counts ride an Observation
         on the write (no separate agg job)."""
         o = Observation()
-        d = self.wh.append(
-            "pages",
-            df.observe(
-                o,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("had_extraction_error").cast("long")).alias("errs"),
-            ),
-        )
+        d = self.wh.append("pages", df.observe(o, *self._x.pages_observed))
         vals = o.get
         return d, int(vals["n"] or 0), int(vals["errs"] or 0)
 
@@ -1306,12 +1490,12 @@ class CrawlRunner:
         scale ~2 s of light-job latency hides behind it. Returns the
         frontier write's per-kind Observation and the host offsets as of
         round start."""
-        opt = self.opt
+        opt, x = self.opt, self._x
         # NOTE: the persistent URL-seen set IS pages.url_hash (every stored
         # row appends exactly one seen entry) — reading it as a
         # column-pruned projection of pages costs the same scan as a
         # dedicated table and saves one write job per round.
-        # session_new is already distinct on url_hash (dedup_within_batch
+        # session_new is already distinct on url_hash (first_per_url
         # window + anti-join against prior rounds) — append as-is, no
         # distinct shuffle.
         seen_sess_df = st.session_new.select("url_hash")
@@ -1333,66 +1517,24 @@ class CrawlRunner:
         # table, reference-exact even when many chains crawl in one
         # session (round-2 VERDICT item 6; the old global order_offset
         # leaked other chains' counts into the indices).
-        lfields = self.config.listing.fields
-        opt_map = F.create_map(
-            *[
-                c
-                for name, fc in lfields.items()
-                for c in (F.lit(name), F.lit(bool(fc.optional)))
-            ]
-        )
         # snapshot of per-host offsets BEFORE this round's counts land
         # (read resolved now; the commit phase's replace writes a fresh dir)
         prev_offsets = self.wh.read("host_offsets", schemas.HOST_OFFSETS)
         lfs_df = (
-            lst.lres.select("host", F.explode("field_stats").alias("s"))
+            lst.lres.select(*x.field_stats_explode)
             .join(prev_offsets, "host", "left")
-            .withColumn("_off", F.coalesce("items_cum", F.lit(0)))
-            .select(
-                F.col("s.field").alias("field_name"),
-                F.col("s.success").alias("success"),
-                F.col("s.attempts").alias("attempts"),
-                F.transform(
-                    F.col("s.missing"),
-                    lambda x: (x + F.col("_off")).cast("long"),
-                ).alias("missing_g"),
-            )
+            .withColumn("_off", x.item_offset)
+            .select(*x.field_stats_cols)
             .groupBy("field_name")
-            .agg(
-                F.sum("success").alias("success_count"),
-                F.sum("attempts").alias("total_attempts"),
-                F.slice(
-                    F.sort_array(F.flatten(F.collect_list("missing_g"))),
-                    1,
-                    10_000,
-                ).alias("missing_items"),
-            )
-            .select(
-                F.lit(self.session_id).alias("session_id"),
-                F.lit(r).alias("round"),
-                F.lit("listing").alias("stage"),
-                "field_name",
-                "success_count",
-                "total_attempts",
-                F.coalesce(opt_map[F.col("field_name")], F.lit(False)).alias(
-                    "is_optional"
-                ),
-                "missing_items",
-            )
-            .select(*schemas.FIELD_STATS.names)
+            .agg(*x.field_stats_aggs)
+            .select(*self._lineage_keys(r), *x.listing_field_stats)
         )
 
         # frontier: remaining listing overflow + next pages + content
         # overflow — next listing pages derived DISTRIBUTED from host_round
         # (never a driver-side url list)
         next_df = self._frontier_rows(
-            st.host_round.where(
-                F.col("stop_reason").isNull() & F.col("next_url").isNotNull()
-            ).select(
-                F.col("next_url").alias("url"),
-                (F.col("depth") + 1).alias("depth"),
-            ),
-            "listing",
+            st.host_round.where(x.continues).select(*x.next_page_cols), "listing"
         )
         new_pending = lst.overflow.unionByName(next_df).unionByName(
             sch.content_overflow
@@ -1402,25 +1544,15 @@ class CrawlRunner:
         # count the pending set BY KIND inside the write action itself
         # (Observation = zero extra jobs) — next round's broadcast gate
         obs = Observation()
-        observed_pending = new_pending.select(*schemas.FRONTIER.names).observe(
-            obs,
-            F.sum((F.col("kind") == "listing").cast("long")).alias("n_listing"),
-            F.sum((F.col("kind") == "content").cast("long")).alias("n_content"),
+        observed_pending = new_pending.select(*x.frontier_names).observe(
+            obs, *x.pending_observed
         )
 
         # per-host stop lineage (a table, not driver state)
-        host_stops_df = st.host_round.where(F.col("stop_reason").isNotNull()).select(
-            "host",
-            F.col("depth").cast("long").alias("pages_processed"),
-            F.col("stop_reason").alias("stopped_reason"),
-        )
+        host_stops_df = st.host_round.where(x.stopped).select(*x.host_stop_cols)
         if lst.n_failed:
             host_stops_df = host_stops_df.unionByName(
-                lst.misses().select(
-                    "host",
-                    (F.col("depth") - 1).cast("long").alias("pages_processed"),
-                    F.lit("fetch_error").alias("stopped_reason"),
-                )
+                lst.misses().select(*x.fetch_error_cols)
             )
 
         writes = [
@@ -1436,11 +1568,8 @@ class CrawlRunner:
             writes.append(
                 (
                     "link_edges",
-                    st.valid_items.select(
-                        F.col("listing_host").alias("src_host"),
-                        F.col("host").alias("dst_host"),
-                    )
-                    .where(F.col("src_host") != F.col("dst_host"))
+                    st.valid_items.select(*x.link_edge_cols)
+                    .where(x.cross_host)
                     .distinct(),
                 )
             )
@@ -1499,7 +1628,7 @@ class CrawlRunner:
     def _roll_offsets(self, stored: DataFrame, prev_offsets: DataFrame) -> None:
         """Add the round's stored rows per host to the per-chain
         itemsProcessed offsets, in whichever tier the table lives."""
-        per_host = stored.groupBy("host").agg(F.count("*").alias("items_cum"))
+        per_host = stored.groupBy("host").agg(self._x.items_cum)
         if not self.wh.is_row_table("host_offsets"):
             new_offsets = (
                 prev_offsets.unionByName(per_host)
@@ -1527,89 +1656,38 @@ class CrawlRunner:
     ) -> list[tuple[str, DataFrame]]:
         """Lineage appends derived from the round's stored pages rows:
         session_content, per-partition metrics and content field_stats."""
+        x = self._x
         sc_df = stored.select(
-            F.lit(self.session_id).alias("session_id"),
-            F.col("id").alias("content_id"),
-            "processed_order",
-            F.col("had_extraction_error").alias("had_content_extraction_error"),
+            F.lit(self.session_id).alias("session_id"), *x.session_content_cols
         )
         # per-partition lineage metrics (north_rule)
         part_metrics = (
-            stored.groupBy("partition_id")
-            .agg(
-                F.count("*").alias("contents_crawled"),
-                F.sum("fetch_ms").alias("fetch_ms"),
-                F.sum("parse_ms").alias("parse_ms"),
-            )
+            stored.groupBy(x.partition_id)
+            .agg(*x.metrics_aggs)
             .select(
-                F.lit(self.session_id).alias("session_id"),
-                F.lit(r).alias("round"),
-                "partition_id",
+                *self._lineage_keys(r),
+                x.partition_id,
                 F.lit(st.n_items).alias("items_found"),
                 F.lit(n_stored).alias("items_processed"),
                 F.lit(st.n_duplicates).alias("duplicates_skipped"),
                 F.lit(st.n_excluded).alias("urls_excluded"),
                 F.lit(st.n_filtered).alias("total_filtered"),
-                "contents_crawled",
-                "fetch_ms",
-                "parse_ms",
+                *x.metrics_tail,
             )
         )
-        out = [
-            ("session_content", sc_df),
-            ("metrics", part_metrics.select(*schemas.METRICS.names)),
-        ]
-        # A5/W2: per-field content extraction stats with 1-based
-        # missing-item indices (ContentDataMapper.ts:31-55; offset
-        # semantics of ListingPageExtractor.ts:307). Index =
-        # processed_order (the reference's global item counter). ONE
-        # aggregation pass over stored, exploded into FIELD_STATS rows.
-        names = self._content_fields
-        if names:
-            agg_cols = [F.count("*").alias("_ta")]
-            for fname in names:
-                failed = F.array_contains(F.col("failed_fields"), fname)
-                agg_cols.append(
-                    F.sum((~failed).cast("long")).alias(f"_sc_{fname}")
-                )
-                agg_cols.append(
-                    F.slice(
-                        F.sort_array(
-                            F.collect_list(F.when(failed, F.col("processed_order")))
-                        ),
-                        1,
-                        10_000,  # bound per-round list growth
-                    ).alias(f"_mi_{fname}")
-                )
-            fs = stored.agg(*agg_cols).select(
-                "_ta",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(fname).alias("field_name"),
-                                F.col(f"_sc_{fname}").alias("success_count"),
-                                F.lit(
-                                    self.config.content.fields[fname].optional
-                                ).alias("is_optional"),
-                                F.col(f"_mi_{fname}").alias("missing_items"),
-                            )
-                            for fname in names
-                        ]
-                    )
-                ).alias("f"),
-            ).select(
-                F.lit(self.session_id).alias("session_id"),
-                F.lit(r).alias("round"),
-                F.lit("content").alias("stage"),
-                F.col("f.field_name").alias("field_name"),
-                F.col("f.success_count").alias("success_count"),
-                F.col("_ta").alias("total_attempts"),
-                F.col("f.is_optional").alias("is_optional"),
-                F.col("f.missing_items").alias("missing_items"),
+        out = [("session_content", sc_df), ("metrics", part_metrics)]
+        if self._content_fields:
+            fs = (
+                stored.agg(*x.content_stats_aggs)
+                .select(*x.content_stats_explode)
+                .select(*self._lineage_keys(r), *x.content_field_stats)
             )
-            out.append(("field_stats", fs.select(*schemas.FIELD_STATS.names)))
+            out.append(("field_stats", fs))
         return out
+
+    def _lineage_keys(self, r: int) -> list[Column]:
+        """The session_id and round columns that lead the lineage rows."""
+        return [F.lit(self.session_id).alias("session_id"), F.lit(r).alias("round")]
 
     # -- frontier rows --------------------------------------------------------
 
@@ -1619,27 +1697,17 @@ class CrawlRunner:
         listing_order, title, author and published_date are kept when
         ``df`` carries them, else default to a depth-1, first-position
         row with no listing fields."""
+        x = self._x
         if "url_hash" not in df.columns:
-            df = self._with_url_cols(df)
-        defaults = {
-            "depth": F.lit(1),
-            "priority": F.lit(0.0),
-            "discovered_ts": F.lit(self.start_time),
-            "state": F.lit("pending"),
-            "attempts": F.lit(0),
-            "source_id": F.lit(self.config.id),
-            "kind": F.lit(kind),
-            "listing_order": F.lit(0).cast("long"),
-            "title": F.lit(None).cast("string"),
-            "author": F.lit(None).cast("string"),
-            "published_date": F.lit(None).cast("string"),
-        }
-        for n in ("depth", "listing_order", "title", "author", "published_date"):
-            if n in df.columns:
-                del defaults[n]
+            df = df.withColumns(x.url_cols)
+        keep = set(df.columns) & FRONTIER_KEPT_COLS
         return df.select(
             *[
-                defaults[n].alias(n) if n in defaults else F.col(n)
+                x.frontier_kind[kind]
+                if n == "kind"
+                else x.frontier_defaults[n]
+                if n in x.frontier_defaults and n not in keep
+                else x.frontier_cols[n]
                 for n in schemas.FRONTIER.names
             ]
         )

@@ -448,6 +448,10 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     aggregate; if ``max_iter`` rounds pass without converging the function
     RAISES rather than silently returning wrong cluster ids. All shuffles
     key on doc id — no driver-side graph.
+
+    Each round's labels are a ``localCheckpoint``; a round releases the
+    one it supersedes, so the result reads exactly one. Its caller owns
+    that one: ``release_checkpoints(result)`` once the rows are consumed.
     """
     edges = pairs.select("doc_a", "doc_b")
     sym = edges.union(
@@ -500,11 +504,13 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
             .where(F.col("label") != F.col("old"))
             .count()
         )
+        release_checkpoints(labels)
         labels = new_labels
         if changed == 0:
             break
     sym.unpersist()
     if changed != 0:
+        release_checkpoints(labels)
         raise RuntimeError(
             f"dup_clusters did not converge in {max_iter} iterations "
             f"({changed} labels still changing); raise max_iter"
@@ -512,6 +518,19 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     return labels.select("doc_id", F.col("label").alias("cluster_id")).orderBy(
         "doc_id"
     )
+
+
+def release_checkpoints(df: DataFrame) -> None:
+    """Unpersist the RDD of every ``localCheckpoint`` that ``df`` reads.
+    A local checkpoint is a persisted RDD under a ``LogicalRDD`` leaf, which
+    ``DataFrame.unpersist`` does not see (it drops cached queries only), so
+    without this the blocks stay registered until garbage collection
+    reaches the RDD. ``df`` must not be read afterwards."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
 
 
 def with_near_dup_copies(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

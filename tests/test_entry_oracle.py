@@ -54,6 +54,7 @@ def test_store_backed_queries_inside_driver_window():
         "dedup_ngram_jaccard",
         "dedup_minhash_lsh",
         "dedup_clusters",
+        "pagerank_hosts",
         "decontaminate_docs",
         "similarity_lsh_recall",
         "similarity_ivf_recall",
@@ -84,6 +85,21 @@ def test_ann_queries_leave_no_cache(spark):
     ):
         assert E.queries()[name](spark, SF).count() == 1
     assert jsc.getPersistentRDDs().size() == cached_before
+
+
+def test_iterative_queries_leave_no_cache(spark, con):
+    """pagerank_hosts owns the node-set cache of pagerank_fixed and
+    dedup_clusters the label checkpoints of dup_clusters: after each, the
+    session pins no more RDDs than before, and the rows still match the
+    oracle."""
+    jsc = spark.sparkContext._jsc
+    for name in ("pagerank_hosts", "dedup_clusters"):
+        cached_before = jsc.getPersistentRDDs().size()
+        df = E.queries()[name](spark, SF)
+        assert jsc.getPersistentRDDs().size() == cached_before, name
+        ok, msg = compare(df, con, E.oracle_sql()[name])
+        assert ok, f"{name}: {msg}"
+        assert jsc.getPersistentRDDs().size() == cached_before, name
 
 
 def test_entry_smoke(spark):

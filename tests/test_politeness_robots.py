@@ -4,7 +4,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from ethos_spark.crawl.dedup import BloomFilter, anti_join_seen
-from ethos_spark.crawl.politeness import politeness_topk, robots_gate, salt_hot_hosts
+from ethos_spark.crawl.politeness import host_topk, robots_gate, salt_hot_hosts
 from ethos_spark.crawl.robots import parse_robots_txt, robots_table
 from ethos_spark.session import get_spark
 
@@ -30,7 +30,7 @@ def _pending(spark, n_per_host):
 
 def test_politeness_budget_per_host(spark):
     pending = _pending(spark, {"a.com": 10, "b.com": 2})
-    sched, overflow = politeness_topk(pending, 3)
+    sched, overflow = host_topk(3)(pending)
     by_host = {r.host: r["count"] for r in sched.groupBy("host").count().collect()}
     assert by_host == {"a.com": 3, "b.com": 2}
     assert overflow.count() == 7
