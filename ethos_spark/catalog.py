@@ -3,24 +3,27 @@
 The north_rule targets Iceberg tables; the Iceberg runtime jar is not
 available in this sandbox, so this module provides the same *guarantees* on
 plain parquet, behind a thin interface the crawl loop uses exclusively —
-swapping in Iceberg later means reimplementing this class with
-``writeTo(...).append()`` / MERGE and snapshot tags.
+swapping in Iceberg means reimplementing it with ``writeTo(...).append()``
+/ MERGE and snapshot tags.
 
-Guarantees provided:
-- **Atomic snapshot commits**: writers stage parquet directories, then a
-  single manifest JSON (``manifest-<v>.json``) + HEAD pointer rename makes
-  them visible. Readers only ever see a committed manifest. This is the
-  per-round checkpoint (reference analogue: WAL checkpoint after every
-  listing page, MetadataDatabase.ts:118-120 / MetadataTracker.ts:321-323).
-- **Append** tables accumulate data dirs (pages, seen, metrics, lineage).
-- **Replace** tables (frontier working set) write a fresh version dir per
-  round — copy-on-write like Iceberg's overwrite snapshots.
-- **Tags**: every commit is tagged (``round-7``); a resumed crawl reopens
-  HEAD, the last committed round (north_rule "checkpointed frontier
-  snapshots", SURVEY.md §4.2.6).
-- **Bounded history**: ``vacuum(keep_last)`` expires older snapshots —
-  their manifest files and every data dir only they referenced — like
-  Iceberg's ``expire_snapshots``.
+- **Snapshots**: a commit writes one manifest (``manifest-<v>.json``: the
+  tables' parquet data dirs, props, tag ``round-7``) and renames HEAD to
+  it — the per-round checkpoint a resumed crawl reopens (reference: WAL
+  checkpoint after every listing page, MetadataTracker.ts:321-323).
+  ``snapshot()`` re-reads HEAD from disk as an immutable ``Snapshot``; its
+  dirs stay on disk until ``vacuum(keep_last)`` expires it (Iceberg
+  ``expire_snapshots``). A long-lived reader (the HTTP app) re-resolves
+  when ``version`` moves; a request racing a ``vacuum`` of the snapshot
+  it resolved is not covered.
+- **Transactions**: ``with wh.transaction():`` stages a copy of HEAD, one
+  per ``Warehouse`` object. Appends add dirs, replaces write a fresh one
+  (copy-on-write), the object's reads see its writes, and ``commit(tag)``
+  publishes them at once. Leaving the block uncommitted aborts: the
+  staged manifest is dropped and every dir it named is deleted. A write
+  outside a transaction raises.
+- **Single writer** per warehouse, not enforced (Iceberg's commit lock is
+  the production analogue); ``gc_orphans`` reclaims the dirs of a writer
+  process that died before it could abort.
 
 Every data dir is plain parquet. A manifest written by an older tree may
 carry a ``buckets`` entry (a bucketed-table tier since removed); the loader
@@ -30,6 +33,7 @@ commit drops it.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -85,115 +89,47 @@ class _Manifest:
         )
 
 
-class Warehouse:
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-        self._manifest = self._load_head()
-        self._staged: _Manifest | None = None
-        # guards staging mutations: the crawl loop submits its independent
-        # lineage writes from a thread pool (parquet writes run
-        # concurrently; only the dir registration needs the lock)
-        self._lock = threading.RLock()
+@dataclass(frozen=True)
+class Snapshot:
+    """A read-only view of one manifest; committed ones never change."""
 
-    # -- manifest machinery ------------------------------------------------
+    spark: SparkSession
+    manifest: _Manifest
 
-    def _head_path(self) -> str:
-        return os.path.join(self.path, "HEAD")
-
-    def _manifest_path(self, v: int) -> str:
-        return os.path.join(self.path, f"manifest-{v}.json")
-
-    def _load_head(self) -> _Manifest:
-        try:
-            with open(self._head_path()) as f:
-                v = int(f.read().strip())
-            return _Manifest.load(self._manifest_path(v))
-        except FileNotFoundError:
-            return _Manifest()
-
-    def _publish_head(self, v: int) -> None:
-        tmp = self._head_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._head_path())  # atomic publish
-
-    def _begin(self) -> _Manifest:
-        with self._lock:
-            if self._staged is None:
-                self._staged = self._manifest.staged()
-            return self._staged
-
-    def _cur(self) -> _Manifest:
-        """The staged snapshot while a write is open, else the committed one."""
-        return self._staged if self._staged is not None else self._manifest
-
-    def commit(self, tag: str, props: dict[str, str] | None = None) -> int:
-        """Atomically publish all staged writes as one snapshot."""
-        m = self._begin()
-        if props:
-            m.props.update(props)
-        m.version, m.tag = self._manifest.version + 1, tag
-        m.dump(self._manifest_path(m.version))
-        self._publish_head(m.version)
-        self._manifest = m
-        self._staged = None
-        return m.version
+    @property
+    def version(self) -> int:
+        return self.manifest.version
 
     @property
     def props(self) -> dict[str, str]:
-        return dict(self._manifest.props)
-
-    # -- row tables (metadata-sized, stored in the manifest) -----------------
-
-    # schemas for row tables so schema-less read() keeps working; the crawl
-    # engine registers "sessions" here (ethos_spark.schemas.SESSIONS)
-    ROW_TABLE_SCHEMAS: dict[str, StructType] = {}
-
-    def upsert_rows(self, table: str, row: dict, key: str) -> None:
-        """Insert-or-replace one JSON row by ``row[key]`` — driver-side, no
-        Spark job; visible after commit(). datetimes are stored ISO.
-
-        Legacy migration: the FIRST row-write to a table that still has
-        parquet data dirs (a pre-row-table warehouse) folds the parquet
-        rows into the manifest row table first, so history isn't shadowed
-        — the read() fallthrough only covers tables never row-written."""
-        m = self._begin()
-        r = _iso(row)
-        with self._lock:
-            if table not in m.rows and m.tables.get(table):
-                dirs = [d for d in m.tables[table] if os.path.exists(d)]
-                if dirs:
-                    m.rows[table] = [
-                        _iso(lr.asDict())
-                        for lr in self.spark.read.parquet(*dirs).collect()
-                    ]
-                m.tables[table] = []  # row table owns the data now
-            cur = {x[key]: x for x in m.rows.get(table, [])}
-            cur[r[key]] = r
-            m.rows[table] = list(cur.values())
+        return dict(self.manifest.props)
 
     def read_rows(self, table: str) -> list[dict]:
-        return list(self._cur().rows.get(table, []))
+        return list(self.manifest.rows.get(table, []))
 
     def is_row_table(self, table: str) -> bool:
-        """True when the table currently lives in the manifest row tier
-        (committed or staged) — readers/writers use this to route."""
-        return table in self._cur().rows
+        return table in self.manifest.rows
 
-    def replace_rows(self, table: str, rows: list[dict]) -> None:
-        """Replace a manifest row table wholesale — driver-side, zero Spark
-        jobs; visible after commit(). Also claims the name from the parquet
-        tier (any previously-registered data dirs are dropped from the
-        snapshot), so a session-scoped reset migrates a legacy parquet
-        table to the row tier in one call."""
-        m = self._begin()
-        conv = [_iso(r) for r in rows]
-        with self._lock:
-            m.rows[table] = conv
-            if m.tables.get(table):
-                m.tables[table] = []
+    def read(self, table: str, schema=None) -> DataFrame:
+        """The table as of this manifest. A given ``schema`` is the read
+        schema of parquet dirs too (no inference job; a column an older dir
+        lacks reads as NULL). A missing dir raises ``PATH_NOT_FOUND``."""
+        # row tables read from the manifest; a legacy warehouse's parquet
+        # dirs of a registered row table are read until its first row write
+        m, spark = self.manifest, self.spark
+        if table in m.rows or (
+            table in Warehouse.ROW_TABLE_SCHEMAS and not m.tables.get(table)
+        ):
+            return self._rows_df(
+                m.rows.get(table, []), schema or Warehouse.ROW_TABLE_SCHEMAS[table]
+            )
+        dirs = m.tables.get(table)
+        if not dirs:
+            if schema is None:
+                raise KeyError(f"table {table!r} empty and no schema given")
+            return spark.createDataFrame([], schema)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*dirs)
 
     def _rows_df(self, rows: list[dict], schema: StructType) -> DataFrame:
         out = []
@@ -207,114 +143,189 @@ class Warehouse:
             out.append(tuple(vals))
         return self.spark.createDataFrame(out, schema)
 
-    # -- table ops ----------------------------------------------------------
+
+@dataclass
+class Transaction:
+    """A ``Warehouse`` object's one open write: a staged copy of HEAD and
+    every data dir it named. Leaving its ``with`` block uncommitted aborts."""
+
+    wh: Warehouse
+    manifest: _Manifest
+    dirs: list[str] = field(default_factory=list)
+
+    def __enter__(self) -> Transaction:
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if self.wh._tx is self:  # not committed: abort
+            self.wh._tx = None
+            for d in self.dirs:
+                shutil.rmtree(d, ignore_errors=True)
+
+
+class Warehouse:
+    def __init__(self, spark: SparkSession, path: str):
+        self.spark = spark
+        self.path = path
+        os.makedirs(path, exist_ok=True)
+        self._manifest = _Manifest()  # the last committed manifest seen
+        self._head()
+        self._tx: Transaction | None = None
+        # pool threads write concurrently; staging mutations take the lock
+        self._lock = threading.RLock()
+
+    # -- manifest machinery ------------------------------------------------
+
+    def _head_path(self) -> str:
+        return os.path.join(self.path, "HEAD")
+
+    def _manifest_path(self, v: int) -> str:
+        return os.path.join(self.path, f"manifest-{v}.json")
+
+    def _head(self) -> _Manifest:
+        """HEAD as on disk; the manifest is reloaded only when HEAD moved."""
+        try:
+            with open(self._head_path()) as f:
+                v = int(f.read().strip())
+        except FileNotFoundError:
+            v = 0
+        m = self._manifest  # one read: other threads may swap it
+        if v != m.version:
+            m = self._manifest = _Manifest.load(self._manifest_path(v))
+        return m
+
+    def snapshot(self) -> Snapshot:
+        """HEAD as on disk now, as an immutable view."""
+        return Snapshot(self.spark, self._head())
+
+    def transaction(self) -> Transaction:
+        """Open this object's one transaction, on HEAD as on disk."""
+        with self._lock:
+            if self._tx is not None:
+                raise RuntimeError(f"warehouse {self.path}: a transaction is open")
+            self._tx = Transaction(self, self._head().staged())
+            return self._tx
+
+    def _require_tx(self) -> Transaction:
+        if self._tx is None:
+            raise RuntimeError(f"warehouse {self.path}: no open transaction")
+        return self._tx
+
+    def commit(self, tag: str) -> int:
+        """Atomically publish the open transaction as one snapshot."""
+        with self._lock:
+            m = self._require_tx().manifest
+            m.version, m.tag = m.version + 1, tag
+            m.dump(self._manifest_path(m.version))
+            tmp = self._head_path() + ".tmp"
+            with open(tmp, "w") as f:
+                f.write(str(m.version))
+            os.replace(tmp, self._head_path())  # atomic publish
+            self._manifest, self._tx = m, None
+        return m.version
+
+    def _view(self) -> Snapshot:
+        """The open transaction's manifest, else the last committed one."""
+        tx = self._tx
+        return Snapshot(self.spark, self._manifest if tx is None else tx.manifest)
+
+    @property
+    def props(self) -> dict[str, str]:
+        return self._view().props
 
     def read(self, table: str, schema=None) -> DataFrame:
-        """The table as of the current snapshot. A given ``schema`` is the
-        read schema of parquet dirs too: no inference job, and a column an
-        older dir lacks reads as NULL."""
-        # row tables read from the manifest; a LEGACY warehouse that still
-        # has parquet dirs for a registered row table (pre-migration
-        # snapshot) falls through to the dirs until its first row write
-        cur = self._cur()
-        if table in cur.rows or (
-            table in self.ROW_TABLE_SCHEMAS and not cur.tables.get(table)
-        ):
-            return self._rows_df(
-                cur.rows.get(table, []), schema or self.ROW_TABLE_SCHEMAS[table]
-            )
-        dirs = [d for d in cur.tables.get(table, []) if os.path.exists(d)]
-        if not dirs:
-            if schema is None:
-                raise KeyError(f"table {table!r} empty and no schema given")
-            return self.spark.createDataFrame([], schema)
-        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-        return reader.parquet(*dirs)
+        return self._view().read(table, schema)
 
-    def _new_data_dir(self, table: str) -> str:
-        return os.path.join(self.path, table, f"data-{uuid.uuid4().hex[:12]}")
+    def read_rows(self, table: str) -> list[dict]:
+        return self._view().read_rows(table)
 
-    def append(self, table: str, df: DataFrame) -> str:
-        """Stage an append; visible after commit(). Returns the data dir so
-        a writer can immediately re-read what it just wrote (column-pruned)
-        without waiting for the snapshot to publish."""
-        m = self._begin()
-        d = self._new_data_dir(table)
-        df.write.mode("overwrite").parquet(d)  # concurrent-safe (own dir)
+    def is_row_table(self, table: str) -> bool:
+        return self._view().is_row_table(table)
+
+    # -- row tables (metadata-sized, stored in the manifest) -----------------
+
+    # schemas for row tables so schema-less read() keeps working; the crawl
+    # engine registers "sessions" here (ethos_spark.schemas.SESSIONS)
+    ROW_TABLE_SCHEMAS: dict[str, StructType] = {}
+
+    def upsert_rows(self, table: str, row: dict, key: str) -> None:
+        """Stage an insert-or-replace of one JSON row by ``row[key]`` —
+        driver-side, no Spark job; datetimes are stored ISO. The first row
+        write to a table that still has parquet dirs (a pre-row-table
+        warehouse) folds their rows in first, so history isn't shadowed."""
+        m = self._require_tx().manifest
+        r = _iso(row)
         with self._lock:
-            m.tables.setdefault(table, []).append(d)
+            dirs = m.tables.get(table)
+            if table not in m.rows and dirs:
+                m.rows[table] = [
+                    _iso(lr.asDict()) for lr in self.spark.read.parquet(*dirs).collect()
+                ]
+                m.tables[table] = []  # row table owns the data now
+            cur = {x[key]: x for x in m.rows.get(table, [])}
+            cur[r[key]] = r
+            m.rows[table] = list(cur.values())
+
+    def replace_rows(self, table: str, rows: list[dict]) -> None:
+        """Stage a full replace into the manifest row tier, dropping any
+        parquet dirs of the table — driver-side, zero Spark jobs."""
+        m = self._require_tx().manifest
+        conv = [_iso(r) for r in rows]
+        with self._lock:
+            m.rows[table] = conv
+            if m.tables.get(table):
+                m.tables[table] = []
+
+    # -- table ops ----------------------------------------------------------
+
+    def _new_data_dir(self, tx: Transaction, table: str, df: DataFrame) -> str:
+        """Write ``df`` to a fresh data dir of its own (concurrent-safe),
+        named in ``tx`` before the write starts, so an abort deletes it even
+        when the write failed."""
+        d = os.path.join(self.path, table, f"data-{uuid.uuid4().hex[:12]}")
+        with self._lock:
+            tx.dirs.append(d)
+        df.write.mode("overwrite").parquet(d)
         return d
 
-    def replace(self, table: str, df: DataFrame, force_parquet: bool = False) -> None:
-        """Stage a full replace (copy-on-write); visible after commit().
-
-        With Iceberg this would be MERGE / dynamic-partition overwrite; on a
-        10^10-row frontier the working set is partitioned by host bucket so
-        only dirty buckets rewrite — here the pending set is small relative
-        to seen/pages (it shrinks every round), so CoW is the right shape.
-
-        Replacing a ROW table (e.g. an admin delete over sessions) collects
-        the DataFrame — metadata-sized by construction. ``force_parquet``
-        pins a dual-tier table (host_offsets) to the distributed parquet
-        tier, evicting any manifest-row copy of it.
-        """
-        m = self._begin()
-        if force_parquet:
-            with self._lock:
-                m.rows.pop(table, None)
-        elif table in m.rows or table in self.ROW_TABLE_SCHEMAS:
-            rows = [_iso(r.asDict()) for r in df.collect()]
-            with self._lock:
-                m.rows[table] = rows
-            return
-        d = self._new_data_dir(table)
-        df.write.mode("overwrite").parquet(d)
+    def append(self, table: str, df: DataFrame) -> str:
+        """Stage an append. Returns the data dir so a writer can re-read
+        what it just wrote (column-pruned) before the commit."""
+        tx = self._require_tx()
+        d = self._new_data_dir(tx, table, df)
         with self._lock:
-            m.tables[table] = [d]
+            tx.manifest.tables.setdefault(table, []).append(d)
+        return d
+
+    def replace(self, table: str, df: DataFrame) -> None:
+        """Stage a full replace (copy-on-write) into the parquet tier,
+        dropping any manifest-row copy of the table. Iceberg would MERGE;
+        the pending set is small next to seen/pages (it shrinks every
+        round), so CoW is the right shape."""
+        tx = self._require_tx()
+        d = self._new_data_dir(tx, table, df)
+        with self._lock:
+            tx.manifest.rows.pop(table, None)
+            tx.manifest.tables[table] = [d]
 
     def compact(self, table: str) -> bool:
-        """Rewrite a multi-dir append table into ONE data dir (staged;
-        visible after commit()). Iceberg analogue: rewrite_data_files.
-
-        Each append adds a dir, so a long crawl's tables read through many
-        small dirs; ``cli maintain --compact`` folds them into one, on the
-        same cadence as vacuum(). Returns False when the table already has
-        ≤1 dir (nothing to do)."""
-        m = self._begin()
+        """Stage a rewrite of a multi-dir append table into ONE data dir
+        (Iceberg rewrite_data_files, run by ``cli maintain --compact``).
+        Returns False when the table has ≤1 dir (nothing to do)."""
+        tx = self._require_tx()
         with self._lock:
-            dirs = [d for d in m.tables.get(table, []) if os.path.exists(d)]
+            dirs = list(tx.manifest.tables.get(table, []))
         if len(dirs) <= 1:
             return False
-        d = self._new_data_dir(table)
-        self.spark.read.parquet(*dirs).write.mode("overwrite").parquet(d)
+        d = self._new_data_dir(tx, table, self.spark.read.parquet(*dirs))
         with self._lock:
-            m.tables[table] = [d]
+            tx.manifest.tables[table] = [d]
         return True
 
     def set_prop(self, key: str, value: str) -> None:
-        m = self._begin()
+        m = self._require_tx().manifest
         with self._lock:
             m.props[key] = value
-
-    def _sweep(self, manifests: list[str]) -> list[str]:
-        """Delete every table data dir that none of the given manifest
-        files references; returns the removed dirs."""
-        live: set[str] = set()
-        for p in manifests:
-            if os.path.exists(p):
-                for ds in _Manifest.load(p).tables.values():
-                    live.update(ds)
-        removed: list[str] = []
-        for table in sorted(os.listdir(self.path)):
-            tdir = os.path.join(self.path, table)
-            if not os.path.isdir(tdir):
-                continue
-            for d in os.listdir(tdir):
-                full = os.path.join(tdir, d)
-                if full not in live:
-                    shutil.rmtree(full, ignore_errors=True)
-                    removed.append(full)
-        return removed
 
     def _manifest_versions(self) -> list[int]:
         """Versions of the manifest files on disk."""
@@ -325,26 +336,27 @@ class Warehouse:
         ]
 
     def gc_orphans(self) -> list[str]:
-        """Delete data dirs referenced by NO manifest — leftovers of a
-        writer that crashed between staging an append and committing the
-        snapshot. Because reads only ever resolve through a committed
-        manifest, orphans are invisible to queries (no double-append is
-        possible); this reclaims the disk and keeps re-runs byte-clean.
-
-        Call when (re)opening a warehouse for writing — never concurrently
-        with a live writer (single-writer model; Iceberg's commit lock is
-        the production analogue). Returns the removed dirs."""
-        return self._sweep([self._manifest_path(v) for v in self._manifest_versions()])
+        """Delete the data dirs no manifest on disk names (expired, or of a
+        writer process that died inside a transaction): queries never see
+        them. Never call it while a transaction is open, here or in another
+        writer. Returns the removed dirs."""
+        live: set[str] = set()
+        for v in self._manifest_versions():
+            for ds in _Manifest.load(self._manifest_path(v)).tables.values():
+                live.update(ds)
+        on_disk = sorted(glob.glob(os.path.join(glob.escape(self.path), "*", "*")))
+        removed = [d for d in on_disk if d not in live]
+        for d in removed:
+            shutil.rmtree(d, ignore_errors=True)
+        return removed
 
     def vacuum(self, keep_last: int = 3) -> None:
-        """Expire every snapshot older than the last ``keep_last`` (at least
-        HEAD is kept): delete their manifest files, then every data dir
-        that no kept snapshot references (Iceberg expire_snapshots
-        analogue). Manifests go first, so no manifest left on disk ever
-        names a deleted dir."""
-        v = self._manifest.version
-        first = max(1, v - max(keep_last, 1) + 1)
-        for ver in self._manifest_versions():
-            if ver < first:
-                os.remove(self._manifest_path(ver))
-        self._sweep([self._manifest_path(i) for i in range(first, v + 1)])
+        """Expire the snapshots older than the last ``keep_last`` of HEAD on
+        disk (HEAD itself is kept): delete their manifests, then the data
+        dirs no remaining manifest names, so no manifest ever names a
+        deleted dir."""
+        first = self._head().version - max(keep_last, 1) + 1
+        for v in self._manifest_versions():
+            if v < first:
+                os.remove(self._manifest_path(v))
+        self.gc_orphans()

@@ -415,12 +415,10 @@ def _run(args, spark) -> int:
         out: dict = {}
         if args.gc_orphans:
             out["gc_orphans_removed"] = len(wh.gc_orphans())
-        compacted = []
-        for t in (x for x in args.compact.split(",") if x):
-            if wh.compact(t):
-                compacted.append(t)
-        if compacted:
-            wh.commit("compact")
+        with wh.transaction():
+            compacted = [t for t in args.compact.split(",") if t and wh.compact(t)]
+            if compacted:
+                wh.commit("compact")
         out["compacted"] = compacted
         if args.vacuum is not None:
             wh.vacuum(keep_last=args.vacuum)

@@ -192,16 +192,18 @@ class CrawlSummary:
 
 
 class RoundScope:
-    """The owner of one crawl round's cached DataFrames and of its one
-    thread pool. Phases cache through ``cache()`` and run overlapped jobs
-    through ``submit()``. On exit, normal or exceptional, the pool is
-    joined (tasks not yet started are cancelled when the round failed)
-    and every cached relation is unpersisted, so a round that raises
-    leaves nothing pinned in a long-lived session."""
+    """The owner of one crawl round's warehouse transaction, cached
+    DataFrames and thread pool. Phases cache through ``cache()`` and run
+    overlapped jobs through ``submit()``. On exit the pool is joined (tasks
+    not yet started are cancelled when the round failed) and every cached
+    relation unpersisted; a round that raised then has its transaction
+    aborted and ``on_abort`` called, so it leaves nothing pinned in a
+    long-lived session, nothing on disk and no half-counted loop state."""
 
     THREAD_PREFIX = "crawl-round"
 
-    def __init__(self) -> None:
+    def __init__(self, wh: Warehouse, on_abort: Callable[[], None]) -> None:
+        self._wh, self._on_abort = wh, on_abort
         self._cached: list[DataFrame] = []
         self._futures: list[Future] = []
         # the overlapped listing-message collect plus the independent
@@ -209,13 +211,17 @@ class RoundScope:
         self._pool = ThreadPoolExecutor(8, thread_name_prefix=self.THREAD_PREFIX)
 
     def __enter__(self) -> RoundScope:
+        self._tx = self._wh.transaction()
         return self
 
     def __exit__(self, exc_type, exc, tb) -> None:
-        # running jobs finish before the relations they read are released
+        # running jobs finish before their inputs are released or dirs aborted
         self._pool.shutdown(wait=True, cancel_futures=exc_type is not None)
         for df in self._cached:
             df.unpersist()
+        self._tx.__exit__(exc_type, exc, tb)
+        if exc_type is not None:
+            self._on_abort()
 
     def cache(self, df: DataFrame) -> DataFrame:
         self._cached.append(df.cache())
@@ -783,62 +789,56 @@ class CrawlRunner:
 
     def seed(self, urls: list[str]) -> None:
         """Install the seed list as round-0 frontier + empty state tables."""
-        df = self.spark.createDataFrame([(u,) for u in urls], "url string")
-        self.wh.replace("frontier_pending", self._frontier_rows(df, "listing"))
-        for t, s in [
-            ("seen_session", schemas.SEEN),
-            ("host_state", "host string, pages_processed long, stopped_reason string"),
-        ]:
-            self.wh.replace(t, self.spark.createDataFrame([], s))
-        # per-chain itemsProcessed offsets are SESSION state in the
-        # reference (MetadataTracker builds fieldStats fresh per session) —
-        # reset on seed, preserved on resume. Tier choice: one chain = one
-        # configured source in the reference, so the offsets are
-        # metadata-sized by construction → manifest row table (zero Spark
-        # jobs per round). The parquet tier remains for synthetic
-        # extreme fan-out (e.g. the 240k-chain scaling workload), where a
-        # driver-held map per round would serialize a multi-MB manifest.
-        if len(urls) <= OFFSETS_ROW_TIER_MAX_CHAINS:
-            self.wh.replace_rows("host_offsets", [])
-        else:
-            self.wh.replace(
-                "host_offsets",
-                self.spark.createDataFrame([], schemas.HOST_OFFSETS),
-                force_parquet=True,
-            )
-        if self.opt.fetch_robots:
-            # robots cache is SESSION state (a recrawl session re-reads
-            # robots.txt — rules change between crawls); resume() keeps it
-            self.wh.replace(
-                "robots_rules", self.spark.createDataFrame([], schemas.ROBOTS)
-            )
-        if self.opt.prioritize_by_rank:
-            # the link graph is SESSION state too (priorities must derive
-            # from THIS session's discoveries, like robots_rules): without
-            # the reset a recrawl in the same warehouse would schedule from
-            # the previous session's accumulated edges
-            self.wh.replace(
-                "link_edges", self.spark.createDataFrame([], schemas.LINK_EDGES)
-            )
-        self.wh.set_prop("session_id", self.session_id)
-        self.wh.set_prop("round", "0")
-        self.wh.set_prop("order_offset", "0")
-        self.wh.set_prop("session_seen_count", "0")
-        # frontier-size hints: known row counts of the pending set, used to
-        # size-gate broadcasts next round without an extra count job
-        self.wh.set_prop("hint_listing", str(len(urls)))
-        self.wh.set_prop("hint_content", "0")
-        self.wh.set_prop("summary", self.summary.to_json())
-        self.wh.commit("seed")
+        with self.wh.transaction():
+            df = self.spark.createDataFrame([(u,) for u in urls], "url string")
+            self.wh.replace("frontier_pending", self._frontier_rows(df, "listing"))
+            host_state = "host string, pages_processed long, stopped_reason string"
+            empty = [("seen_session", schemas.SEEN), ("host_state", host_state)]
+            # per-chain itemsProcessed offsets are SESSION state in the
+            # reference (MetadataTracker builds fieldStats fresh per
+            # session): reset on seed, preserved on resume. One chain = one
+            # configured source, so the manifest row tier fits (zero Spark
+            # jobs per round); the parquet tier is for extreme fan-out (the
+            # 240k-chain scaling workload), where a driver-held map per round
+            # would serialize a multi-MB manifest.
+            if len(urls) <= OFFSETS_ROW_TIER_MAX_CHAINS:
+                self.wh.replace_rows("host_offsets", [])
+            else:
+                empty.append(("host_offsets", schemas.HOST_OFFSETS))
+            if self.opt.fetch_robots:
+                # robots cache is SESSION state (a recrawl session re-reads
+                # robots.txt — rules change between crawls); resume() keeps it
+                empty.append(("robots_rules", schemas.ROBOTS))
+            if self.opt.prioritize_by_rank:
+                # the link graph is SESSION state too (priorities must derive
+                # from THIS session's discoveries, like robots_rules): without
+                # the reset a recrawl in the same warehouse would schedule from
+                # the previous session's accumulated edges
+                empty.append(("link_edges", schemas.LINK_EDGES))
+            for t, schema in empty:
+                self.wh.replace(t, self.spark.createDataFrame([], schema))
+            self.wh.set_prop("session_id", self.session_id)
+            self.wh.set_prop("round", "0")
+            self.wh.set_prop("order_offset", "0")
+            self.wh.set_prop("session_seen_count", "0")
+            # frontier-size hints: known row counts of the pending set, used to
+            # size-gate broadcasts next round without an extra count job
+            self.wh.set_prop("hint_listing", str(len(urls)))
+            self.wh.set_prop("hint_content", "0")
+            self.wh.set_prop("summary", self.summary.to_json())
+            self.wh.commit("seed")
 
     # -- resume -------------------------------------------------------------
 
     def resume(self) -> None:
-        """Reload loop state from the last committed snapshot. Any data
-        dirs staged by a crashed predecessor (append without commit) are
-        garbage-collected first — the re-run of the interrupted round then
-        writes fresh dirs, so no duplicate rows can surface."""
+        """Reload loop state from the last committed snapshot, after
+        deleting the data dirs a killed predecessor staged and never
+        committed; the re-run of its round then writes fresh dirs."""
         self.wh.gc_orphans()
+        self._load_state()
+
+    def _load_state(self) -> None:
+        """Session id and summary as of the last commit."""
         p = self.wh.props
         self.session_id = p["session_id"]
         s = json.loads(p["summary"])
@@ -955,7 +955,7 @@ class CrawlRunner:
         # of a full no-op round (~5 s of fixed stage latency saved)
         if listing_hint == 0 and carry_hint == 0:
             return False
-        with RoundScope() as scope:
+        with RoundScope(self.wh, on_abort=self._load_state) as scope:
             lst = self._listing_phase(scope, pending, listing_hint)
             st = self._dedup_stats_phase(scope, lst)
             sch = self._schedule_phase(scope, pending, lst, st, carry_hint)
@@ -1517,8 +1517,7 @@ class CrawlRunner:
         # table, reference-exact even when many chains crawl in one
         # session (round-2 VERDICT item 6; the old global order_offset
         # leaked other chains' counts into the indices).
-        # snapshot of per-host offsets BEFORE this round's counts land
-        # (read resolved now; the commit phase's replace writes a fresh dir)
+        # per-host offsets BEFORE this round's counts land
         prev_offsets = self.wh.read("host_offsets", schemas.HOST_OFFSETS)
         lfs_df = (
             lst.lres.select(*x.field_stats_explode)
@@ -1635,8 +1634,7 @@ class CrawlRunner:
                 .groupBy("host")
                 .agg(F.sum("items_cum").alias("items_cum"))
             )
-            # force_parquet: stay in the big tier
-            self.wh.replace("host_offsets", new_offsets, force_parquet=True)
+            self.wh.replace("host_offsets", new_offsets)
             return
         # row tier: one tiny collect of per-host counts off the just-written
         # (column-pruned) pages slice, folded into the manifest map — no
@@ -1748,12 +1746,9 @@ class CrawlRunner:
         storage, zero per-round jobs."""
         if not self.summary.items_with_errors:
             return
-        try:
-            pages = self.wh.read("pages", schemas.PAGES_OUT)
-        except KeyError:
-            return
         rows = (
-            pages.where(
+            self.wh.read("pages", schemas.PAGES_OUT)
+            .where(
                 (F.col("crawled_at") == F.lit(self.start_time))
                 & F.col("had_extraction_error")
             )
@@ -1784,9 +1779,10 @@ class CrawlRunner:
             else self._session_stop_reason()
         )
         self._collect_content_errors()
-        self._write_session_row(ended=True)
-        self.wh.set_prop("summary", self.summary.to_json())
-        self.wh.commit("final")
+        with self.wh.transaction():
+            self._write_session_row(ended=True)
+            self.wh.set_prop("summary", self.summary.to_json())
+            self.wh.commit("final")
         # release fetcher resources (bucketed CorpusFetcher keeps its last
         # staged candidate table + data dir alive until told otherwise)
         close = getattr(self.fetcher, "close", None)

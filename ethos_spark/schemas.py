@@ -159,7 +159,6 @@ HOST_OFFSETS = StructType(
 # dual-tier table: manifest row table for reference-shaped sessions (one
 # chain = one configured source → metadata-sized; zero Spark jobs per
 # round), parquet replace tier above OFFSETS_ROW_TIER_MAX_CHAINS chains
-# (the crawl runner pins it with force_parquet=True at seed)
 _Warehouse.ROW_TABLE_SCHEMAS["host_offsets"] = HOST_OFFSETS
 
 ROBOTS = StructType(

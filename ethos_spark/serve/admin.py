@@ -1,11 +1,6 @@
-"""Admin/maintenance operations (reference `ethos clean` path).
-
-- S7 content deletion by hash list (ContentStore.ts:212-235, ENOENT
-  tolerated → deleting an absent hash is a no-op, reported in the count)
-- session deletion cascade (sessions + session_content + their pages'
-  seen entries stay: the reference keeps crawled_content on session
-  delete; we mirror that)
-"""
+"""Admin operation of the reference `ethos clean` path: S7 content
+deletion by hash list (ContentStore.ts:212-235, ENOENT tolerated →
+deleting an absent hash is a no-op, reported in the count)."""
 
 from __future__ import annotations
 
@@ -24,21 +19,11 @@ def delete_content_by_hash(wh: Warehouse, hashes: list[str]) -> dict:
     hset = spark.createDataFrame([(h,) for h in hashes], "hash string")
     found = pages.join(F.broadcast(hset), "hash", "left_semi").count()
     remaining = pages.join(F.broadcast(hset), "hash", "left_anti")
-    wh.replace("pages", remaining)
     # the persistent URL-seen set is a projection of pages (runner design),
     # so rewriting pages updates seen membership atomically — matching the
     # reference's clean path, which deletes both file and metadata row
-    wh.commit("delete-content")
+    with wh.transaction():
+        wh.replace("pages", remaining)
+        wh.commit("delete-content")
     return {"deleted": found, "not_found": len(hashes) - found}
 
-
-def delete_session(wh: Warehouse, session_id: str) -> dict:
-    """Remove a session row + its junction rows (pages survive, matching
-    the reference's metadata-first deletion order)."""
-    sessions = wh.read("sessions", schemas.SESSIONS)
-    sc = wh.read("session_content", schemas.SESSION_CONTENT)
-    n = sc.where(F.col("session_id") == session_id).count()
-    wh.replace("sessions", sessions.where(F.col("id") != session_id))
-    wh.replace("session_content", sc.where(F.col("session_id") != session_id))
-    wh.commit("delete-session")
-    return {"session_id": session_id, "links_removed": n}

@@ -28,10 +28,10 @@ mirror the reference:
   CLI only); paged ``{results, meta}`` (50/page, the viewer's page size,
   ui/viewer.ts:81-120) so the driver never collects the full table.
 
-Request handling is driver-side: each call runs a small pushed-filter
-Spark query over the warehouse snapshot taken at construction. That is the
-correct shape for an analytics store — the server is a reader of committed
-snapshots, never a writer.
+Request handling is driver-side, a reader of committed snapshots: each call
+runs a small pushed-filter Spark query. An app built by ``from_warehouse``
+follows HEAD, comparing the snapshot version per request (one small file
+read, no Spark job) and re-resolving pages and sessions when it moved.
 """
 
 from __future__ import annotations
@@ -117,20 +117,27 @@ class ApiApp:
         sessions: DataFrame,
         sources: list,  # SourceConfig-likes with .id / .name
     ):
-        self.pages = pages
-        self.sessions = sessions
+        self._rel = (None, pages, sessions)  # (HEAD version, pages, sessions)
+        self._wh: Warehouse | None = None
         self.sources = sources
 
     @classmethod
     def from_warehouse(
         cls, spark: SparkSession, warehouse_path: str, sources: list
     ) -> "ApiApp":
-        wh = Warehouse(spark, warehouse_path)
-        return cls(
-            wh.read("pages", schemas.PAGES_OUT),
-            wh.read("sessions", schemas.SESSIONS),
-            sources,
-        )
+        app = cls(None, None, sources)
+        app._wh = Warehouse(spark, warehouse_path)
+        return app
+
+    def _relations(self) -> tuple:
+        """Re-resolved when HEAD moved; one tuple, as requests run concurrently."""
+        rel, wh = self._rel, self._wh
+        snap = wh.snapshot() if wh is not None else None
+        if snap is not None and snap.version != rel[0]:
+            pages = snap.read("pages", schemas.PAGES_OUT)
+            sessions = snap.read("sessions", schemas.SESSIONS)
+            rel = self._rel = (snap.version, pages, sessions)
+        return rel
 
     def handle(self, path: str, params: dict) -> tuple[int, object | None]:
         """→ (http status, json-serializable body | None for empty)."""
@@ -141,11 +148,12 @@ class ApiApp:
             }
         if path == "/api/sources":
             return 200, [{"id": s.id, "name": s.name} for s in self.sources]
+        _, pages, sessions = self._relations()
         if path == "/api/sessions":
             # paged (50/page, viewer page size) — the driver never
             # materializes the full sessions table
             rows, meta = sessions_page(
-                self.sessions,
+                sessions,
                 page=_int_param(params, "page") or 1,
                 limit=_int_param(params, "limit") or 50,
             )
@@ -168,32 +176,34 @@ class ApiApp:
                 "meta": meta,
             }
         if path == "/api/publications":
-            return self._publications(params)
+            return self._publications(pages, params)
         if path.startswith("/api/publications/"):
             return self._by_hash(
-                path.split("/", 3)[3], lambda r: (200, _pub_json(r))
+                pages, path.split("/", 3)[3], lambda r: (200, _pub_json(r))
             )
         # HTML web views, wired AFTER the api routes like the reference
         # (index.ts:38-39): "/" = listing, any other single segment is
         # treated as "/:hash" (so even /api alone hits the hash validator)
         if path == "/":
-            return self._listing_view(params)
+            return self._listing_view(pages, params)
         if re.fullmatch(r"/[^/]+", path):
-            return self._by_hash(path[1:], lambda r: self._detail_view(r, params))
+            return self._by_hash(
+                pages, path[1:], lambda r: self._detail_view(r, params)
+            )
         return 404, _err("NOT_FOUND", f"Route {path} not found")
 
-    def _publications(self, params: dict) -> tuple[int, object]:
-        rows, meta = publications(self.pages, _pub_query(params))
+    def _publications(self, pages: DataFrame, params: dict) -> tuple[int, object]:
+        rows, meta = publications(pages, _pub_query(params))
         return 200, {"results": [_pub_json(r) for r in rows.collect()], "meta": meta}
 
-    def _by_hash(self, h: str, respond) -> tuple[int, object | None]:
+    def _by_hash(self, pages: DataFrame, h: str, respond) -> tuple[int, object | None]:
         """``respond(row)`` for the page with hash ``h``. An invalid hash is
         an empty 404 (publications.ts:122-126, detail-handler.ts:23-26); a
         missing row is ApiError(NOT_FOUND), which the errorHandler serves
         as 400 (error.ts:27-31)."""
         if not is_hash_valid(h):
             return 404, None
-        rows = self.pages.where(F.col("hash") == h).limit(1).collect()
+        rows = pages.where(F.col("hash") == h).limit(1).collect()
         if not rows:
             return 400, _err("NOT_FOUND", "Metadata not found")
         return respond(rows[0])
@@ -203,10 +213,10 @@ class ApiApp:
     def _source_names(self) -> dict:
         return {s.id: s.name for s in self.sources}
 
-    def _listing_view(self, params: dict) -> tuple[int, object]:
+    def _listing_view(self, pages: DataFrame, params: dict) -> tuple[int, object]:
         try:
             q = _pub_query(params)
-            rows, meta = publications(self.pages, q)
+            rows, meta = publications(pages, q)
             names = self._source_names()
             pubs = [
                 {

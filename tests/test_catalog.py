@@ -1,9 +1,12 @@
-"""Warehouse snapshot-catalog units: crash-orphan GC, manifest row
-tables, compact/vacuum maintenance, snapshot expiry, schema-given reads
-and reading a manifest written by an older tree."""
+"""Warehouse snapshot-catalog units: transactions (abort on exception,
+one per object), crash-orphan GC, manifest row tables, compact/vacuum
+maintenance, snapshot expiry, a vacuum from a stale object, loud reads of
+a missing dir, schema-given reads and reading a manifest written by an
+older tree."""
 
 import json
 import os
+import shutil
 
 import pytest
 
@@ -24,12 +27,14 @@ def test_orphan_gc_after_crash(spark, tmp_path):
     path = str(tmp_path / "wh")
     wh = Warehouse(spark, path)
     df = spark.range(5).selectExpr("id")
-    wh.append("t", df)
-    wh.commit("c1")
+    with wh.transaction():
+        wh.append("t", df)
+        wh.commit("c1")
     assert len(os.listdir(os.path.join(path, "t"))) == 1
 
     crasher = Warehouse(spark, path)
-    crasher.append("t", df)  # staged, never committed
+    crasher.transaction()  # opened, never committed nor aborted
+    crasher.append("t", df)
     assert len(os.listdir(os.path.join(path, "t"))) == 2
     del crasher
 
@@ -39,9 +44,86 @@ def test_orphan_gc_after_crash(spark, tmp_path):
     assert len(os.listdir(os.path.join(path, "t"))) == 1
     assert wh2.read("t").count() == 5
     # the re-run of the 'crashed' write commits cleanly, no duplicates
-    wh2.append("t", df)
-    wh2.commit("c2")
+    with wh2.transaction():
+        wh2.append("t", df)
+        wh2.commit("c2")
     assert wh2.read("t").count() == 10
+
+
+def _dirs(path, table):
+    return sorted(os.listdir(os.path.join(path, table)))
+
+
+def test_failed_transaction_aborts(spark, tmp_path):
+    """An exception inside ``with wh.transaction()`` drops the staged
+    manifest and deletes every dir the transaction named, also one whose
+    write failed: the same object then reads the committed rows and its
+    next commit publishes only its own writes."""
+    path = str(tmp_path / "wha")
+    wh = Warehouse(spark, path)
+    with wh.transaction():
+        wh.append("t", spark.range(3))
+        wh.commit("c1")
+    committed = _dirs(path, "t")
+
+    with pytest.raises(RuntimeError, match="injected"):
+        with wh.transaction():
+            wh.append("t", spark.range(5))
+            assert wh.read("t").count() == 8  # read-your-writes
+            raise RuntimeError("injected")
+    with pytest.raises(Exception, match="boom"):
+        with wh.transaction():
+            wh.append("t", spark.range(2).selectExpr("raise_error('boom') AS id"))
+    assert _dirs(path, "t") == committed
+    assert wh.read("t").count() == 3
+
+    with pytest.raises(RuntimeError, match="no open transaction"):
+        wh.append("t", spark.range(1))
+    with wh.transaction():
+        with pytest.raises(RuntimeError, match="a transaction is open"):
+            wh.transaction()
+        wh.append("t", spark.range(2))
+        wh.commit("c2")
+    assert Warehouse(spark, path).read("t").count() == 5
+
+
+def test_vacuum_from_stale_object_keeps_head(spark, tmp_path):
+    """A Warehouse opened before another object committed expires from
+    HEAD on disk, not from the manifest it last saw: every dir HEAD lists
+    survives and the table reads all its rows."""
+    path = str(tmp_path / "whv")
+    stale = Warehouse(spark, path)
+    with stale.transaction():
+        stale.append("t", spark.range(3))
+        stale.commit("v1")
+    other = Warehouse(spark, path)
+    with other.transaction():
+        other.append("t", spark.range(3, 7))
+        other.commit("v2")
+
+    stale.vacuum(keep_last=3)
+    head = Warehouse(spark, path)._manifest
+    assert head.version == 2 and len(head.tables["t"]) == 2
+    assert all(os.path.exists(d) for d in head.tables["t"])
+    assert Warehouse(spark, path).read("t").count() == 7
+    assert stale.snapshot().read("t").count() == 7
+
+
+def test_missing_data_dir_raises(spark, tmp_path):
+    """A committed dir removed by hand makes the read fail loudly instead
+    of returning the rows of the dirs that are left."""
+    from pyspark.errors import AnalysisException
+
+    path = str(tmp_path / "whx")
+    wh = Warehouse(spark, path)
+    for i in range(2):
+        with wh.transaction():
+            wh.append("t", spark.range(i * 3, i * 3 + 3))
+            wh.commit(f"r{i}")
+    shutil.rmtree(wh._manifest.tables["t"][0])
+    for schema in (None, "id long"):
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            Warehouse(spark, path).read("t", schema)
 
 
 def test_row_tables_roundtrip(spark, tmp_path):
@@ -51,6 +133,7 @@ def test_row_tables_roundtrip(spark, tmp_path):
 
     wh = Warehouse(spark, str(tmp_path / "whr"))
     t0 = datetime(2025, 7, 1, tzinfo=timezone.utc)
+    wh.transaction()
     wh.upsert_rows(
         "sessions",
         {
@@ -62,6 +145,7 @@ def test_row_tables_roundtrip(spark, tmp_path):
     )
     wh.commit("one")
     # upsert same key replaces, new key appends; survives reopen
+    wh.transaction()
     wh.upsert_rows(
         "sessions",
         {
@@ -86,12 +170,6 @@ def test_row_tables_roundtrip(spark, tmp_path):
     assert set(rows) == {"s1", "s2"}
     assert rows["s1"].stopped_reason == "max_pages"
     assert rows["s1"].end_time is not None  # timestamp round-trip
-    # replace (admin-delete path) over a row table
-    import pyspark.sql.functions as F
-
-    wh2.replace("sessions", wh2.read("sessions").where(F.col("id") != "s1"))
-    wh2.commit("del")
-    assert [r.id for r in wh2.read("sessions").collect()] == ["s2"]
 
 
 def test_legacy_parquet_folds_into_row_table(spark, tmp_path):
@@ -108,11 +186,13 @@ def test_legacy_parquet_folds_into_row_table(spark, tmp_path):
         [("old1", "x", "X", t0, t0, "{}", "max_pages")], schemas.SESSIONS
     )
     # simulate the legacy layout: sessions as a parquet append table
-    wh.append("sessions", legacy)
-    wh.commit("legacy")
+    with wh.transaction():
+        wh.append("sessions", legacy)
+        wh.commit("legacy")
     wh2 = Warehouse(spark, wh.path)
     # legacy rows visible through the fallthrough before any row write
     assert [r.id for r in wh2.read("sessions").collect()] == ["old1"]
+    wh2.transaction()
     wh2.upsert_rows(
         "sessions",
         {
@@ -135,18 +215,22 @@ def test_compact_then_vacuum(spark, tmp_path):
     path = str(tmp_path / "whc")
     wh = Warehouse(spark, path)
     for i in range(3):
-        wh.append("t", spark.range(i * 10, i * 10 + 10).selectExpr("id", "id % 3 k"))
-        wh.commit(f"r{i}")
+        with wh.transaction():
+            rows = spark.range(i * 10, i * 10 + 10).selectExpr("id", "id % 3 k")
+            wh.append("t", rows)
+            wh.commit(f"r{i}")
     old_dirs = list(wh._manifest.tables["t"])
     assert len(old_dirs) == 3
     want = sorted(map(tuple, wh.read("t").collect()))
 
-    assert wh.compact("t") is True
-    wh.commit("compact")
+    with wh.transaction():
+        assert wh.compact("t") is True
+        wh.commit("compact")
     (only_dir,) = wh._manifest.tables["t"]
     assert only_dir not in old_dirs
     assert sorted(map(tuple, wh.read("t").collect())) == want
-    assert wh.compact("t") is False  # one dir: nothing to do
+    with wh.transaction():
+        assert wh.compact("t") is False  # one dir: nothing to do
 
     wh.vacuum(keep_last=1)
     assert not any(os.path.exists(d) for d in old_dirs)
@@ -163,9 +247,10 @@ def test_vacuum_expires_old_manifests(spark, tmp_path):
     wh = Warehouse(spark, path)
     one_row = spark.range(1)
     for i in range(100):
-        wh.append("t", one_row.selectExpr(f"{i} AS id"))
-        wh.set_prop("round", str(i))
-        wh.commit(f"r{i}")
+        with wh.transaction():
+            wh.append("t", one_row.selectExpr(f"{i} AS id"))
+            wh.set_prop("round", str(i))
+            wh.commit(f"r{i}")
 
     def manifests():
         return sorted(f for f in os.listdir(path) if f.startswith("manifest-"))
@@ -190,9 +275,10 @@ def test_read_with_schema_runs_no_job_and_nulls_missing_columns(spark, tmp_path)
     jobs), and a dir written before a column existed reads it as NULL."""
     path = str(tmp_path / "whs")
     wh = Warehouse(spark, path)
-    wh.append("t", spark.range(3).selectExpr("id", "'a' AS s"))
-    wh.append("t", spark.range(3, 5).selectExpr("id"))  # older layout: no s
-    wh.commit("c")
+    with wh.transaction():
+        wh.append("t", spark.range(3).selectExpr("id", "'a' AS s"))
+        wh.append("t", spark.range(3, 5).selectExpr("id"))  # older layout: no s
+        wh.commit("c")
     sc = spark.sparkContext
     sc.setJobGroup("schema-read", "schema-given reads")
     try:
@@ -244,10 +330,64 @@ def test_reads_manifest_with_buckets_entry(spark, tmp_path):
     )
     assert wh.props == {"round": "1"}
     more = spark.range(40, 45).selectExpr("concat('https://h/p/', id) url", "id n")
-    wh.append("pages", more)
-    v = wh.commit("round-2")
+    with wh.transaction():
+        wh.append("pages", more)
+        v = wh.commit("round-2")
     with open(os.path.join(path, f"manifest-{v}.json")) as f:
         m = json.load(f)
     assert "buckets" not in m
     assert m["tables"]["pages"][0] == data_dir
     assert Warehouse(spark, path).read("pages").count() == 45
+
+
+def test_snapshots_follow_concurrent_commits(spark, tmp_path):
+    """Threads sharing one Warehouse take snapshots while another object
+    commits: every snapshot loads (HEAD never names an unwritten manifest),
+    is whole (its props name its own version), and no thread ever sees HEAD
+    go back."""
+    import sys
+    import threading
+
+    path = str(tmp_path / "whf")
+    writer = Warehouse(spark, path)
+
+    def commit(i):
+        with writer.transaction():
+            writer.set_prop("v", str(i))
+            writer.commit(f"c{i}")
+
+    commit(1)
+    reader = Warehouse(spark, path)
+    stop, bad = threading.Event(), []
+
+    def follow():
+        last = 0
+        while not stop.is_set():
+            try:
+                snap = reader.snapshot()
+            except Exception as e:  # e.g. HEAD naming an unwritten manifest
+                bad.append(repr(e))
+                return
+            if snap.props["v"] != str(snap.version) or snap.version < last:
+                bad.append((last, snap.version, snap.props["v"]))
+            last = snap.version
+
+    threads = [
+        threading.Thread(target=follow)
+        for _ in range(len(os.sched_getaffinity(0)) + 2)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for i in range(2, 300):
+            commit(i)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=60)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not bad, bad[:5]
+    assert reader.snapshot().version == 299

@@ -3,6 +3,8 @@
 list + politeness budget)."""
 
 import dataclasses
+import json
+import os
 
 import pytest
 import pyspark.sql.functions as F
@@ -11,7 +13,7 @@ from ethos_spark.catalog import Warehouse
 from ethos_spark.crawl import fetcher as fetcher_mod
 from ethos_spark.crawl.fetcher import CorpusFetcher
 from ethos_spark.crawl.reference_sim import build_corpus, simulate_crawl
-from ethos_spark.crawl.runner import CrawlOptions, CrawlRunner
+from ethos_spark.crawl.runner import CrawlOptions, CrawlRunner, CrawlSummary
 from ethos_spark.session import get_spark
 from ethos_spark.sources.config import SYNTH_SOURCE
 from ethos_spark.synth import build_pages_df, listing_url
@@ -669,7 +671,7 @@ def test_offsets_roll_survives_mixed_fetch_failure(spark, tmp_path):
 
 def test_offsets_parquet_tier_equivalence(spark, tmp_path, monkeypatch):
     """Above OFFSETS_ROW_TIER_MAX_CHAINS chains the offsets table stays in
-    the distributed parquet tier (force_parquet); both tiers must yield
+    the distributed parquet tier (``replace``); both tiers must yield
     identical field-stats indices and final counter values."""
     import ethos_spark.crawl.runner as runner_mod
 
@@ -746,46 +748,57 @@ class RaiseAtContentFetcher:
         return self.inner.fetch(candidates, size_hint, stage=stage)
 
 
-def test_failed_round_leaves_nothing_behind_and_resumes(spark, tmp_path, corpus_df):
-    """A round that raises mid-way releases every relation it cached and
-    every pool thread it started; resume() then completes the crawl to the
-    same pages as a clean run."""
+def test_failed_round_leaves_nothing_behind_and_resumes(
+    spark, tmp_path, corpus_df, monkeypatch
+):
+    """A round that raises mid-way aborts its transaction: no data dir is
+    left on disk, no relation cached, no pool thread running, and the
+    runner's loop state is back at the last commit. The same Warehouse and
+    CrawlRunner, given a fetcher that works, then complete the crawl to
+    the pages, sessions row and summary of a clean run, with no
+    gc_orphans call."""
     import threading
 
     from ethos_spark.crawl.runner import RoundScope
 
+    def no_gc(self):
+        raise AssertionError("gc_orphans called")
+
+    monkeypatch.setattr(Warehouse, "gc_orphans", no_gc)
     seeds = [listing_url(h, 1) for h in range(N_HOSTS)]
     wh_clean = Warehouse(spark, str(tmp_path / "wh_clean"))
-    _run_crawl(spark, wh_clean, corpus_df, seeds)
+    _, clean = _run_crawl(spark, wh_clean, corpus_df, seeds)
 
     jsc = spark.sparkContext._jsc
     cached_before = jsc.getPersistentRDDs().size()
     wh_path = str(tmp_path / "wh_raise")
+    wh = Warehouse(spark, wh_path)
     runner = CrawlRunner(
-        spark,
-        Warehouse(spark, wh_path),
-        RaiseAtContentFetcher(corpus_df),
-        SYNTH_SOURCE,
-        CrawlOptions(),
+        spark, wh, RaiseAtContentFetcher(corpus_df), SYNTH_SOURCE, CrawlOptions()
     )
     runner.seed(seeds)
+
+    def data_dirs():
+        return sorted(
+            os.path.join(t, d)
+            for t in os.listdir(wh_path)
+            if os.path.isdir(os.path.join(wh_path, t))
+            for d in os.listdir(os.path.join(wh_path, t))
+        )
+
+    seeded = data_dirs()
     with pytest.raises(RuntimeError, match="injected: content fetch"):
         runner.run()
+    assert data_dirs() == seeded
     assert jsc.getPersistentRDDs().size() == cached_before
     assert not [
         t for t in threading.enumerate()
         if t.name.startswith(RoundScope.THREAD_PREFIX)
     ]
+    assert runner.summary == CrawlSummary(runner.session_id, SYNTH_SOURCE.id)
 
-    resumed = CrawlRunner(
-        spark,
-        Warehouse(spark, wh_path),
-        CorpusFetcher(corpus_df),
-        SYNTH_SOURCE,
-        CrawlOptions(),
-    )
-    resumed.resume()
-    resumed.run()
+    runner.fetcher = CorpusFetcher(corpus_df)
+    done = runner.run()
     cols = [
         "id", "hash", "source", "url", "url_hash", "host", "host_hash",
         "title", "author", "published_date", "content", "crawled_at",
@@ -793,11 +806,21 @@ def test_failed_round_leaves_nothing_behind_and_resumes(spark, tmp_path, corpus_
         "failed_fields", "extraction_errors",
     ]
 
-    def pages(path):
-        rows = Warehouse(spark, path).read("pages").select(*cols).collect()
+    def pages(w):
+        rows = w.read("pages").select(*cols).collect()
         return sorted(tuple(r[c] for c in cols) for r in rows)
 
-    assert pages(wh_path) == pages(str(tmp_path / "wh_clean"))
+    def sessions(w):
+        rows = [r.asDict() for r in w.read("sessions").collect()]
+        for r in rows:
+            r["metadata"] = {**json.loads(r["metadata"]), "wall_sec": None}
+        return rows
+
+    assert pages(wh) == pages(wh_clean)
+    assert sessions(wh) == sessions(wh_clean)
+    assert dataclasses.replace(done, wall_sec=0.0) == dataclasses.replace(
+        clean, wall_sec=0.0
+    )
     assert jsc.getPersistentRDDs().size() == cached_before
 
 

@@ -21,7 +21,6 @@ KEEP = {
     "build_corpus": "reference simulator's in-memory corpus for parity tests",
     "read_metrics_stream": "file-source stream over the metrics table",
     "rolling_crawl_counters": "the A4 counters as a streaming aggregation",
-    "delete_session": "admin mutation of the reference viewer (session delete)",
     "counts_by_source": "reference serve query (ContentMetadataStore counts)",
     "count_by_source": "reference serve query (ContentMetadataStore count)",
     "session_error_counts": "reference analytics query A9 (per-session errors)",

@@ -8,11 +8,10 @@ from ethos_spark.catalog import Warehouse
 from ethos_spark.crawl.fetcher import CorpusFetcher
 from ethos_spark.crawl.runner import CrawlOptions, CrawlRunner
 from ethos_spark.serve import queries as sq
-from ethos_spark.serve.admin import delete_content_by_hash, delete_session
+from ethos_spark.serve.admin import delete_content_by_hash
 from ethos_spark.session import get_spark
 from ethos_spark.sources.config import SYNTH_SOURCE
 from ethos_spark.synth import build_pages_df, listing_url
-from ethos_spark import schemas
 
 
 @pytest.fixture(scope="module")
@@ -95,8 +94,8 @@ def test_session_replay(spark, crawled):
     assert sessions[0].stopped_reason == summary.stopped_reason
 
 
-def test_delete_content_and_session(spark, crawled):
-    wh, summary = crawled
+def test_delete_content_by_hash(spark, crawled):
+    wh, _ = crawled
     pages = wh.read("pages")
     victim_hashes = [r.hash for r in pages.limit(3).collect()]
     res = delete_content_by_hash(wh, victim_hashes + ["f" * 40])
@@ -113,7 +112,3 @@ def test_delete_content_and_session(spark, crawled):
         r.url_hash for r in wh.read("pages").select("url_hash").collect()
     }
     assert deleted_uh.isdisjoint(seen_now)
-
-    res2 = delete_session(wh, summary.session_id)
-    assert res2["links_removed"] == summary.items_processed
-    assert wh.read("sessions", schemas.SESSIONS).count() == 0
